@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.session import batch_width
+
 Z_BITS = 16
 
 
@@ -53,10 +55,7 @@ def zorder_layout(
     """Cluster ``df`` along the Z-order curve of two integer columns:
     range-partition + sort within partitions by the interleaved
     z-value, so each output file's zone map bounds BOTH dimensions."""
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     with_z = df.withColumn(z_col, F.expr(z_value_sql(col_a, col_b)))
     return with_z.repartitionByRange(n_parts, z_col).sortWithinPartitions(z_col)
 

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.session import batch_width
+
 __all__ = [
     "global_row_number",
     "exact_ntile",
@@ -107,10 +109,7 @@ def global_row_number(
     1-row broadcast) — callers deriving percent_rank / cume_dist /
     ntile need it.
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     part = (
         df.repartitionByRange(n_parts, *order_by)
         .withColumn("_gr_pid", F.spark_partition_id())
@@ -432,10 +431,7 @@ def grouped_row_number(
     silently dropping through a plain equi-join whose NULL keys never
     match (the pre-r11 restriction, now lifted).
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     part = (
         df.withColumn("_gr_g", F.struct(*group_by))
         .repartitionByRange(n_parts, F.col("_gr_g"), *order_by)
@@ -536,12 +532,11 @@ def grouped_percentile_cont(
     Returns one row per group: ``group_by`` + ``out_cols[i]`` (double)
     = the ``pcts[i]`` percentile.
     """
+    if not pcts:
+        raise ValueError("grouped_percentile_cont needs at least one fraction in pcts")
     if len(pcts) != len(out_cols):
         raise ValueError("pcts and out_cols must pair up")
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     order = [F.asc(value_col)] + list(tie_break or [])
     # Range-partition once (same layout `grouped_row_number` uses: a
     # group occupies a contiguous partition RUN), but never rank —
@@ -668,10 +663,7 @@ def global_prefix_sum(
     partition's cumulative PRIOR total from a numPartitions-row
     aggregate joined back as a broadcast.
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     part = (
         df.repartitionByRange(n_parts, *order_by)
         .withColumn("_gr_pid", F.spark_partition_id())
@@ -711,10 +703,7 @@ def global_running_max(
     greatest value of all PRIOR partitions (a numPartitions-row
     aggregate joined back as a broadcast).
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     part = (
         df.repartitionByRange(n_parts, *order_by)
         .withColumn("_gr_pid", F.spark_partition_id())
@@ -759,10 +748,7 @@ def global_prefix_sums(
     sums, and one broadcast offsets join."""
     if len(value_cols) != len(out_cols):
         raise ValueError("value_cols and out_cols must pair up")
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = num_partitions or batch_width(df.sparkSession)
     part = (
         df.repartitionByRange(n_parts, *order_by)
         .withColumn("_gr_pid", F.spark_partition_id())

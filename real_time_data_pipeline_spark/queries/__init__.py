@@ -57,40 +57,10 @@ from real_time_data_pipeline_spark.queries import (  # noqa: E402,F401
 # queries' last external green is r9) plus the oldest r10 cohort.
 # r15 entries (embed_ann_recall_after_ingest, graph_pagerank_trade)
 # cleared after CORRECTNESS_r15 confirmed both green.
-EDITED_THIS_ROUND: set = {
-    # r15-EDITED queries whose optimization rewrites were verified only
-    # by the local driver-sim/pytest parity that round — VERDICT r15
-    # next-round #6 asks the r16 external window to re-confirm them
-    # ahead of merely-stale greens (the rewrites: fused swarm-guard
-    # accounting, persist swaps, one-pass containment scoring,
-    # single-aggregate conversion quantiles, stopword alternation,
-    # shared PQ codebooks).
-    "dedup_lsh_swarm_guard",
-    "dedup_incremental_batch",
-    "dedup_directional_containment",
-    "dedup_minhash_lsh_pairs",
-    "event_time_to_convert",
-    "data_temporal_split",
-    "embed_pq_adc_topk",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_tfidf_top_terms",
-    "text_dup_sentence_ratio",
-    "text_bm25_ranking",
-    "text_countmin_heavy_hitters",
-    "corpus_training_ready",
-    "corpus_quality_filter",
-    "corpus_filter_funnel",
-    # r16: exact percentiles moved off F.percentile's distinct-value
-    # map buffer onto the grouped rank-pick / bounded-frame closed
-    # form (VERDICT r15 #1) — same type-7 interpolation, re-gated per
-    # the discipline.
-    "agg_stats_by_returnflag",
-    "event_outlier_mad",
-    "window_moving_median",
-    "agg_quantile_accuracy",
-    "agg_percentiles_by_segment",
-}
+# r15/r16 entries (the 16 r15 optimization rewrites and the five r16
+# exact-percentile moves) cleared after CORRECTNESS_r16 confirmed all
+# twenty-one green.
+EDITED_THIS_ROUND: set = set()
 
 
 def _rotation_rank() -> "dict[str, tuple]":

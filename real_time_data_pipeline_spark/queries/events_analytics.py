@@ -1174,7 +1174,8 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct(test)|. The NOT NULL guard (VERDICT r15 #4) pins the
     # old inner-join semantics: NULL ≠ NULL in a join, so a NULL
     # user_id appearing on both sides must NOT count as shared the
-    # way a NULL GROUP would (tests/test_properties.py pins it).
+    # way a NULL GROUP would (tests/test_operators.py::
+    # test_temporal_overlap_flag_aggregate_ignores_null_users pins it).
     overlap = (
         assigned.where(F.col("user_id").isNotNull())
         .groupBy("user_id")

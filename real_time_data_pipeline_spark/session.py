@@ -12,9 +12,31 @@ the same scale posture:
   driver/oracle/cluster.
 - Arrow enabled — any unavoidable pandas-UDF path moves columnar
   batches, never pickled rows.
-- Shuffle partitions sized from the environment (local test = cores;
-  a real deployment overrides via ``spark.sql.shuffle.partitions`` —
-  AQE coalescing makes the initial number a ceiling, not a target).
+- Two shuffle widths, because Spark plans batch and streaming
+  exchanges differently:
+
+  * **Batch width** = ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``,
+    the core count. Batch plans run with AQE on, so it is only the
+    width an exchange starts from before coalescing;
+    :func:`batch_width` is how operators that size an explicit
+    exchange (``repartitionByRange``) read it.
+  * **Stream width** = ``spark.sql.shuffle.partitions``: 1 on a
+    ``local[*]`` master, the core count otherwise. Spark turns AQE
+    off inside every streaming query — the foreachBatch frame
+    included — so this is the real fan-out of every micro-batch
+    exchange and the number of state-store partitions of every
+    stateful operator. It is pinned in a checkpoint's offset log at
+    the query's FIRST start; a restart keeps the checkpoint's width
+    whatever the session says. A foreachBatch body's own exchanges
+    (joins against state tables, a repartition before a write) run at
+    this width too; a body doing batch-sized work sizes them with
+    :func:`batch_width`.
+
+  ``shuffle_partitions=N`` sets both widths to N. A deployment that
+  wants a different stream width alone passes
+  ``extra_conf={"spark.sql.shuffle.partitions": "<n>"}`` (or a
+  ``--conf`` on spark-submit when it builds its own session) before
+  the stream's first start.
 """
 
 from __future__ import annotations
@@ -22,6 +44,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+BATCH_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+STREAM_WIDTH = "spark.sql.shuffle.partitions"
 
 # Defaults chosen for local[N] testing; on a real cluster the same code
 # runs with spark-submit --conf overrides (every setting here is a
@@ -43,9 +68,8 @@ _DEFAULTS = {
     # auto-broadcast threshold: dims like region/nation/supplier must
     # broadcast, never shuffle (10 MiB default is fine; be explicit)
     "spark.sql.autoBroadcastJoinThreshold": "10485760",
-    # streaming micro-batches should not inherit batch shuffle width
+    # --- streaming: refuse stateful plans whose results would be wrong
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
     # Cap in-flight UI/event history memory in long local runs.
     "spark.ui.enabled": "false",
     # Reliable-checkpoint files (operators/materialize.py) are deleted
@@ -111,10 +135,7 @@ def get_spark(
         conf.setdefault(
             "spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent"
         )
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    else:
-        conf["spark.sql.shuffle.partitions"] = cpus
+    conf.update(width_conf(master, cpus, shuffle_partitions))
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -128,6 +149,28 @@ def get_spark(
     if ckpt and spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(ckpt)
     return spark
+
+
+def width_conf(
+    master: str, cpus: str, shuffle_partitions: int | None = None
+) -> dict[str, str]:
+    """The batch and stream shuffle widths ``get_spark`` sets (module
+    doc). The engine's streams carry small state (the station
+    pipeline: one row per station per snapshot), yet every state
+    partition costs a task, a state delta with its checksum file and
+    the local file system's shell-outs on every micro-batch — so one
+    partition is the cheap width on a single local JVM. On a cluster
+    the core count keeps the state spread over the executors."""
+    if shuffle_partitions is not None:
+        return {BATCH_WIDTH: str(shuffle_partitions), STREAM_WIDTH: str(shuffle_partitions)}
+    return {BATCH_WIDTH: cpus, STREAM_WIDTH: "1" if master.startswith("local") else cpus}
+
+
+def batch_width(spark: SparkSession) -> int:
+    """The partition count a batch exchange starts from: the batch
+    width when the session sets one, else ``spark.sql.shuffle.partitions``
+    (a vanilla session, where both are the same number)."""
+    return int(spark.conf.get(BATCH_WIDTH, None) or spark.conf.get(STREAM_WIDTH))
 
 
 ROCKSDB_PROVIDER = (

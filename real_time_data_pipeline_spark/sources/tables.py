@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from real_time_data_pipeline_spark.session import BATCH_WIDTH
+
 TABLES = (
     "region",
     "nation",
@@ -56,13 +58,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Engine posture even under a caller-built vanilla session: AQE
-    # picks the real partition count at runtime; the static setting is
+    # picks the real partition count at runtime; the batch width is
     # only the pre-AQE ceiling (Spark's 200 default is wrong for both
-    # a laptop and a 1000-executor cluster).
+    # a laptop and a 1000-executor cluster). The stream width
+    # (session.py module doc) is left alone: reading a table must not
+    # widen the state of a stream started later in the session.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set(BATCH_WIDTH, cpus)
     if name == "events":
         # Harmless when the file holds real timestamps; required when
         # it holds TIMESTAMP(NANOS) (read as raw nano longs instead of

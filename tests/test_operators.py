@@ -1046,6 +1046,17 @@ def test_grouped_percentile_cont_matches_exact_percentile(spark):
                 )
 
 
+def test_grouped_percentile_cont_rejects_empty_pcts():
+    # An empty fraction list must fail by name before any Spark work:
+    # no frame is even touched (df=None would raise AttributeError on
+    # the first access), where it used to plan a range exchange and
+    # return group rows with no percentile columns.
+    from real_time_data_pipeline_spark.operators.ranking import grouped_percentile_cont
+
+    with pytest.raises(ValueError, match="at least one fraction"):
+        grouped_percentile_cont(None, ["g"], "v", [], [])
+
+
 def test_moving_frame_median_formula_matches_percentile_window(spark):
     # The r16 window_moving_median rewrite: sort_array(collect_list)
     # over the bounded frame + closed-form type-7 interpolation must

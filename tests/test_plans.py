@@ -19,6 +19,13 @@ from real_time_data_pipeline_spark.queries import REGISTRY
 from real_time_data_pipeline_spark.sources.tables import load_table
 
 
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir):
+    """Executed plan of every registry query, built once for the
+    registry-wide sweeps below (each used to rebuild all of them)."""
+    return {name: _plan(spec.fn(spark, sf_dir)) for name, spec in REGISTRY.items()}
+
+
 def test_filter_and_column_pushdown(spark, sf_dir):
     df = REGISTRY["tpch_q1_pricing_summary"].fn(spark, sf_dir)
     # shipdate predicate reaches the parquet scan
@@ -69,11 +76,10 @@ def test_whole_stage_codegen_on_scalar_chain(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+def test_no_cartesian_products_anywhere(registry_plans):
     """Only the deliberate broadcast-scalar patterns may cross join;
     nothing may plan a non-broadcast CartesianProduct."""
-    for name, spec in REGISTRY.items():
-        plan = _plan(spec.fn(spark, sf_dir))
+    for name, plan in registry_plans.items():
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
 
 
@@ -408,7 +414,7 @@ _BOUNDED_GLOBAL_WINDOWS = {
 }
 
 
-def test_no_unbounded_global_window_anywhere(spark, sf_dir):
+def test_no_unbounded_global_window_anywhere(registry_plans):
     """Registry-wide scale audit: every window with an empty partition
     spec (first windowspec token is an ORDER key) must be either the
     ranking operators' partition-offset frame (bounded by the
@@ -417,8 +423,7 @@ def test_no_unbounded_global_window_anywhere(spark, sf_dir):
     data-sized input funnels everything through one task — the #1
     scale-killer class this engine engineers out."""
     offenders = {}
-    for name, spec in REGISTRY.items():
-        plan = _plan(spec.fn(spark, sf_dir))
+    for name, plan in registry_plans.items():
         bad = []
         for s in plan.split("windowspecdefinition(")[1:]:
             first = s.split(",")[0]
@@ -455,7 +460,7 @@ _BOUNDED_EXACT_PERCENTILES = {
 }
 
 
-def test_exact_percentile_only_on_documented_bounds(spark, sf_dir):
+def test_exact_percentile_only_on_documented_bounds(registry_plans):
     """Registry-wide audit: exact `percentile` keeps a map of every
     distinct input value in its aggregation buffer, so it is only
     safe on columns with a documented distinct-value bound (or with
@@ -484,11 +489,10 @@ def test_exact_percentile_only_on_documented_bounds(spark, sf_dir):
         )
 
     exact_users = set()
-    for name, spec in REGISTRY.items():
-        plan = _plan(spec.fn(spark, sf_dir))
+    for name, plan in registry_plans.items():
         if "percentile(" in plan.replace(
             "percentile_approx(", ""
-        ) or _src_uses_exact(spec.fn):
+        ) or _src_uses_exact(REGISTRY[name].fn):
             exact_users.add(name)
     offenders = exact_users - set(_BOUNDED_EXACT_PERCENTILES)
     assert not offenders, f"undocumented exact percentile: {offenders}"
