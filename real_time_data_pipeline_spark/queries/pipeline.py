@@ -398,9 +398,9 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one partitioned window keyed by user_id (no global
     window; audit-exempt), deterministic (ts, event_id) tie-break.
-    The streaming twin is streaming/sinks.cdc_upsert_parquet /
-    foreach_batch_cdc (event-time-wins merge, tombstones retained
-    until expire_tombstones); tests/test_cdc.py replays the same rows
+    The streaming twin is streaming/sinks.cdc_upsert_parquet driven
+    per micro-batch by foreach_batch_sink (event-time-wins merge,
+    tombstones retained until expire_tombstones); tests/test_cdc.py replays the same rows
     as micro-batches and asserts the snapshot equals this query.
     """
     ev = load_table(spark, sf_dir, "events").where(

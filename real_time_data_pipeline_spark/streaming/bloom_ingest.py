@@ -21,11 +21,11 @@ production-sized filter), regardless of benchmark corpus size — plus
 a single marker row at the FIXED key ``pos = -1`` whose ``bid``
 column carries the last merged batch_id. The marker key stays
 fixed so exactly one marker row ever exists (the Count-Min
-convention, salt_id = -1). The merge emits the FULL next state
-(stored cells unioned with the batch's increments), so marker and
-cells commit in one whole-state staged-rename swap
-(`replace_parquet`); readers run the mid-swap crash recovery via
-`_read_state`.
+convention, salt_id = -1). The shared marker kernel
+(`sinks.merge_marked_state`) emits the FULL next state (stored cells
+unioned with the batch's increments), so marker and cells commit in
+one whole-state staged-rename swap; readers run the mid-swap crash
+recovery first.
 
 Scale shape: per micro-batch one shingle explode + distinct over the
 batch's docs (the batch's own text volume is the only per-batch
@@ -34,26 +34,24 @@ side broadcasts the bit table — identical to the batch query's
 prefilter-then-verify architecture.
 
 Parity contract (tests/test_streaming.py): replaying the benchmark
-docs through this sink in ANY chunking must leave the state equal to
-the batch query's bit set, and the candidate-side summary computed
-against the maintained filter must reproduce the batch registry
-query's row exactly.
+docs through `merge_bloom_batch` in ANY chunking must leave the state
+equal to the batch query's bit set, and the candidate-side summary
+computed against the maintained filter must reproduce the batch
+registry query's row exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 # Geometry + salts come from the batch query so the two filters are
 # bit-identical by construction.
 from real_time_data_pipeline_spark.queries.text import BLOOM_BITS, BLOOM_SALTS
 from real_time_data_pipeline_spark.operators.text import hash32, word_shingles
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    merge_marked_state,
+    read_marked_state,
 )
 
 
@@ -90,39 +88,27 @@ def merge_bloom_batch(
     """Set-union one micro-batch's lit positions into the filter
     state; returns False for an already-merged (retried) batch_id
     (a no-op either way — union is idempotent — but skipping keeps
-    the marker monotone and the write amplification zero)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("pos") == _META_POS)
-            .agg(F.max("bid").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("pos") >= 0).select("pos")
-    inc = bloom_bit_increments(batch_df, text_col, shingle_n)
-    merged = inc if cells is None else cells.unionByName(inc).distinct()
-    meta = spark.createDataFrame([(_META_POS, batch_id)], "pos bigint, bid bigint")
-    out = merged.select(
-        F.col("pos").cast("bigint"), F.lit(0).cast("bigint").alias("bid")
-    ).unionByName(meta)
-    # `out` carries every stored position (cells unioned in above), so
-    # the staged swap is a whole-state replace — no need to re-read
-    # the table for a keyed merge whose old side is fully overridden.
-    replace_parquet(out, state_path)
-    return True
+    the marker monotone and the write amplification zero). Cell rows
+    carry ``bid = 0``, so the kernel's per-pos ``max`` IS the set
+    union."""
+    return merge_marked_state(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: bloom_bit_increments(batch_df, text_col, shingle_n).withColumn(
+            "bid", F.lit(0)
+        ),
+        "pos bigint, bid bigint",
+        keys=["pos"],
+        combine={"bid": "max"},
+        sentinel=_META_POS,
+    )
 
 
 def read_bloom(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed lit positions (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no Bloom state at {state_path}")
-    return stored.where(F.col("pos") >= 0).select("pos")
+    return read_marked_state(spark, state_path, "pos", _META_POS).select("pos")
 
 
 def bloom_maybe_filter(
@@ -143,25 +129,3 @@ def bloom_maybe_filter(
             f"_bp{i}", _bloom_pos(F.col(gram_col), s)
         ).join(F.broadcast(hit), f"_bp{i}", "left_semi")
     return flagged.drop(*[f"_bp{i}" for i in range(len(BLOOM_SALTS))])
-
-
-def bloom_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    shingle_n: int = 5,
-    query_name: str = "bloom_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the Bloom filter state table."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_bloom_batch(batch_df, state_path, batch_id, text_col, shingle_n)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

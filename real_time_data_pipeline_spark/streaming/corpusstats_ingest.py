@@ -22,7 +22,7 @@ dedup is `dedup_ingest`'s job upstream, the same precondition the IVF
 twins document for re-shipped vectors.)
 
 Exactly-once is STRUCTURAL, reusing the index twins' mechanism
-(`ivf_ingest.commit_partitioned_batch`, key_col="bkt"): a batch's
+(`sinks.commit_partitioned_batch`, key_col="bkt"): a batch's
 increment rows are a pure deterministic function of the batch, the
 state is partitioned by (bkt, src_batch), and a foreachBatch retry
 dynamic-overwrites its own partitions with identical rows — additive
@@ -71,12 +71,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
     compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    read_partitioned_state,
 )
 
 DEFAULT_TERM_BUCKETS = 64  # local-test size; a 100 TB corpus wants O(thousands)
@@ -176,19 +175,12 @@ def merge_corpus_stats_batch(
     return commit_partitioned_batch(inc, state_path, batch_id, key_col="bkt")
 
 
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no corpus-stats state at {state_path}")
-    # exclude the compaction sentinel; scalar rows are a REAL bucket
-    return spark.read.parquet(state_path).where(F.col("bkt") >= 0)
-
-
 def read_term_stats(spark: SparkSession, state_path: str) -> DataFrame:
     """The maintained per-term statistics: (term, df, tf), deltas
     summed at read time (one row per term after compaction; one per
     (term, touched batch) before — the sum is the same)."""
     return (
-        _read_state(spark, state_path)
+        read_partitioned_state(spark, state_path, key_col="bkt")
         .where(F.col("term").isNotNull())
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("tf").alias("tf"))
@@ -203,7 +195,7 @@ def read_corpus_scalars(spark: SparkSession, state_path: str) -> DataFrame:
     non-blank document yet (ANSI guard on the data-dependent
     denominator)."""
     return (
-        _read_state(spark, state_path)
+        read_partitioned_state(spark, state_path, key_col="bkt")
         .where(F.col("term").isNull())
         .agg(
             F.sum("df").alias("n_docs"),
@@ -342,7 +334,7 @@ def bm25_scored_from_state(
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    pruned = _read_state(spark, state_path).where(
+    pruned = read_partitioned_state(spark, state_path, key_col="bkt").where(
         F.col("bkt").isin(
             [*_term_buckets(spark, query_terms, n_buckets),
              _scalars_bucket(n_buckets)]
@@ -463,28 +455,3 @@ def hybrid_rrf_probe_ivf(
         F.col("rk").cast("long").alias("vec_rank"),
     )
     return rrf_fuse_ranked(lex, dense)
-
-
-def corpus_stats_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = DEFAULT_TERM_BUCKETS,
-    query_name: str = "corpusstats_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the bucketed corpus statistics."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_corpus_stats_batch(
-            batch_df, state_path, batch_id, id_col, text_col, n_buckets
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

@@ -11,14 +11,15 @@ is the whole parity contract; no approximation drift accumulates.
 
 State: ONE parquet table of (salt_id, bucket, bc) cells —
 depth × width rows at most (a few hundred), regardless of corpus
-size — plus a single in-table meta row (salt_id = -1) carrying the
-last merged foreachBatch batch_id. Keeping the marker INSIDE the
-swap-committed table makes retry detection atomic with the merge: a
-foreachBatch retry re-delivers the same batch_id, the reader sees the
-marker from the committed state, and the merge becomes a no-op —
-increments are applied exactly once even though addition itself is
-not idempotent (the reason the retention sink's plain keyed upsert
-pattern is not enough here).
+size — plus a single in-table meta row (salt_id = -1) whose ``bc``
+carries the last merged foreachBatch batch_id, committed by the
+shared marker kernel `sinks.merge_marked_state`. Keeping the marker
+INSIDE the swap-committed table makes retry detection atomic with
+the merge: a foreachBatch retry re-delivers the same batch_id, the
+reader sees the marker from the committed state, and the merge
+becomes a no-op — increments are applied exactly once even though
+addition itself is not idempotent (the reason the retention twin's
+plain keyed upsert pattern is not enough here).
 
 Scale shape: per micro-batch one word explode + one
 (salt, bucket)-keyed partial aggregate (output ≤ depth × width rows),
@@ -27,7 +28,7 @@ with corpus size; the batch's own text volume is the only per-batch
 cost.
 
 Parity contract (tests/test_streaming.py): replaying the documents
-table through this sink in ANY chunking must leave a state table
+table through `merge_countmin_batch` in ANY chunking must leave a state table
 cell-for-cell equal to the batch sketch, and the heavy-hitter probe
 over the final state must reproduce the batch query's estimates.
 """
@@ -36,16 +37,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 # Geometry + salts come from the batch query so the two sketches are
 # the same structure by construction.
 from real_time_data_pipeline_spark.queries.text import CM_SALTS, CM_WIDTH
 from real_time_data_pipeline_spark.operators.text import hash32, words
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    merge_marked_state,
+    read_marked_state,
 )
 
 _META_SALT = -1  # salt_id of the single last-batch-id marker row
@@ -76,51 +75,24 @@ def merge_countmin_batch(
     batch_df: DataFrame, state_path: str, batch_id: int, text_col: str = "text"
 ) -> bool:
     """Merge one micro-batch into the sketch state; returns False for
-    an already-merged (retried) batch_id.
-
-    The stored cells and the batch increments sum cell-wise
-    (linearity); the new meta row replaces the old one through the
-    full-frame rewrite, so marker and cells commit in ONE swap.
-    """
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("salt_id") == _META_SALT)
-            .agg(F.max("bc").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("salt_id") != _META_SALT)
-    inc = sketch_increments(batch_df, text_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
-        .groupBy("salt_id", "bucket")
-        .agg(F.sum("bc").cast("long").alias("bc"))
+    an already-merged (retried) batch_id. The stored cells and the
+    batch increments sum cell-wise (linearity); marker and cells
+    commit in ONE swap (`sinks.merge_marked_state`)."""
+    return merge_marked_state(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: sketch_increments(batch_df, text_col),
+        "salt_id int, bucket bigint, bc bigint",
+        keys=["salt_id", "bucket"],
+        combine={"bc": "sum"},
+        sentinel=_META_SALT,
     )
-    meta = spark.createDataFrame(
-        [(_META_SALT, 0, batch_id)], "salt_id int, bucket bigint, bc bigint"
-    )
-    out = merged.select(
-        F.col("salt_id").cast("int"),
-        F.col("bucket").cast("bigint"),
-        F.col("bc").cast("bigint"),
-    ).unionByName(meta)
-    # The merged frame carries EVERY key, so the staged swap is a
-    # whole-state replace behind the sinks' crash-safe staged-rename
-    # swap (mid-swap crashes recovered by _read_state on next merge).
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed sketch cells (meta row excluded), swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no Count-Min state at {state_path}")
-    return stored.where(F.col("salt_id") != _META_SALT)
+    return read_marked_state(spark, state_path, "salt_id", _META_SALT)
 
 
 def heavy_hitters_estimate(
@@ -150,25 +122,4 @@ def heavy_hitters_estimate(
         probe.join(F.broadcast(sketch), ["salt_id", "bucket"], "left")
         .groupBy("word")
         .agg(F.min(F.coalesce("bc", F.lit(0))).cast("long").alias("cm_estimate"))
-    )
-
-
-def countmin_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    query_name: str = "countmin_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the Count-Min state table."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_countmin_batch(batch_df, state_path, batch_id, text_col)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )

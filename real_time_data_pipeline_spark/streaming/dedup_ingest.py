@@ -279,31 +279,3 @@ def _ingest_batch_impl(
             hash_rows, hashes_path, keys=["content_hash"], partition_cols=[BUCKET_COL]
         )
     return n_new
-
-
-def dedup_ingest_sink(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    corpus_path: str,
-    store_path: str,
-    checkpoint: str,
-    query_name: str = "dedup_ingest",
-    threshold: float = 0.5,
-    n_buckets: int = DEFAULT_BUCKETS,
-):
-    """Streaming sink: continuously ingest documents with dedup
-    against everything previously accepted (foreachBatch over
-    `ingest_batch`)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(batch_df, id_col, text_col, corpus_path, store_path,
-                     threshold=threshold, n_buckets=n_buckets)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

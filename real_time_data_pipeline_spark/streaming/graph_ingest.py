@@ -66,12 +66,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
     compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    read_partitioned_state,
 )
 
 DEFAULT_EDGE_BUCKETS = 8  # nation-grain local size; entity-grain graphs want O(thousands)
@@ -180,11 +179,8 @@ def read_trade_flows(spark: SparkSession, state_path: str) -> DataFrame:
     """The maintained weighted edge list: (src, dst, w_cents), deltas
     summed at read time (one row per edge after compaction; one per
     (edge, touched batch) before — the sum is the same)."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no trade-flow state at {state_path}")
     return (
-        spark.read.parquet(state_path)
-        .where(F.col("bkt") >= 0)  # exclude the compaction sentinel
+        read_partitioned_state(spark, state_path, key_col="bkt")
         .groupBy("src", "dst")
         .agg(F.sum("w_cents").alias("w_cents"))
     )
@@ -202,33 +198,4 @@ def compact_trade_flows(spark: SparkSession, state_path: str) -> None:
         fold=lambda live: live.groupBy("bkt", "src", "dst").agg(
             F.sum("w_cents").alias("w_cents")
         ),
-    )
-
-
-def trade_flow_ingest_sink(
-    df: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    n_buckets: int = DEFAULT_EDGE_BUCKETS,
-    query_name: str = "graph_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the bucketed edge list from a
-    stream of lineitem-shaped fact rows, dimension tables static."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_trade_flows_batch(
-            batch_df, orders, customer, supplier, nation,
-            state_path, batch_id, n_buckets,
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )

@@ -34,9 +34,9 @@ any representable log bucket — real buckets can be negative for
 v < 1, so a sign test cannot separate the marker) whose ``cnt``
 column carries the last merged batch_id. Addition is not idempotent,
 so the marker IS required for exactly-once merges (the Count-Min
-argument), committed atomically with the cells through the
-staged-rename swap (`replace_parquet`); readers run the mid-swap crash
-recovery via `_read_state`.
+argument), committed atomically with the cells by the shared marker
+kernel (`sinks.merge_marked_state`, one staged-rename swap); readers
+run the mid-swap crash recovery first.
 
 Scale shape: per micro-batch one bucket-keyed partial aggregate
 (map-side combine, output ≤ occupied buckets), a tiny whole-state
@@ -45,22 +45,21 @@ the ≤17k-cell state — the unpartitioned window is bounded by the
 bucket function's own range, by construction, never by data volume.
 
 Parity contract (tests/test_streaming.py): replaying events through
-this sink in ANY chunking leaves the state cell-identical to the
-one-shot batch build; quantile estimates from the maintained state
-equal the batch-histogram estimates; and each estimate sits within
-the constant relative bucket error of the EXACT batch percentile.
+`merge_histogram_batch` in ANY chunking leaves the state
+cell-identical to the one-shot batch build; quantile estimates from
+the maintained state equal the batch-histogram estimates; and each
+estimate sits within the constant relative bucket error of the EXACT
+batch percentile.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    merge_marked_state,
+    read_marked_state,
 )
 
 LOG2_DIVS = 8  # buckets per factor of 2; relative width 2^(1/8)-1 ~ 9%
@@ -102,42 +101,22 @@ def merge_histogram_batch(
     for an already-merged (retried) batch_id — addition is not
     idempotent, so the in-table marker is what makes the foreachBatch
     retry exactly-once (the Count-Min argument)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("bucket") == _META_BUCKET)
-            .agg(F.max("cnt").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("bucket") != _META_BUCKET)
-    inc = histogram_increments(batch_df, value_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
-        .groupBy("bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return merge_marked_state(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: histogram_increments(batch_df, value_col),
+        "bucket bigint, cnt bigint",
+        keys=["bucket"],
+        combine={"cnt": "sum"},
+        sentinel=_META_BUCKET,
     )
-    meta = spark.createDataFrame(
-        [(_META_BUCKET, batch_id)], "bucket bigint, cnt bigint"
-    )
-    out = merged.select(
-        F.col("bucket").cast("bigint"), F.col("cnt").cast("bigint")
-    ).unionByName(meta)
-    # whole-state replace behind the crash-safe staged-rename swap
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_histogram(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed histogram cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no histogram state at {state_path}")
-    return stored.where(F.col("bucket") != _META_BUCKET)
+    return read_marked_state(spark, state_path, "bucket", _META_BUCKET)
 
 
 def quantile_estimates_of(cells: DataFrame, qs: list) -> DataFrame:
@@ -178,24 +157,3 @@ def quantile_estimates(
 ) -> DataFrame:
     """Quantile estimates from the maintained state."""
     return quantile_estimates_of(read_histogram(spark, state_path), qs)
-
-
-def histogram_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    value_col: str = "value",
-    query_name: str = "histogram_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the histogram state table."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_histogram_batch(batch_df, state_path, batch_id, value_col)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

@@ -30,10 +30,10 @@ the last merged foreachBatch batch_id (the Count-Min convention: a
 fixed marker key, so exactly one marker row ever exists). Max-merge
 makes the marker unnecessary for correctness (like Bloom, unlike
 Count-Min) — it is kept so all three twins share one exactly-once
-contract and the state carries its own progress watermark. The merge
-emits the FULL next state, so marker and cells commit in one
-whole-state staged-rename swap (`replace_parquet`); readers run the
-mid-swap crash recovery via `_read_state`.
+contract and the state carries its own progress watermark. The shared
+marker kernel (`sinks.merge_marked_state`) emits the FULL next state,
+so marker and cells commit in one whole-state staged-rename swap;
+readers run the mid-swap crash recovery first.
 
 Scale shape: per micro-batch one word explode + one reg-keyed MAX
 partial aggregate (map-side combine; output ≤ HLL_M rows), then a
@@ -41,7 +41,7 @@ tiny whole-state max-merge and swap-commit. Nothing scales with
 corpus size, and the estimate is an aggregate over ≤ HLL_M rows.
 
 Parity contract (tests/test_streaming.py): replaying the documents
-table through this sink in ANY chunking — and with overlapping
+table through `merge_hll_batch` in ANY chunking — and with overlapping
 redeliveries — must leave the register table cell-identical to the
 one-shot batch build; the estimate from the maintained state must
 equal the batch estimate; and both must sit within the published
@@ -54,13 +54,11 @@ import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.operators.text import hash60, words
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    merge_marked_state,
+    read_marked_state,
 )
 
 HLL_P = 12  # register-index bits
@@ -111,41 +109,22 @@ def merge_hll_batch(
     returns False for an already-merged (retried) batch_id (a no-op
     either way — max is idempotent — but skipping keeps the marker
     monotone and the write amplification zero)."""
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, state_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("reg") == _META_REG)
-            .agg(F.max("rho").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("reg") >= 0)
-    inc = hll_register_increments(batch_df, text_col)
-    merged = inc if cells is None else (
-        cells.unionByName(inc).groupBy("reg").agg(F.max("rho").alias("rho"))
+    return merge_marked_state(
+        batch_df.sparkSession,
+        state_path,
+        batch_id,
+        lambda: hll_register_increments(batch_df, text_col),
+        "reg bigint, rho bigint",
+        keys=["reg"],
+        combine={"rho": "max"},
+        sentinel=_META_REG,
     )
-    meta = spark.createDataFrame([(_META_REG, batch_id)], "reg bigint, rho bigint")
-    out = merged.select(
-        F.col("reg").cast("bigint"), F.col("rho").cast("bigint")
-    ).unionByName(meta)
-    # The merged frame carries EVERY key, so the staged swap is a
-    # whole-state replace (mid-swap crashes recovered by _read_state
-    # on the next merge) — re-reading the table for a keyed merge
-    # would double the per-batch state I/O for nothing.
-    replace_parquet(out, state_path)
-    return True
 
 
 def read_registers(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed register cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, state_path)
-    if stored is None:
-        raise FileNotFoundError(f"no HLL state at {state_path}")
-    return stored.where(F.col("reg") >= 0)
+    return read_marked_state(spark, state_path, "reg", _META_REG)
 
 
 def hll_estimate_of(registers: DataFrame) -> float:
@@ -174,24 +153,3 @@ def hll_estimate_of(registers: DataFrame) -> float:
 def hll_estimate(spark: SparkSession, state_path: str) -> float:
     """The distinct-count estimate from the maintained state."""
     return hll_estimate_of(read_registers(spark, state_path))
-
-
-def hll_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    query_name: str = "hll_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the HLL register state table."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hll_batch(batch_df, state_path, batch_id, text_col)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

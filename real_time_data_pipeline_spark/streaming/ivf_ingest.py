@@ -24,7 +24,7 @@ scales with the BATCH, not the table (the marker twins' whole-state
 swap is right for sketch-sized state; an inverted index is
 vector-grain and must never rewrite itself per batch). The committed
 max batch id the reset guard needs comes from a DRIVER-SIDE
-partition-directory listing (`_committed_max_batch`), never a data
+partition-directory listing (`sinks.committed_max_batch`), never a data
 scan — O(partition dirs), kept small by compaction.
 
 The one failure the overwrite cannot self-heal is a checkpoint RESET
@@ -78,7 +78,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.operators.similarity import (
     assign_to_centroids,
@@ -95,7 +94,7 @@ from real_time_data_pipeline_spark.operators.similarity import (
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
     compact_partitioned_state,
-    state_exists_recovered as _state_exists_recovered,
+    read_partitioned_state,
 )
 
 
@@ -157,11 +156,8 @@ def read_ivf_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed inverted lists: (cent_id, nid, lo, scale, q).
     Runs swap recovery first; the compaction guard sentinel
     (cent_id = -1) is excluded."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no IVF state at {state_path}")
     return (
-        spark.read.parquet(state_path)
-        .where(F.col("cent_id") >= 0)
+        read_partitioned_state(spark, state_path)
         .select(
             F.col("cent_id").cast("bigint"),
             "nid",
@@ -266,29 +262,4 @@ def ivf_probe_state(
         cand.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rk")
-    )
-
-
-def ivf_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_name: str = "ivf_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the partitioned IVF list state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_ivf_batch(
-            batch_df, state_path, batch_id, centroids, id_col, vec_col
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )

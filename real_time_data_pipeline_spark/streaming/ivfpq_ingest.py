@@ -4,7 +4,7 @@ prunes WHICH vectors a query scores, PQ compresses HOW each one is
 scored), maintained incrementally.
 
 Ninth twin, built on the eighth's structural-idempotency commit
-(`ivf_ingest.commit_partitioned_batch`): both the coarse assignment
+(`sinks.commit_partitioned_batch`): both the coarse assignment
 (nearest frozen centroid, exact cosine, deterministic tie-break) and
 the PQ encoding (per-subspace nearest frozen codeword by QUANTIZED
 squared L2 — `operators/similarity.py::pq_codebooks`' integer-exact
@@ -51,7 +51,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.operators.similarity import (
     _pq_qd2,
@@ -61,7 +60,7 @@ from real_time_data_pipeline_spark.operators.similarity import (
 from real_time_data_pipeline_spark.streaming.ivf_ingest import probe_lists
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
-    state_exists_recovered as _state_exists_recovered,
+    read_partitioned_state,
 )
 
 _QUANT = 1_000_000  # must match the codebooks' training quant
@@ -156,12 +155,8 @@ def read_ivfpq_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The committed code lists: (cent_id, nid, codes). Runs swap
     recovery first; the compaction guard sentinel (cent_id = -1) is
     excluded."""
-    if not _state_exists_recovered(spark, state_path):
-        raise FileNotFoundError(f"no IVF-PQ state at {state_path}")
-    return (
-        spark.read.parquet(state_path)
-        .where(F.col("cent_id") >= 0)
-        .select(F.col("cent_id").cast("bigint"), "nid", "codes")
+    return read_partitioned_state(spark, state_path).select(
+        F.col("cent_id").cast("bigint"), "nid", "codes"
     )
 
 
@@ -229,34 +224,4 @@ def ivfpq_probe_state(
             F.round(F.col("qadc") / F.lit(float(quant)), 6).alias("adc_dist"),
             "rk",
         )
-    )
-
-
-def ivfpq_ingest_sink(
-    df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m_sub: int = 4,
-    sub_dim: int = 16,
-    query_name: str = "ivfpq_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the partitioned IVF-PQ code
-    state."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_ivfpq_batch(
-            batch_df, state_path, batch_id, centroids, codebooks,
-            id_col, vec_col, m_sub, sub_dim,
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )

@@ -26,8 +26,9 @@ under retry). The matrix itself is a tiny rollup of the state — the
 events fact table is never rescanned.
 
 Parity contract (tests/test_streaming.py): replaying the events
-table through this sink and reading `retention_matrix` must equal
-the batch `event_retention_cohorts` registry query row-for-row.
+table through `merge_retention_batch` and reading `retention_matrix`
+must equal the batch `event_retention_cohorts` registry query
+row-for-row.
 """
 
 from __future__ import annotations
@@ -36,11 +37,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from real_time_data_pipeline_spark.streaming.sinks import (
     _swap_paths,
-    read_state as _read_state,  # noqa: F401 — shared reader (moved to sinks r12)
+    read_state as _read_state,
     upsert_parquet,
 )
 
@@ -86,26 +86,6 @@ def merge_retention_batch(batch_df: DataFrame, state_root: str) -> None:
         "user_id", F.date_trunc("week", F.col("ts")).alias("week_start")
     ).distinct()
     upsert_parquet(activity, _activity_path(state_root), keys=["user_id", "week_start"])
-
-
-def retention_ingest_sink(
-    df: DataFrame,
-    state_root: str,
-    checkpoint: str,
-    query_name: str = "retention_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the retention state tables."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_retention_batch(batch_df, state_root)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
 
 
 def retention_matrix(spark: SparkSession, state_root: str) -> DataFrame:

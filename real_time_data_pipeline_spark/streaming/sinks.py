@@ -3,10 +3,10 @@
 Reference sinks rebuilt (SURVEY §2.2):
 - K2/K3 parquet append + checkpoint → `parquet_append_sink`;
 - K5 foreachBatch JDBC append (which produced duplicate/evolving
-  window rows in Postgres — SURVEY §2.6 W3) → `foreach_batch_upsert`,
-  an IDEMPOTENT merge keyed on the window identity: re-delivered
-  micro-batches and update-mode re-emissions overwrite instead of
-  duplicating;
+  window rows in Postgres — SURVEY §2.6 W3) → `foreach_batch_sink`
+  driving `upsert_parquet` in update mode, an IDEMPOTENT merge keyed
+  on the window identity: re-delivered micro-batches and update-mode
+  re-emissions overwrite instead of duplicating;
 - W4 multi-query fan-out → `start_fanout` (one lineage, N sinks, each
   with its own checkpoint).
 
@@ -242,26 +242,117 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Shared twin-state scaffolding (r12, VERDICT r11 #5). Two state layouts
-# exist across the ten streaming twins, and BOTH read their pieces from
-# this one helper set:
+# Shared twin-state commit protocols. The eleven streaming twins use
+# three, and every one of them lives below; a twin module supplies only
+# its increments, its merge algebra and its probes:
 #
-# - whole-state swap twins (the marker family: funnel, sessionization,
-#   distinct, retention, dedup, Count-Min, Bloom, HLL, log-histogram,
-#   zone-map): `read_state` + `committed_marker_check` +
-#   `replace_parquet`/`upsert_parquet`.
-# - (key, src_batch)-partitioned twins (IVF lists, IVF-PQ codes, corpus
-#   statistics): `committed_max_batch` + `commit_partitioned_batch` +
-#   `compact_partitioned_state`, all built on the same swap recovery.
+# - marker twins (Count-Min, HLL, Bloom, log-histogram, zone-map stats):
+#   `merge_marked_state` + `read_marked_state`. The state is one small
+#   table holding every key plus a meta row that carries the last
+#   merged batch id; each batch re-emits the whole state through one
+#   staged-rename swap.
+# - (key, src_batch)-partitioned twins (IVF lists, IVF-PQ codes, trade
+#   flows, corpus statistics): `commit_partitioned_batch` +
+#   `read_partitioned_state` + `compact_partitioned_state`. Each batch
+#   writes only its own partitions; the reset guard reads partition
+#   directory names.
+# - keyed-upsert twins (retention, dedup ingest, zone-map user pairs):
+#   `read_state` + `upsert_parquet`, idempotent per key, no marker.
 #
-# Before r12 each partitioned twin re-derived the marker-read /
-# compaction-sentinel / retry-guard logic module-locally and the marker
-# twins imported `_read_state` from retention_ingest (one twin reaching
-# into another's privates).
+# `foreach_batch_sink` drives any of them from a stream.
 # ---------------------------------------------------------------------------
 
 COMPACTED_BATCH = -1  # src_batch value reserved for compaction output
 MARKER_KEY = -1  # partition-key value reserved for the compaction sentinel
+
+
+def foreach_batch_sink(
+    df: DataFrame,
+    merge,
+    checkpoint: str,
+    query_name: str,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start ``df`` as a foreachBatch query that calls
+    ``merge(batch_df, batch_id)`` per micro-batch — the one streaming
+    entry point of every twin, the CDC apply and the gold upsert.
+
+    Exactly-once is the merge's job (an in-table marker, a structural
+    partition overwrite or a keyed idempotent upsert): foreachBatch
+    re-delivers a batch under the same id after a failure. Twins and
+    CDC consume append-mode input; the gold upsert passes
+    ``output_mode="update"`` to receive re-emitted running aggregates.
+    """
+    return (
+        df.writeStream.foreachBatch(merge)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+        .start()
+    )
+
+
+def merge_marked_state(
+    spark: SparkSession,
+    state_path: str,
+    batch_id: int,
+    increments,
+    schema: str,
+    keys: Sequence[str],
+    combine: dict,
+    sentinel,
+) -> bool:
+    """Merge one micro-batch into a marker twin's state table; returns
+    False for a retry of the already-merged ``batch_id``.
+
+    The state holds one row per key plus a meta row whose ``keys[0]``
+    is ``sentinel`` and whose first ``combine`` column carries the
+    last merged batch id; every other column of the meta row is NULL.
+    Per batch: the crash-recovering read, the marker check (a retry
+    returns False before any write; a batch id below the marker
+    raises), ``increments()`` — the batch's cells, called only after
+    the check so side writes it makes are skipped on retry — then the
+    stored cells and the increments union and group by ``keys`` under
+    ``combine`` (column → ``"sum"``/``"min"``/``"max"``, the twin's
+    merge algebra), are cast to ``schema`` (a DDL string listing every
+    column) and replace the table, meta row included, through one
+    staged-rename swap. Marker and cells therefore commit together.
+    """
+    marker_col = next(iter(combine))
+    stored = read_state(spark, state_path)
+    if stored is not None:
+        marker = (
+            stored.where(F.col(keys[0]) == sentinel).agg(F.max(marker_col)).first()[0]
+        )
+        if committed_marker_check(marker, batch_id):
+            return False  # foreachBatch retry of the committed batch
+    merged = increments()
+    if stored is not None:
+        merged = (
+            stored.where(F.col(keys[0]) != sentinel)
+            .unionByName(merged)
+            .groupBy(*keys)
+            .agg(*[getattr(F, fn)(c).alias(c) for c, fn in combine.items()])
+        )
+    # columns absent from the dict row are NULL
+    meta = spark.createDataFrame([{keys[0]: sentinel, marker_col: batch_id}], schema)
+    out = merged.select(
+        *[F.col(f.name).cast(f.dataType) for f in meta.schema.fields]
+    ).unionByName(meta)
+    replace_parquet(out, state_path)
+    return True
+
+
+def read_marked_state(
+    spark: SparkSession, state_path: str, key: str, sentinel
+) -> DataFrame:
+    """A marker twin's committed cells (meta row excluded), after the
+    swap recovery; raises FileNotFoundError naming the path when no
+    state exists."""
+    stored = read_state(spark, state_path)
+    if stored is None:
+        raise FileNotFoundError(f"no twin state at {state_path}")
+    return stored.where(F.col(key) != sentinel)
 
 
 def read_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -337,38 +428,37 @@ def live_batch_partitions_exist(
     )
 
 
-def commit_partitioned_batch(
-    inc: DataFrame, state_path: str, batch_id: int, key_col: str = "cent_id"
-) -> bool:
-    """The structural-idempotency commit shared by the partitioned
-    twins: guard against a checkpoint reset (`committed_marker_check`
-    against the committed max src_batch — on `==`, a genuine retry of
-    the newest batch, FALL THROUGH and rewrite, since the previous
-    attempt may have committed only some partitions), then write
-    ``inc`` — which must be a pure deterministic function of the
-    batch — as its (key_col, src_batch=batch_id) partitions via
-    dynamic overwrite. Returns True when the commit ran.
+def read_partitioned_state(
+    spark: SparkSession, state_path: str, key_col: str = "cent_id"
+) -> DataFrame:
+    """A partitioned twin's committed rows, after the swap recovery,
+    without the compaction sentinel (``key_col < 0``); raises
+    FileNotFoundError naming the path when no state exists."""
+    if not state_exists_recovered(spark, state_path):
+        raise FileNotFoundError(f"no twin state at {state_path}")
+    return spark.read.parquet(state_path).where(F.col(key_col) >= 0)
 
-    One retry window the ==-fall-through alone cannot survive is
-    guarded here for EVERY partitioned twin (ADVICE r11 #1): if
-    compaction ran against its contract (stream not fully committed —
-    e.g. the state write landed but the streaming engine's own commit
-    log didn't), the newest batch can be redelivered under its old id
-    AFTER its partitions were folded into src_batch = -1. Rewriting
-    would then ADD the batch on top of the fold that already contains
-    it — duplicate rows for the row-preserving index twins (probes
-    absorb them but `read_*_state` consumers see them and state
-    inflates), silently DOUBLED statistics for the additive
-    corpus-stats twin. So a same-id retry is accepted only while the
-    batch's live delta partitions still exist (a driver-side
-    directory check); after compaction it raises loudly instead of
-    corrupting.
 
-    ``key_col`` is the state's partition key: ``cent_id`` for the
-    vector-index twins, ``bkt`` (term hash bucket) for the corpus-
-    stats twin — any non-negative integer key works; negative values
-    are reserved for the compaction sentinel."""
-    spark = inc.sparkSession
+def _guard_partitioned_commit(
+    spark: SparkSession, state_path: str, batch_id: int, key_col: str
+) -> None:
+    """The partitioned twins' retry/reset guard: raise on a checkpoint
+    reset (`committed_marker_check` against the committed max
+    src_batch), and on a same-id retry whose live partitions were
+    already compacted away. A genuine retry of the newest batch FALLS
+    THROUGH — the caller rewrites its partitions, since the previous
+    attempt may have committed only some of them.
+
+    Why the compaction case raises (ADVICE r11 #1): if compaction ran
+    against its contract (stream not fully committed — e.g. the state
+    write landed but the streaming engine's own commit log didn't),
+    the newest batch can be redelivered under its old id AFTER its
+    partitions were folded into src_batch = -1. Rewriting would then
+    ADD the batch on top of the fold that already contains it —
+    duplicate rows for the row-preserving index twins, silently
+    DOUBLED statistics for the additive twins. So a same-id retry is
+    accepted only while the batch's live delta partitions still exist
+    (a driver-side directory check)."""
     stored_max = committed_max_batch(spark, state_path)
     committed_marker_check(stored_max, batch_id)
     if (
@@ -384,6 +474,13 @@ def commit_partitioned_batch(
             f"the stream fully committed; restore the pre-compaction "
             f"state or rebuild from the corpus."
         )
+
+
+def _write_partitioned(
+    inc: DataFrame, state_path: str, batch_id: int, key_col: str
+) -> None:
+    """Write ``inc`` as its (key_col, src_batch=batch_id) partitions
+    via dynamic partition overwrite."""
     (
         inc.withColumn("src_batch", F.lit(batch_id).cast("bigint"))
         # Cluster by the partition key before the write (guide §6,
@@ -401,6 +498,24 @@ def commit_partitioned_batch(
         .partitionBy(key_col, "src_batch")
         .parquet(state_path)
     )
+
+
+def commit_partitioned_batch(
+    inc: DataFrame, state_path: str, batch_id: int, key_col: str = "cent_id"
+) -> bool:
+    """The structural-idempotency commit shared by the partitioned
+    twins: `_guard_partitioned_commit`, then write ``inc`` — which
+    must be a pure deterministic function of the batch — as its
+    (key_col, src_batch=batch_id) partitions via dynamic overwrite, so
+    a retry replaces exactly its own partitions. Returns True when the
+    commit ran.
+
+    ``key_col`` is the state's partition key: ``cent_id`` for the
+    vector-index twins, ``bkt`` (hash bucket) for the corpus-stats and
+    trade-flow twins — any non-negative integer key works; negative
+    values are reserved for the compaction sentinel."""
+    _guard_partitioned_commit(inc.sparkSession, state_path, batch_id, key_col)
+    _write_partitioned(inc, state_path, batch_id, key_col)
     return True
 
 
@@ -414,17 +529,24 @@ def commit_partitioned_batches_overlapped(
     with the writes overlapped (guide §2.6: independent jobs from a
     small thread pool back-fill each other's task tails).
 
-    ``slices[b]`` commits as batch id ``b`` via the same
-    `commit_partitioned_batch` a live foreachBatch uses. Overlap is
-    safe HERE and only here: the batches touch disjoint
-    (key, src_batch=b) partitions (distinct staging dirs, no partition
-    overlap for dynamic-overwrite to collide on), and each batch's
-    guard is read INLINE in submission order — when batch b's guard
-    runs, only writes 0..b−1 have been submitted, so the observed
-    stored_max is at most b−1 and the ``batch_id < stored_max`` reset
-    check can never false-fire. Only the WRITE jobs overlap. A live
-    stream must keep the strictly sequential `commit_partitioned_*`
-    path — micro-batches there are not known-final.
+    ``slices[b]`` commits as batch id ``b`` through the same guard and
+    write as `commit_partitioned_batch`. Each guard runs INLINE in
+    submission order — when batch b's guard runs, only writes 0..b−1
+    have been submitted, so the observed stored_max is at most b−1 and
+    the reset check can never false-fire. Only the WRITE jobs overlap.
+    A live stream must keep the strictly sequential
+    `commit_partitioned_batch` — micro-batches there are not
+    known-final.
+
+    Committer/filesystem assumption: concurrent dynamic-overwrite jobs
+    into one table are safe because the batches touch DISJOINT
+    (key, src_batch=b) partitions, and Spark's default commit protocol
+    stages each job in its own ``.spark-staging-<jobId>`` directory
+    before renaming only that job's partitions into place. Both hold
+    on HDFS and local filesystems. On object stores where rename is a
+    copy, or with a committer that shares one staging area per table,
+    pass ``max_workers=1``: the replay is then strictly sequential,
+    identical to calling `commit_partitioned_batch` per slice.
 
     Used by the ingest-state ARTIFACT builds (VERDICT r15 #4): the
     replay's wall-clock was dominated by serial per-commit write jobs.
@@ -432,33 +554,11 @@ def commit_partitioned_batches_overlapped(
     from concurrent.futures import ThreadPoolExecutor
 
     spark = slices[0].sparkSession
-    # sequential guards, overlapped writes: run the guard inline, then
-    # hand the write to the pool
-    def _write(inc: DataFrame, batch_id: int) -> None:
-        (
-            inc.withColumn("src_batch", F.lit(batch_id).cast("bigint"))
-            .repartition(F.col(key_col), F.col("src_batch"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(key_col, "src_batch")
-            .parquet(state_path)
-        )
-
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
         futures = []
         for b, inc in enumerate(slices):
-            stored_max = committed_max_batch(spark, state_path)
-            committed_marker_check(stored_max, b)
-            if (
-                stored_max is not None
-                and b == stored_max
-                and not live_batch_partitions_exist(spark, state_path, b, key_col)
-            ):
-                raise ValueError(
-                    f"retry of batch {b} arrived after compaction folded "
-                    f"its partitions (see commit_partitioned_batch)"
-                )
-            futures.append(pool.submit(_write, inc, b))
+            _guard_partitioned_commit(spark, state_path, b, key_col)
+            futures.append(pool.submit(_write_partitioned, inc, state_path, b, key_col))
         for f in futures:
             f.result()  # propagate the first failure
 
@@ -877,33 +977,6 @@ def _detect_partition_cols(fs, jpath) -> "list[str]":
         current = subdirs[0]
 
 
-def foreach_batch_cdc(
-    df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    order_cols: Sequence[str],
-    tombstone_col: str,
-    checkpoint: str,
-    query_name: str,
-    n_buckets: int | None = None,
-) -> StreamingQuery:
-    """Streaming CDC apply: drive `cdc_upsert_parquet` per micro-batch
-    (append-mode changelog in, snapshot table out)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_upsert_parquet(
-            batch_df, path, keys, order_cols, tombstone_col, n_buckets=n_buckets
-        )
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
-
-
 def delta_available(spark: SparkSession) -> bool:
     """True when the delta-spark package AND its JVM classes are on
     this session's classpath (both are required for MERGE INTO)."""
@@ -954,36 +1027,6 @@ def merge_upsert_delta(
         .whenMatchedUpdateAll()
         .whenNotMatchedInsertAll()
         .execute()
-    )
-
-
-def foreach_batch_upsert(
-    df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    checkpoint: str,
-    query_name: str,
-    order_col: str | None = None,
-    partition_cols: Sequence[str] | None = None,
-) -> StreamingQuery:
-    """Update-mode gold sink with idempotent per-key merge.
-
-    Exactly-once effect even under micro-batch retries: the merge is
-    keyed and deterministic (see `upsert_parquet`), so re-processing
-    batch N rewrites the same rows with the same winners. Pass
-    ``partition_cols`` for large gold tables so each batch touches only
-    its own partitions.
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(batch_df, path, keys, order_col, partition_cols)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )
 
 

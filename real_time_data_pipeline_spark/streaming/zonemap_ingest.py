@@ -19,12 +19,14 @@ has proven, which is exactly why the commit protocol matters:
   Bloom filter): idempotent keyed upsert of (part_date, user_id)
   pairs.
 
-One marker therefore protects the whole stats row set: the pair
-table is written FIRST (a redelivered batch re-upserts the same
-pairs, a no-op), then the stats table with the marker commits the
-linear half atomically through the staged-rename swap. A crash
-between the two writes replays as: pairs re-upserted (no-op), stats
-merged once — exactly-once end to end without a transaction.
+One marker therefore protects the whole stats row set: the stats
+table is a marker-kernel state (`sinks.merge_marked_state`) whose
+increments step writes the pair table FIRST (a redelivered batch
+re-upserts the same pairs, a no-op), then the stats table with the
+marker commits the linear half atomically through the staged-rename
+swap. A crash between the two writes replays as: pairs re-upserted
+(no-op), stats merged once — exactly-once end to end without a
+transaction.
 
 State size: stats are PARTITION-grain (one row per day), pairs are
 (partition × distinct user)-grain — the same per-key state bound as
@@ -53,12 +55,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from real_time_data_pipeline_spark.streaming.sinks import read_state as _read_state
 from real_time_data_pipeline_spark.streaming.sinks import (
-    committed_marker_check,
-    replace_parquet,
+    merge_marked_state,
+    read_marked_state,
+    read_state,
     upsert_parquet,
 )
 
@@ -118,63 +119,41 @@ def merge_zonemap_batch(
     for an already-merged (retried) batch_id.
 
     Write order is the crash-safety argument: the idempotent pair
-    upsert runs BEFORE the marker-protected stats swap, so a retry
-    after a crash between the two re-upserts the same pairs (no-op)
-    and then merges the counts exactly once.
+    upsert runs inside the increments callable — after the marker
+    check, BEFORE the marker-protected stats swap — so a checkpoint
+    reset raises before any write, and a retry after a crash between
+    the two re-upserts the same pairs (no-op) and then merges the
+    counts exactly once.
     """
-    spark = batch_df.sparkSession
-    stored = _read_state(spark, stats_path)
-    cells = None
-    if stored is not None:
-        marker = (
-            stored.where(F.col("part_date") == _META_DATE)
-            .agg(F.max("n_rows").alias("last"))
-            .first()["last"]
-        )
-        if committed_marker_check(marker, batch_id):
-            return False  # foreachBatch retry of the committed batch
-        cells = stored.where(F.col("part_date") != _META_DATE)
 
-    # idempotent half first (see docstring)
-    upsert_parquet(
-        zonemap_user_pairs(batch_df), users_path, keys=["part_date", "user_id"]
-    )
-
-    inc = zonemap_increments(batch_df)
-    merged = inc if cells is None else (
-        cells.unionByName(inc)
-        .groupBy("part_date")
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.min("min_event_id").alias("min_event_id"),
-            F.max("max_event_id").alias("max_event_id"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
+    def increments() -> DataFrame:
+        upsert_parquet(
+            zonemap_user_pairs(batch_df), users_path, keys=["part_date", "user_id"]
         )
+        return zonemap_increments(batch_df)
+
+    return merge_marked_state(
+        batch_df.sparkSession,
+        stats_path,
+        batch_id,
+        increments,
+        _STATS_SCHEMA,
+        keys=["part_date"],
+        combine={
+            "n_rows": "sum",
+            "min_event_id": "min",
+            "max_event_id": "max",
+            "min_value": "min",
+            "max_value": "max",
+        },
+        sentinel=_META_DATE,
     )
-    meta = spark.createDataFrame(
-        [(_META_DATE, batch_id, None, None, None, None)], _STATS_SCHEMA
-    )
-    out = merged.select(
-        F.col("part_date").cast("string"),
-        F.col("n_rows").cast("bigint"),
-        F.col("min_event_id").cast("bigint"),
-        F.col("max_event_id").cast("bigint"),
-        F.col("min_value").cast("double"),
-        F.col("max_value").cast("double"),
-    ).unionByName(meta)
-    # whole-state replace behind the crash-safe staged-rename swap
-    replace_parquet(out, stats_path)
-    return True
 
 
 def read_zonemap_stats(spark: SparkSession, stats_path: str) -> DataFrame:
     """The committed stats cells (marker row excluded),
     swap-recovered."""
-    stored = _read_state(spark, stats_path)
-    if stored is None:
-        raise FileNotFoundError(f"no zonemap state at {stats_path}")
-    return stored.where(F.col("part_date") != _META_DATE)
+    return read_marked_state(spark, stats_path, "part_date", _META_DATE)
 
 
 def read_zonemap(
@@ -186,7 +165,7 @@ def read_zonemap(
     state (partition-grain aggregate of a per-key table; never a
     fact-table rescan)."""
     stats = read_zonemap_stats(spark, stats_path)
-    users = _read_state(spark, users_path)
+    users = read_state(spark, users_path)
     counts = (
         users.groupBy("part_date").agg(
             F.count(F.lit(1)).alias("n_users")
@@ -205,25 +184,4 @@ def read_zonemap(
             F.round("max_value", 6).alias("max_value"),
             F.coalesce(F.col("n_users"), F.lit(0)).cast("long").alias("n_users"),
         )
-    )
-
-
-def zonemap_ingest_sink(
-    df: DataFrame,
-    stats_path: str,
-    users_path: str,
-    checkpoint: str,
-    query_name: str = "zonemap_ingest",
-) -> StreamingQuery:
-    """foreachBatch sink maintaining the zone-map state tables."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_zonemap_batch(batch_df, stats_path, users_path, batch_id)
-
-    return (
-        df.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
     )

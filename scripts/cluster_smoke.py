@@ -243,9 +243,10 @@ def _retention_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.retention_ingest import (
-        retention_ingest_sink,
+        merge_retention_batch,
         retention_matrix,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
 
@@ -264,7 +265,9 @@ def _retention_ingest_smoke(spark) -> str:
     stream = file_stream(spark, replay, ev.schema, max_files_per_trigger=1).select(
         "user_id", "ts"
     )
-    q = retention_ingest_sink(stream, state, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, _: merge_retention_batch(b, state), ck, "retention_ingest"
+    )
     q.processAllAvailable()
     q.stop()
     got = retention_matrix(spark, state)
@@ -286,9 +289,10 @@ def _countmin_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.countmin_ingest import (
-        countmin_ingest_sink,
+        merge_countmin_batch,
         heavy_hitters_estimate,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
 
@@ -305,7 +309,9 @@ def _countmin_ingest_smoke(spark) -> str:
     # each write.parquet target is a DIRECTORY — glob down into them,
     # or the file source sees zero files (no recursiveFileLookup)
     stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = countmin_ingest_sink(stream, state, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_countmin_batch(b, state, i), ck, "countmin_ingest"
+    )
     q.processAllAvailable()
     q.stop()
     batch = REGISTRY["text_countmin_heavy_hitters"].fn(spark, SF_DIR)
@@ -333,10 +339,11 @@ def _hll_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.streaming.hll_ingest import (
         hll_estimate,
         hll_estimate_of,
-        hll_ingest_sink,
+        merge_hll_batch,
         hll_register_increments,
         read_registers,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
@@ -350,7 +357,9 @@ def _hll_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = hll_ingest_sink(stream, state, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_hll_batch(b, state, i), ck, "hll_ingest"
+    )
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in read_registers(spark, state).collect()}
@@ -379,11 +388,12 @@ def _histogram_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.streaming.histogram_ingest import (
         LOG2_DIVS,
         histogram_increments,
-        histogram_ingest_sink,
+        merge_histogram_batch,
         quantile_estimates,
         quantile_estimates_of,
         read_histogram,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
@@ -397,7 +407,9 @@ def _histogram_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", ev.schema, max_files_per_trigger=1)
-    q = histogram_ingest_sink(stream, state, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_histogram_batch(b, state, i), ck, "histogram_ingest"
+    )
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in read_histogram(spark, state).collect()}
@@ -446,12 +458,12 @@ def _ivf_ingest_smoke(spark) -> str:
     )
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        ivf_ingest_sink,
         ivf_probe_state,
         ivf_state_build,
         merge_ivf_batch,
         read_ivf_state,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
@@ -466,7 +478,9 @@ def _ivf_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", emb.schema, max_files_per_trigger=1)
-    q = ivf_ingest_sink(stream, state, ck, cents)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_ivf_batch(b, state, i, cents), ck, "ivf_ingest"
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -645,11 +659,12 @@ def _corpusstats_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.streaming.corpusstats_ingest import (
         bm25_probe_state,
         corpus_stats_build,
-        corpus_stats_ingest_sink,
+        merge_corpus_stats_batch,
         hybrid_rrf_probe_state,
         read_corpus_scalars,
         read_term_stats,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     work = tempfile.mkdtemp(prefix="rtdp-smoke-cstats-")
@@ -661,7 +676,9 @@ def _corpusstats_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = corpus_stats_ingest_sink(stream, state, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_corpus_stats_batch(b, state, i), ck, "corpusstats_ingest"
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -723,9 +740,10 @@ def _graph_ingest_smoke(spark) -> str:
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.graph_ingest import (
         read_trade_flows,
-        trade_flow_ingest_sink,
+        merge_trade_flows_batch,
         trade_flows_build,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     work = tempfile.mkdtemp(prefix="rtdp-smoke-graph-")
@@ -745,7 +763,12 @@ def _graph_ingest_smoke(spark) -> str:
     stream = file_stream(
         spark, f"{replay}/*", li.schema, max_files_per_trigger=1
     )
-    q = trade_flow_ingest_sink(stream, orders, cust, supp, nation, state, ck)
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_trade_flows_batch(b, orders, cust, supp, nation, state, i),
+        ck,
+        "graph_ingest",
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -858,12 +881,12 @@ def _ivfpq_ingest_smoke(spark) -> str:
     )
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.ivfpq_ingest import (
-        ivfpq_ingest_sink,
         ivfpq_probe_state,
         ivfpq_state_build,
         merge_ivfpq_batch,
         read_ivfpq_state,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
@@ -879,7 +902,9 @@ def _ivfpq_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", emb.schema, max_files_per_trigger=1)
-    q = ivfpq_ingest_sink(stream, state, ck, cents, books)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_ivfpq_batch(b, state, i, cents, books), ck, "ivfpq_ingest"
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -921,10 +946,11 @@ def _zonemap_ingest_smoke(spark) -> str:
     registry query's DuckDB-checked frame row for row."""
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.sources.tables import load_table
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
     from real_time_data_pipeline_spark.streaming.zonemap_ingest import (
         read_zonemap,
-        zonemap_ingest_sink,
+        merge_zonemap_batch,
     )
     from tests.oracle import assert_matches
 
@@ -943,7 +969,9 @@ def _zonemap_ingest_smoke(spark) -> str:
             os.path.join(replay, f"b{i}.parquet")
         )
     stream = file_stream(spark, f"{replay}/*", ev.schema, max_files_per_trigger=1)
-    q = zonemap_ingest_sink(stream, stats, users, ck)
+    q = foreach_batch_sink(
+        stream, lambda b, i: merge_zonemap_batch(b, stats, users, i), ck, "zonemap_ingest"
+    )
     q.processAllAvailable()
     q.stop()
     derived = read_zonemap(spark, stats, users)

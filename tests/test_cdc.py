@@ -15,7 +15,7 @@ from real_time_data_pipeline_spark.streaming.sinks import (
     cdc_upsert_parquet,
     current_snapshot,
     expire_tombstones,
-    foreach_batch_cdc,
+    foreach_batch_sink,
 )
 from real_time_data_pipeline_spark.streaming.sources import file_stream
 from tests.test_streaming import replay_dir  # noqa: F401  (module-scoped fixture)
@@ -91,7 +91,7 @@ def test_expire_tombstones_bounds_state(spark, tmp_path):
 
 
 def test_cdc_stream_matches_batch_query(spark, tmp_path, replay_dir):
-    """events replayed as micro-batches through foreach_batch_cdc
+    """events replayed as micro-batches through foreach_batch_sink + cdc_upsert_parquet
     converge to exactly the `pipeline_cdc_apply` batch snapshot."""
     from real_time_data_pipeline_spark.queries import REGISTRY
 
@@ -105,9 +105,13 @@ def test_cdc_stream_matches_batch_query(spark, tmp_path, replay_dir):
         (F.col("event_type") == "error").alias("is_delete"),
     )
     path = str(tmp_path / "cdc_snap")
-    q = foreach_batch_cdc(
-        changelog, path, keys=["user_id"], order_cols=["ts", "event_id"],
-        tombstone_col="is_delete", checkpoint=str(tmp_path / "ck"),
+    q = foreach_batch_sink(
+        changelog,
+        lambda b, _: cdc_upsert_parquet(
+            b, path, keys=["user_id"], order_cols=["ts", "event_id"],
+            tombstone_col="is_delete",
+        ),
+        checkpoint=str(tmp_path / "ck"),
         query_name="cdc_stream",
     )
     q.processAllAvailable()

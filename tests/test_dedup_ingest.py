@@ -148,7 +148,8 @@ def test_ingest_streaming_sink(spark, tmp_path, provider):
 
     import pandas as pd
 
-    from real_time_data_pipeline_spark.streaming.dedup_ingest import dedup_ingest_sink
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import ingest_batch
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
     from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     d = str(tmp_path / "drops")
@@ -164,9 +165,11 @@ def test_ingest_streaming_sink(spark, tmp_path, provider):
     schema = StructType([StructField("doc_id", LongType()), StructField("text", StringType())])
     stream = file_stream(spark, d, schema, fmt="parquet", max_files_per_trigger=1)
     corpus = str(tmp_path / "corpus2")
-    q = dedup_ingest_sink(
-        stream, "doc_id", "text", corpus, str(tmp_path / "store2"),
+    q = foreach_batch_sink(
+        stream,
+        lambda b, _: ingest_batch(b, "doc_id", "text", corpus, str(tmp_path / "store2")),
         checkpoint=str(tmp_path / "ck2"),
+        query_name="dedup_ingest",
     )
     try:
         q.processAllAvailable()

@@ -19,7 +19,7 @@ from real_time_data_pipeline_spark.streaming.pipeline import (
     gold_transform,
     silver_transform,
 )
-from real_time_data_pipeline_spark.streaming.sinks import upsert_parquet
+from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink, upsert_parquet
 from real_time_data_pipeline_spark.streaming.sources import file_stream
 
 
@@ -522,11 +522,10 @@ def test_streaming_dedup_with_rocksdb_state(spark, tmp_path):
 
 def test_foreach_batch_upsert_stream_end_to_end(spark, tmp_path, replay_dir):
     """The gold sink contract under real micro-batches: a file-replay
-    stream drives foreach_batch_upsert with partition_cols; the final
+    stream drives upsert_parquet with partition_cols through
+    foreach_batch_sink in update mode; the final
     table equals the batch aggregate of the same rows (idempotent,
     last-writer-wins, date-partitioned)."""
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_upsert
-
     d, schema = replay_dir
     stream = file_stream(spark, d, schema, max_files_per_trigger=1)
     # per-user running aggregate in update mode -> keyed upsert
@@ -534,9 +533,14 @@ def test_foreach_batch_upsert_stream_end_to_end(spark, tmp_path, replay_dir):
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("total")
     ).withColumn("shard", (F.col("user_id") % 2).cast("int"))
     path = str(tmp_path / "gold_stream")
-    q = foreach_batch_upsert(
-        agg, path, keys=["user_id"], checkpoint=str(tmp_path / "ck"),
-        query_name="gold_upsert_stream", order_col="n", partition_cols=["shard"],
+    q = foreach_batch_sink(
+        agg,
+        lambda b, _: upsert_parquet(
+            b, path, keys=["user_id"], order_col="n", partition_cols=["shard"]
+        ),
+        checkpoint=str(tmp_path / "ck"),
+        query_name="gold_upsert_stream",
+        output_mode="update",
     )
     q.processAllAvailable()
     q.stop()
@@ -637,7 +641,7 @@ def test_streaming_trending_topk_gold_snapshot(spark, replay_dir, tmp_path):
 def test_kafka_wire_contract_through_dedup_ingest(spark, tmp_path):
     """The Kafka record contract, executed: a live TCP feed is shaped
     into Kafka's exact wire schema (binary key, binary value) and run
-    through decode_kafka_json → dedup_ingest_sink — the reference's
+    through decode_kafka_json → ingest_batch — the reference's
     defining source path (spark_streaming_job's Kafka → decode →
     dedup), with only the transport swapped for the socket source the
     container can host. Proves the binary cast/from_json decode and
@@ -647,7 +651,7 @@ def test_kafka_wire_contract_through_dedup_ingest(spark, tmp_path):
     import threading
     import time
 
-    from real_time_data_pipeline_spark.streaming.dedup_ingest import dedup_ingest_sink
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import ingest_batch
     from real_time_data_pipeline_spark.streaming.sources import decode_kafka_json
 
     base = "the quick brown fox jumps over the lazy dog near the old river bank"
@@ -683,9 +687,11 @@ def test_kafka_wire_contract_through_dedup_ingest(spark, tmp_path):
     )
     decoded = decode_kafka_json(wire, "doc_id long, text string")
     corpus = str(tmp_path / "corpus")
-    q = dedup_ingest_sink(
-        decoded, "doc_id", "text", corpus, str(tmp_path / "store"),
-        checkpoint=str(tmp_path / "ck"), query_name="kafka_wire_ingest",
+    q = foreach_batch_sink(
+        decoded,
+        lambda b, _: ingest_batch(b, "doc_id", "text", corpus, str(tmp_path / "store")),
+        checkpoint=str(tmp_path / "ck"),
+        query_name="kafka_wire_ingest",
     )
     try:
         deadline = time.time() + 40
@@ -1270,7 +1276,7 @@ def test_stream_batch_parity_retention_cohorts(spark, replay_dir, tmp_path):
     on the true global minimum across micro-batches."""
     from real_time_data_pipeline_spark.queries.registry import REGISTRY
     from real_time_data_pipeline_spark.streaming.retention_ingest import (
-        retention_ingest_sink,
+        merge_retention_batch,
         retention_matrix,
     )
 
@@ -1280,7 +1286,12 @@ def test_stream_batch_parity_retention_cohorts(spark, replay_dir, tmp_path):
     stream = file_stream(spark, d, schema, max_files_per_trigger=1).select(
         "user_id", "ts"
     )
-    q = retention_ingest_sink(stream, state_root, ckpt)
+    q = foreach_batch_sink(
+        stream,
+        lambda b, _: merge_retention_batch(b, state_root),
+        ckpt,
+        "retention_ingest",
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -1673,7 +1684,7 @@ def test_countmin_ingest_sink_end_to_end(spark, tmp_path):
 
     from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.countmin_ingest import (
-        countmin_ingest_sink,
+        merge_countmin_batch,
         read_sketch,
         sketch_increments,
     )
@@ -1698,7 +1709,12 @@ def test_countmin_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "cm_sink_state")
-    q = countmin_ingest_sink(stream, state, str(tmp_path / "cm_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_countmin_batch(b, state, i),
+        str(tmp_path / "cm_ckpt"),
+        "countmin_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in read_sketch(spark, state).collect()}
@@ -1800,7 +1816,7 @@ def test_bloom_ingest_sink_end_to_end(spark, tmp_path):
 
     from real_time_data_pipeline_spark.streaming.bloom_ingest import (
         bloom_bit_increments,
-        bloom_ingest_sink,
+        merge_bloom_batch,
         read_bloom,
     )
 
@@ -1824,7 +1840,12 @@ def test_bloom_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "bloom_sink_state")
-    q = bloom_ingest_sink(stream, state, str(tmp_path / "bloom_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_bloom_batch(b, state, i),
+        str(tmp_path / "bloom_ckpt"),
+        "bloom_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     got = {r.pos for r in read_bloom(spark, state).collect()}
@@ -1926,7 +1947,7 @@ def test_hll_ingest_sink_end_to_end(spark, tmp_path):
     import os as _os
 
     from real_time_data_pipeline_spark.streaming.hll_ingest import (
-        hll_ingest_sink,
+        merge_hll_batch,
         hll_register_increments,
         read_registers,
     )
@@ -1951,7 +1972,12 @@ def test_hll_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "hll_sink_state")
-    q = hll_ingest_sink(stream, state, str(tmp_path / "hll_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_hll_batch(b, state, i),
+        str(tmp_path / "hll_ckpt"),
+        "hll_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in read_registers(spark, state).collect()}
@@ -2023,7 +2049,7 @@ def test_histogram_ingest_sink_end_to_end(spark, tmp_path):
     import os as _os
 
     from real_time_data_pipeline_spark.streaming.histogram_ingest import (
-        histogram_ingest_sink,
+        merge_histogram_batch,
         histogram_increments,
         read_histogram,
     )
@@ -2050,7 +2076,12 @@ def test_histogram_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "hist_sink_state")
-    q = histogram_ingest_sink(stream, state, str(tmp_path / "hist_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_histogram_batch(b, state, i),
+        str(tmp_path / "hist_ckpt"),
+        "histogram_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in read_histogram(spark, state).collect()}
@@ -2178,7 +2209,7 @@ def test_zonemap_ingest_sink_end_to_end(spark, tmp_path):
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.streaming.zonemap_ingest import (
         read_zonemap,
-        zonemap_ingest_sink,
+        merge_zonemap_batch,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2198,7 +2229,12 @@ def test_zonemap_ingest_sink_end_to_end(spark, tmp_path):
     )
     stats = str(tmp_path / "zme_stats")
     users = str(tmp_path / "zme_users")
-    q = zonemap_ingest_sink(stream, stats, users, str(tmp_path / "zme_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_zonemap_batch(b, stats, users, i),
+        str(tmp_path / "zme_ckpt"),
+        "zonemap_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     derived = {tuple(r) for r in read_zonemap(spark, stats, users).collect()}
@@ -2390,7 +2426,7 @@ def test_ivf_ingest_sink_end_to_end(spark, tmp_path):
         stride_centroids,
     )
     from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        ivf_ingest_sink,
+        merge_ivf_batch,
         ivf_state_build,
     )
 
@@ -2416,7 +2452,12 @@ def test_ivf_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "ivf_sink_state")
-    q = ivf_ingest_sink(stream, state, str(tmp_path / "ivf_ckpt"), cents)
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_ivf_batch(b, state, i, cents),
+        str(tmp_path / "ivf_ckpt"),
+        "ivf_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     want = {
@@ -2512,7 +2553,7 @@ def test_ivfpq_ingest_sink_end_to_end(spark, tmp_path):
         stride_centroids,
     )
     from real_time_data_pipeline_spark.streaming.ivfpq_ingest import (
-        ivfpq_ingest_sink,
+        merge_ivfpq_batch,
         ivfpq_state_build,
         read_ivfpq_state,
     )
@@ -2540,7 +2581,12 @@ def test_ivfpq_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "ivfpq_sink_state")
-    q = ivfpq_ingest_sink(stream, state, str(tmp_path / "ivfpq_ckpt"), cents, books)
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_ivfpq_batch(b, state, i, cents, books),
+        str(tmp_path / "ivfpq_ckpt"),
+        "ivfpq_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     got = {(r.cent_id, r.nid, tuple(r.codes)) for r in read_ivfpq_state(spark, state).collect()}
@@ -2868,7 +2914,7 @@ def test_corpus_stats_ingest_sink_end_to_end(spark, tmp_path):
 
     from real_time_data_pipeline_spark.streaming.corpusstats_ingest import (
         corpus_stats_build,
-        corpus_stats_ingest_sink,
+        merge_corpus_stats_batch,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -2889,7 +2935,12 @@ def test_corpus_stats_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "cs_sink_state")
-    q = corpus_stats_ingest_sink(stream, state, str(tmp_path / "cs_ckpt"))
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_corpus_stats_batch(b, state, i),
+        str(tmp_path / "cs_ckpt"),
+        "corpusstats_ingest",
+    )
     q.processAllAvailable()
     q.stop()
     one = corpus_stats_build(docs)
@@ -3003,7 +3054,7 @@ def test_trade_flow_ingest_sink_end_to_end(spark, tmp_path):
     import os as _os
 
     from real_time_data_pipeline_spark.streaming.graph_ingest import (
-        trade_flow_ingest_sink,
+        merge_trade_flows_batch,
         trade_flows_build,
     )
 
@@ -3027,8 +3078,11 @@ def test_trade_flow_ingest_sink_end_to_end(spark, tmp_path):
         .parquet(_os.path.join(d, "*"))
     )
     state = str(tmp_path / "gf_sink_state")
-    q = trade_flow_ingest_sink(
-        stream, orders, cust, supp, nation, state, str(tmp_path / "gf_ckpt")
+    q = foreach_batch_sink(
+        stream,
+        lambda b, i: merge_trade_flows_batch(b, orders, cust, supp, nation, state, i),
+        str(tmp_path / "gf_ckpt"),
+        "graph_ingest",
     )
     q.processAllAvailable()
     q.stop()

@@ -1,0 +1,331 @@
+"""The shared twin commit protocols in streaming/sinks.py, tested across
+every merge algebra: crash windows of the staged-rename swap, absent
+state, state written in the layout before `merge_marked_state`
+existed, and the overlapped partitioned commit.
+"""
+
+import datetime as dt
+import os
+import re
+import shutil
+
+import pytest
+
+from real_time_data_pipeline_spark.streaming import (
+    bloom_ingest,
+    corpusstats_ingest,
+    countmin_ingest,
+    graph_ingest,
+    histogram_ingest,
+    hll_ingest,
+    ivf_ingest,
+    ivfpq_ingest,
+    zonemap_ingest,
+)
+from real_time_data_pipeline_spark.streaming.sinks import (
+    _hadoop_fs,
+    commit_partitioned_batch,
+    commit_partitioned_batches_overlapped,
+    upsert_parquet,
+)
+
+# Batch 0 holds words and shingles no later batch repeats, so a merge
+# that lost it shows under the idempotent algebras (max, union) too.
+DOCS = [
+    [(1, "alpha beta gamma delta epsilon zeta"), (2, "chi psi omega beta gamma delta eta")],
+    [(3, "gamma delta epsilon zeta eta theta iota"), (4, "alpha alpha beta kappa lambda mu nu")],
+    [(5, "omicron pi rho sigma tau upsilon phi"), (6, "alpha beta gamma delta epsilon zeta")],
+]
+_T0 = dt.datetime(2024, 3, 1, 12)
+EVENTS = [
+    [(1, _T0, 10, 1.5), (2, _T0, 11, 0.25)],
+    [(3, _T0 + dt.timedelta(days=1), 10, 8.0), (4, _T0, 12, 3.0)],
+    [(5, _T0 + dt.timedelta(days=2), 13, 0.75), (6, _T0, 10, 40.0)],
+]
+
+
+def _frames(spark, kind):
+    if kind == "docs":
+        return [spark.createDataFrame(r, "doc_id long, text string") for r in DOCS]
+    return [
+        spark.createDataFrame(
+            r, "event_id long, ts timestamp, user_id long, value double"
+        )
+        for r in EVENTS
+    ]
+
+
+def _rows(df):
+    return {tuple(r) for r in df.collect()}
+
+
+def _zm_merge(b, root, i):
+    return zonemap_ingest.merge_zonemap_batch(
+        b, os.path.join(root, "stats"), os.path.join(root, "users"), i
+    )
+
+
+def _cs_read(spark, root):
+    path = os.path.join(root, "state")
+    return _rows(corpusstats_ingest.read_term_stats(spark, path)) | _rows(
+        corpusstats_ingest.read_corpus_scalars(spark, path)
+    )
+
+
+# One entry per merge algebra: input kind, merge(batch, root, id),
+# read(spark, root) -> row set, and the table whose swap is cut.
+TWINS = {
+    "countmin_sum": (
+        "docs",
+        lambda b, root, i: countmin_ingest.merge_countmin_batch(b, os.path.join(root, "state"), i),
+        lambda spark, root: _rows(countmin_ingest.read_sketch(spark, os.path.join(root, "state"))),
+        "state",
+    ),
+    "hll_max": (
+        "docs",
+        lambda b, root, i: hll_ingest.merge_hll_batch(b, os.path.join(root, "state"), i),
+        lambda spark, root: _rows(hll_ingest.read_registers(spark, os.path.join(root, "state"))),
+        "state",
+    ),
+    "bloom_union": (
+        "docs",
+        lambda b, root, i: bloom_ingest.merge_bloom_batch(b, os.path.join(root, "state"), i),
+        lambda spark, root: _rows(bloom_ingest.read_bloom(spark, os.path.join(root, "state"))),
+        "state",
+    ),
+    "histogram_sum": (
+        "events",
+        lambda b, root, i: histogram_ingest.merge_histogram_batch(b, os.path.join(root, "state"), i),
+        lambda spark, root: _rows(histogram_ingest.read_histogram(spark, os.path.join(root, "state"))),
+        "state",
+    ),
+    "zonemap_composite": (
+        "events",
+        _zm_merge,
+        lambda spark, root: _rows(
+            zonemap_ingest.read_zonemap(
+                spark, os.path.join(root, "stats"), os.path.join(root, "users")
+            )
+        ),
+        "stats",
+    ),
+    "corpus_stats_partitioned": (
+        "docs",
+        lambda b, root, i: corpusstats_ingest.merge_corpus_stats_batch(
+            b, os.path.join(root, "state"), i
+        ),
+        _cs_read,
+        "state",
+    ),
+}
+
+WINDOWS = ("tmp_written", "parked_at_old", "renamed_old_kept")
+
+
+def _cut_swap(spark, root, pre_root, post_root, swapped, window):
+    """Lay out on disk the state a staged-rename swap leaves when it
+    dies at ``window``: ``pre_root`` holds the committed state before
+    the swapped step, ``post_root`` the state after it. Tables other
+    than ``swapped`` are written before the swap, so they are taken
+    from ``post_root``."""
+    shutil.copytree(pre_root, root)
+    for name in os.listdir(post_root):
+        if name != swapped:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+            shutil.copytree(os.path.join(post_root, name), os.path.join(root, name))
+    table = os.path.join(root, swapped)
+    staged = table + "__staged"
+    shutil.copytree(os.path.join(post_root, swapped), staged)
+    fs, jtable = _hadoop_fs(spark, table)
+    jtmp, jold, jstaged = (
+        _hadoop_fs(spark, p)[1] for p in (table + "__tmp__", table + "__old__", staged)
+    )
+    # the swap's own steps, stopped at the crash point
+    assert fs.rename(jstaged, jtmp)  # merged state fully written to __tmp__
+    if window in ("parked_at_old", "renamed_old_kept"):
+        assert fs.rename(jtable, jold)  # current -> __old__
+    if window == "renamed_old_kept":
+        assert fs.rename(jtmp, jtable)  # __tmp__ -> current, backup not yet deleted
+
+
+@pytest.mark.parametrize("twin", sorted(TWINS))
+def test_swap_crash_windows_recover_to_no_crash_state(spark, tmp_path, twin):
+    """For every merge algebra: a crash in each window of the
+    staged-rename swap, followed by a re-run of the crashed step and
+    the next batch, leaves exactly the state of a run without a crash.
+    The marker twins' swapped step is the merge of batch 1 (re-run
+    under the same id: a retry); the partitioned twin's is the
+    compaction, its only swap-committed write. Each reader also names
+    the path when the state is absent."""
+    kind, merge, read, swapped = TWINS[twin]
+    b = _frames(spark, kind)
+    partitioned = twin.endswith("_partitioned")
+
+    missing = str(tmp_path / "absent")
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        read(spark, missing)
+
+    def setup(root):
+        merge(b[0], root, 0)
+        if partitioned:
+            merge(b[1], root, 1)
+
+    def step(root):
+        if partitioned:
+            corpusstats_ingest.compact_corpus_stats(spark, os.path.join(root, swapped))
+            return None
+        return merge(b[1], root, 1)
+
+    pre, post, ref = (str(tmp_path / n) for n in ("pre", "post", "ref"))
+    setup(pre)
+    setup(post)
+    step(post)
+    shutil.copytree(post, ref)
+    merge(b[2], ref, 2)
+    want = read(spark, ref)
+    assert want
+
+    for w in WINDOWS:
+        root = str(tmp_path / w)
+        _cut_swap(spark, root, pre, post, swapped, w)
+        ran = step(root)
+        if not partitioned:
+            # the marker committed with the swap decides: before the
+            # second rename the retry merges, after it the retry skips
+            assert ran is (w != "renamed_old_kept"), w
+        merge(b[2], root, 2)
+        assert read(spark, root) == want, w
+
+
+def test_partitioned_readers_name_the_absent_path(spark, tmp_path):
+    """Every partitioned twin's reader goes through the shared
+    `read_partitioned_state` and raises naming the path."""
+    missing = str(tmp_path / "absent")
+    for read in (
+        ivf_ingest.read_ivf_state,
+        ivfpq_ingest.read_ivfpq_state,
+        graph_ingest.read_trade_flows,
+        corpusstats_ingest.read_term_stats,
+        corpusstats_ingest.read_corpus_scalars,
+    ):
+        with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+            read(spark, missing)
+
+
+def test_overlapped_partitioned_commit_guards_and_matches_sequential(spark, tmp_path):
+    """`commit_partitioned_batches_overlapped` runs the same guard and
+    write as `commit_partitioned_batch`: its state equals sequential
+    commits (with and without overlap), a replay from batch 0 over
+    newer state raises the reset error, and a retry of a batch whose
+    partitions were compacted away raises instead of double-counting."""
+    slices = [corpusstats_ingest.corpus_stats_increments(d) for d in _frames(spark, "docs")]
+
+    seq = str(tmp_path / "seq")
+    for i, inc in enumerate(slices):
+        commit_partitioned_batch(inc, seq, i, key_col="bkt")
+    want = _rows(spark.read.parquet(seq))
+    for workers in (2, 1):
+        path = str(tmp_path / f"overlapped_{workers}")
+        commit_partitioned_batches_overlapped(slices, path, key_col="bkt", max_workers=workers)
+        assert _rows(spark.read.parquet(path)) == want
+
+    with pytest.raises(ValueError, match="checkpoint/state mismatch"):
+        commit_partitioned_batches_overlapped(slices, seq, key_col="bkt")
+    assert _rows(spark.read.parquet(seq)) == want  # raised before any write
+
+    one = str(tmp_path / "compacted")
+    commit_partitioned_batches_overlapped(slices[:1], one, key_col="bkt")
+    corpusstats_ingest.compact_corpus_stats(spark, one)
+    with pytest.raises(ValueError, match="compacted away"):
+        commit_partitioned_batches_overlapped(slices[:1], one, key_col="bkt")
+
+
+# The marker twins' state layout as written before the shared kernel:
+# DDL, meta row for a given batch id, and the batch's cells as tuples
+# in DDL column order (increments -> rows).
+PREVIOUS_LAYOUTS = {
+    "countmin": (
+        "docs",
+        "salt_id int, bucket bigint, bc bigint",
+        lambda bid: (-1, 0, bid),
+        countmin_ingest.sketch_increments,
+        countmin_ingest.merge_countmin_batch,
+        countmin_ingest.read_sketch,
+        "salt_id",
+        "bc",
+    ),
+    "hll": (
+        "docs",
+        "reg bigint, rho bigint",
+        lambda bid: (-1, bid),
+        hll_ingest.hll_register_increments,
+        hll_ingest.merge_hll_batch,
+        hll_ingest.read_registers,
+        "reg",
+        "rho",
+    ),
+    "bloom": (
+        "docs",
+        "pos bigint, bid bigint",
+        lambda bid: (-1, bid),
+        lambda b: bloom_ingest.bloom_bit_increments(b).selectExpr("pos", "0 AS bid"),
+        bloom_ingest.merge_bloom_batch,
+        bloom_ingest.read_bloom,
+        "pos",
+        "bid",
+    ),
+    "histogram": (
+        "events",
+        "bucket bigint, cnt bigint",
+        lambda bid: (-(10**9), bid),
+        histogram_ingest.histogram_increments,
+        histogram_ingest.merge_histogram_batch,
+        histogram_ingest.read_histogram,
+        "bucket",
+        "cnt",
+    ),
+    "zonemap": (
+        "events",
+        zonemap_ingest._STATS_SCHEMA,
+        lambda bid: ("\x00meta", bid, None, None, None, None),
+        zonemap_ingest.zonemap_increments,
+        None,  # two-path merge, wired below
+        zonemap_ingest.read_zonemap_stats,
+        "part_date",
+        "n_rows",
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(PREVIOUS_LAYOUTS))
+def test_marker_state_in_previous_layout_still_merges(spark, tmp_path, twin):
+    """State committed by the per-twin merge bodies the kernel replaced
+    (same columns and types, same sentinel key, marker in the same
+    column; Count-Min's meta row had bucket = 0 where the kernel now
+    writes NULL) merges the next batch id into the same cells as a
+    one-shot build, keeps its schema, and keeps its marker contract."""
+    kind, ddl, meta, increments, merge, read, key, marker_col = PREVIOUS_LAYOUTS[twin]
+    b = _frames(spark, kind)
+    path = str(tmp_path / "state")
+    if merge is None:
+        users = str(tmp_path / "users")
+        upsert_parquet(zonemap_ingest.zonemap_user_pairs(b[0]), users, keys=["part_date", "user_id"])
+
+        def merge(frame, p, i):
+            return zonemap_ingest.merge_zonemap_batch(frame, p, users, i)
+
+    cells = [tuple(r) for r in increments(b[0]).collect()]
+    spark.createDataFrame(cells + [meta(0)], ddl).write.parquet(path)
+    before = spark.read.parquet(path).schema
+
+    assert merge(b[1], path, 1) is True
+    got = read(spark, path)
+    one_shot = increments(b[0].unionByName(b[1])).select(*got.columns)
+    assert _rows(got) == _rows(one_shot)
+    stored = spark.read.parquet(path)
+    assert stored.schema == before
+    sentinel = meta(0)[0]
+    assert [r[marker_col] for r in stored.where(stored[key] == sentinel).collect()] == [1]
+    assert merge(b[1], path, 1) is False
+    with pytest.raises(ValueError, match="checkpoint/state mismatch"):
+        merge(b[0], path, 0)
