@@ -39,7 +39,7 @@ if __package__ in (None, ""):
         0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -56,6 +56,29 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str) -> DataFrame:
+    """Normalize ``bronze``, keep silver rows of ``date``, then write
+    that day's silver and gold partitions; returns the gold frame
+    (with its ``date`` column). The one body of the spark-submit job
+    and the DAG's backfill task."""
+    from real_time_data_pipeline_spark.pipelines.station_status import (
+        normalize_raw,
+        to_gold,
+        to_silver,
+    )
+    from real_time_data_pipeline_spark.sources.sinks import write_parquet_partitioned
+
+    silver = to_silver(normalize_raw(bronze)).withColumn(
+        "date", F.to_date(F.col("event_ts"))
+    )
+    day = silver.where(F.col("date") == F.lit(date))
+    write_parquet_partitioned(day, silver_path, "date")
+
+    gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
+    write_parquet_partitioned(gold, gold_path, "date")
+    return gold
+
+
 def run(
     spark: SparkSession,
     date: str,
@@ -68,25 +91,9 @@ def run(
     jdbc_password: str | None = None,
 ) -> int:
     """Execute the backfill; returns the number of gold rows written."""
-    from real_time_data_pipeline_spark.pipelines.station_status import (
-        normalize_raw,
-        to_gold,
-        to_silver,
-    )
-    from real_time_data_pipeline_spark.sources.sinks import (
-        jdbc_writer,
-        write_parquet_partitioned,
-    )
+    from real_time_data_pipeline_spark.sources.sinks import jdbc_writer
 
-    bronze = spark.read.parquet(bronze_path)
-    silver = to_silver(normalize_raw(bronze)).withColumn(
-        "date", F.to_date(F.col("event_ts"))
-    )
-    day = silver.where(F.col("date") == F.lit(date))
-    write_parquet_partitioned(day, silver_path, "date")
-
-    gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
-    write_parquet_partitioned(gold, gold_path, "date")
+    gold = backfill_day(spark.read.parquet(bronze_path), date, silver_path, gold_path)
     if jdbc_url is not None:
         jdbc_writer(
             gold.drop("date"), jdbc_url, jdbc_table, jdbc_user or "", jdbc_password or ""

@@ -8,7 +8,8 @@ key). Both are defects this engine fixes rather than copies:
 
 - batch: ``dedup_deterministic`` picks the winner by an explicit
   tie-break ordering (``row_number() == 1``), so reruns and the DuckDB
-  oracle agree row-for-row;
+  oracle agree row-for-row. It is also the winner election of every
+  keyed merge in streaming/sinks.py;
 - streaming: ``dedup_stream`` requires a watermark and uses
   ``dropDuplicatesWithinWatermark`` so state is evicted.
 
@@ -24,11 +25,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_arbitrary(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Reference-equivalent ``dropDuplicates(keys)`` (batch D2)."""
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_deterministic(

@@ -177,7 +177,10 @@ def quality_features(col: Column | str) -> dict[str, Column]:
         "punct_ratio": F.round(F.regexp_count(c, F.lit(r"[.,!?;:]")) / safe_chars, 6),
         "digit_ratio": F.round(F.regexp_count(c, F.lit(r"[0-9]")) / safe_chars, 6),
         "upper_ratio": F.round(F.regexp_count(c, F.lit(r"[A-Z]")) / safe_chars, 6),
-        "stopword_ratio": F.round(stop_hits / safe_tok, 6),
+        # hits count \b word runs, tokens split on whitespace: one
+        # token can hold several runs ("a:a"), so cap hits at n_tokens
+        # to keep the ratio a share of tokens in [0, 1]
+        "stopword_ratio": F.round(F.least(stop_hits, n_tok) / safe_tok, 6),
     }
 
 

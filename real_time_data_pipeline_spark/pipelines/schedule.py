@@ -176,26 +176,12 @@ def hourly_station_dag(
     Returns (tasks, deps) for `run_dag`, so callers can extend the
     graph before running.
     """
-    from real_time_data_pipeline_spark.pipelines.station_status import (
-        gold_checks,
-        normalize_raw,
-        to_gold,
-        to_silver,
-    )
-    from real_time_data_pipeline_spark.sources.sinks import (
-        drop_partitions_older_than,
-        write_parquet_partitioned,
-    )
+    from real_time_data_pipeline_spark.jobs.backfill import backfill_day
+    from real_time_data_pipeline_spark.pipelines.station_status import gold_checks
+    from real_time_data_pipeline_spark.sources.sinks import drop_partitions_older_than
 
     def backfill() -> int:
-        silver = to_silver(normalize_raw(raw)).withColumn(
-            "date", F.to_date(F.col("event_ts"))
-        )
-        day = silver.where(F.col("date") == F.lit(ds))
-        write_parquet_partitioned(day, silver_path, "date")
-        gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
-        write_parquet_partitioned(gold, gold_path, "date")
-        return gold.count()
+        return backfill_day(raw, ds, silver_path, gold_path).count()
 
     def soda_scan() -> list:
         gold = spark.read.parquet(gold_path).where(F.col("date") == F.lit(ds))

@@ -31,7 +31,7 @@ from real_time_data_pipeline_spark.operators.normalize import (
     int_with_default,
     normalize_bool,
 )
-from real_time_data_pipeline_spark.operators.windows import windowed_agg
+from real_time_data_pipeline_spark.streaming.pipeline import gold_transform
 
 DEDUP_KEYS = ["station_id", "last_reported"]
 FLAG_COLS = ["is_installed", "is_renting", "is_returning"]
@@ -82,10 +82,7 @@ def to_gold(silver: DataFrame, watermark_delay: str = "2 hours") -> DataFrame:
     Output schema matches the reference's Postgres gold table
     (schemas.GOLD_SCHEMA / `soda/checks/checks_gold.yml:4`).
     """
-    from real_time_data_pipeline_spark.streaming.pipeline import has_watermark
-
-    need_wm = silver.isStreaming and not has_watermark(silver)
-    out = windowed_agg(
+    out = gold_transform(
         silver,
         event_time="event_ts",
         window_duration="15 minutes",
@@ -95,7 +92,7 @@ def to_gold(silver: DataFrame, watermark_delay: str = "2 hours") -> DataFrame:
             "avg_bikes": F.avg("num_bikes_available"),
             "avg_docks": F.avg("num_docks_available"),
         },
-        watermark_delay=watermark_delay if need_wm else None,
+        watermark_delay=watermark_delay,
     )
     return out.select(
         "station_id",

@@ -37,6 +37,14 @@ def _sql_hits(lang: str) -> str:
     )
 
 
+def _sql_stop_ratio() -> str:
+    """DuckDB expression: English stopword share of the tokens in ``w``.
+
+    Hits are capped at the token count, as in ``quality_features``: a
+    whitespace token such as ``a:a`` holds two stopword runs."""
+    return f"round(least({_sql_hits('en')}, len(w)) / greatest(len(w), 1.0), 6)"
+
+
 @query(
     "text_token_counts",
     oracle="""
@@ -120,7 +128,7 @@ _QUALITY_ORACLE = f"""
         AS digit_ratio,
       round(len(regexp_extract_all(text, '[A-Z]')) / greatest(length(text), 1.0), 6)
         AS upper_ratio,
-      round(({_sql_hits("en")}) / greatest(len(w), 1.0), 6) AS stopword_ratio
+      {_sql_stop_ratio()} AS stopword_ratio
     FROM base
 """
 
@@ -597,7 +605,7 @@ _FILTER_ORACLE = f"""
              CAST(len(w) AS BIGINT) AS n_tokens,
              list_sum(list_transform(w, x -> CAST(length(x) AS BIGINT)))
                / greatest(len(w), 1) AS avg_token_len,
-             round(({_sql_hits("en")}) / greatest(len(w), 1.0), 6) AS stopword_ratio,
+             {_sql_stop_ratio()} AS stopword_ratio,
     """ + ",\n".join(
         f"         CAST({_sql_hits(lg)} AS BIGINT) AS hits_{lg}" for lg in LANG_STOPWORDS
     ) + f"""
@@ -863,7 +871,7 @@ def _ready_oracle() -> str:
              CAST(len(w) AS BIGINT) AS n_tokens,
              list_sum(list_transform(w, x -> CAST(length(x) AS BIGINT)))
                / greatest(len(w), 1) AS avg_token_len,
-             round(({_sql_hits("en")}) / greatest(len(w), 1.0), 6) AS stopword_ratio,
+             {_sql_stop_ratio()} AS stopword_ratio,
 {hits_cols}
       FROM qbase
     ), qual AS (
@@ -2331,7 +2339,7 @@ _FUNNEL_ORACLE = f"""
              CAST(len(w) AS BIGINT) AS n_tokens,
              list_sum(list_transform(w, x -> CAST(length(x) AS BIGINT)))
                / greatest(len(w), 1) AS avg_token_len,
-             round(({_sql_hits("en")}) / greatest(len(w), 1.0), 6)
+             {_sql_stop_ratio()}
                AS stopword_ratio,
     """ + ",\n".join(
     f"         CAST({_sql_hits(lg)} AS BIGINT) AS hits_{lg}"

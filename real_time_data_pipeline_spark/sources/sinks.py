@@ -19,27 +19,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_parquet_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str = "date",
-    derive_from: str | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_parquet_partitioned(df: DataFrame, path: str, partition_col: str = "date") -> None:
     """Date-partitioned parquet write with dynamic partition overwrite.
 
     At 100 TB this layout is what makes backfills O(day) instead of
     O(table) and gives every date-filtered query partition pruning.
+    The overwrite mode is a per-write option, so no session conf
+    changes under queries analysed concurrently in the same session.
     """
-    if derive_from is not None and partition_col not in df.columns:
-        df = df.withColumn(partition_col, F.to_date(F.col(derive_from)))
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode(mode).partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def jdbc_writer(

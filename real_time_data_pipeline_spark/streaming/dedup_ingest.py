@@ -21,8 +21,9 @@ store, and a crashed job resumes from the last committed store.
 **Bucketed state — the per-batch cost is O(touched buckets), never
 O(corpus).** The state root holds three hash-bucketed sub-tables,
 each PARTITIONED on disk by a bucket column so every probe is a
-partition-pruned read and every merge is a partition-scoped dynamic
-overwrite (`upsert_parquet(partition_cols=...)`):
+partition-pruned read and every merge is the keyed upsert's
+per-partition staged swap (`upsert_parquet(partition_col=...)`, see
+streaming/sinks.py):
 
 - ``hashes/``  (content_hash, id)            bucketed by xxhash64(content_hash)
 - ``bands/``   (band, band_key, id)          bucketed by xxhash64(band, band_key)
@@ -47,7 +48,7 @@ no duplicate corpus rows, no half-registered state.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators.similarity import (
@@ -58,39 +59,20 @@ from real_time_data_pipeline_spark.operators.similarity import (
 )
 from real_time_data_pipeline_spark.operators.materialize import reliable_materialize
 from real_time_data_pipeline_spark.operators.text import word_shingles
-from real_time_data_pipeline_spark.streaming.sinks import table_exists, upsert_parquet
+from real_time_data_pipeline_spark.streaming.sinks import (
+    BUCKET_COL,
+    bucket_of,
+    read_buckets,
+    table_exists,
+    touched_buckets,
+    upsert_parquet,
+)
 
-# Partition-bucket column shared by every state sub-table (and the
-# corpus). 64 buckets keeps local test tables small; a 100 TB corpus
-# wants O(thousands) so each bucket stays executor-sized — it is a
-# parameter on every entry point.
-BUCKET_COL = "bkt"
+# Bucket count of every state sub-table (and the corpus). 64 buckets
+# keeps local test tables small; a 100 TB corpus wants O(thousands) so
+# each bucket stays executor-sized — it is a parameter on every entry
+# point.
 DEFAULT_BUCKETS = 64
-
-
-def bucket_of(*cols: Column | str, n_buckets: int = DEFAULT_BUCKETS) -> Column:
-    """Deterministic partition bucket for a key tuple."""
-    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
-
-
-def read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame:
-    """Partition-pruned read of a bucketed state table: only the
-    listed bucket partitions are scanned (static partition pruning on
-    the literal IN-list — verify with `.explain`'s PartitionFilters)."""
-    df = spark.read.parquet(path)
-    if not buckets:  # empty probe side -> scan nothing
-        return df.where(F.lit(False))
-    return df.where(F.col(BUCKET_COL).isin(buckets))
-
-
-def _touched_buckets(df: DataFrame) -> list[int]:
-    """Distinct bucket values present in a (small) micro-batch-derived
-    frame. COLLECT BOUND CONTRACT: at most min(batch key count,
-    N_BUCKETS) integers come back — the bucket column is a pmod into
-    a FIXED bucket count, so the driver-side list can never exceed
-    the configured bucket total no matter how large the batch. Do not
-    copy this pattern onto an unbounded (raw-key) column."""
-    return [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
 
 
 def _band_keys(sig_col: str, band_rows: int = MINHASH_BAND_ROWS, num_hashes: int = MINHASH_NUM):
@@ -198,7 +180,7 @@ def _ingest_batch_impl(
             "content_hash",
             bucket_of("content_hash", n_buckets=n_buckets).alias(BUCKET_COL),
         )
-        stored_hashes = read_buckets(spark, hashes_path, _touched_buckets(probe_hashes))
+        stored_hashes = read_buckets(spark, hashes_path, touched_buckets(probe_hashes))
         # Same id ⇒ fully committed re-delivery; different id ⇒ dup of
         # an accepted doc. Either way the doc is not new — drop it.
         survivors = survivors.join(
@@ -216,7 +198,7 @@ def _ingest_batch_impl(
             ),
         )
         cand_new = reliable_materialize(cand_new)
-        stored_bands = read_buckets(spark, bands_path, _touched_buckets(cand_new))
+        stored_bands = read_buckets(spark, bands_path, touched_buckets(cand_new))
         # The micro-batch side is small -> broadcast it; the store side
         # is already partition-pruned to the colliding buckets.
         collisions = (
@@ -232,7 +214,7 @@ def _ingest_batch_impl(
             bucket_of("__old_id", n_buckets=n_buckets).alias(BUCKET_COL),
         )
         old_shingles = (
-            read_buckets(spark, docs_path, _touched_buckets(old_ids))
+            read_buckets(spark, docs_path, touched_buckets(old_ids))
             .select(F.col(id_col).alias("__old_id"), F.col("shingles").alias("__old_shs"))
             .join(F.broadcast(collisions.select("__old_id").distinct()), "__old_id")
         )
@@ -254,7 +236,7 @@ def _ingest_batch_impl(
             batch.join(F.broadcast(survivors.select(id_col)), id_col)
             .withColumn(BUCKET_COL, bucket_of(id_col, n_buckets=n_buckets))
         )
-        upsert_parquet(accepted, corpus_path, keys=[id_col], partition_cols=[BUCKET_COL])
+        upsert_parquet(accepted, corpus_path, keys=[id_col], partition_col=BUCKET_COL)
         band_rows = survivors.select(F.col(id_col), _band_keys("sig").alias("bk")).select(
             id_col,
             F.col("bk.band").alias("band"),
@@ -264,18 +246,18 @@ def _ingest_batch_impl(
             ),
         )
         upsert_parquet(
-            band_rows, bands_path, keys=[id_col, "band"], partition_cols=[BUCKET_COL]
+            band_rows, bands_path, keys=[id_col, "band"], partition_col=BUCKET_COL
         )
         doc_rows = survivors.withColumn(
             BUCKET_COL, bucket_of(id_col, n_buckets=n_buckets)
         )
-        upsert_parquet(doc_rows, docs_path, keys=[id_col], partition_cols=[BUCKET_COL])
+        upsert_parquet(doc_rows, docs_path, keys=[id_col], partition_col=BUCKET_COL)
         hash_rows = survivors.select(
             "content_hash",
             F.col(id_col),
             bucket_of("content_hash", n_buckets=n_buckets).alias(BUCKET_COL),
         )
         upsert_parquet(
-            hash_rows, hashes_path, keys=["content_hash"], partition_cols=[BUCKET_COL]
+            hash_rows, hashes_path, keys=["content_hash"], partition_col=BUCKET_COL
         )
     return n_new

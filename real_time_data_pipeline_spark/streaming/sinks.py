@@ -1,4 +1,4 @@
-"""Streaming sinks: parquet append, idempotent upsert, multi-sink fan-out.
+"""Streaming sinks: parquet append, foreachBatch, the keyed upsert.
 
 Reference sinks rebuilt (SURVEY §2.2):
 - K2/K3 parquet append + checkpoint → `parquet_append_sink`;
@@ -7,31 +7,35 @@ Reference sinks rebuilt (SURVEY §2.2):
   driving `upsert_parquet` in update mode, an IDEMPOTENT merge keyed
   on the window identity: re-delivered micro-batches and update-mode
   re-emissions overwrite instead of duplicating;
-- W4 multi-query fan-out → `start_fanout` (one lineage, N sinks, each
-  with its own checkpoint).
+- W4 multi-query fan-out → one `parquet_append_sink` or
+  `foreach_batch_sink` query per sink, each with its own checkpoint.
 
-The upsert merges into a parquet table. Unpartitioned tables use a
-write-to-temp + atomic-rename swap (never overwrite-in-place, so a
-crash mid-write cannot lose committed rows); partitioned tables merge
-ONLY the partitions present in the micro-batch via dynamic partition
-overwrite, so per-batch cost is O(touched partitions), not O(table).
-Existence checks and renames go through the Hadoop FileSystem API, so
-the sink works on HDFS/local identically. On S3-style object stores
-rename is copy-based (not atomic) — a 100 TB gold layer there should
-swap the merge body for Delta/Iceberg MERGE INTO; the `foreachBatch`
-contract and keying logic are identical.
+Every keyed merge — the gold upsert, the CDC snapshot
+(`cdc_upsert_parquet`) and the dedup-ingest stores — is one kernel,
+`_keyed_upsert`: swap recovery, a read of the stored rows (for a
+partitioned table only the partitions the batch touches), one winner
+per key, and a commit that never overwrites in place. A flat table is
+written beside itself and swapped in by two renames; a partitioned
+table stages only the touched partitions and swaps each partition
+directory the same way, so per-batch cost is O(touched partitions),
+not O(table), and a crash leaves every partition complete, pre- or
+post-batch. Existence checks and renames go through the Hadoop
+FileSystem API, so the sinks work on HDFS/local identically. On
+S3-style object stores rename is copy-based (not atomic) — a 100 TB
+gold layer there should swap the merge body for Delta/Iceberg MERGE
+INTO (`merge_upsert_delta`); the `foreachBatch` contract and keying
+logic are identical.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from real_time_data_pipeline_spark.operators.materialize import reliable_materialize
+from real_time_data_pipeline_spark.operators.dedup import dedup_deterministic
 
 
 def with_trigger(writer, trigger: str | None):
@@ -86,28 +90,99 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def _merge_last_writer_wins(
-    old: DataFrame | None,
-    new: DataFrame,
-    keys: Sequence[str],
-    order_col: str | None,
+BUCKET_COL = "bkt"  # default partition column of hash-bucketed state
+
+
+def bucket_of(*cols: Column | str, n_buckets: int) -> Column:
+    """Deterministic partition bucket for a key tuple."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+def touched_buckets(df: DataFrame, col: str = BUCKET_COL) -> list:
+    """Distinct ``col`` values of a (small) micro-batch-derived frame.
+
+    COLLECT BOUND CONTRACT: one value per partition the batch touches
+    — for a `bucket_of` column at most min(batch key count, n_buckets)
+    integers, because the bucket is a pmod into a FIXED count. Never
+    partition (and so never collect) on a raw key: the driver-side
+    list and the table layout itself would be unbounded.
+    """
+    return [r[0] for r in df.select(col).distinct().collect()]
+
+
+def read_buckets(
+    spark: SparkSession, path: str, buckets: list, col: str = BUCKET_COL
 ) -> DataFrame:
-    """One surviving row per key: new batch beats the table; within the
-    batch, ``order_col`` (desc) decides, with a deterministic full-row
-    hash tie-break so retries reproduce the identical winner."""
-    new = new.withColumn("__v", F.lit(1))
-    merged = old.withColumn("__v", F.lit(0)).unionByName(new) if old is not None else new
-    order = [F.desc("__v")]
-    if order_col is not None:
-        order.append(F.desc(order_col))
-    data_cols = [c for c in merged.columns if c != "__v"]
-    order.append(F.desc(F.xxhash64(F.struct(*[F.col(c) for c in data_cols]))))
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__v")
-    )
+    """Partition-pruned read of a partitioned table: only the listed
+    ``col`` partitions are scanned (static partition pruning on the
+    literal IN-list — verify with `.explain`'s PartitionFilters). A
+    None in ``buckets`` selects the NULL partition, as ``eqNullSafe``
+    would; an empty list scans nothing."""
+    live = [b for b in buckets if b is not None]
+    cond = F.col(col).isin(live) if live else F.lit(False)
+    if len(live) < len(buckets):
+        cond = cond | F.col(col).isNull()
+    return spark.read.parquet(path).where(cond)
+
+
+def _elect_winners(df: DataFrame, keys: Sequence[str], order: "list[Column]") -> DataFrame:
+    """One row per key, first by ``order``, then by a full-row hash of
+    the data columns (the kernel's ``__v`` rank column excluded), so a
+    retried batch elects the identical winner."""
+    data_cols = [c for c in df.columns if c != "__v"]
+    tie_break = F.desc(F.xxhash64(F.struct(*[F.col(c) for c in data_cols])))
+    return dedup_deterministic(df, keys, [*order, tie_break])
+
+
+def _keyed_upsert(
+    batch_df: DataFrame,
+    path: str,
+    keys: Sequence[str],
+    order: "list[Column]",
+    partition_col: str | None,
+    batch_wins: bool,
+) -> None:
+    """The one keyed-merge commit behind `upsert_parquet` and
+    `cdc_upsert_parquet`: recover, read, elect, swap.
+
+    - Recovery runs before the read: `_swap_paths` restores a table
+      caught between the two whole-table renames, and for a
+      partitioned table `_recover_bucket_swaps` finishes a
+      per-partition swap that died mid-sequence. Reading first would
+      merge against half-swapped state.
+    - The read is the whole table, or with ``partition_col`` only the
+      partitions the batch touches (`touched_buckets` +
+      `read_buckets`). The partition value must be a function of the
+      key (a bucket of it, a shard, a window date): a key that moved
+      partition would keep its old row in an untouched one.
+    - ``batch_wins`` ranks every batch row above every stored row
+      before ``order`` — last writer wins, right for re-emitted running
+      aggregates. Without it ``order`` alone ranks, so an already
+      stored newer change beats a late older one (CDC).
+    - The commit is `_swap_write` for a flat table, `_swap_partitions`
+      for a partitioned one. Both stage the result beside the table,
+      so the write never reads the path it rewrites (no
+      materialization), and a replay after a crash converges because
+      the election is idempotent.
+    """
+    spark = batch_df.sparkSession
+    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
+    old = None
+    if exists and partition_col is None:
+        old = spark.read.parquet(path)
+    elif exists:
+        _recover_bucket_swaps(fs, jpath, jold)
+        old = read_buckets(spark, path, touched_buckets(batch_df, partition_col), partition_col)
+    if batch_wins:
+        batch_df = batch_df.withColumn("__v", F.lit(1))
+        old = old.withColumn("__v", F.lit(0)) if old is not None else None
+        order = [F.desc("__v"), *order]
+    merged = old.unionByName(batch_df) if old is not None else batch_df
+    result = _elect_winners(merged, keys, order).drop("__v")
+    if partition_col is None:
+        _swap_write(fs, result, path, tmp_path, jpath, jtmp, jold, exists)
+    else:
+        _swap_partitions(fs, result, tmp_path, jpath, jtmp, jold, exists, partition_col)
 
 
 def upsert_parquet(
@@ -115,78 +190,31 @@ def upsert_parquet(
     path: str,
     keys: Sequence[str],
     order_col: str | None = None,
-    partition_cols: Sequence[str] | None = None,
+    partition_col: str | None = None,
 ) -> None:
     """Merge a micro-batch into a parquet table, last-writer-wins per key.
 
-    Crash-safe and object-store-aware:
+    The batch beats the stored table. ``order_col`` (desc, e.g. an
+    event-time column) makes "last writer" deterministic when one
+    batch carries several rows per key; a full-row hash breaks any
+    remaining tie, so a retried batch always elects the same winner.
 
-    - **Unpartitioned** (dimension-sized gold tables): the merged
-      result is written to a sibling temp directory first, then swapped
-      in with two renames (current → ``__old__``, temp → current) and
-      the backup deleted. A crash at any point leaves either the old
-      committed table, or the backup that the next call auto-restores —
-      never a truncated table. Rename is atomic on HDFS/local; on
-      S3-style stores it is copy-based, so use Delta/Iceberg MERGE
-      there instead (same foreachBatch contract).
-    - **Partitioned** (``partition_cols``): only the partitions present
-      in the micro-batch are read, merged, and dynamically overwritten
-      — per-batch cost scales with the batch's partitions, not the
-      table. COLLECT BOUND CONTRACT: the distinct partition-value
-      collect returns at most one row per partition the batch
-      touches; ``partition_cols`` must therefore be coarse-grained
-      (date/hour), never a raw key — a high-cardinality partition
-      column would make this collect (and the table layout itself)
-      unbounded.
-    - ``order_col`` (e.g. an event-time column) makes "last writer"
-      deterministic when one batch carries several rows per key; a
-      full-row hash breaks any remaining tie, so a retried batch always
-      elects the same winner.
+    Unpartitioned (dimension-sized gold tables) the whole table is
+    merged and swapped in; with ``partition_col`` only the partitions
+    present in the batch are read, merged and swapped, so per-batch
+    cost scales with the batch's partitions, not the table
+    (`_keyed_upsert`; ``partition_col`` must be coarse — a date, a
+    hash bucket — never a raw key). A crash at any point leaves
+    complete committed data that the next call recovers, never a
+    truncated table. Rename is atomic on HDFS/local; on S3-style
+    stores it is copy-based, so use `merge_upsert_delta` there (same
+    foreachBatch contract). The swap is two renames, so a CONCURRENT
+    reader can hit a brief path-not-found window between them: this
+    sink assumes the single-writer/reader-retries discipline usual
+    for foreachBatch gold tables.
     """
-    spark = batch_df.sparkSession
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
-
-    if partition_cols:
-        parts = (
-            batch_df.select(*partition_cols).distinct().collect()
-        )  # micro-batch-bounded
-        in_batch = reduce(
-            lambda a, b: a | b,
-            [
-                reduce(
-                    lambda a, b: a & b,
-                    [F.col(c).eqNullSafe(F.lit(r[c])) for c in partition_cols],
-                )
-                for r in parts
-            ],
-            F.lit(False),
-        )
-        old = spark.read.parquet(path).where(in_batch) if exists else None
-        result = _merge_last_writer_wins(old, batch_df, keys, order_col)
-        # Dynamic overwrite replaces exactly the touched partitions;
-        # materialize first (eagerly, and durably when a checkpoint
-        # dir is set) because the plan reads the same path it
-        # rewrites.
-        (
-            reliable_materialize(result)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-        return
-
-    old = spark.read.parquet(path) if exists else None
-    result = _merge_last_writer_wins(old, batch_df, keys, order_col)
-    # Never overwrite in place: write the merge beside the table, then
-    # swap via rename. A crash at any point leaves a complete table
-    # (current, or the __old__ backup auto-restored above). NOTE the
-    # swap is two renames, so a CONCURRENT reader can hit a brief
-    # path-not-found window between them — this sink assumes the
-    # single-writer/reader-retries discipline usual for foreachBatch
-    # gold tables; use `merge_upsert_delta` where readers must never
-    # observe the gap.
-    _swap_write(fs, result, path, tmp_path, jpath, jtmp, jold, exists)
+    order = [F.desc(order_col)] if order_col is not None else []
+    _keyed_upsert(batch_df, path, keys, order, partition_col, batch_wins=True)
 
 
 def replace_parquet(df: DataFrame, path: str) -> None:
@@ -243,8 +271,8 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 
 # ---------------------------------------------------------------------------
 # Shared twin-state commit protocols. The eleven streaming twins use
-# three, and every one of them lives below; a twin module supplies only
-# its increments, its merge algebra and its probes:
+# three, all of them in this module; a twin module supplies only its
+# increments, its merge algebra and its probes:
 #
 # - marker twins (Count-Min, HLL, Bloom, log-histogram, zone-map stats):
 #   `merge_marked_state` + `read_marked_state`. The state is one small
@@ -256,8 +284,11 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 #   `read_partitioned_state` + `compact_partitioned_state`. Each batch
 #   writes only its own partitions; the reset guard reads partition
 #   directory names.
-# - keyed-upsert twins (retention, dedup ingest, zone-map user pairs):
-#   `read_state` + `upsert_parquet`, idempotent per key, no marker.
+# - keyed-upsert state (retention, zone-map user pairs: flat; the four
+#   dedup-ingest stores: bucket-partitioned): `read_state` +
+#   `upsert_parquet`, idempotent per key, no marker. It is the same
+#   `_keyed_upsert` kernel as the CDC snapshot; a partitioned table
+#   commits through the per-partition staged swap (`_swap_partitions`).
 #
 # `foreach_batch_sink` drives any of them from a stream.
 # ---------------------------------------------------------------------------
@@ -646,28 +677,53 @@ def _swap_write(
     fs.delete(jold, True)
 
 
-def _merge_event_time_wins(
-    old: DataFrame | None,
-    new: DataFrame,
-    keys: Sequence[str],
-    order_cols: Sequence[str],
-) -> DataFrame:
-    """One surviving row per key by EVENT-TIME order, not arrival
-    order: unlike `_merge_last_writer_wins` (where the new batch
-    always beats the table — right for re-emitted running
-    aggregates), a CDC changelog must let an already-applied NEWER
-    change beat a late-arriving older one, so the merge ranks by
-    ``order_cols`` alone with a full-row hash tie-break (retries
-    still elect the identical winner)."""
-    merged = old.unionByName(new) if old is not None else new
-    order: list = [F.desc(c) for c in order_cols]
-    order.append(F.desc(F.xxhash64(F.struct(*[F.col(c) for c in merged.columns]))))
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+def _swap_partitions(
+    fs, result, tmp_path, jpath, jtmp, jold, exists, partition_col
+) -> None:
+    """Commit ``result`` — the complete next state of every partition
+    it holds — one partition directory at a time.
+
+    ``result`` is staged beside the table (a first commit is then one
+    rename), and each staged ``partition_col=`` directory replaces its
+    twin with the flat swap's discipline: current → ``__old__``,
+    staged → current, drop the backup. Dynamic partition overwrite
+    would delete each partition before writing its replacement; a
+    crash in that window loses the partition's pre-batch rows and the
+    replayed batch then merges against the corrupted table. Here a
+    crash leaves every partition fully pre- or post-batch, and
+    `_recover_bucket_swaps` restores one caught between its renames.
+
+    Same single-writer / reader-retries discipline as the flat swap,
+    BUT atomicity is PER PARTITION, not per table (ADVICE r8): a
+    reader listing between partition renames — or after a mid-loop
+    crash, until the next batch replays — observes a MIX of pre- and
+    post-batch partitions. Readers needing cross-key snapshot
+    consistency (a report joining rows whose keys hash to different
+    buckets) must read until quiescent, or the writer must use the
+    flat table and its one-rename swap, trading rewrite cost for
+    table-level atomicity.
+    """
+    fs.delete(jtmp, True)
+    result.write.mode("overwrite").partitionBy(partition_col).parquet(tmp_path)
+    if not exists:
+        fs.rename(jtmp, jpath)
+        return
+    fs.mkdirs(jold)
+    for st in fs.listStatus(jtmp):
+        jb_tmp = st.getPath()
+        name = jb_tmp.getName()
+        if not name.startswith(f"{partition_col}="):
+            continue  # _SUCCESS etc.
+        # child paths by suffix: one JVM call each, this loop runs per
+        # touched partition on every batch
+        jb_cur, jb_old = jpath.suffix("/" + name), jold.suffix("/" + name)
+        fs.delete(jb_old, True)
+        if fs.exists(jb_cur):
+            fs.rename(jb_cur, jb_old)
+        fs.rename(jb_tmp, jb_cur)
+        fs.delete(jb_old, True)
+    fs.delete(jtmp, True)
+    fs.delete(jold, True)
 
 
 def cdc_upsert_parquet(
@@ -677,7 +733,7 @@ def cdc_upsert_parquet(
     order_cols: Sequence[str],
     tombstone_col: str,
     n_buckets: int | None = None,
-    bucket_col: str = "bkt",
+    bucket_col: str = BUCKET_COL,
 ) -> None:
     """Apply a CDC micro-batch (upserts + delete tombstones) to a
     parquet snapshot table — the streaming twin of the
@@ -696,21 +752,13 @@ def cdc_upsert_parquet(
     idea).
 
     Scale: pass ``n_buckets`` and the snapshot is stored PARTITIONED
-    by a hash bucket of the key (``bucket_col``). Each batch then
-    collects only its own distinct buckets (bounded by the batch's key
-    count), reads just those partitions, and replaces just those
-    partitions — per-batch cost O(touched buckets), never O(snapshot),
-    the same layout streaming/dedup_ingest.py uses for its corpus
-    state. The bucket replacement is a staged PER-BUCKET rename swap
-    (not dynamic partition overwrite, whose delete-then-write window
-    can lose a bucket's pre-batch rows to a crash): every bucket is
-    always a complete pre- or post-batch directory, interrupted swaps
-    are finished on the next call, and batch replay converges.
-    Without ``n_buckets`` the whole table is merged under the
-    crash-safe `upsert_parquet` swap commit — fine for
-    dimension-sized snapshots.
+    by `bucket_of` the key (``bucket_col``), the layout
+    streaming/dedup_ingest.py uses for its corpus state. Each batch
+    then reads and replaces only its own buckets — per-batch cost
+    O(touched buckets), never O(snapshot) — through the per-partition
+    swap of `_keyed_upsert`. Without ``n_buckets`` the whole table is
+    merged under the flat swap — fine for dimension-sized snapshots.
     """
-    spark = batch_df.sparkSession
     if tombstone_col not in batch_df.columns:
         # Validated at write time even though only readers consult it:
         # a typo'd flag column would otherwise surface much later as
@@ -719,79 +767,12 @@ def cdc_upsert_parquet(
             f"tombstone_col {tombstone_col!r} not in batch columns "
             f"{batch_df.columns}"
         )
-    # Shared-path resolution ALSO runs __old__ crash recovery — the
-    # bucketed branch needs it too: expire_tombstones swap-commits
-    # even on bucketed layouts, and a merge that missed the restore
-    # would silently restart the snapshot from one micro-batch.
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
+    partition_col = None
     if n_buckets is not None:
-        # Finish any bucket-level swap a previous run crashed inside
-        # of BEFORE probing the snapshot (a half-swapped bucket read
-        # as-is would merge against corrupted pre-batch state).
-        _recover_bucket_swaps(fs, spark, path)
-        batch = batch_df.withColumn(
-            bucket_col,
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int"),
-        )
-        old = None
-        if exists:
-            # COLLECT BOUND CONTRACT: ≤ min(batch keys, n_buckets)
-            # values — bucket_col is pmod into the FIXED n_buckets,
-            # so this can never grow past the configured bucket total
-            touched = [
-                r[0] for r in batch.select(bucket_col).distinct().collect()
-            ]
-            old = spark.read.parquet(path).where(F.col(bucket_col).isin(touched))
-        result = _merge_event_time_wins(old, batch, keys, order_cols)
-        # Commit: stage the merged touched buckets to a sibling dir,
-        # then swap each bucket directory with the same rename
-        # discipline as the flat path. Dynamic partition overwrite
-        # would delete-then-write each bucket in place — a crash in
-        # that window loses the bucket's pre-batch rows and the
-        # replayed batch then merges against the corrupted snapshot.
-        # With the per-bucket swap, a crash leaves every bucket either
-        # fully pre-batch or fully post-batch (recovery above restores
-        # any bucket caught mid-rename), and replay converges because
-        # the event-time-wins merge is idempotent. Staging also means
-        # the write no longer reads the partitions it replaces, so the
-        # eager pre-materialization is gone. Same single-writer /
-        # reader-retries discipline as the flat swap: a concurrent
-        # reader can see a bucket vanish for the instant between its
-        # two renames. BUT atomicity here is PER BUCKET, not per
-        # table (ADVICE r8): a reader listing between bucket renames
-        # — or after a mid-loop crash, until the next batch replays —
-        # observes a MIX of pre- and post-batch buckets, unlike the
-        # flat path's single table-level swap. Readers needing
-        # cross-key snapshot consistency (a report joining rows whose
-        # keys hash to different buckets) must either read through
-        # `current_snapshot` retried until quiescent, or the writer
-        # must route multi-bucket batches through the whole-table
-        # swap (`bucket_col=None`), trading rewrite cost for
-        # one-rename atomicity.
-        fs.delete(jtmp, True)
-        result.write.mode("overwrite").partitionBy(bucket_col).parquet(tmp_path)
-        if not exists:
-            fs.rename(jtmp, jpath)
-            return
-        old_path = path.rstrip("/") + "__old__"
-        fs.mkdirs(jold)
-        for st in fs.listStatus(jtmp):
-            name = st.getPath().getName()
-            if not name.startswith(f"{bucket_col}="):
-                continue  # _SUCCESS etc.
-            jb_cur = _hadoop_fs(spark, path.rstrip("/") + "/" + name)[1]
-            jb_old = _hadoop_fs(spark, old_path + "/" + name)[1]
-            fs.delete(jb_old, True)
-            if fs.exists(jb_cur):
-                fs.rename(jb_cur, jb_old)
-            fs.rename(st.getPath(), jb_cur)
-            fs.delete(jb_old, True)
-        fs.delete(jtmp, True)
-        fs.delete(jold, True)
-        return
-    old = spark.read.parquet(path) if exists else None
-    result = _merge_event_time_wins(old, batch_df, keys, order_cols)
-    _swap_write(fs, result, path, tmp_path, jpath, jtmp, jold, exists)
+        partition_col = bucket_col
+        batch_df = batch_df.withColumn(bucket_col, bucket_of(*keys, n_buckets=n_buckets))
+    order = [F.desc(c) for c in order_cols]
+    _keyed_upsert(batch_df, path, keys, order, partition_col, batch_wins=False)
 
 
 def current_snapshot(
@@ -930,32 +911,30 @@ def read_layout_preserving(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(full).parquet(path)
 
 
-def _recover_bucket_swaps(fs, spark: SparkSession, path: str) -> None:
-    """Finish a per-bucket swap commit that crashed mid-sequence.
+def _recover_bucket_swaps(fs, jpath, jold) -> None:
+    """Finish a `_swap_partitions` commit that crashed mid-sequence.
 
-    A bucket directory left under ``__old__`` whose twin is missing
+    A partition directory left under ``__old__`` whose twin is missing
     from the table was caught between its two renames — restore it. A
-    backup whose twin exists means that bucket's swap completed (or a
-    whole-table swap died after its final rename) — the backup is
+    backup whose twin exists means that partition's swap completed (or
+    a whole-table swap died after its final rename) — the backup is
     stale, drop it. Runs only when BOTH the table and ``__old__``
     exist; the table-missing case is the whole-table restore that
     `_swap_paths` already performs.
     """
-    jpath = _hadoop_fs(spark, path)[1]
-    old_path = path.rstrip("/") + "__old__"
-    jold = _hadoop_fs(spark, old_path)[1]
     if not (fs.exists(jold) and fs.exists(jpath)):
         return
     for st in fs.listStatus(jold):
-        name = st.getPath().getName()
+        jb_old = st.getPath()
+        name = jb_old.getName()
         if "=" not in name:
-            fs.delete(st.getPath(), True)  # stray commit-metadata file
+            fs.delete(jb_old, True)  # stray commit-metadata file
             continue
-        jb_cur = _hadoop_fs(spark, path.rstrip("/") + "/" + name)[1]
+        jb_cur = jpath.suffix("/" + name)
         if fs.exists(jb_cur):
-            fs.delete(st.getPath(), True)
+            fs.delete(jb_old, True)
         else:
-            fs.rename(st.getPath(), jb_cur)
+            fs.rename(jb_old, jb_cur)
     fs.delete(jold, True)
 
 
@@ -1015,7 +994,9 @@ def merge_upsert_delta(
     from delta.tables import DeltaTable  # gated import
 
     spark = batch_df.sparkSession
-    batch = _merge_last_writer_wins(None, batch_df, keys, order_col)
+    batch = _elect_winners(
+        batch_df, keys, [F.desc(order_col)] if order_col is not None else []
+    )
     if not DeltaTable.isDeltaTable(spark, path):
         batch.write.format("delta").mode("overwrite").save(path)
         return
@@ -1028,21 +1009,3 @@ def merge_upsert_delta(
         .whenNotMatchedInsertAll()
         .execute()
     )
-
-
-def start_fanout(sinks: Sequence[tuple[DataFrame, dict]]) -> list[StreamingQuery]:
-    """Start N streaming queries off (possibly shared) lineages.
-
-    Each entry is (df, writeStream-kwargs-like dict with 'format',
-    'outputMode', 'options', 'queryName'). Every query gets its own
-    checkpoint — the reference's W4 pattern.
-    """
-    queries = []
-    for df, spec in sinks:
-        writer = df.writeStream.format(spec["format"]).outputMode(spec["outputMode"])
-        for k, v in spec.get("options", {}).items():
-            writer = writer.option(k, v)
-        if "queryName" in spec:
-            writer = writer.queryName(spec["queryName"])
-        queries.append(writer.start())
-    return queries

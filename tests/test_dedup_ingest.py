@@ -63,10 +63,8 @@ def test_ingest_probe_is_bucket_pruned(spark, tmp_path):
     reads ONLY the bucket partitions the micro-batch's own keys touch
     — partition filters in the plan, bounded input files — never the
     whole store."""
-    from real_time_data_pipeline_spark.streaming.dedup_ingest import (
-        ingest_batch,
-        read_buckets,
-    )
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import ingest_batch
+    from real_time_data_pipeline_spark.streaming.sinks import read_buckets
 
     corpus = str(tmp_path / "corpus")
     store = str(tmp_path / "store")
@@ -114,12 +112,12 @@ def test_ingest_retry_after_partial_state_merge(spark, tmp_path):
     shutil.rmtree(store + "/hashes")
     from pyspark.sql import functions as F
 
-    from real_time_data_pipeline_spark.streaming.dedup_ingest import bucket_of
-    from real_time_data_pipeline_spark.streaming.sinks import upsert_parquet
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import DEFAULT_BUCKETS
+    from real_time_data_pipeline_spark.streaming.sinks import bucket_of, upsert_parquet
 
     upsert_parquet(
-        kept.withColumn("bkt", bucket_of("content_hash")),
-        store + "/hashes", keys=["content_hash"], partition_cols=["bkt"],
+        kept.withColumn("bkt", bucket_of("content_hash", n_buckets=DEFAULT_BUCKETS)),
+        store + "/hashes", keys=["content_hash"], partition_col="bkt",
     )
 
     # retry of the same batch: doc 2 is re-accepted (count reflects the

@@ -326,15 +326,15 @@ def test_upsert_parquet_partitioned_scoped_merge(spark, tmp_path):
         [(1, "2024-01-01", 10.0), (2, "2024-01-01", 20.0), (3, "2024-01-02", 30.0)],
         "k int, dt string, v double",
     )
-    upsert_parquet(b1, path, ["k"], partition_cols=["dt"])
+    upsert_parquet(b1, path, ["k"], partition_col="dt")
     # batch 2 revises k=2 (dt=2024-01-01 partition) only; the
     # 2024-01-02 partition's files must survive untouched.
     import glob
 
     before = set(glob.glob(path + "/dt=2024-01-02/*.parquet"))
     b2 = spark.createDataFrame([(2, "2024-01-01", 25.0)], "k int, dt string, v double")
-    upsert_parquet(b2, path, ["k"], partition_cols=["dt"])
-    upsert_parquet(b2, path, ["k"], partition_cols=["dt"])  # retry: no dup
+    upsert_parquet(b2, path, ["k"], partition_col="dt")
+    upsert_parquet(b2, path, ["k"], partition_col="dt")  # retry: no dup
     after = set(glob.glob(path + "/dt=2024-01-02/*.parquet"))
     assert before == after  # untouched partition not rewritten
     got = {r.k: r.v for r in spark.read.parquet(path).collect()}
@@ -522,7 +522,7 @@ def test_streaming_dedup_with_rocksdb_state(spark, tmp_path):
 
 def test_foreach_batch_upsert_stream_end_to_end(spark, tmp_path, replay_dir):
     """The gold sink contract under real micro-batches: a file-replay
-    stream drives upsert_parquet with partition_cols through
+    stream drives upsert_parquet with partition_col through
     foreach_batch_sink in update mode; the final
     table equals the batch aggregate of the same rows (idempotent,
     last-writer-wins, date-partitioned)."""
@@ -536,7 +536,7 @@ def test_foreach_batch_upsert_stream_end_to_end(spark, tmp_path, replay_dir):
     q = foreach_batch_sink(
         agg,
         lambda b, _: upsert_parquet(
-            b, path, keys=["user_id"], order_col="n", partition_cols=["shard"]
+            b, path, keys=["user_id"], order_col="n", partition_col="shard"
         ),
         checkpoint=str(tmp_path / "ck"),
         query_name="gold_upsert_stream",

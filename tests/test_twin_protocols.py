@@ -1,7 +1,8 @@
 """The shared twin commit protocols in streaming/sinks.py, tested across
 every merge algebra: crash windows of the staged-rename swap, absent
 state, state written in the layout before `merge_marked_state`
-existed, and the overlapped partitioned commit.
+existed, the overlapped partitioned commit, and the per-partition swap
+of the partitioned keyed upsert.
 """
 
 import datetime as dt
@@ -24,6 +25,7 @@ from real_time_data_pipeline_spark.streaming import (
 )
 from real_time_data_pipeline_spark.streaming.sinks import (
     _hadoop_fs,
+    bucket_of,
     commit_partitioned_batch,
     commit_partitioned_batches_overlapped,
     upsert_parquet,
@@ -329,3 +331,74 @@ def test_marker_state_in_previous_layout_still_merges(spark, tmp_path, twin):
     assert merge(b[1], path, 1) is False
     with pytest.raises(ValueError, match="checkpoint/state mismatch"):
         merge(b[0], path, 0)
+
+
+def _bucketed_upsert(spark, rows, path):
+    """`upsert_parquet` into a table partitioned by a 4-way key bucket."""
+    batch = spark.createDataFrame(rows, "user_id long, ts long, value double")
+    upsert_parquet(
+        batch.withColumn("bkt", bucket_of("user_id", n_buckets=4)),
+        path, keys=["user_id"], order_col="ts", partition_col="bkt",
+    )
+
+
+def _upserted(spark, path):
+    return _rows(spark.read.parquet(path).select("user_id", "ts", "value"))
+
+
+def test_partitioned_upsert_commit_is_per_partition_swap(spark, tmp_path):
+    """A partitioned upsert that died with one touched partition parked
+    under __old__ (its replacement never installed) and its staging
+    dir left behind: the replayed batch restores the partition and
+    converges to the no-crash table, and neither directory remains."""
+    b1 = [(k, 10, float(k)) for k in range(1, 9)]
+    b2 = [(1, 20, 0.5), (2, 20, 9.0), (9, 20, 9.9)]
+    ref = str(tmp_path / "ref")
+    _bucketed_upsert(spark, b1, ref)
+    _bucketed_upsert(spark, b2, ref)
+
+    path = str(tmp_path / "table")
+    _bucketed_upsert(spark, b1, path)
+    victim = next(d for d in os.listdir(path) if d.startswith("bkt="))
+    os.makedirs(path + "__old__")
+    shutil.move(os.path.join(path, victim), os.path.join(path + "__old__", victim))
+    os.makedirs(path + "__tmp__")
+    open(os.path.join(path + "__tmp__", "_SUCCESS"), "w").close()
+
+    _bucketed_upsert(spark, b2, path)  # replay
+    assert _upserted(spark, path) == _upserted(spark, ref)
+    assert not os.path.exists(path + "__old__")
+    assert not os.path.exists(path + "__tmp__")
+
+
+def test_partitioned_upsert_completed_swap_backup_is_dropped(spark, tmp_path):
+    """A partition whose swap completed but whose backup was not yet
+    deleted: the next upsert keeps the live partition and drops the
+    stale backup instead of resurrecting pre-batch rows."""
+    path = str(tmp_path / "table")
+    _bucketed_upsert(spark, [(k, 10, float(k)) for k in range(1, 9)], path)
+    before = _upserted(spark, path)
+    victim = next(d for d in os.listdir(path) if d.startswith("bkt="))
+    os.makedirs(path + "__old__")
+    shutil.copytree(os.path.join(path, victim), os.path.join(path + "__old__", victim))
+
+    _bucketed_upsert(spark, [(1, 20, 7.0)], path)
+    assert _upserted(spark, path) == {r for r in before if r[0] != 1} | {(1, 20, 7.0)}
+    assert not os.path.exists(path + "__old__")
+
+
+def test_partitioned_upsert_matches_the_null_partition(spark, tmp_path):
+    """A NULL partition value is a partition like any other: a re-sent
+    key in it replaces its row instead of adding a second one."""
+    path = str(tmp_path / "table")
+    schema = "k long, dt string, v double"
+    upsert_parquet(
+        spark.createDataFrame([(1, None, 1.0), (2, "a", 2.0)], schema),
+        path, keys=["k"], partition_col="dt",
+    )
+    upsert_parquet(
+        spark.createDataFrame([(1, None, 5.0)], schema), path, keys=["k"], partition_col="dt"
+    )
+    assert _rows(spark.read.parquet(path).select("k", "dt", "v")) == {
+        (1, None, 5.0), (2, "a", 2.0)
+    }
