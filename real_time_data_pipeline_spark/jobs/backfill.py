@@ -11,8 +11,9 @@ SparkSubmitOperator with `--date {{ ds }}` and path/connection args
 
 Differences from the reference, by design (SURVEY §2.6 defect fixes):
 
-- date-scoped DYNAMIC partition overwrite instead of overwriting the
-  whole silver path on every dated run (`spark_batch_backfill.py:54`);
+- the day's partition is staged and swapped in by renames
+  (`streaming/sinks.py::replace_partitions`) instead of overwriting
+  the whole silver path on every dated run (`spark_batch_backfill.py:54`);
 - deterministic dedup + guarded ratio via the shared pipeline stages —
   the same functions the streaming job runs, so backfill and live
   never drift (the reference maintains two divergent copies);
@@ -57,25 +58,28 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str) -> DataFrame:
-    """Normalize ``bronze``, keep silver rows of ``date``, then write
-    that day's silver and gold partitions; returns the gold frame
-    (with its ``date`` column). The one body of the spark-submit job
-    and the DAG's backfill task."""
+    """Normalize ``bronze``, keep silver rows of ``date``, then replace
+    that day's silver and gold partitions (`replace_partitions`);
+    returns the gold frame (with its ``date`` column). The one body of
+    the spark-submit job and the DAG's backfill task. One writer per
+    partition: no other backfill or live gold upsert may commit
+    ``date`` meanwhile. Each day is replaced atomically, the table
+    is not."""
     from real_time_data_pipeline_spark.pipelines.station_status import (
         normalize_raw,
         to_gold,
         to_silver,
     )
-    from real_time_data_pipeline_spark.sources.sinks import write_parquet_partitioned
+    from real_time_data_pipeline_spark.streaming.sinks import replace_partitions
 
     silver = to_silver(normalize_raw(bronze)).withColumn(
         "date", F.to_date(F.col("event_ts"))
     )
     day = silver.where(F.col("date") == F.lit(date))
-    write_parquet_partitioned(day, silver_path, "date")
+    replace_partitions(day, silver_path, "date")
 
     gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
-    write_parquet_partitioned(gold, gold_path, "date")
+    replace_partitions(gold, gold_path, "date")
     return gold
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 
 def dedup_deterministic(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
+    df: DataFrame, keys: Sequence[Column | str], order_by: Sequence[Column | str]
 ) -> DataFrame:
     """Keep exactly one row per key, chosen by ``order_by`` (first wins).
 

@@ -97,14 +97,15 @@ def compact_parquet(
 
     from real_time_data_pipeline_spark.streaming.sinks import (
         _detect_partition_cols,
-        _swap_paths,
-        _swap_write,
+        _hadoop_fs,
         read_layout_preserving,
+        replace_parquet,
+        state_exists_recovered,
     )
 
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
-    if not exists:
+    if not state_exists_recovered(spark, path):
         return 0
+    fs, jpath = _hadoop_fs(spark, path)
     if any(
         st.getPath().getName() == "_spark_metadata" for st in fs.listStatus(jpath)
     ):
@@ -168,8 +169,5 @@ def compact_parquet(
     else:
         n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
         compacted = df.repartition(n_files)
-    _swap_write(
-        fs, compacted, path, tmp_path, jpath, jtmp, jold, True,
-        partition_by=partition_cols or None,
-    )
+    replace_parquet(compacted, path, partition_cols or None)
     return walk(jpath, lambda st: 1)

@@ -18,9 +18,9 @@ engine stays scheduler-agnostic (the driver process owns wall-clock
 scheduling, exactly like the reference's Airflow container does).
 
 `hourly_station_dag` wires the reference's three tasks from engine
-operators: date-scoped backfill (dynamic partition overwrite — fixes
-the reference's whole-path overwrite), DQ checks as a DataFrame, and
-partition retention.
+operators: date-scoped backfill (a staged per-partition swap of the
+day — fixes the reference's whole-path overwrite), DQ checks as a
+DataFrame, and partition retention.
 """
 
 from __future__ import annotations
@@ -163,9 +163,9 @@ def hourly_station_dag(
     Tasks mirror `dags/gbfs_pipeline_dag.py`:
 
     - ``daily_batch_backfill``: normalize → silver → gold for date
-      ``ds`` ONLY, written with dynamic partition overwrite (re-runs
-      replace exactly that day — the reference overwrote the whole
-      path, SURVEY §2.2 K6).
+      ``ds`` ONLY (`jobs.backfill.backfill_day`: re-runs swap in
+      exactly that day — the reference overwrote the whole path,
+      SURVEY §2.2 K6; no other writer may commit ``ds`` meanwhile).
     - ``soda_scan_gold`` (trigger_rule=all_done): engine-native DQ
       checks over the gold table; returns the checks DataFrame
       collected to rows. Raises if any check failed, so the DAG run

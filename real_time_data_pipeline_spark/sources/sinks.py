@@ -2,9 +2,12 @@
 
 The reference's backfill overwrites the WHOLE silver path when given a
 date (`src/jobs/spark_batch_backfill.py:54` — flagged in SURVEY §2.2
-as a semantics bug). The fix is the standard lakehouse layout: write
-partitioned by a date column with DYNAMIC partition overwrite, so a
-re-run of one day replaces exactly that day's partition.
+as a semantics bug). The fix is the standard lakehouse layout: a table
+partitioned by a date column, where a re-run of one day replaces
+exactly that day's partition. The replace itself is
+`streaming/sinks.py::replace_partitions`, the staged per-partition
+swap every partitioned table sink commits through (jobs/backfill.py);
+this module keeps the partition-drop retention beside the connectors.
 
 JDBC and Kafka writers are thin builders over the stock connectors
 (the drivers aren't in this container — they are exercised on a real
@@ -17,22 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_parquet_partitioned(df: DataFrame, path: str, partition_col: str = "date") -> None:
-    """Date-partitioned parquet write with dynamic partition overwrite.
-
-    At 100 TB this layout is what makes backfills O(day) instead of
-    O(table) and gives every date-filtered query partition pruning.
-    The overwrite mode is a per-write option, so no session conf
-    changes under queries analysed concurrently in the same session.
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 def jdbc_writer(
@@ -75,18 +62,21 @@ def drop_partitions_older_than(spark, path: str, partition_col: str, keep_days: 
     """Retention housekeeping (reference O4: `find -mtime +7 -delete`).
 
     Path-partition-aware: lists `<partition_col>=<value>` directories
-    under ``path`` and removes those older than the cutoff. Returns
-    the dropped partition values.
+    under ``path`` through the Hadoop FS API (any URI the other sinks
+    accept — local, ``file://``, HDFS) and removes those older than
+    the cutoff. Returns the dropped partition values.
     """
     import datetime as _dt
-    import os
-    import shutil
+
+    from real_time_data_pipeline_spark.streaming.sinks import _hadoop_fs
 
     cutoff = _dt.date.fromisoformat(now_date) - _dt.timedelta(days=keep_days)
     dropped = []
-    if not os.path.isdir(path):
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
         return dropped
-    for entry in sorted(os.listdir(path)):
+    for st in sorted(fs.listStatus(jpath), key=lambda st: st.getPath().getName()):
+        entry = st.getPath().getName()
         if not entry.startswith(f"{partition_col}="):
             continue
         value = entry.split("=", 1)[1]
@@ -95,7 +85,7 @@ def drop_partitions_older_than(spark, path: str, partition_col: str, keep_days: 
         except ValueError:
             continue
         if d < cutoff:
-            shutil.rmtree(os.path.join(path, entry))
+            fs.delete(st.getPath(), True)
             dropped.append(value)
     return dropped
 

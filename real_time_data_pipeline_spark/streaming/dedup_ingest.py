@@ -48,9 +48,10 @@ no duplicate corpus rows, no half-registered state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.operators.dedup import dedup_deterministic
 from real_time_data_pipeline_spark.operators.similarity import (
     MINHASH_BAND_ROWS,
     MINHASH_NUM,
@@ -153,10 +154,7 @@ def _ingest_batch_impl(
     batch = batch.select(F.col(id_col), F.col(text_col)).where(
         F.length(F.trim(F.col(text_col))) > 0
     )
-    w_exact = F.row_number().over(
-        Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    )
-    batch = batch.withColumn("__rn", w_exact).where(F.col("__rn") == 1).drop("__rn")
+    batch = dedup_deterministic(batch, [F.md5(F.col(text_col))], [F.col(id_col)])
     pairs = jaccard_pairs(batch, id_col, text_col, n=n, threshold=threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     batch = reliable_materialize(batch.join(losers, id_col, "left_anti"))

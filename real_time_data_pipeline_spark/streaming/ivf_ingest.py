@@ -60,7 +60,7 @@ File growth: one file set per (touched cent_id, batch). Run
 `compact_partitioned_state` from a maintenance window (stream PAUSED
 with its final batch committed): it folds all data rows into one
 src_batch = -1 partition per cent_id through the crash-safe
-staged-rename swap (`sinks._swap_write` — a crash mid-compaction is
+staged-rename swap (`sinks.replace_parquet` — a crash mid-compaction is
 recovered to the pre-compaction state by the next reader/merger),
 and PRESERVES the reset guard by writing a sentinel row under
 (cent_id = -1, src_batch = old max): max(src_batch) is unchanged, so

@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.streaming.sinks import (
-    _swap_paths,
     read_state as _read_state,
+    state_exists_recovered,
     upsert_parquet,
 )
 
@@ -98,8 +98,8 @@ def retention_matrix(spark: SparkSession, state_root: str) -> DataFrame:
     died between the two commit renames leaves the committed table at
     ``__old__``, and a reader skipping the restore would fail on a
     path that is in fact fully committed."""
-    _swap_paths(spark, _first_seen_path(state_root))
-    _swap_paths(spark, _activity_path(state_root))
+    state_exists_recovered(spark, _first_seen_path(state_root))
+    state_exists_recovered(spark, _activity_path(state_root))
     first = spark.read.parquet(_first_seen_path(state_root))
     act = spark.read.parquet(_activity_path(state_root))
     return (

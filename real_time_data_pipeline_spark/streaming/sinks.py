@@ -13,13 +13,15 @@ Reference sinks rebuilt (SURVEY §2.2):
 Every keyed merge — the gold upsert, the CDC snapshot
 (`cdc_upsert_parquet`) and the dedup-ingest stores — is one kernel,
 `_keyed_upsert`: swap recovery, a read of the stored rows (for a
-partitioned table only the partitions the batch touches), one winner
-per key, and a commit that never overwrites in place. A flat table is
-written beside itself and swapped in by two renames; a partitioned
-table stages only the touched partitions and swaps each partition
-directory the same way, so per-batch cost is O(touched partitions),
-not O(table), and a crash leaves every partition complete, pre- or
-post-batch. Existence checks and renames go through the Hadoop
+partitioned table only the partition directories the batch touches,
+by path), one winner per key, and a commit that never overwrites in
+place. Every write that replaces part or all of a parquet table
+(these merges, twin state, compaction, expiry, the backfill) is a
+staged-rename swap: `replace_parquet` swaps the whole table in by two
+renames; `replace_partitions` swaps each staged partition directory
+the same way, so per-batch cost is O(touched partitions), not
+O(table), and a crash leaves every partition complete, pre- or
+post-commit. Existence checks and renames go through the Hadoop
 FileSystem API, so the sinks work on HDFS/local identically. On
 S3-style object stores rename is copy-based (not atomic) — a 100 TB
 gold layer there should swap the merge body for Delta/Iceberg MERGE
@@ -110,18 +112,16 @@ def touched_buckets(df: DataFrame, col: str = BUCKET_COL) -> list:
     return [r[0] for r in df.select(col).distinct().collect()]
 
 
-def read_buckets(
-    spark: SparkSession, path: str, buckets: list, col: str = BUCKET_COL
-) -> DataFrame:
-    """Partition-pruned read of a partitioned table: only the listed
-    ``col`` partitions are scanned (static partition pruning on the
-    literal IN-list — verify with `.explain`'s PartitionFilters). A
+def read_buckets(spark: SparkSession, path: str, buckets: list) -> DataFrame:
+    """Partition-pruned read of a bucketed table: only the listed
+    `BUCKET_COL` partitions are scanned (static partition pruning on
+    the literal IN-list — verify with `.explain`'s PartitionFilters). A
     None in ``buckets`` selects the NULL partition, as ``eqNullSafe``
     would; an empty list scans nothing."""
     live = [b for b in buckets if b is not None]
-    cond = F.col(col).isin(live) if live else F.lit(False)
+    cond = F.col(BUCKET_COL).isin(live) if live else F.lit(False)
     if len(live) < len(buckets):
-        cond = cond | F.col(col).isNull()
+        cond = cond | F.col(BUCKET_COL).isNull()
     return spark.read.parquet(path).where(cond)
 
 
@@ -145,34 +145,27 @@ def _keyed_upsert(
     """The one keyed-merge commit behind `upsert_parquet` and
     `cdc_upsert_parquet`: recover, read, elect, swap.
 
-    - Recovery runs before the read: `_swap_paths` restores a table
-      caught between the two whole-table renames, and for a
-      partitioned table `_recover_bucket_swaps` finishes a
-      per-partition swap that died mid-sequence. Reading first would
-      merge against half-swapped state.
-    - The read is the whole table, or with ``partition_col`` only the
-      partitions the batch touches (`touched_buckets` +
-      `read_buckets`). The partition value must be a function of the
-      key (a bucket of it, a shard, a window date): a key that moved
-      partition would keep its old row in an untouched one.
+    - The read (`read_state`, or with ``partition_col`` only the
+      partitions the batch touches, `_read_partitions`) recovers an
+      interrupted swap first: reading first would merge against
+      half-swapped state. The partition value must be a function of
+      the key (a bucket of it, a shard, a window date): a key that
+      moved partition would keep its old row in an untouched one.
     - ``batch_wins`` ranks every batch row above every stored row
       before ``order`` — last writer wins, right for re-emitted running
       aggregates. Without it ``order`` alone ranks, so an already
       stored newer change beats a late older one (CDC).
-    - The commit is `_swap_write` for a flat table, `_swap_partitions`
-      for a partitioned one. Both stage the result beside the table,
-      so the write never reads the path it rewrites (no
-      materialization), and a replay after a crash converges because
-      the election is idempotent.
+    - The commit is `replace_parquet` for a flat table,
+      `replace_partitions` for a partitioned one. Both stage the result
+      beside the table, so the write never reads the path it rewrites
+      (no materialization), and a replay after a crash converges
+      because the election is idempotent.
     """
     spark = batch_df.sparkSession
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
-    old = None
-    if exists and partition_col is None:
-        old = spark.read.parquet(path)
-    elif exists:
-        _recover_bucket_swaps(fs, jpath, jold)
-        old = read_buckets(spark, path, touched_buckets(batch_df, partition_col), partition_col)
+    if partition_col is None:
+        old = read_state(spark, path)
+    else:
+        old = _read_partitions(batch_df, path, partition_col)
     if batch_wins:
         batch_df = batch_df.withColumn("__v", F.lit(1))
         old = old.withColumn("__v", F.lit(0)) if old is not None else None
@@ -180,9 +173,36 @@ def _keyed_upsert(
     merged = old.unionByName(batch_df) if old is not None else batch_df
     result = _elect_winners(merged, keys, order).drop("__v")
     if partition_col is None:
-        _swap_write(fs, result, path, tmp_path, jpath, jtmp, jold, exists)
+        replace_parquet(result, path)
     else:
-        _swap_partitions(fs, result, tmp_path, jpath, jtmp, jold, exists, partition_col)
+        replace_partitions(result, path, partition_col)
+
+
+def _read_partitions(
+    batch_df: DataFrame, path: str, partition_col: str
+) -> DataFrame | None:
+    """The stored rows of the partitions ``batch_df`` touches (None if
+    none is stored), after the `_swap_paths` recovery. Existing
+    touched directories are read by path, with ``basePath`` and the
+    batch's schema, so Spark neither lists other partitions nor infers
+    partition types (a string ``dt=01`` would read back as 1). Names
+    are built as Spark's writer builds them: the value cast to string,
+    then `getPartitionPathString` (escaping; NULL as the default
+    partition name)."""
+    spark = batch_df.sparkSession
+    fs, jpath, *_, exists = _swap_paths(spark, path)
+    if not exists:
+        return None
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = batch_df.select(F.col(partition_col).cast("string").alias(partition_col))
+    names = [
+        utils.getPartitionPathString(partition_col, v)
+        for v in touched_buckets(values, partition_col)
+    ]
+    dirs = [f"{path.rstrip('/')}/{n}" for n in names if fs.exists(jpath.suffix("/" + n))]
+    if not dirs:
+        return None
+    return spark.read.schema(batch_df.schema).option("basePath", path).parquet(*dirs)
 
 
 def upsert_parquet(
@@ -208,19 +228,23 @@ def upsert_parquet(
     complete committed data that the next call recovers, never a
     truncated table. Rename is atomic on HDFS/local; on S3-style
     stores it is copy-based, so use `merge_upsert_delta` there (same
-    foreachBatch contract). The swap is two renames, so a CONCURRENT
-    reader can hit a brief path-not-found window between them: this
-    sink assumes the single-writer/reader-retries discipline usual
-    for foreachBatch gold tables.
+    foreachBatch contract). A CONCURRENT reader can hit a brief
+    path-not-found window between the swap's renames: single writer,
+    readers retry (`replace_partitions` states the partitioned case).
     """
     order = [F.desc(order_col)] if order_col is not None else []
     _keyed_upsert(batch_df, path, keys, order, partition_col, batch_wins=True)
 
 
-def replace_parquet(df: DataFrame, path: str) -> None:
-    """Whole-table replace behind the same crash-safe staged-rename
-    swap as `upsert_parquet`, WITHOUT reading or merging the stored
-    table.
+def replace_parquet(df: DataFrame, path: str, partition_by=None) -> None:
+    """Whole-table replace, WITHOUT reading the stored table: ``df`` is
+    written beside ``path`` (laid out by ``partition_by``), the table
+    parked at ``__old__``, the staged one renamed in, the backup
+    dropped; `_swap_paths` finishes a swap a crash interrupted. A
+    partitioned backup is given a ``_SUCCESS`` file (Spark's committer
+    writes one by default), which marks it a WHOLE table for that
+    recovery. A partitioned ``df`` of zero rows stages no partition
+    directory, so the table is then ABSENT (never unreadable).
 
     For writers whose frame already IS the complete next state: every
     sketch twin reads the state once, merges it in-plan, and re-emits
@@ -232,9 +256,73 @@ def replace_parquet(df: DataFrame, path: str) -> None:
     only the batch's touched keys) must keep using `upsert_parquet`
     — this function drops any key absent from ``df``.
     """
-    spark = df.sparkSession
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
-    _swap_write(fs, df, path, tmp_path, jpath, jtmp, jold, exists)
+    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(df.sparkSession, path)
+    fs.delete(jtmp, True)
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp_path)
+    if exists:
+        fs.delete(jold, True)
+        fs.rename(jpath, jold)
+        if partition_by:
+            fs.createNewFile(jold.suffix("/_SUCCESS"))
+    if partition_by and not _staged_partitions(fs, jtmp, partition_by[0]):
+        fs.delete(jtmp, True)
+    else:
+        fs.rename(jtmp, jpath)
+    fs.delete(jold, True)
+
+
+def replace_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Replace every ``partition_col`` partition ``df`` holds with
+    ``df``'s rows for it (its complete next state); leave the others.
+
+    Recovery first (`_swap_paths`). ``df`` is
+    staged beside the table (a first commit is one rename), then each
+    staged partition directory swaps in: current → ``__old__``, staged
+    → current, drop the backup. Dynamic partition overwrite deletes a
+    partition before its replacement exists; here a crash leaves every
+    partition fully pre- or post-commit. An empty ``df`` stages no
+    partition directory (read off the listing, no extra job), so it
+    changes nothing and never creates a table.
+
+    Concurrency: ONE writer per partition — a live partitioned gold
+    upsert and a backfill must never commit the same ``date`` at once.
+    Each partition is replaced atomically, the table is not: a reader
+    listing mid-loop, or after a crash until the next commit recovers,
+    sees a MIX of pre- and post-commit partitions (ADVICE r8). For
+    cross-partition snapshot reads, read until quiescent or keep the
+    table flat under `replace_parquet`.
+    """
+    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(df.sparkSession, path)
+    fs.delete(jtmp, True)
+    df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp_path)
+    staged = _staged_partitions(fs, jtmp, partition_col)
+    if not staged:
+        fs.delete(jtmp, True)
+        return
+    if not exists:
+        fs.rename(jtmp, jpath)
+        return
+    fs.mkdirs(jold)
+    for name in staged:
+        # child paths by suffix: one JVM call each, this loop runs per
+        # touched partition on every batch
+        jb_cur, jb_old = jpath.suffix("/" + name), jold.suffix("/" + name)
+        fs.delete(jb_old, True)
+        if fs.exists(jb_cur):
+            fs.rename(jb_cur, jb_old)
+        fs.rename(jtmp.suffix("/" + name), jb_cur)
+        fs.delete(jb_old, True)
+    fs.delete(jtmp, True)
+    fs.delete(jold, True)
+
+
+def _staged_partitions(fs, jdir, partition_col: str) -> "list[str]":
+    """The ``partition_col=`` directory names a write left in ``jdir``."""
+    names = [st.getPath().getName() for st in fs.listStatus(jdir)]
+    return [n for n in names if n.startswith(f"{partition_col}=")]
 
 
 def committed_marker_check(marker, batch_id: int) -> bool:
@@ -277,18 +365,20 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 # - marker twins (Count-Min, HLL, Bloom, log-histogram, zone-map stats):
 #   `merge_marked_state` + `read_marked_state`. The state is one small
 #   table holding every key plus a meta row that carries the last
-#   merged batch id; each batch re-emits the whole state through one
-#   staged-rename swap.
+#   merged batch id; each batch re-emits the whole state through
+#   `replace_parquet`.
 # - (key, src_batch)-partitioned twins (IVF lists, IVF-PQ codes, trade
 #   flows, corpus statistics): `commit_partitioned_batch` +
 #   `read_partitioned_state` + `compact_partitioned_state`. Each batch
-#   writes only its own partitions; the reset guard reads partition
-#   directory names.
+#   writes only its own new partitions — the one dynamic-overwrite
+#   write left in the engine, safe because a retry rewrites only the
+#   partitions it owns; the reset guard reads partition directory
+#   names; compaction commits through `replace_parquet`.
 # - keyed-upsert state (retention, zone-map user pairs: flat; the four
 #   dedup-ingest stores: bucket-partitioned): `read_state` +
 #   `upsert_parquet`, idempotent per key, no marker. It is the same
 #   `_keyed_upsert` kernel as the CDC snapshot; a partitioned table
-#   commits through the per-partition staged swap (`_swap_partitions`).
+#   commits through `replace_partitions`.
 #
 # `foreach_batch_sink` drives any of them from a stream.
 # ---------------------------------------------------------------------------
@@ -397,8 +487,7 @@ def read_state(spark: SparkSession, path: str) -> DataFrame | None:
     treating it as "first batch" would let a last-writer-wins upsert
     silently overwrite stored state with this batch's version.
     """
-    _, _, _, _, _, exists = _swap_paths(spark, path)
-    if not exists:
+    if not state_exists_recovered(spark, path):
         return None
     return spark.read.parquet(path)
 
@@ -635,94 +724,51 @@ def compact_partitioned_state(
     compacted = live.withColumn(
         "src_batch", F.lit(COMPACTED_BATCH).cast("bigint")
     ).unionByName(marker)
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, state_path)
-    _swap_write(
-        fs, compacted, state_path, tmp_path, jpath, jtmp, jold, exists,
-        partition_by=[key_col, "src_batch"],
-    )
+    replace_parquet(compacted, state_path, [key_col, "src_batch"])
 
 
 def _swap_paths(spark: SparkSession, path: str):
-    """Resolve the swap-commit sibling paths for ``path`` and run
-    crash recovery: a previous commit that died between the two swap
-    renames leaves the committed table at ``__old__`` — restore it.
-    EVERY entry point that reads or rewrites a swap-committed table
-    must call this first (a reader that skips it would see the table
-    as absent and a writer would silently restart it from one batch).
+    """Resolve the swap-commit sibling paths for ``path`` and finish
+    any commit a crash interrupted (`_recover_swap`). EVERY entry point
+    that reads or rewrites a swap-committed table must call this first
+    (a reader that skips it would see the table, or a partition of it,
+    as absent, and a rewrite would then drop it for good); outside the
+    two commits, `state_exists_recovered` and `read_state` are that
+    call.
 
     Returns (fs, jpath, jtmp, jold, tmp_path, exists).
     """
     fs, jpath = _hadoop_fs(spark, path)
     tmp_path, old_path = path.rstrip("/") + "__tmp__", path.rstrip("/") + "__old__"
     jtmp, jold = _hadoop_fs(spark, tmp_path)[1], _hadoop_fs(spark, old_path)[1]
-    if not fs.exists(jpath) and fs.exists(jold):
-        fs.rename(jold, jpath)
+    if fs.exists(jold):
+        _recover_swap(fs, jpath, jold)
     return fs, jpath, jtmp, jold, tmp_path, bool(fs.exists(jpath))
 
 
-def _swap_write(
-    fs, result, path, tmp_path, jpath, jtmp, jold, exists, partition_by=None
-) -> None:
-    """Write ``result`` beside ``path`` then swap via two renames —
-    the crash-safe commit shared by every parquet merge sink here."""
-    fs.delete(jtmp, True)
-    writer = result.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp_path)
-    if exists:
-        fs.delete(jold, True)
-        fs.rename(jpath, jold)
-    fs.rename(jtmp, jpath)
-    fs.delete(jold, True)
+def _recover_swap(fs, jpath, jold) -> None:
+    """Finish the swap commit whose ``__old__`` backup ``jold`` a crash
+    left behind.
 
-
-def _swap_partitions(
-    fs, result, tmp_path, jpath, jtmp, jold, exists, partition_col
-) -> None:
-    """Commit ``result`` — the complete next state of every partition
-    it holds — one partition directory at a time.
-
-    ``result`` is staged beside the table (a first commit is then one
-    rename), and each staged ``partition_col=`` directory replaces its
-    twin with the flat swap's discipline: current → ``__old__``,
-    staged → current, drop the backup. Dynamic partition overwrite
-    would delete each partition before writing its replacement; a
-    crash in that window loses the partition's pre-batch rows and the
-    replayed batch then merges against the corrupted table. Here a
-    crash leaves every partition fully pre- or post-batch, and
-    `_recover_bucket_swaps` restores one caught between its renames.
-
-    Same single-writer / reader-retries discipline as the flat swap,
-    BUT atomicity is PER PARTITION, not per table (ADVICE r8): a
-    reader listing between partition renames — or after a mid-loop
-    crash, until the next batch replays — observes a MIX of pre- and
-    post-batch partitions. Readers needing cross-key snapshot
-    consistency (a report joining rows whose keys hash to different
-    buckets) must read until quiescent, or the writer must use the
-    flat table and its one-rename swap, trading rewrite cost for
-    table-level atomicity.
+    - No table: a `replace_parquet` died between its two renames; the
+      backup IS the committed table — restore it.
+    - A backup holding anything but ``col=`` directories (data files,
+      or a partitioned table's ``_SUCCESS``) is a whole table whose
+      swap completed — drop it. Restoring its partitions would bring
+      back the ones the new table dropped (expired buckets).
+    - Otherwise it is `replace_partitions`' backup: a partition whose
+      twin is missing from the table was caught between its two
+      renames — restore it; one whose twin exists was swapped — drop it.
     """
-    fs.delete(jtmp, True)
-    result.write.mode("overwrite").partitionBy(partition_col).parquet(tmp_path)
-    if not exists:
-        fs.rename(jtmp, jpath)
+    if not fs.exists(jpath):
+        fs.rename(jold, jpath)
         return
-    fs.mkdirs(jold)
-    for st in fs.listStatus(jtmp):
-        jb_tmp = st.getPath()
-        name = jb_tmp.getName()
-        if not name.startswith(f"{partition_col}="):
-            continue  # _SUCCESS etc.
-        # child paths by suffix: one JVM call each, this loop runs per
-        # touched partition on every batch
-        jb_cur, jb_old = jpath.suffix("/" + name), jold.suffix("/" + name)
-        fs.delete(jb_old, True)
-        if fs.exists(jb_cur):
-            fs.rename(jb_cur, jb_old)
-        fs.rename(jb_tmp, jb_cur)
-        fs.delete(jb_old, True)
-    fs.delete(jtmp, True)
+    parked = [st.getPath() for st in fs.listStatus(jold)]
+    if all("=" in jb.getName() for jb in parked):
+        for jb_old in parked:
+            jb_cur = jpath.suffix("/" + jb_old.getName())
+            if not fs.exists(jb_cur):
+                fs.rename(jb_old, jb_cur)
     fs.delete(jold, True)
 
 
@@ -756,7 +802,7 @@ def cdc_upsert_parquet(
     streaming/dedup_ingest.py uses for its corpus state. Each batch
     then reads and replaces only its own buckets — per-batch cost
     O(touched buckets), never O(snapshot) — through the per-partition
-    swap of `_keyed_upsert`. Without ``n_buckets`` the whole table is
+    swap of `replace_partitions`. Without ``n_buckets`` the whole table is
     merged under the flat swap — fine for dimension-sized snapshots.
     """
     if tombstone_col not in batch_df.columns:
@@ -799,19 +845,19 @@ def expire_tombstones(
 ) -> None:
     """Drop tombstones older than ``horizon`` (exclusive) from a CDC
     snapshot table — safe once no in-flight change can predate the
-    horizon (the stream's watermark bound). Same crash-safe swap
-    commit as the merge itself. The table's partition layout is
-    AUTO-DETECTED from its directory structure (the swap, not dynamic
-    overwrite, because a bucket whose rows ALL expire must end up
-    deleted, not left stale — but the rewrite must reproduce the
-    layout, or the next bucketed merge would leave a mixed-depth
-    directory that parquet partition discovery rejects). Pass
+    horizon (the stream's watermark bound). The whole table is
+    rewritten through `replace_parquet`, not partition by partition,
+    because a bucket whose rows ALL expire must end up deleted, not
+    left stale; a snapshot whose rows all expire ends up absent (the
+    next merge recreates it). The table's partition layout is
+    AUTO-DETECTED from its directory structure — the rewrite must
+    reproduce it, or the next bucketed merge would leave a mixed-depth
+    directory that parquet partition discovery rejects. Pass
     ``partition_cols`` only to override the detection."""
-    fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(spark, path)
-    if not exists:
+    if not state_exists_recovered(spark, path):
         return
     if partition_cols is None:
-        partition_cols = _detect_partition_cols(fs, jpath)
+        partition_cols = _detect_partition_cols(*_hadoop_fs(spark, path))
     # Layout-preserving read: the rewrite must reproduce partition
     # directory names exactly (see `read_layout_preserving`).
     df = read_layout_preserving(spark, path) if partition_cols else spark.read.parquet(path)
@@ -819,23 +865,9 @@ def expire_tombstones(
         F.coalesce(F.col(tombstone_col), F.lit(False))
         & (F.col(order_col) < F.lit(horizon))
     )
-    result = df.where(keep)
-    if partition_cols and result.isEmpty():
-        # A partitionBy write of zero rows emits no data files at all
-        # (only _SUCCESS) — an unreadable directory. A fully-expired
-        # snapshot is semantically an ABSENT table (the next merge
-        # recreates it), so delete it through the same crash window
-        # the swap uses: back up, then drop the backup.
-        fs.delete(jold, True)
-        fs.rename(jpath, jold)
-        fs.delete(jold, True)
-        return
-    # No materialization needed: the tmp write executes while the
+    # No materialization needed: the staged write executes while the
     # current table is still in place; only then do the renames run.
-    _swap_write(
-        fs, result, path, tmp_path, jpath, jtmp, jold, True,
-        partition_by=partition_cols or None,
-    )
+    replace_parquet(df.where(keep), path, partition_cols or None)
 
 
 def read_layout_preserving(spark: SparkSession, path: str) -> DataFrame:
@@ -909,33 +941,6 @@ def read_layout_preserving(spark: SparkSession, path: str) -> DataFrame:
         + [StructField(c, StringType(), True) for c in part_cols]
     )
     return spark.read.schema(full).parquet(path)
-
-
-def _recover_bucket_swaps(fs, jpath, jold) -> None:
-    """Finish a `_swap_partitions` commit that crashed mid-sequence.
-
-    A partition directory left under ``__old__`` whose twin is missing
-    from the table was caught between its two renames — restore it. A
-    backup whose twin exists means that partition's swap completed (or
-    a whole-table swap died after its final rename) — the backup is
-    stale, drop it. Runs only when BOTH the table and ``__old__``
-    exist; the table-missing case is the whole-table restore that
-    `_swap_paths` already performs.
-    """
-    if not (fs.exists(jold) and fs.exists(jpath)):
-        return
-    for st in fs.listStatus(jold):
-        jb_old = st.getPath()
-        name = jb_old.getName()
-        if "=" not in name:
-            fs.delete(jb_old, True)  # stray commit-metadata file
-            continue
-        jb_cur = jpath.suffix("/" + name)
-        if fs.exists(jb_cur):
-            fs.delete(jb_old, True)
-        else:
-            fs.rename(jb_old, jb_cur)
-    fs.delete(jold, True)
 
 
 def _detect_partition_cols(fs, jpath) -> "list[str]":

@@ -204,6 +204,56 @@ def test_cdc_bucketed_crash_recovery_restores_backup(spark, tmp_path):
     assert set(got) == {1, 2, 3, 4, 5, 9}  # old snapshot recovered + merged
 
 
+def test_expiry_crash_after_its_swap_keeps_expired_buckets_gone(
+    spark, tmp_path, monkeypatch
+):
+    """expire_tombstones died after its staged table was renamed in but
+    before the pre-expiry backup was dropped. That backup is a whole
+    table, so the next merge drops it instead of restoring the buckets
+    expiry removed (as a crashed per-bucket swap would be) — also when
+    the committer writes no ``_SUCCESS`` file."""
+    import os
+
+    import pytest
+
+    from real_time_data_pipeline_spark.streaming import sinks
+
+    kw = dict(keys=["user_id"], order_cols=["ts", "event_id"],
+              tombstone_col="is_delete", n_buckets=4)
+    path = str(tmp_path / "snap")
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    flag = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    saved = conf.get(flag)
+    conf.set(flag, "false")
+    try:
+        cdc_upsert_parquet(
+            _chg(spark, [(k, 10, 100 + k, float(k), k != 1) for k in range(1, 9)]),
+            path, **kw,
+        )
+
+        def crash(*_):
+            raise RuntimeError("writer died")
+
+        # dies after parking the table at __old__, before the rename in
+        monkeypatch.setattr(sinks, "_staged_partitions", crash)
+        with pytest.raises(RuntimeError, match="writer died"):
+            expire_tombstones(spark, path, "is_delete", "ts", _ts(30))
+        monkeypatch.undo()
+        os.rename(path + "__tmp__", path)  # the swap's rename in completed
+        buckets = {d for d in os.listdir(path) if d.startswith("bkt=")}
+        assert buckets < {d for d in os.listdir(path + "__old__") if d.startswith("bkt=")}
+
+        cdc_upsert_parquet(_chg(spark, [(9, 20, 209, 9.0, False)]), path, **kw)
+    finally:
+        if saved is None:
+            conf.unset(flag)
+        else:
+            conf.set(flag, saved)
+    assert spark.read.parquet(path).where("is_delete").count() == 0
+    assert _snap(spark, path) == {1: (1.0, _ts(10)), 9: (9.0, _ts(20))}
+    assert not os.path.exists(path + "__old__")
+
+
 def test_expire_tombstones_autodetects_bucketed_layout(spark, tmp_path):
     """Retention called WITHOUT partition_cols on a bucketed snapshot
     must preserve the bkt= layout (a flat rewrite would leave the next

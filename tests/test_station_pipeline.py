@@ -15,10 +15,8 @@ from real_time_data_pipeline_spark.pipelines.station_status import (
     to_silver,
 )
 from real_time_data_pipeline_spark.schemas import STATION_STATUS_RAW_SCHEMA
-from real_time_data_pipeline_spark.sources.sinks import (
-    drop_partitions_older_than,
-    write_parquet_partitioned,
-)
+from real_time_data_pipeline_spark.sources.sinks import drop_partitions_older_than
+from real_time_data_pipeline_spark.streaming.sinks import replace_partitions
 
 
 def _raw_df(spark, rows):
@@ -158,10 +156,10 @@ def test_partitioned_write_and_retention(spark, tmp_path):
         [("2024-05-01", 1.0), ("2024-05-02", 2.0), ("2024-05-09", 3.0)],
         "date string, v double",
     )
-    write_parquet_partitioned(df, path, "date")
-    # dynamic overwrite: rewriting one date leaves the others intact
+    replace_partitions(df, path, "date")
+    # partition replace: rewriting one date leaves the others intact
     df2 = spark.createDataFrame([("2024-05-02", 20.0)], "date string, v double")
-    write_parquet_partitioned(df2, path, "date")
+    replace_partitions(df2, path, "date")
     # partition values are type-inferred on read → stringify
     got = {str(r.date): r.v for r in spark.read.parquet(path).collect()}
     assert got == {"2024-05-01": 1.0, "2024-05-02": 20.0, "2024-05-09": 3.0}
@@ -170,3 +168,14 @@ def test_partitioned_write_and_retention(spark, tmp_path):
     assert dropped == ["2024-05-01"]
     left = {str(r.date) for r in spark.read.parquet(path).collect()}
     assert left == {"2024-05-02", "2024-05-09"}
+
+
+def test_retention_drops_partitions_under_a_file_uri(spark, tmp_path):
+    """Retention lists and deletes through the Hadoop FS API, so a
+    ``file://`` table path loses its old partitions too."""
+    path = tmp_path / "silver_uri"
+    for day in ("2024-05-01", "2024-05-09"):
+        (path / f"date={day}").mkdir(parents=True)
+    dropped = drop_partitions_older_than(spark, path.as_uri(), "date", 7, "2024-05-09")
+    assert dropped == ["2024-05-01"]
+    assert [p.name for p in path.iterdir()] == ["date=2024-05-09"]

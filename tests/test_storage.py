@@ -10,14 +10,14 @@ every later join runs exchange-free.
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.plans import executed_plan, formatted_plan
-from real_time_data_pipeline_spark.sources.sinks import write_parquet_partitioned
 from real_time_data_pipeline_spark.sources.tables import load_table
+from real_time_data_pipeline_spark.streaming.sinks import replace_partitions
 
 
 def test_date_partition_pruning(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     path = str(tmp_path / "events_by_date")
-    write_parquet_partitioned(ev, path, partition_col="date")
+    replace_partitions(ev, path, "date")
 
     back = spark.read.parquet(path).where(F.col("date") == "2024-01-02")
     plan = formatted_plan(back)

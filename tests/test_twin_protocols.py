@@ -402,3 +402,99 @@ def test_partitioned_upsert_matches_the_null_partition(spark, tmp_path):
     assert _rows(spark.read.parquet(path).select("k", "dt", "v")) == {
         (1, None, 5.0), (2, "a", 2.0)
     }
+
+
+def test_partitioned_upsert_keeps_a_string_partition_value(spark, tmp_path):
+    """A numeric-looking string partition value ("01") is matched as
+    written: a re-sent key replaces its row under ``dt=01`` instead of
+    landing beside it in a ``dt=1`` directory."""
+    path = str(tmp_path / "table")
+    schema = "k long, dt string, v double"
+    upsert_parquet(
+        spark.createDataFrame([(1, "01", 1.0), (2, "01", 2.0)], schema),
+        path, keys=["k"], partition_col="dt",
+    )
+    upsert_parquet(
+        spark.createDataFrame([(1, "01", 5.0)], schema), path, keys=["k"], partition_col="dt"
+    )
+    assert [d for d in os.listdir(path) if d.startswith("dt=")] == ["dt=01"]
+    stored = spark.read.schema(schema).parquet(path).select("k", "dt", "v")
+    assert _rows(stored) == {(1, "01", 5.0), (2, "01", 2.0)}
+
+
+def test_partitioned_upsert_after_an_empty_first_batch(spark, tmp_path):
+    """A zero-row first batch creates no table, so the next batch is
+    the first commit instead of failing to infer a schema."""
+    path = str(tmp_path / "table")
+    schema = "k long, dt string, v double"
+    upsert_parquet(spark.createDataFrame([], schema), path, keys=["k"], partition_col="dt")
+    assert not os.path.exists(path)
+    upsert_parquet(
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema),
+        path, keys=["k"], partition_col="dt",
+    )
+    assert _rows(spark.read.parquet(path).select("k", "dt", "v")) == {
+        (1, "a", 1.0), (2, "b", 2.0)
+    }
+
+
+def test_backfill_restores_a_day_parked_mid_swap(spark, tmp_path):
+    """A backfill re-run that died mid-swap — the day's gold partition
+    parked under ``gold__old__``, its staging dir left behind: the
+    next backfill of another day restores the parked day, and a replay
+    of the crashed day leaves exactly the gold of a run without a
+    crash."""
+    from real_time_data_pipeline_spark.jobs.backfill import backfill_day
+    from real_time_data_pipeline_spark.schemas import STATION_STATUS_RAW_SCHEMA
+
+    raw = spark.createDataFrame(
+        [
+            ("a", "3", None, "9", "1", "1", "1", "1715012345"),  # 2024-05-06
+            ("b", "2", None, "8", "1", "1", "1", "1715012400"),
+            ("c", "1", None, "4", "1", "1", "1", "1714900000"),  # 2024-05-05
+        ],
+        STATION_STATUS_RAW_SCHEMA,
+    )
+
+    def backfill(root, day):
+        backfill_day(raw, day, os.path.join(root, "silver"), os.path.join(root, "gold"))
+        return _rows(spark.read.parquet(os.path.join(root, "gold")))
+
+    ref = str(tmp_path / "ref")
+    backfill(ref, "2024-05-06")
+    want = backfill(ref, "2024-05-05")
+
+    gold = str(tmp_path / "crash" / "gold")
+    backfill(str(tmp_path / "crash"), "2024-05-06")
+    os.makedirs(gold + "__old__")
+    shutil.move(os.path.join(gold, "date=2024-05-06"), gold + "__old__")
+    os.makedirs(gold + "__tmp__")
+    open(os.path.join(gold + "__tmp__", "_SUCCESS"), "w").close()
+
+    assert backfill(str(tmp_path / "crash"), "2024-05-05") == want
+    assert backfill(str(tmp_path / "crash"), "2024-05-06") == want  # replay
+    assert not os.path.exists(gold + "__old__")
+    assert not os.path.exists(gold + "__tmp__")
+
+
+def test_compaction_restores_a_day_parked_mid_swap(spark, tmp_path):
+    """A day that a crashed partition swap left under ``__old__``
+    survives a compaction run before the next backfill: the compaction
+    restores it before reading the table, instead of rewriting the
+    table without it and dropping the backup."""
+    from pyspark.sql import functions as F
+
+    from real_time_data_pipeline_spark.operators.layout import compact_parquet
+
+    path = str(tmp_path / "gold")
+    day = F.date_add(F.lit("2024-05-05").cast("date"), (F.col("id") % 3).cast("int"))
+    spark.range(30).withColumn("date", day).write.partitionBy("date").parquet(path)
+    os.makedirs(path + "__old__")
+    shutil.move(os.path.join(path, "date=2024-05-06"), path + "__old__")
+
+    compact_parquet(spark, path)
+    assert sorted(d for d in os.listdir(path) if d.startswith("date=")) == [
+        "date=2024-05-05", "date=2024-05-06", "date=2024-05-07"
+    ]
+    assert _rows(spark.read.parquet(path).select("id")) == {(i,) for i in range(30)}
+    assert not os.path.exists(path + "__old__")
