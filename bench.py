@@ -113,7 +113,6 @@ def main() -> None:
             print(f"warmup {t} failed: {exc}", file=sys.stderr)
 
     from real_time_data_pipeline_spark.operators.materialize import release_caches
-    from real_time_data_pipeline_spark.operators.ranking import release_rank_caches
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -129,7 +128,6 @@ def main() -> None:
             # InMemoryRelation. Blocking, so block removal cannot
             # bleed into the timed window. Safe here: the warm noop
             # save materialized every tracked persist.
-            release_rank_caches(blocking=True)
             release_caches(blocking=True)
             t0 = time.perf_counter()
             spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -142,7 +140,6 @@ def main() -> None:
                 for _ in range(4):
                     # same drain between repetitions (r16): every rep
                     # recomputes from the parquet inputs
-                    release_rank_caches(blocking=True)
                     release_caches(blocking=True)
                     t0 = time.perf_counter()
                     spec.fn(spark, SF_DIR).write.format("noop").mode(
@@ -157,9 +154,8 @@ def main() -> None:
             # A 170-query session would otherwise accumulate one cached
             # range shuffle per ranking-backed query (VERDICT r6 #1),
             # and one tracked persist per persist_tracked-bearing
-            # execution (ADVICE r13 #4) — drain both outside the timed
-            # window.
-            release_rank_caches()
+            # execution (ADVICE r13 #4) — one tracked-registry drain
+            # frees both, outside the timed window.
             release_caches()
 
     families: dict[str, float] = {}

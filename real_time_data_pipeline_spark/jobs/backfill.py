@@ -17,8 +17,14 @@ Differences from the reference, by design (SURVEY §2.6 defect fixes):
 - deterministic dedup + guarded ratio via the shared pipeline stages —
   the same functions the streaming job runs, so backfill and live
   never drift (the reference maintains two divergent copies);
+- one silver pass: gold is aggregated from the silver day just
+  committed (read back by path), as the reference derives gold from
+  silver (`spark_batch_backfill.py:34-74`), and the gold row count is
+  observed during the gold write instead of read back; a date with no
+  silver rows writes no gold and counts 0;
 - gold lands as a date-partitioned parquet table; pass --jdbc-url to
-  ALSO mirror it to a JDBC gold table like the reference's Postgres.
+  ALSO mirror the committed gold day to a JDBC gold table like the
+  reference's Postgres.
 
 ``main(argv)`` builds-or-gets the session, so tests and notebook
 callers can run it in-process; under spark-submit the session comes
@@ -28,6 +34,7 @@ from the launcher with whatever master/packages were configured.
 from __future__ import annotations
 
 import argparse
+import datetime as dt
 import os
 import sys
 from collections.abc import Sequence
@@ -40,7 +47,7 @@ if __package__ in (None, ""):
         0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -57,30 +64,54 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str) -> DataFrame:
-    """Normalize ``bronze``, keep silver rows of ``date``, then replace
-    that day's silver and gold partitions (`replace_partitions`);
-    returns the gold frame (with its ``date`` column). The one body of
-    the spark-submit job and the DAG's backfill task. One writer per
-    partition: no other backfill or live gold upsert may commit
-    ``date`` meanwhile. Each day is replaced atomically, the table
-    is not."""
+def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str) -> int:
+    """Replace ``date``'s silver and gold partitions from ``bronze``;
+    returns the number of gold rows committed. The one body of the
+    spark-submit job and the DAG's backfill task.
+
+    One silver pass: ``bronze`` is normalized, deduplicated and
+    filtered to ``date`` once, and that day is committed with
+    `replace_partitions`. Gold is then computed from the COMMITTED
+    silver day, read back by path (`_read_partitions`), not from a
+    second pass over bronze, and committed the same way; its row
+    count is observed during that write, so no job reads gold back.
+    If no ``date=`` silver partition is committed (no bronze rows of
+    that day, and none from an earlier run), no gold is written and
+    the result is 0. ``date`` must be spelled YYYY-MM-DD, as the
+    partition directory is; any other spelling raises ValueError.
+
+    One writer per partition (`replace_partitions`): no other backfill
+    or live gold upsert may commit ``date`` meanwhile. That rule is
+    also what makes the read-back safe: the partition read is the one
+    this call just committed. Each day is replaced atomically, the
+    table is not."""
     from real_time_data_pipeline_spark.pipelines.station_status import (
         normalize_raw,
         to_gold,
         to_silver,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import replace_partitions
+    from real_time_data_pipeline_spark.streaming.sinks import (
+        _read_partitions,
+        replace_partitions,
+    )
 
+    if dt.date.fromisoformat(date).isoformat() != date:  # names the partition directory
+        raise ValueError(f"backfill date must be YYYY-MM-DD, got {date!r}")
     silver = to_silver(normalize_raw(bronze)).withColumn(
         "date", F.to_date(F.col("event_ts"))
     )
     day = silver.where(F.col("date") == F.lit(date))
     replace_partitions(day, silver_path, "date")
 
-    gold = to_gold(day).withColumn("date", F.to_date(F.col("window_start")))
-    replace_partitions(gold, gold_path, "date")
-    return gold
+    committed = _read_partitions(
+        bronze.sparkSession, silver_path, "date", [date], day.schema
+    )
+    if committed is None:
+        return 0
+    gold = to_gold(committed).withColumn("date", F.to_date(F.col("window_start")))
+    written = Observation()
+    replace_partitions(gold.observe(written, F.count(F.lit(1)).alias("n")), gold_path, "date")
+    return written.get["n"]
 
 
 def run(
@@ -94,15 +125,15 @@ def run(
     jdbc_user: str | None = None,
     jdbc_password: str | None = None,
 ) -> int:
-    """Execute the backfill; returns the number of gold rows written."""
+    """Execute the backfill; returns the number of gold rows written.
+    The JDBC mirror ships the committed gold day, read by path."""
     from real_time_data_pipeline_spark.sources.sinks import jdbc_writer
 
-    gold = backfill_day(spark.read.parquet(bronze_path), date, silver_path, gold_path)
-    if jdbc_url is not None:
-        jdbc_writer(
-            gold.drop("date"), jdbc_url, jdbc_table, jdbc_user or "", jdbc_password or ""
-        ).save()
-    return spark.read.parquet(gold_path).where(F.col("date") == F.lit(date)).count()
+    n = backfill_day(spark.read.parquet(bronze_path), date, silver_path, gold_path)
+    if jdbc_url is not None and n:
+        gold = spark.read.parquet(f"{gold_path.rstrip('/')}/date={date}")
+        jdbc_writer(gold, jdbc_url, jdbc_table, jdbc_user or "", jdbc_password or "").save()
+    return n
 
 
 def main(argv: Sequence[str] | None = None) -> int:

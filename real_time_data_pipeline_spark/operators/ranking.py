@@ -514,6 +514,17 @@ def grouped_percentile_cont(
     one hash aggregate interpolates. Mega-group safe: no task ever
     holds more than one range partition's rows.
 
+    BROADCAST BOUND: many groups are not safe the way one mega-group
+    is. ``wanted``
+    (|groups| × ≤ 2·|pcts| rows), ``offs`` (one row per (partition,
+    group) slice) and ``totals`` (one row per group) are broadcast
+    back onto the partitioned frame by explicit hints, which ignore
+    ``spark.sql.autoBroadcastJoinThreshold``; keep the group
+    cardinality low enough that each stays within that threshold
+    (default 10 MB). A high-cardinality ``group_by`` wants the full
+    `grouped_row_number` rank instead, whose offset joins carry no
+    hint and so fall back to a shuffle join.
+
     Semantics match ``percentile(value, p)`` / DuckDB
     ``quantile_cont``: NULL values are ignored (filtered before
     ranking); with n non-null values the result is

@@ -166,6 +166,9 @@ def hourly_station_dag(
       ``ds`` ONLY (`jobs.backfill.backfill_day`: re-runs swap in
       exactly that day — the reference overwrote the whole path,
       SURVEY §2.2 K6; no other writer may commit ``ds`` meanwhile).
+      Silver is computed once and gold from the committed silver day;
+      the task returns the gold row count the write observed (0 when
+      ``ds`` has no silver rows).
     - ``soda_scan_gold`` (trigger_rule=all_done): engine-native DQ
       checks over the gold table; returns the checks DataFrame
       collected to rows. Raises if any check failed, so the DAG run
@@ -181,7 +184,7 @@ def hourly_station_dag(
     from real_time_data_pipeline_spark.sources.sinks import drop_partitions_older_than
 
     def backfill() -> int:
-        return backfill_day(raw, ds, silver_path, gold_path).count()
+        return backfill_day(raw, ds, silver_path, gold_path)
 
     def soda_scan() -> list:
         gold = spark.read.parquet(gold_path).where(F.col("date") == F.lit(ds))

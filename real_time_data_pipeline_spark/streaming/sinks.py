@@ -36,6 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StringType, StructField, StructType
 
 from real_time_data_pipeline_spark.operators.dedup import dedup_deterministic
 
@@ -165,7 +166,10 @@ def _keyed_upsert(
     if partition_col is None:
         old = read_state(spark, path)
     else:
-        old = _read_partitions(batch_df, path, partition_col)
+        values = batch_df.select(F.col(partition_col).cast("string").alias(partition_col))
+        old = _read_partitions(
+            spark, path, partition_col, touched_buckets(values, partition_col), batch_df.schema
+        )
     if batch_wins:
         batch_df = batch_df.withColumn("__v", F.lit(1))
         old = old.withColumn("__v", F.lit(0)) if old is not None else None
@@ -179,30 +183,26 @@ def _keyed_upsert(
 
 
 def _read_partitions(
-    batch_df: DataFrame, path: str, partition_col: str
+    spark: SparkSession, path: str, partition_col: str, values: list, schema: StructType
 ) -> DataFrame | None:
-    """The stored rows of the partitions ``batch_df`` touches (None if
-    none is stored), after the `_swap_paths` recovery. Existing
-    touched directories are read by path, with ``basePath`` and the
-    batch's schema, so Spark neither lists other partitions nor infers
-    partition types (a string ``dt=01`` would read back as 1). Names
-    are built as Spark's writer builds them: the value cast to string,
-    then `getPartitionPathString` (escaping; NULL as the default
-    partition name)."""
-    spark = batch_df.sparkSession
+    """The stored rows of the ``partition_col`` partitions named by
+    ``values`` (None if none is stored), after the `_swap_paths`
+    recovery. Existing directories are read by path, with ``basePath``
+    and ``schema``, so Spark neither lists other partitions nor infers
+    partition types (a string ``dt=01`` would read back as 1).
+    ``values`` are the partition values as Spark's writer renders them
+    (the value cast to string; None for NULL): names are built as that
+    writer builds them, with `getPartitionPathString` (escaping; NULL
+    as the default partition name)."""
     fs, jpath, *_, exists = _swap_paths(spark, path)
     if not exists:
         return None
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    values = batch_df.select(F.col(partition_col).cast("string").alias(partition_col))
-    names = [
-        utils.getPartitionPathString(partition_col, v)
-        for v in touched_buckets(values, partition_col)
-    ]
+    names = [utils.getPartitionPathString(partition_col, v) for v in values]
     dirs = [f"{path.rstrip('/')}/{n}" for n in names if fs.exists(jpath.suffix("/" + n))]
     if not dirs:
         return None
-    return spark.read.schema(batch_df.schema).option("basePath", path).parquet(*dirs)
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
 
 
 def upsert_parquet(
@@ -896,8 +896,6 @@ def read_layout_preserving(spark: SparkSession, path: str) -> DataFrame:
     leaf data file's relative path (hive-style ``col=value``
     segments — the only layout the engine's writers produce).
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     fs, jroot = _hadoop_fs(spark, path)
     # Qualify the root BEFORE the prefix strip below: listStatus
     # returns fully-qualified (scheme-prefixed) child paths, so an

