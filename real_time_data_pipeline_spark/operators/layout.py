@@ -17,9 +17,10 @@ Scaling caveat (standard for Morton curves): interleaving favors the
 dimension with more significant bits — a 4-bit user_id interleaved
 with a 9-bit value clusters mostly by value. For balanced pruning,
 pre-scale each dimension to a comparable range (e.g. its percentile
-bucket via ``operators/ranking.exact_ntile`` with 2^k buckets) before
-interleaving; the raw form is kept here because it is a pure
-row-local integer formula (no extra shuffle).
+bucket via ``operators/ranking.grouped_exact_ntile`` with no group
+columns and 2^k buckets) before interleaving; the raw form is kept
+here because it is a pure row-local integer formula (no extra
+shuffle).
 """
 
 from __future__ import annotations

@@ -1,30 +1,55 @@
-"""Scalable exact global ranking: row_number / ntile without a
-single-partition window.
+"""Scalable exact ranks, ntiles and running aggregates — global or
+per group — without a single-partition window.
 
 ``Window.orderBy(...)`` with no partition spec funnels the entire
 input through ONE task — the classic scale-killer for global ranks
-(fine on a dimension, fatal on a fact table). The helpers here
-compute the same exact, deterministic values with the zipWithIndex
-pattern expressed in DataFrame ops:
+(fine on a dimension, fatal on a fact table) — and
+``Window.partitionBy(group)`` does the same to a mega-group (billions
+of rows in 'en'). Every helper here is built on ONE kernel,
+`_range_scan`: the zipWithIndex / prefix-scan decomposition (Blelloch,
+"Prefix Sums and Their Applications", 1990) in DataFrame ops, as one
+lazy job with no driver round-trip:
 
-1. range-repartition on the sort keys, so partition ``p`` holds only
-   keys ordered before partition ``p+1``'s keys;
-2. ``row_number`` over ``Window.partitionBy(partition_id)`` — every
-   task ranks only its own partition's rows;
-3. add each partition's cumulative row offset, computed from a
-   partition-id count aggregate that is numPartitions rows. The
-   running sum over those counts is itself a window, but over a
-   frame bounded by the partition count (dozens), not the data —
-   and it stays a lazy broadcast-join input, so the whole rank is
-   ONE job with no driver round-trip.
+1. ONE range exchange on ``(*group_by, *order_by)`` and ONE
+   ``persist_tracked``: each group occupies a contiguous RUN of
+   partitions, and within a group partition ``p`` holds only keys
+   ordered before partition ``p+1``'s (the plain group columns sort
+   exactly like their struct and keep the range keys readable in the
+   plan);
+2. per-(partition[, group]) SLICE aggregates of the requested monoids
+   — count (which gives ``row_number``), sum, max — a frame of at most
+   |groups| + numPartitions − 1 rows (a partition boundary splits at
+   most one group), not data-sized;
+3. each slice's OFFSET — the monoid over the PRIOR slices of its group
+   — and the group TOTAL, from windows over that slice frame ordered
+   by partition id and partitioned by the group when there is one;
+4. the offsets joined back, and a running window partitioned by
+   (partition[, group]): no task ever sorts more than one slice;
+5. running value ⊕ offset, skipping NULLs on either side:
+   ``coalesce(run ⊕ off, run, off)``. The result is NULL only when no
+   non-NULL value precedes the row — exactly what ``sum``/``max``
+   ``OVER (... ROWS UNBOUNDED PRECEDING)`` returns.
+
+Join rule (the kernel's one branch): with no group columns the
+offsets frame has at most numPartitions rows, so its join carries an
+explicit broadcast hint. Grouped offsets grow with the number of
+groups and may be too big to broadcast, so they are pinned as the BUILD side
+of a shuffled hash join instead. Left hint-free, Catalyst sizes the
+persisted layout from a static estimate and, below the broadcast
+threshold, broadcasts the DATA side, whose running window then runs in
+the offsets' few partitions (measured on `agg_customer_rfm_segments`:
+a 34 MiB broadcast of the ranked rows at sf0.1). NULL group values are
+a group of their own, exactly as in the ANSI window: slices and joins
+key on ONE struct of the group columns (``_gr_g``), whose join/grouping
+semantics treat NULL fields as equal.
 
 Requirements: the sort keys must form a TOTAL order (include a unique
 tie-break column such as the row key); otherwise the range partitioner
 may split equal keys across a boundary and the rank is only
 sort-stable, not deterministic.
 
-Why the repartitioned frame is ``persist()``-ed: the count branch and
-the rank branch must observe the SAME sampled range boundaries, but
+Why the repartitioned frame is ``persist()``-ed: the slice branch and
+the running branch must observe the SAME sampled range boundaries, but
 range-boundary sampling is reseeded per physical exchange — planned
 naively, the two branches each get their own exchange (verified: the
 adaptive plan materializes two independent rangepartitioning stages,
@@ -32,7 +57,7 @@ no stage reuse) and rows near a boundary can land in different
 partitions on each side, silently corrupting offsets. ``persist()``
 canonicalizes both branches onto ONE InMemoryRelation, so exactly one
 range exchange ever executes — and unlike ``localCheckpoint()`` it is
-lazy: the whole rank stays a single job. The cache spills to disk at
+lazy: the whole scan stays a single job. The cache spills to disk at
 scale, which is no worse than the checkpoint it replaces.
 
 Cache lifetime: each helper call registers its persisted frame in a
@@ -53,14 +78,10 @@ from pyspark.sql import functions as F
 from real_time_data_pipeline_spark.session import batch_width
 
 __all__ = [
-    "global_row_number",
-    "exact_ntile",
-    "multi_metric_ntiles",
     "grouped_row_number",
-    "grouped_multi_metric_ntiles",
     "grouped_exact_ntile",
+    "grouped_multi_metric_ntiles",
     "grouped_percentile_cont",
-    "global_prefix_sum",
     "global_prefix_sums",
     "global_running_max",
     "release_rank_caches",
@@ -89,84 +110,105 @@ def release_rank_caches(blocking: bool = False) -> int:
     return _release_caches(blocking=blocking)
 
 
-def global_row_number(
+# monoid -> (slice aggregate of the value column, its combine over
+# slices, its running value over a row window)
+_MONOIDS = {
+    "count": (lambda v: F.count(F.lit(1)), F.sum, lambda v, w: F.row_number().over(w)),
+    "sum": (F.sum, F.sum, lambda v, w: F.sum(v).over(w)),
+    "max": (F.max, F.max, lambda v, w: F.max(v).over(w)),
+}
+
+
+def _combine(monoid: str, run: Column, off: Column) -> Column:
+    """Running value ⊕ prior offset, skipping a NULL on either side."""
+    both = F.greatest(run, off) if monoid == "max" else run + off
+    return F.coalesce(both, run, off)
+
+
+def _range_slices(
     df: DataFrame,
+    group_by: "list[str]",
     order_by: "list[Column | str]",
-    rn_col: str = "rn",
-    num_partitions: int | None = None,
-    total_col: str | None = None,
-) -> DataFrame:
-    """Exact global ``row_number`` over ``order_by`` without a
-    single-partition window, as one lazy job.
-
-    Scale shape: one range shuffle of the input, one numPartitions-row
-    count aggregate (its running-sum window is bounded by the
-    partition count), one broadcast join, one pid-partitioned window.
-    No stage sorts more than one partition's rows; nothing reaches
-    the driver.
-
-    ``total_col``: also attach the total row count as a column (via a
-    1-row broadcast) — callers deriving percent_rank / cume_dist /
-    ntile need it.
-    """
+    monoids: "list[tuple[str, str | None]]",
+    num_partitions: int | None,
+) -> "tuple[DataFrame, DataFrame, list[str]]":
+    """Steps 1–3 of the kernel (module doc). Returns ``(part, slices,
+    keys)``: ``part`` is the persisted range layout of ``df`` carrying
+    the slice ``keys`` (``_gr_pid``, plus ``_gr_g`` when grouped), and
+    ``slices`` has one row per slice with, for the i-th ``(monoid,
+    value_col)``, ``_gr_s{i}`` (the slice aggregate), ``_gr_o{i}`` (the
+    combine of the group's prior slices, NULL when none is non-NULL)
+    and ``_gr_t{i}`` (the group total)."""
+    keys = ["_gr_pid", "_gr_g"] if group_by else ["_gr_pid"]
+    if group_by:
+        df = df.withColumn("_gr_g", F.struct(*group_by))
     n_parts = num_partitions or batch_width(df.sparkSession)
-    part = (
-        df.repartitionByRange(n_parts, *order_by)
+    part = _persist_tracked(  # ONE shared range exchange (module doc)
+        df.repartitionByRange(n_parts, *group_by, *order_by)
         .withColumn("_gr_pid", F.spark_partition_id())
     )
-    part = _persist_tracked(part)  # ONE shared range exchange (see module doc)
-    counts = part.groupBy("_gr_pid").agg(F.count(F.lit(1)).alias("_gr_c"))
-    w_off = Window.orderBy("_gr_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "_gr_pid",
-        F.coalesce(F.sum("_gr_c").over(w_off), F.lit(0)).alias("_gr_off"),
+    slices = part.groupBy(*keys).agg(
+        *[_MONOIDS[m][0](v).alias(f"_gr_s{i}") for i, (m, v) in enumerate(monoids)]
     )
-    w = Window.partitionBy("_gr_pid").orderBy(*order_by)
-    out = (
-        part.join(F.broadcast(offs), "_gr_pid")
-        .withColumn(rn_col, F.row_number().over(w) + F.col("_gr_off"))
-        .drop("_gr_pid", "_gr_off")
+    by_pid = Window.partitionBy(*keys[1:]).orderBy("_gr_pid")
+    frames = {
+        "o": by_pid.rowsBetween(Window.unboundedPreceding, -1),
+        "t": by_pid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing),
+    }
+    slices = slices.select(
+        "*",
+        *[
+            _MONOIDS[m][1](f"_gr_s{i}").over(frame).alias(f"_gr_{t}{i}")
+            for i, (m, _) in enumerate(monoids)
+            for t, frame in frames.items()
+        ],
     )
-    if total_col is not None:
-        total = counts.agg(F.sum("_gr_c").alias(total_col))
-        out = out.crossJoin(F.broadcast(total))
-    return out
+    return part, slices, keys
 
 
-def exact_ntile(
+def _range_scan(
     df: DataFrame,
-    n_buckets: int,
+    group_by: "list[str]",
     order_by: "list[Column | str]",
-    out_col: str,
-    num_partitions: int | None = None,
+    aggs: "list[tuple[str, str | None, str, str | None]]",
+    num_partitions: int | None,
 ) -> DataFrame:
-    """Exact ANSI ``ntile(n)`` over a global ordering, scalably.
-
-    Standard ntile semantics: bucket sizes differ by at most one, the
-    larger buckets first. The closed-form bucket assignment is
-    computed from the scalable global row_number entirely in column
-    expressions (the total arrives as a 1-row broadcast), so the
-    result is bit-identical to ``ntile(n) OVER (ORDER BY ...)`` — the
-    DuckDB / ANSI oracle needs no adjustment — while the plan contains
-    no unpartitioned window and no driver round-trip.
-    """
-    ranked = global_row_number(
-        df, order_by, rn_col="_gr_rn",
-        num_partitions=num_partitions, total_col="_gr_n",
+    """The kernel (module doc). For each ``(monoid, value_col, out_col,
+    total_col)`` of ``aggs``, ``out_col`` is the inclusive running
+    ``monoid`` of ``value_col`` over ``order_by`` within the group and,
+    when ``total_col`` is set, ``total_col`` is the group's total."""
+    part, slices, keys = _range_slices(
+        df, group_by, order_by, [a[:2] for a in aggs], num_partitions
     )
-    bucket = _closed_form_ntile("_gr_rn", "_gr_n", n_buckets)
-    return (
-        ranked.withColumn(out_col, bucket.cast("int")).drop("_gr_rn", "_gr_n")
+    offs = slices.drop(*[f"_gr_s{i}" for i in range(len(aggs))])
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    out = part.join(offs.hint("shuffle_hash") if group_by else F.broadcast(offs), keys)
+    # The running values get their own columns first: `_combine` reads
+    # its run twice, and an inline window expression would be computed
+    # once per reference.
+    out = (
+        out.withColumns({f"_gr_r{i}": _MONOIDS[m][2](v, w) for i, (m, v, *_) in enumerate(aggs)})
+        .withColumns(
+            {
+                oc: _combine(m, F.col(f"_gr_r{i}"), F.col(f"_gr_o{i}"))
+                for i, (m, _, oc, _) in enumerate(aggs)
+            }
+        )
+        .withColumns({tc: F.col(f"_gr_t{i}") for i, (*_, tc) in enumerate(aggs) if tc})
+    )
+    return out.drop(*keys, *[f"_gr_{t}{i}" for i in range(len(aggs)) for t in "rot"])
 
 
 def _closed_form_ntile(rn_col: str, n_col: str, n_buckets: int) -> Column:
     """ANSI ``ntile(n_buckets)`` bucket of rank column ``rn_col``
     (1-based) among ``n_col`` rows, as pure column arithmetic with
-    exact integer ``div`` throughout (same expressions as
-    `exact_ntile`): bucket sizes differ by at most one, larger buckets
-    first; with fewer rows than buckets, row i lands alone in
-    bucket i."""
+    exact integer ``div`` throughout: bucket sizes differ by at most
+    one, larger buckets first; with fewer rows than buckets, row i
+    lands alone in bucket i."""
     rn = F.col(rn_col)
     quot = F.expr(f"{n_col} div {n_buckets}")
     rem = F.col(n_col) % n_buckets
@@ -195,8 +237,8 @@ def _validated_long_metrics(
 ) -> "list[Column]":
     """Resolve each metric against ``df`` (driver-side analysis, no
     job) and fail LOUDLY unless its type survives a lossless,
-    order-preserving cast to long. The multi-metric ntile helpers sort
-    all k metrics through ONE shared BIGINT key column; a silent
+    order-preserving cast to long. The multi-metric ntile sorts all k
+    metrics through ONE shared BIGINT key column; a silent
     ``cast('long')`` of a double/decimal metric would truncate and
     mis-bucket with no error (the contract previously lived only in
     the docstring). Integral types (byte/short/int/long) and boolean
@@ -232,100 +274,6 @@ def _validated_long_metrics(
     return [m.cast("long") for m in metrics]
 
 
-def multi_metric_ntiles(
-    df: DataFrame,
-    n_buckets: int,
-    metrics: "list[Column]",
-    key: str,
-    out_cols: "list[str]",
-    carry: "list[str] | None" = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact ``ntile(n_buckets) OVER (ORDER BY metric_i, key)`` for
-    SEVERAL metrics of the same frame in ONE range exchange.
-
-    Chained `exact_ntile` calls each pay their own range shuffle of
-    the same rows (k metrics → k exchanges). Exploding the frame into
-    (metric_id, value) rows and taking ONE global row_number over
-    (metric_id, value, key) gets all k rankings from a single
-    exchange: within metric m the rank is ``rn − m·n`` (the composite
-    ordering sorts metric 0's rows entirely before metric 1's), and
-    the same closed-form bucket arithmetic as `exact_ntile` yields
-    each quintile/decile. Measured on the RFM segmentation at sf0.1:
-    ~2.3× over the three-pass form, bit-identical output
-    (scripts/rfm_single_exchange_experiment.py).
-
-    ``metrics`` must be BIGINT-comparable columns (cast dates to epoch
-    days, money to integer cents first): all k metrics share one sort
-    key column, so their values must survive a lossless cast to long
-    with order preserved — ENFORCED at plan time
-    (`_validated_long_metrics` rejects fractional/date/string metrics
-    with the fix spelled out). Metrics should be non-NULL — NULLs rank
-    NULLS-FIRST (Spark ascending default), which matches Spark's own
-    ``ntile`` window but NOT a DuckDB oracle's NULLS-LAST default.
-    ``key`` must be unique per row — it is the ANSI tie-break that
-    makes every assignment deterministic.
-
-    Returns one row per input row: ``key``, any ``carry`` columns, and
-    ``out_cols[i]`` (int) = the ntile bucket of ``metrics[i]``.
-
-    Scale shape: one explode (k× the KEY frame, still
-    dimension-grade), one range exchange + pid-partitioned window
-    (`global_row_number`), one ≤k-wide conditional pivot aggregate
-    back to row grain. The input should be materialized by the caller
-    if its lineage is expensive — the explode references it once, but
-    `global_row_number` fans the exploded frame into two branches.
-    """
-    if len(metrics) != len(out_cols):
-        raise ValueError("metrics and out_cols must pair up")
-    carry = carry or []
-    k = len(metrics)
-    longs = _validated_long_metrics(df, metrics)
-    # Internal names carry the _mm_ prefix so a caller whose key/carry
-    # columns are named "mid" or "v" can never collide into an
-    # ambiguous-reference AnalysisException.
-    exploded = df.select(
-        key,
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("_mm_mid"), m.alias("_mm_v")
-                    )
-                    for i, m in enumerate(longs)
-                ]
-            )
-        ).alias("_mm"),
-    ).select(key, *carry, "_mm._mm_mid", "_mm._mm_v")
-    ranked = global_row_number(
-        exploded,
-        ["_mm_mid", "_mm_v", key],
-        rn_col="_mm_rn",
-        num_partitions=num_partitions,
-        total_col="_mm_total",
-    )
-    ranked = ranked.withColumn(
-        "_mm_n", F.expr(f"_mm_total div {k}")  # rows per metric
-    ).withColumn(
-        # rank within the metric, 1..n (the composite ordering sorts
-        # metric 0's rows entirely before metric 1's)
-        "_mm_mrn",
-        F.col("_mm_rn") - F.col("_mm_mid") * F.col("_mm_n"),
-    )
-    bucket = _closed_form_ntile("_mm_mrn", "_mm_n", n_buckets)
-    return (
-        ranked.withColumn("_mm_b", bucket.cast("int"))
-        .groupBy(key, *carry)
-        .agg(
-            *[
-                F.max(F.when(F.col("_mm_mid") == i, F.col("_mm_b"))).alias(oc)
-                for i, oc in enumerate(out_cols)
-            ]
-        )
-    )
-
-
 def grouped_multi_metric_ntiles(
     df: DataFrame,
     n_buckets: int,
@@ -336,35 +284,57 @@ def grouped_multi_metric_ntiles(
     carry: "list[str] | None" = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact ``ntile(n) OVER (PARTITION BY group ORDER BY metric_i,
-    key)`` for SEVERAL metrics in ONE range exchange — the per-group
-    twin of `multi_metric_ntiles` (per-language quality × length
-    quintiles over a web corpus is the motivating shape; chained
-    `grouped_exact_ntile` pays k range shuffles of the same rows).
+    """Exact ``ntile(n) OVER ([PARTITION BY group] ORDER BY metric_i,
+    key)`` for SEVERAL metrics of the same frame in ONE range exchange
+    (``group_by=[]`` ranks the whole frame).
 
-    Simpler than the global form: folding the metric id into the
-    GROUP key makes each (group, metric) its own ranking group, so
-    `grouped_row_number` already returns the within-metric rank and
-    total directly — no composite-ordering rank arithmetic. The same
-    mega-group safety applies: a group bigger than one task spans a
-    partition run and still ranks correctly.
+    Chained `grouped_exact_ntile` calls each pay their own range
+    shuffle of the same rows (k metrics → k exchanges). Exploding the
+    frame into (metric_id, value) rows and folding the metric id into
+    the ranking GROUP makes each (group, metric) its own ranking group,
+    so one `grouped_row_number` returns every within-metric rank and
+    total, and the closed-form ANSI bucket arithmetic yields each
+    quintile/decile. Measured on the RFM segmentation at sf0.1: ~2.3×
+    over the chained three-pass form, bit-identical output (the r10
+    exchange-sharing experiment adopted in r11 as
+    `agg_customer_rfm_segments`, README). Mega-group safe: a group
+    bigger than one task spans a partition run and still ranks
+    correctly.
 
-    Same contracts as `multi_metric_ntiles`: BIGINT-comparable
-    non-NULL metrics, unique ``key`` as the deterministic tie-break;
-    returns one row per input row (``group_by`` + ``key`` + ``carry``
-    + one int bucket per metric). NULL group values are a partition
-    of their own, exactly as in the ANSI window: the (group, metric)
-    ranking key travels as ONE struct column, whose join/grouping
-    semantics treat NULL fields as equal (and since r11
-    `grouped_row_number` itself keys its internal joins on a struct,
-    so NULL groups survive either way).
+    ``metrics`` must be BIGINT-comparable columns (cast dates to epoch
+    days, money to integer cents first): all k metrics share one sort
+    key column, so their values must survive a lossless cast to long
+    with order preserved — ENFORCED at plan time
+    (`_validated_long_metrics` rejects fractional/date/string metrics
+    with the fix spelled out). Metrics should be non-NULL — NULLs rank
+    NULLS-FIRST (Spark ascending default), which matches Spark's own
+    ``ntile`` window but NOT a DuckDB oracle's NULLS-LAST default.
+    ``key`` must be unique per row — it is the ANSI tie-break that
+    makes every assignment deterministic. NULL group values are a
+    partition of their own, exactly as in the ANSI window (the kernel's
+    struct-keyed joins).
+
+    Returns one row per input row: ``group_by`` + ``key`` + ``carry``
+    + ``out_cols[i]`` (int) = the ntile bucket of ``metrics[i]``.
+
+    Scale shape: one explode (k× the KEY frame, still
+    dimension-grade), one range exchange + pid-partitioned window, one
+    ≤k-wide conditional pivot aggregate back to row grain. The input
+    should be materialized by the caller if its lineage is expensive —
+    the explode references it once, but the kernel fans the exploded
+    frame into two branches.
     """
+    if not metrics:
+        raise ValueError("grouped_multi_metric_ntiles needs at least one metric in metrics")
+    if n_buckets < 1:
+        raise ValueError(f"grouped_multi_metric_ntiles needs n_buckets >= 1, got {n_buckets}")
     if len(metrics) != len(out_cols):
         raise ValueError("metrics and out_cols must pair up")
     carry = carry or []
     longs = _validated_long_metrics(df, metrics)
-    # _mm_-prefixed internals, same collision-proofing as the global
-    # form.
+    # Internal names carry the _mm_ prefix so a caller whose key/carry
+    # columns are named "mid" or "v" can never collide into an
+    # ambiguous-reference AnalysisException.
     exploded = df.select(
         *group_by,
         key,
@@ -380,10 +350,9 @@ def grouped_multi_metric_ntiles(
             )
         ).alias("_mm"),
     ).select(*group_by, key, *carry, "_mm._mm_mid", "_mm._mm_v")
-    wrapped = exploded.withColumn("_mm_g", F.struct(*group_by, "_mm_mid"))
     ranked = grouped_row_number(
-        wrapped,
-        ["_mm_g"],
+        exploded,
+        [*group_by, "_mm_mid"],
         ["_mm_v", key],
         rn_col="_mm_rn",
         num_partitions=num_partitions,
@@ -410,57 +379,16 @@ def grouped_row_number(
     num_partitions: int | None = None,
     total_col: str | None = None,
 ) -> DataFrame:
-    """Exact per-group ``row_number`` that survives MEGA-groups.
+    """Exact ``row_number() OVER ([PARTITION BY group] ORDER BY ...)``
+    that survives MEGA-groups — one `_range_scan` of the count monoid
+    (``group_by=[]`` ranks the whole frame).
 
-    ``Window.partitionBy(group)`` is already scalable when every group
-    fits one task — but a per-language rank over a web corpus puts
-    billions of rows in 'en' and dies in that one task. Same
-    zipWithIndex trick, taken per group: range-partition on
-    (group, order) so each group occupies a contiguous RUN of
-    partitions, rank locally within (partition, group), and add
-    per-(group, partition) offsets — a frame bounded by
-    |groups| × numPartitions, windowed per group.
-
-    ``total_col``: also attach the group's total row count (joined on
-    the group key; AQE broadcasts it while groups are few).
-
-    NULL group values are a partition of their own, exactly as in the
-    ANSI window: the internal offset and totals joins key on ONE
-    struct of the group columns (struct join/grouping semantics treat
-    NULL fields as equal), so NULL-group rows rank instead of
-    silently dropping through a plain equi-join whose NULL keys never
-    match (the pre-r11 restriction, now lifted).
+    ``total_col``: also attach the group's total row count — callers
+    deriving percent_rank / cume_dist / ntile need it.
     """
-    n_parts = num_partitions or batch_width(df.sparkSession)
-    part = (
-        df.withColumn("_gr_g", F.struct(*group_by))
-        .repartitionByRange(n_parts, F.col("_gr_g"), *order_by)
-        .withColumn("_gr_pid", F.spark_partition_id())
+    return _range_scan(
+        df, group_by, order_by, [("count", None, rn_col, total_col)], num_partitions
     )
-    part = _persist_tracked(part)  # ONE shared range exchange (see module doc)
-    counts = part.groupBy("_gr_pid", "_gr_g").agg(
-        F.count(F.lit(1)).alias("_gr_c")
-    )
-    w_off = (
-        Window.partitionBy("_gr_g")
-        .orderBy("_gr_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        "_gr_pid",
-        "_gr_g",
-        F.coalesce(F.sum("_gr_c").over(w_off), F.lit(0)).alias("_gr_off"),
-    )
-    w = Window.partitionBy("_gr_pid", "_gr_g").orderBy(*order_by)
-    out = (
-        part.join(offs, ["_gr_pid", "_gr_g"])
-        .withColumn(rn_col, F.row_number().over(w) + F.col("_gr_off"))
-        .drop("_gr_pid", "_gr_off")
-    )
-    if total_col is not None:
-        totals = counts.groupBy("_gr_g").agg(F.sum("_gr_c").alias(total_col))
-        out = out.join(totals, ["_gr_g"])
-    return out.drop("_gr_g")
 
 
 def grouped_exact_ntile(
@@ -471,12 +399,14 @@ def grouped_exact_ntile(
     out_col: str,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact ANSI ``ntile(n) OVER (PARTITION BY group ORDER BY ...)``
-    for groups too large for one task — bit-identical to the windowed
-    oracle via the closed-form bucket over (per-group rn, per-group
-    total). NULL group values rank as their own partition
-    (`grouped_row_number`'s struct-keyed internals, ANSI
-    semantics)."""
+    """Exact ANSI ``ntile(n) OVER ([PARTITION BY group] ORDER BY ...)``
+    (``group_by=[]`` for a global ntile) for inputs too large for one
+    task — bit-identical to the windowed oracle via the closed-form
+    bucket over (rn, group total): bucket sizes differ by at most one,
+    the larger buckets first. NULL group values rank as their own
+    partition (ANSI semantics)."""
+    if n_buckets < 1:
+        raise ValueError(f"grouped_exact_ntile needs n_buckets >= 1, got {n_buckets}")
     ranked = grouped_row_number(
         df, group_by, order_by, rn_col="_gr_rn",
         num_partitions=num_partitions, total_col="_gr_n",
@@ -504,26 +434,25 @@ def grouped_percentile_cont(
     every DISTINCT input value, merged in one reducer per group — the
     classic §5 memory hazard on unbounded-cardinality columns at
     100 TB (tests/test_plans.py audits every exact-percentile site).
-    Here the heavy work is ONE range shuffle (`grouped_row_number`'s
-    layout: each group occupies a contiguous partition run); the
-    per-(partition, group) COUNTS then locate which partitions hold
-    each group's boundary ranks, and only THOSE slices are sorted and
-    ranked (≤ 2·|pcts| boundary partitions per group — the full
-    grouped rank's every-partition sort is skipped everywhere else);
-    a codegen filter keeps the ≤ 2·|pcts| boundary rows per group and
-    one hash aggregate interpolates. Mega-group safe: no task ever
-    holds more than one range partition's rows.
+    Here the heavy work is the kernel's ONE range shuffle
+    (`_range_slices`: each group occupies a contiguous partition run);
+    its per-(partition, group) counts and offsets then locate which
+    slices hold each group's boundary ranks, and only THOSE slices are
+    sorted and ranked (≤ 2·|pcts| slices per group — the full grouped
+    rank's every-partition sort is skipped everywhere else); a codegen
+    filter keeps the ≤ 2·|pcts| boundary rows per group and one hash
+    aggregate interpolates. Mega-group safe: no task ever holds more
+    than one range partition's rows.
 
     BROADCAST BOUND: many groups are not safe the way one mega-group
-    is. ``wanted``
-    (|groups| × ≤ 2·|pcts| rows), ``offs`` (one row per (partition,
-    group) slice) and ``totals`` (one row per group) are broadcast
-    back onto the partitioned frame by explicit hints, which ignore
+    is. The boundary slices (|groups| × ≤ 2·|pcts| rows, each with its
+    offset and group total) are broadcast back onto the partitioned
+    frame by an explicit hint, which ignores
     ``spark.sql.autoBroadcastJoinThreshold``; keep the group
-    cardinality low enough that each stays within that threshold
+    cardinality low enough that they stay within that threshold
     (default 10 MB). A high-cardinality ``group_by`` wants the full
-    `grouped_row_number` rank instead, whose offset joins carry no
-    hint and so fall back to a shuffle join.
+    `grouped_row_number` rank instead, whose grouped offset join is a
+    shuffled hash join.
 
     Semantics match ``percentile(value, p)`` / DuckDB
     ``quantile_cont``: NULL values are ignored (filtered before
@@ -547,80 +476,35 @@ def grouped_percentile_cont(
         raise ValueError("grouped_percentile_cont needs at least one fraction in pcts")
     if len(pcts) != len(out_cols):
         raise ValueError("pcts and out_cols must pair up")
-    n_parts = num_partitions or batch_width(df.sparkSession)
     order = [F.asc(value_col)] + list(tie_break or [])
-    # Range-partition once (same layout `grouped_row_number` uses: a
-    # group occupies a contiguous partition RUN), but never rank —
-    # let alone sort — the whole frame: the per-(partition, group)
-    # COUNTS locate which partitions hold each group's boundary
-    # ranks, and only THOSE partitions' group rows are sorted and
-    # rank-picked. At n pcts that is ≤ 2n boundary partitions per
-    # group out of num_partitions — the sort the full rank pays on
-    # every partition is skipped on all the rest.
-    part = (
-        df.where(F.col(value_col).isNotNull())
-        .withColumn("_gp_g", F.struct(*group_by))
-        .repartitionByRange(n_parts, F.col("_gp_g"), *order)
-        .withColumn("_gp_pid", F.spark_partition_id())
+    part, slices, keys = _range_slices(
+        df.where(F.col(value_col).isNotNull()),
+        group_by,
+        order,
+        [("count", None)],
+        num_partitions,
     )
-    part = _persist_tracked(part)  # ONE shared range exchange (module doc)
-    counts = part.groupBy("_gp_pid", "_gp_g").agg(
-        F.count(F.lit(1)).alias("_gp_c")
-    )
-    w_off = (
-        Window.partitionBy("_gp_g")
-        .orderBy("_gp_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        "_gp_pid",
-        "_gp_g",
-        F.coalesce(F.sum("_gp_c").over(w_off), F.lit(0)).alias("_gp_off"),
-        "_gp_c",
-    )
-    totals = counts.groupBy("_gp_g").agg(F.sum("_gp_c").alias("_gp_n"))
 
     def _pos(p: float) -> Column:
         return F.lit(1.0) + F.lit(p) * (F.col("_gp_n") - F.lit(1))
 
-    # Every boundary rank each group needs (floor+ceil per fraction),
-    # as a tiny (group, rank) frame.
-    tgt = totals.select(
-        "_gp_g",
-        "_gp_n",
-        F.explode(
-            F.array_distinct(
-                F.array(
-                    *[
-                        f(_pos(p)).cast("long")
-                        for p in pcts
-                        for f in (F.floor, F.ceil)
-                    ]
-                )
-            )
-        ).alias("_gp_rk"),
-    )
-    # Which (partition, group) slices hold a boundary rank — |groups|
-    # × ≤2·|pcts| rows, broadcast back onto the partitioned frame.
-    wanted = (
-        offs.join(tgt, "_gp_g")
-        .where(
-            (F.col("_gp_rk") > F.col("_gp_off"))
-            & (F.col("_gp_rk") <= F.col("_gp_off") + F.col("_gp_c"))
-        )
-        .select("_gp_pid", "_gp_g")
-        .distinct()
-    )
-    cand = part.join(F.broadcast(wanted), ["_gp_pid", "_gp_g"], "left_semi")
-    # Rank ONLY the candidate slices; the offset join restores the
+    # The slices holding a boundary rank (floor+ceil per fraction):
+    # |groups| × ≤2·|pcts| rows, broadcast back onto the layout.
+    ranks = F.array(*[f(_pos(p)).cast("long") for p in pcts for f in (F.floor, F.ceil)])
+    off = F.coalesce("_gp_off", F.lit(0))
+    hit = slices.select(
+        *keys,
+        F.col("_gr_o0").alias("_gp_off"),
+        F.col("_gr_s0").alias("_gp_c"),
+        F.col("_gr_t0").alias("_gp_n"),
+    ).where(F.exists(ranks, lambda r: (r > off) & (r <= off + F.col("_gp_c"))))
+    # Rank ONLY the boundary slices; the offset restores the
     # group-global rank, so picked values are identical to the full
     # grouped row_number's (same arithmetic, restricted to the rows
     # that can match a boundary rank).
-    w = Window.partitionBy("_gp_pid", "_gp_g").orderBy(*order)
-    ranked = (
-        cand.join(F.broadcast(offs.drop("_gp_c")), ["_gp_pid", "_gp_g"])
-        .withColumn("_gp_rn", F.row_number().over(w) + F.col("_gp_off"))
-        .join(F.broadcast(totals), "_gp_g")
+    w = Window.partitionBy(*keys).orderBy(*order)
+    ranked = part.join(F.broadcast(hit), keys).withColumn(
+        "_gp_rn", F.row_number().over(w) + off
     )
     keep = None
     for p in pcts:
@@ -658,46 +542,6 @@ def grouped_percentile_cont(
     return picked.select(*group_by, *outs)
 
 
-def global_prefix_sum(
-    df: DataFrame,
-    order_by: "list[Column | str]",
-    value_col: str,
-    out_col: str = "prefix_sum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact inclusive prefix sum of ``value_col`` over a global
-    ordering — running totals, sequence-packing assignment, CDF
-    construction — without a single-partition window.
-
-    Same shape as ``global_row_number`` with counts generalized to
-    sums: range-partition, per-partition running sum, plus each
-    partition's cumulative PRIOR total from a numPartitions-row
-    aggregate joined back as a broadcast.
-    """
-    n_parts = num_partitions or batch_width(df.sparkSession)
-    part = (
-        df.repartitionByRange(n_parts, *order_by)
-        .withColumn("_gr_pid", F.spark_partition_id())
-    )
-    part = _persist_tracked(part)  # ONE shared range exchange (see module doc)
-    sums = part.groupBy("_gr_pid").agg(F.sum(value_col).alias("_gr_s"))
-    w_off = Window.orderBy("_gr_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sums.select(
-        "_gr_pid",
-        F.coalesce(F.sum("_gr_s").over(w_off), F.lit(0)).alias("_gr_off"),
-    )
-    w = (
-        Window.partitionBy("_gr_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        part.join(F.broadcast(offs), "_gr_pid")
-        .withColumn(out_col, F.sum(value_col).over(w) + F.col("_gr_off"))
-        .drop("_gr_pid", "_gr_off")
-    )
-
-
 def global_running_max(
     df: DataFrame,
     order_by: "list[Column | str]",
@@ -707,41 +551,9 @@ def global_running_max(
 ) -> DataFrame:
     """Exact inclusive running MAX of ``value_col`` over a global
     ordering — watermark-frontier reconstruction, high-water-mark
-    audits — without a single-partition window.
-
-    Same shape as `global_prefix_sum` with the monoid swapped: max is
-    associative, so each partition's running max combines with the
-    greatest value of all PRIOR partitions (a numPartitions-row
-    aggregate joined back as a broadcast).
-    """
-    n_parts = num_partitions or batch_width(df.sparkSession)
-    part = (
-        df.repartitionByRange(n_parts, *order_by)
-        .withColumn("_gr_pid", F.spark_partition_id())
-    )
-    part = _persist_tracked(part)  # ONE shared range exchange (see module doc)
-    maxes = part.groupBy("_gr_pid").agg(F.max(value_col).alias("_gr_m"))
-    w_off = Window.orderBy("_gr_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = maxes.select(
-        "_gr_pid",
-        F.max("_gr_m").over(w_off).alias("_gr_off"),  # NULL for partition 0
-    )
-    w = (
-        Window.partitionBy("_gr_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        part.join(F.broadcast(offs), "_gr_pid")
-        .withColumn(
-            out_col,
-            F.greatest(
-                F.max(value_col).over(w),
-                F.coalesce(F.col("_gr_off"), F.max(value_col).over(w)),
-            ),
-        )
-        .drop("_gr_pid", "_gr_off")
-    )
+    audits — without a single-partition window: one `_range_scan` of
+    the max monoid."""
+    return _range_scan(df, [], order_by, [("max", value_col, out_col, None)], num_partitions)
 
 
 def global_prefix_sums(
@@ -751,39 +563,15 @@ def global_prefix_sums(
     out_cols: "list[str]",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """`global_prefix_sum` for SEVERAL columns in ONE range shuffle —
-    N chained single-column calls would each re-repartition by the
-    same keys (N shuffles of the same rows for no new ordering).
-    Joint-CDF builds (e.g. the two-sample KS statistic) need exactly
-    this: every column shares the one exchange, per-partition running
-    sums, and one broadcast offsets join."""
+    """Exact inclusive prefix sums of each of ``value_cols`` over a
+    global ordering — running totals, sequence-packing assignment,
+    joint-CDF builds such as the two-sample KS statistic — without a
+    single-partition window: one `_range_scan` of the sum monoid, so
+    every column shares the one range exchange (N chained one-column
+    scans would shuffle the same rows N times)."""
+    if not value_cols:
+        raise ValueError("global_prefix_sums needs at least one column in value_cols")
     if len(value_cols) != len(out_cols):
         raise ValueError("value_cols and out_cols must pair up")
-    n_parts = num_partitions or batch_width(df.sparkSession)
-    part = (
-        df.repartitionByRange(n_parts, *order_by)
-        .withColumn("_gr_pid", F.spark_partition_id())
-    )
-    part = _persist_tracked(part)  # ONE shared range exchange (see module doc)
-    sums = part.groupBy("_gr_pid").agg(
-        *[F.sum(c).alias(f"_gr_s_{i}") for i, c in enumerate(value_cols)]
-    )
-    w_off = Window.orderBy("_gr_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sums.select(
-        "_gr_pid",
-        *[
-            F.coalesce(F.sum(f"_gr_s_{i}").over(w_off), F.lit(0)).alias(
-                f"_gr_off_{i}"
-            )
-            for i in range(len(value_cols))
-        ],
-    )
-    w = (
-        Window.partitionBy("_gr_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = part.join(F.broadcast(offs), "_gr_pid")
-    for i, (vc, oc) in enumerate(zip(value_cols, out_cols)):
-        out = out.withColumn(oc, F.sum(vc).over(w) + F.col(f"_gr_off_{i}"))
-    return out.drop("_gr_pid", *[f"_gr_off_{i}" for i in range(len(value_cols))])
+    aggs = [("sum", v, o, None) for v, o in zip(value_cols, out_cols)]
+    return _range_scan(df, [], order_by, aggs, num_partitions)

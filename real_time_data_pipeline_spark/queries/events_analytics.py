@@ -1143,16 +1143,16 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`n_shared_users`) rather than forbidden.
 
     Scale shape: the timeline decile comes from the scalable
-    `exact_ntile` (range shuffle + pid windows — never a one-task
+    `grouped_exact_ntile` (range shuffle + pid windows — never a one-task
     global window over the fact table); summaries are one hash
     aggregate per grain; the train∩test user overlap is a two-sided
     distinct + inner join on uniform user ids.
     """
-    from real_time_data_pipeline_spark.operators.ranking import exact_ntile
+    from real_time_data_pipeline_spark.operators.ranking import grouped_exact_ntile
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    assigned = exact_ntile(
-        ev, 10, [F.asc("ts"), F.asc("event_id")], "dec"
+    assigned = grouped_exact_ntile(
+        ev, 10, [], [F.asc("ts"), F.asc("event_id")], "dec"
     ).select(
         "user_id",
         "ts",
@@ -1236,7 +1236,7 @@ def q_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     dies — with the p50/p90 rows selected by closed-form rank
     positions from two 1-row broadcasts.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     from real_time_data_pipeline_spark.operators.materialize import (
         persist_tracked,
@@ -1264,8 +1264,8 @@ def q_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("t_purchase") - F.unix_timestamp("t_signup")
         ).alias("sec"),
     )
-    ranked = global_row_number(
-        d, [F.asc("sec"), F.asc("user_id")], rn_col="rn", total_col="n"
+    ranked = grouped_row_number(
+        d, [], [F.asc("sec"), F.asc("user_id")], rn_col="rn", total_col="n"
     )
     # ONE aggregate over the ranked frame yields the converter count
     # (count == max rn == n) and both rank-picked quantiles (r15
@@ -1566,11 +1566,11 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: sessionization is two user-partitioned windows; the
     sweep's running sum over ALL endpoint events — the step that is a
-    one-task global window written naively — is `global_prefix_sum`
+    one-task global window written naively — is `global_prefix_sums`
     (range shuffle + pid windows + broadcast offsets), then one max
     aggregate. Nothing is collected.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sum
+    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sums
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1610,11 +1610,11 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t_end").alias("t"), F.lit(-1).alias("d"), "user_id", "sid"
         )
     )
-    running = global_prefix_sum(
+    running = global_prefix_sums(
         deltas,
         [F.asc("t"), F.asc("d"), F.asc("user_id"), F.asc("sid")],
-        "d",
-        out_col="live",
+        ["d"],
+        ["live"],
     )
     n_sess = sess.agg(F.count(F.lit(1)).alias("n_sessions"))
     peak = running.agg(F.max("live").cast("long").alias("max_concurrent"))

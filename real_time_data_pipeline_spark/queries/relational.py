@@ -1081,11 +1081,11 @@ def q_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pid-partitioned — no one-task funnel on a fact-sized input. (For
     an ordering with VALUE ties, derive rank/cume_dist from a peer-
     group min/max-of-rn aggregate joined back on the value key.)"""
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     cust = load_table(spark, sf_dir, "customer")
     order = [F.desc("c_acctbal"), F.asc("c_custkey")]
-    ranked = global_row_number(cust, order, rn_col="_rn", total_col="_n")
+    ranked = grouped_row_number(cust, [], order, rn_col="_rn", total_col="_n")
     rn, n = F.col("_rn"), F.col("_n")
     quot = F.expr("_n div 4")
     head = (n % 4) * (quot + 1)
@@ -1547,7 +1547,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     to segment counts — the classic value-segmentation matrix.
 
     Scale shape: one customer-keyed aggregate of orders, then three
-    SCALABLE exact ntiles (operators/ranking.exact_ntile: range
+    SCALABLE exact ntiles (operators/ranking.grouped_exact_ntile: range
     repartition + per-partition row_number + broadcast offsets — the
     zipWithIndex pattern) CHAINED over the frame, so each quartile is
     one range shuffle and there are no join-backs or driver
@@ -1557,7 +1557,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is a one-task funnel. Monetary stays in exact integer
     cents until the final division so the hash can never flap.
     """
-    from real_time_data_pipeline_spark.operators.ranking import exact_ntile
+    from real_time_data_pipeline_spark.operators.ranking import grouped_exact_ntile
 
     orders = load_table(spark, sf_dir, "orders")
     max_date = orders.agg(F.max("o_orderdate").alias("maxd"))
@@ -1577,7 +1577,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m_quartile": [F.desc("monetary_cents"), F.asc("custkey")],
     }
     for col, order in quartiles.items():
-        scored = exact_ntile(scored, 4, order, col)
+        scored = grouped_exact_ntile(scored, 4, [], order, col)
     return scored.groupBy("r_quartile", "f_quartile", "m_quartile").agg(
         F.count(F.lit(1)).alias("n_customers"),
         (F.sum("monetary_cents") / F.lit(100.0)).alias("total_monetary"),
@@ -1600,11 +1600,12 @@ def q_global_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bit-identical to ``row_number() OVER (ORDER BY ...)`` with no
     one-task sort; ranking a billion-row table costs one range
     shuffle."""
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     cust = load_table(spark, sf_dir, "customer")
-    ranked = global_row_number(
+    ranked = grouped_row_number(
         cust.select("c_custkey", "c_acctbal"),
+        [],
         [F.desc("c_acctbal"), F.asc("c_custkey")],
         rn_col="rank",
     )
@@ -1632,13 +1633,13 @@ def q_order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-value decile profile over the FACT table — the revenue
     concentration curve ("top decile carries X% of revenue"). A
     global ntile over a fact is exactly where the one-task window
-    dies at scale, so the deciles come from the scalable exact_ntile
+    dies at scale, so the deciles come from the scalable grouped_exact_ntile
     operator; the rollup keeps money in integer cents."""
-    from real_time_data_pipeline_spark.operators.ranking import exact_ntile
+    from real_time_data_pipeline_spark.operators.ranking import grouped_exact_ntile
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    scored = exact_ntile(
-        orders, 10, [F.desc("o_totalprice"), F.asc("o_orderkey")], "decile"
+    scored = grouped_exact_ntile(
+        orders, 10, [], [F.desc("o_totalprice"), F.asc("o_orderkey")], "decile"
     )
     return scored.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -1931,7 +1932,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation to DuckDB's quantile_cont, so the hash matches
     exactly.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -1943,8 +1944,8 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") < F.expr("(lo + hi) div 2")).alias("is_ref"),
     )
     ref = tagged.where("is_ref").select("value")
-    ranked = global_row_number(
-        ref, [F.asc("value")], rn_col="rn", total_col="n"
+    ranked = grouped_row_number(
+        ref, [], [F.asc("value")], rn_col="rn", total_col="n"
     )
     fracs = spark.createDataFrame(
         [(i, (i + 1) / 10.0) for i in range(9)], "idx int, q double"
@@ -2598,15 +2599,14 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     5/5/5, "at-risk big spenders" at 1/·/5).
 
     All three quintile assignments come from ONE range exchange via
-    `multi_metric_ntiles` (adopted r11 after the r10 measurement in
-    `scripts/rfm_single_exchange_experiment.py`: ~2.3× over the
-    chained three-pass `exact_ntile` form at sf0.1, bit-identical at
-    sf0.01 and sf0.1): the customer frame explodes into (metric_id,
-    value) rows — recency as epoch days so all metrics share a
-    lossless BIGINT sort key — then ONE global row_number over
-    (metric_id, value, custkey) yields all three rankings, since the
-    composite ordering sorts metric 0's rows entirely before metric
-    1's and the per-metric rank is rn − metric_id·n. The closed-form
+    `grouped_multi_metric_ntiles` with no group columns (adopted r11
+    after the r10 exchange-sharing measurement, README: ~2.3× over the
+    chained three-pass ntile form at sf0.1, bit-identical at sf0.01
+    and sf0.1): the customer frame explodes into (metric_id, value)
+    rows — recency as epoch days so all metrics share a lossless
+    BIGINT sort key — then ONE row_number per metric id over (value,
+    custkey), all from one range exchange, yields all three rankings
+    and each metric's row count. The closed-form
     ANSI bucket arithmetic gives each quintile, and a ≤3-wide
     conditional pivot restores customer grain. Bit-identical to ANSI
     `ntile(5) OVER (ORDER BY metric, custkey)` (the custkey tie-break
@@ -2615,7 +2615,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents.
     """
     from real_time_data_pipeline_spark.operators.ranking import (
-        multi_metric_ntiles,
+        grouped_multi_metric_ntiles,
     )
 
     orders = load_table(spark, sf_dir, "orders")
@@ -2631,7 +2631,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents).alias("monetary_cents"),
         )
     )
-    c = multi_metric_ntiles(
+    c = grouped_multi_metric_ntiles(
         c,
         5,
         [
@@ -2639,6 +2639,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_orders"),
             F.col("monetary_cents"),
         ],
+        [],
         "o_custkey",
         ["r_quintile", "f_quintile", "m_quintile"],
         carry=["monetary_cents"],

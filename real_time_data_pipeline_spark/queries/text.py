@@ -575,18 +575,18 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences (vs. greedy bin packing, which is inherently serial).
 
     The running token total comes from the scalable exact prefix sum
-    (operators/ranking.global_prefix_sum: range repartition +
+    (operators/ranking.global_prefix_sums: range repartition +
     per-partition running sums + broadcast offsets), so the global
     packing order costs one range shuffle and no stage ever windows
     more than one partition's rows — bit-identical to the ordered-
     window oracle at any scale.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sum
+    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", token_count_ws("text").alias("n_tokens"))
-    planned = global_prefix_sum(
-        toks, [F.asc("doc_id")], "n_tokens", out_col="_run"
+    planned = global_prefix_sums(
+        toks, [F.asc("doc_id")], ["n_tokens"], ["_run"]
     ).withColumn("pack_id", F.floor((F.col("_run") - 1) / 512).cast("long"))
     return planned.groupBy("pack_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1756,11 +1756,11 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     # rank EVERY vocabulary term scalably (a web-scale corpus has
     # billions of distinct tokens — no single-partition window)
-    ranked = global_row_number(freq, [F.desc("c"), F.asc("word")], rn_col="rnk")
+    ranked = grouped_row_number(freq, [], [F.desc("c"), F.asc("word")], rn_col="rnk")
     ln_c = F.log(F.col("c").cast("double"))
     ln_r = F.log(F.col("rnk").cast("double"))
     return ranked.agg(
@@ -2299,18 +2299,18 @@ def q_multimodal_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sequence_packing_plan` — bytes instead of tokens.
 
     Scale shape: the running byte offset is operators/ranking's
-    `global_prefix_sum` (range repartition + per-partition running sum
+    `global_prefix_sums` (range repartition + per-partition running sum
     + broadcast offsets) — bit-identical to the ANSI running-sum
     window the oracle uses, with no single-partition window — and the
     shard rollup is one hash aggregate on the shard id.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sum
+    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.length(F.encode(F.col("text"), "UTF-8")).cast("long").alias("n_bytes"),
     )
-    cum = global_prefix_sum(docs, [F.asc("doc_id")], "n_bytes", out_col="cum")
+    cum = global_prefix_sums(docs, [F.asc("doc_id")], ["n_bytes"], ["cum"])
     return (
         cum.withColumn(
             "shard_id",
@@ -2640,12 +2640,12 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     count desc, word asc.
 
     Scale shape: one word-count hash aggregate (vocab-sized, not
-    corpus-sized), then `global_row_number`'s range shuffle ranks the
+    corpus-sized), then `grouped_row_number`'s range shuffle ranks the
     vocabulary WITHOUT a single-partition window; coverage per k is a
     conditional sum against a 1-row broadcast total. The corpus text
     is scanned exactly once.
     """
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
     from real_time_data_pipeline_spark.operators.text import words
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2655,7 +2655,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    ranked = global_row_number(counts, [F.desc("n"), F.asc("word")], rn_col="rk")
+    ranked = grouped_row_number(counts, [], [F.desc("n"), F.asc("word")], rn_col="rk")
     tot = counts.agg(
         F.sum("n").alias("total_tokens"), F.count(F.lit(1)).alias("n_types")
     )

@@ -45,7 +45,6 @@ def main() -> None:
     from real_time_data_pipeline_spark.session import get_spark
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.operators.materialize import release_caches
-    from real_time_data_pipeline_spark.operators.ranking import release_rank_caches
 
     spark = get_spark(app_name="rtdp-plan-dump", master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,7 +82,6 @@ def main() -> None:
                     # bench.py): drain tracked caches before every
                     # timed run so it pays full computation instead of
                     # reading the previous run's InMemoryRelation.
-                    release_rank_caches(blocking=True)
                     release_caches(blocking=True)
                     t0 = time.perf_counter()
                     spec.fn(spark, SF_DIR).write.format("noop").mode(
@@ -97,7 +95,6 @@ def main() -> None:
             print(json.dumps({"query": name, "error": str(exc).split("\n", 1)[0][:300]}), flush=True)
         finally:
             spark.sparkContext.setJobDescription(None)
-            release_rank_caches()
             release_caches()
 
 

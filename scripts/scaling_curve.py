@@ -430,21 +430,10 @@ def main() -> None:
             # would be invisible. Shared ARTIFACTS stay warm by design
             # (production index-build semantics); per-request transient
             # caches do not survive requests in production either.
-            # Full drain of the tracked-persist registry between timed
-            # runs. One call suffices: release_rank_caches() IS this
-            # drain (it delegates to release_caches with
-            # materialized_only=False, operators/ranking.py), so the
-            # r15 commit that added a second materialized_only=True
-            # call beside it added a guaranteed no-op — the r15
-            # "tracked-persist leak" diagnosis was a MISATTRIBUTION
-            # (this loop always drained everything; post-hoc review
-            # caught it). The contaminated 10x+30x multi-query session
-            # (docs/bench/scaling_r15_x30.json) was a co-resident-
-            # session/box-load effect, dissolved by the real fixes:
-            # per-query isolation (fresh JVM), runs>=3, and letting
-            # early x30 runs settle. Everything registered is
-            # materialized after the noop write, so the drain cannot
-            # de-canonicalize a pending ranking persist here.
+            # One full drain of the tracked-persist registry between
+            # timed runs. Everything registered is materialized after
+            # the noop write, so the drain cannot de-canonicalize a
+            # pending ranking persist here.
             release_caches()
             runs = []
             for _ in range(args.runs):

@@ -632,7 +632,7 @@ def test_bloom_registry_query_receives_filter(spark, sf_dir):
 
 def test_multi_metric_ntiles_single_range_exchange(spark):
     """The k-metric ntile's whole point: ONE range exchange serves all
-    k rankings. Chained `exact_ntile` plans k DIFFERENT range
+    k rankings. Chained `grouped_exact_ntile` plans k DIFFERENT range
     partitionings (one per metric's sort keys); here every
     rangepartitioning occurrence in the plan must carry the SAME
     (_mm_mid, _mm_v, key) key set — the string repeats only because the
@@ -644,15 +644,16 @@ def test_multi_metric_ntiles_single_range_exchange(spark):
     from pyspark.sql import functions as F
 
     from real_time_data_pipeline_spark.operators.ranking import (
-        multi_metric_ntiles,
+        grouped_multi_metric_ntiles,
         release_rank_caches,
     )
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    out = multi_metric_ntiles(
+    out = grouped_multi_metric_ntiles(
         cust,
         5,
         [F.round(F.col("c_acctbal") * 100).cast("long"), F.col("c_nationkey")],
+        [],
         "c_custkey",
         ["bal_q", "nat_q"],
     )

@@ -765,12 +765,12 @@ def test_multi_metric_ntiles_equals_window_ntile(rows, n_buckets):
     """For ANY value distribution (duplicates, negatives, empty) and
     ANY bucket count, the single-exchange k-metric ntile equals k
     independent ANSI ntile windows — the invariant the closed-form
-    rank arithmetic (rn − metric_id·n over the composite ordering)
-    must hold everywhere, not just on curated boundary cases."""
+    bucket arithmetic over each metric's (rn, n) must hold
+    everywhere, not just on curated boundary cases."""
     from pyspark.sql import Window
 
     from real_time_data_pipeline_spark.operators.ranking import (
-        multi_metric_ntiles,
+        grouped_multi_metric_ntiles,
     )
 
     df = _spark.createDataFrame(
@@ -778,8 +778,8 @@ def test_multi_metric_ntiles_equals_window_ntile(rows, n_buckets):
     )
     got = {
         r.id: (r.qa, r.qb)
-        for r in multi_metric_ntiles(
-            df, n_buckets, [F.col("a"), F.col("b")], "id", ["qa", "qb"],
+        for r in grouped_multi_metric_ntiles(
+            df, n_buckets, [F.col("a"), F.col("b")], [], "id", ["qa", "qb"],
             num_partitions=4,
         ).collect()
     }

@@ -10,9 +10,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators.ranking import (
-    exact_ntile,
-    global_row_number,
+    global_prefix_sums,
     grouped_exact_ntile,
+    grouped_multi_metric_ntiles,
     grouped_row_number,
 )
 
@@ -45,7 +45,7 @@ def test_global_rank_and_ntile_match_window_forms(spark, rows):
 
     got_rn = {
         r.id: r.rn
-        for r in global_row_number(df, order, rn_col="rn", num_partitions=4).collect()
+        for r in grouped_row_number(df, [], order, rn_col="rn", num_partitions=4).collect()
     }
     want_rn = {
         r.id: r.rn
@@ -56,7 +56,7 @@ def test_global_rank_and_ntile_match_window_forms(spark, rows):
     for nb in (1, 3, 4, 10):
         got = {
             r.id: r.b
-            for r in exact_ntile(df, nb, order, "b", num_partitions=4).collect()
+            for r in grouped_exact_ntile(df, nb, [], order, "b", num_partitions=4).collect()
         }
         want = {
             r.id: r.b
@@ -99,8 +99,8 @@ def test_grouped_rank_and_ntile_match_window_forms(spark, rows):
 
 def test_global_row_number_total_col(spark):
     df = _frame(spark, [(3, "a"), (1, "b"), (2, "a")])
-    out = global_row_number(
-        df, [F.asc("v"), F.asc("id")], rn_col="rn", total_col="n"
+    out = grouped_row_number(
+        df, [], [F.asc("v"), F.asc("id")], rn_col="rn", total_col="n"
     )
     rows = out.collect()
     assert all(r.n == 3 for r in rows)
@@ -118,19 +118,89 @@ def test_grouped_total_col_is_per_group(spark):
 
 @pytest.mark.parametrize("rows", CASES, ids=range(len(CASES)))
 def test_global_prefix_sum_matches_window_form(spark, rows):
-    from real_time_data_pipeline_spark.operators.ranking import global_prefix_sum
-
     df = _frame(spark, rows)
     order = [F.asc("v"), F.asc("id")]
     got = {
         r.id: r.ps
-        for r in global_prefix_sum(
-            df, order, "v", out_col="ps", num_partitions=4
+        for r in global_prefix_sums(
+            df, order, ["v"], ["ps"], num_partitions=4
         ).collect()
     }
     w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     want = {r.id: r.ps for r in df.select("id", F.sum("v").over(w).alias("ps")).collect()}
     assert got == want
+
+
+def test_running_aggregates_skip_null_prefix_of_a_later_partition(spark):
+    """A later range partition that opens with NULL values must read
+    the prior partitions' running value, as the window form does —
+    not NULL. With 20 rows in 4 partitions, ids 10 and 11 open the
+    third partition with NULLs; the running sum there is 2+…+9 = 44."""
+    from real_time_data_pipeline_spark.operators.ranking import (
+        global_running_max,
+        release_rank_caches,
+    )
+
+    df = spark.range(0, 20).select(
+        "id", F.when(F.col("id").isin(0, 1, 10, 11), None).otherwise(F.col("id")).alias("v")
+    )
+    order = [F.asc("id")]
+    scanned = global_running_max(
+        global_prefix_sums(df, order, ["v"], ["ps"], num_partitions=4),
+        order, "v", out_col="rm", num_partitions=4,
+    )
+    got = {r.id: (r.ps, r.rm) for r in scanned.collect()}
+    release_rank_caches()
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {
+        r.id: (r.ps, r.rm)
+        for r in df.select(
+            "id", F.sum("v").over(w).alias("ps"), F.max("v").over(w).alias("rm")
+        ).collect()
+    }
+    assert got[10] == got[11] == (44, 9)
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "call, message",
+    [
+        pytest.param(
+            lambda: grouped_exact_ntile(None, 0, [], ["v"], "b"),
+            "grouped_exact_ntile.*n_buckets",
+            id="ntile_zero_buckets",
+        ),
+        pytest.param(
+            lambda: grouped_exact_ntile(None, 0, ["g"], ["v"], "b"),
+            "grouped_exact_ntile.*n_buckets",
+            id="grouped_ntile_zero_buckets",
+        ),
+        pytest.param(
+            lambda: grouped_multi_metric_ntiles(None, 0, [F.col("v")], [], "id", ["b"]),
+            "grouped_multi_metric_ntiles.*n_buckets",
+            id="multi_metric_zero_buckets",
+        ),
+        pytest.param(
+            lambda: grouped_multi_metric_ntiles(None, 4, [], ["g"], "id", []),
+            "grouped_multi_metric_ntiles.*metrics",
+            id="multi_metric_no_metrics",
+        ),
+        pytest.param(
+            lambda: global_prefix_sums(None, ["v"], [], []),
+            "global_prefix_sums.*value_cols",
+            id="prefix_sums_no_columns",
+        ),
+    ],
+)
+def test_degenerate_arguments_raise_named_errors_before_spark_work(spark, call, message):
+    """Degenerate arguments fail with a ValueError naming the helper
+    and the argument before any Spark work — the frame is None, so
+    touching it at all would raise something else — instead of a
+    DIVIDE_BY_ZERO from an executor after a full range shuffle, an
+    AnalysisException about a VOID struct field, or an assertion
+    inside Spark."""
+    with pytest.raises(ValueError, match=message):
+        call()
 
 
 def test_global_rank_consistency_at_scale(spark):
@@ -139,13 +209,14 @@ def test_global_rank_consistency_at_scale(spark):
     (the hazard persist() exists to prevent), ranks would duplicate
     or gap at partition seams. On a 600k-row fact with 32 partitions:
     ranks must be exactly 1..n with no duplicates."""
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
 
     li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
-    ranked = global_row_number(
+    ranked = grouped_row_number(
         li,
+        [],
         [F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")],
         rn_col="rn",
         num_partitions=32,
@@ -163,11 +234,6 @@ def test_global_rank_consistency_at_scale(spark):
 def test_global_prefix_sums_matches_chained_single_column(spark):
     """The one-shuffle multi-column prefix sum equals two chained
     single-column passes (and the ANSI running-sum window)."""
-    from real_time_data_pipeline_spark.operators.ranking import (
-        global_prefix_sum,
-        global_prefix_sums,
-    )
-
     df = spark.range(0, 500).select(
         (F.col("id") * 37 % 101).alias("k"),
         (F.col("id") % 7).alias("a"),
@@ -175,8 +241,8 @@ def test_global_prefix_sums_matches_chained_single_column(spark):
         "id",
     )
     multi = global_prefix_sums(df, [F.asc("k"), F.asc("id")], ["a", "b"], ["ra", "rb"])
-    single = global_prefix_sum(df, [F.asc("k"), F.asc("id")], "a", out_col="ra")
-    single = global_prefix_sum(single, [F.asc("k"), F.asc("id")], "b", out_col="rb")
+    single = global_prefix_sums(df, [F.asc("k"), F.asc("id")], ["a"], ["ra"])
+    single = global_prefix_sums(single, [F.asc("k"), F.asc("id")], ["b"], ["rb"])
     got = {(r.id, r.ra, r.rb) for r in multi.collect()}
     want = {(r.id, r.ra, r.rb) for r in single.collect()}
     assert got == want
@@ -194,9 +260,9 @@ def test_release_rank_caches_leaves_no_persistent_rdds(spark):
     Baseline-delta (not ==0) so an unrelated persisted frame elsewhere
     in the session can't break this test."""
     from real_time_data_pipeline_spark.operators.ranking import (
-        exact_ntile,
-        global_prefix_sum,
-        global_row_number,
+        global_prefix_sums,
+        grouped_exact_ntile,
+        grouped_row_number,
         release_rank_caches,
     )
 
@@ -205,9 +271,9 @@ def test_release_rank_caches_leaves_no_persistent_rdds(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") * 13 % 997).alias("k"), (F.col("id") % 5).alias("v"), "id"
     )
-    global_row_number(df, [F.asc("k"), F.asc("id")]).count()
-    exact_ntile(df, 4, [F.asc("k"), F.asc("id")], "q").count()
-    global_prefix_sum(df, [F.asc("k"), F.asc("id")], "v").count()
+    grouped_row_number(df, [], [F.asc("k"), F.asc("id")]).count()
+    grouped_exact_ntile(df, 4, [], [F.asc("k"), F.asc("id")], "q").count()
+    global_prefix_sums(df, [F.asc("k"), F.asc("id")], ["v"], ["prefix_sum"]).count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
     released = release_rank_caches(blocking=True)
     assert released >= 3
@@ -288,18 +354,18 @@ def test_multi_metric_ntiles_matches_chained_window_forms(spark, rows):
     """The single-exchange k-metric ntile equals k independent ANSI
     ``ntile(n) OVER (ORDER BY metric, id)`` windows on every boundary
     shape (empty, ties-only, rows < buckets, rows % buckets edge
-    remainders) — the same contract chained `exact_ntile` carries,
+    remainders) — the same contract chained `grouped_exact_ntile` carries,
     bought with ONE range shuffle instead of k."""
     from real_time_data_pipeline_spark.operators.ranking import (
-        multi_metric_ntiles,
+        grouped_multi_metric_ntiles,
     )
 
     df = _frame(spark, rows)
     metrics = [F.col("v"), -F.col("v"), F.col("v") % 3]
     got = {
         r.id: (r.b0, r.b1, r.b2)
-        for r in multi_metric_ntiles(
-            df, 4, metrics, "id", ["b0", "b1", "b2"], num_partitions=4
+        for r in grouped_multi_metric_ntiles(
+            df, 4, metrics, [], "id", ["b0", "b1", "b2"], num_partitions=4
         ).collect()
     }
     want_df = df
@@ -314,12 +380,12 @@ def test_multi_metric_ntiles_carry_and_arity(spark):
     """Carried columns ride through the explode/pivot unchanged; a
     metrics/out_cols arity mismatch is rejected."""
     from real_time_data_pipeline_spark.operators.ranking import (
-        multi_metric_ntiles,
+        grouped_multi_metric_ntiles,
     )
 
     df = _frame(spark, [(3, "a"), (1, "b"), (2, "c")])
-    out = multi_metric_ntiles(
-        df, 2, [F.col("v")], "id", ["bv"], carry=["g"], num_partitions=2
+    out = grouped_multi_metric_ntiles(
+        df, 2, [F.col("v")], [], "id", ["bv"], carry=["g"], num_partitions=2
     )
     assert {r.id: (r.g, r.bv) for r in out.collect()} == {
         0: ("a", 2),
@@ -327,7 +393,7 @@ def test_multi_metric_ntiles_carry_and_arity(spark):
         2: ("c", 1),
     }
     with pytest.raises(ValueError):
-        multi_metric_ntiles(df, 2, [F.col("v")], "id", ["a", "b"])
+        grouped_multi_metric_ntiles(df, 2, [F.col("v")], [], "id", ["a", "b"])
 
 
 def test_multi_metric_ntiles_rejects_lossy_metric_types(spark):
@@ -338,21 +404,20 @@ def test_multi_metric_ntiles_rejects_lossy_metric_types(spark):
     caller column literally named `mid` or `v` cannot collide."""
     from real_time_data_pipeline_spark.operators.ranking import (
         grouped_multi_metric_ntiles,
-        multi_metric_ntiles,
     )
 
     df = _frame(spark, [(3, "a"), (1, "b"), (2, "c")])
     dbl = df.withColumn("score", F.col("v") * 0.5)
     with pytest.raises(TypeError, match="pre-cast"):
-        multi_metric_ntiles(dbl, 2, [F.col("score")], "id", ["q"])
+        grouped_multi_metric_ntiles(dbl, 2, [F.col("score")], [], "id", ["q"])
     with pytest.raises(TypeError, match="pre-cast"):
         grouped_multi_metric_ntiles(
             dbl, 2, [F.col("score")], ["g"], "id", ["q"]
         )
     # collision-proofing: caller columns named mid / v both survive
     clash = df.withColumnRenamed("g", "mid")
-    out = multi_metric_ntiles(
-        clash, 2, [F.col("v")], "id", ["bv"], carry=["mid", "v"],
+    out = grouped_multi_metric_ntiles(
+        clash, 2, [F.col("v")], [], "id", ["bv"], carry=["mid", "v"],
         num_partitions=2,
     )
     assert {r.id: (r.mid, r.v, r.bv) for r in out.collect()} == {
@@ -364,15 +429,15 @@ def test_multi_metric_ntiles_rejects_lossy_metric_types(spark):
 
 def test_multi_metric_ntiles_matches_rfm_three_pass(spark):
     """End-to-end against the shipped RFM query's three chained
-    `exact_ntile` passes at sf0.001: the r11 adoption target must be
+    `grouped_exact_ntile` passes at sf0.001: the r11 adoption target must be
     bit-identical to the current registry form (the experiment proved
     sf0.01/sf0.1; this pins the contract in the suite)."""
     from real_time_data_pipeline_spark.operators.materialize import (
         reliable_materialize,
     )
     from real_time_data_pipeline_spark.operators.ranking import (
-        exact_ntile,
-        multi_metric_ntiles,
+        grouped_exact_ntile,
+        grouped_multi_metric_ntiles,
         release_rank_caches,
     )
 
@@ -386,14 +451,14 @@ def test_multi_metric_ntiles_matches_rfm_three_pass(spark):
         )
     )
     three = base
-    three = exact_ntile(three, 5, ["last_order", "o_custkey"], "r_q")
-    three = exact_ntile(three, 5, ["n_orders", "o_custkey"], "f_q")
-    three = exact_ntile(three, 5, ["monetary_cents", "o_custkey"], "m_q")
+    three = grouped_exact_ntile(three, 5, [], ["last_order", "o_custkey"], "r_q")
+    three = grouped_exact_ntile(three, 5, [], ["n_orders", "o_custkey"], "f_q")
+    three = grouped_exact_ntile(three, 5, [], ["monetary_cents", "o_custkey"], "m_q")
     want = {
         r.o_custkey: (r.r_q, r.f_q, r.m_q)
         for r in three.select("o_custkey", "r_q", "f_q", "m_q").collect()
     }
-    one = multi_metric_ntiles(
+    one = grouped_multi_metric_ntiles(
         base,
         5,
         [
@@ -401,6 +466,7 @@ def test_multi_metric_ntiles_matches_rfm_three_pass(spark):
             F.col("n_orders"),
             F.col("monetary_cents"),
         ],
+        [],
         "o_custkey",
         ["r_q", "f_q", "m_q"],
     )

@@ -205,14 +205,14 @@ def test_interleaved_registry_ranking_stays_exact(spark):
     THEN collect A — global row numbers must still be exact, i.e. the
     drain left A's canonicalizing range-exchange persist in place."""
     from real_time_data_pipeline_spark.operators import materialize
-    from real_time_data_pipeline_spark.operators.ranking import global_row_number
+    from real_time_data_pipeline_spark.operators.ranking import grouped_row_number
     from real_time_data_pipeline_spark.queries import registry
 
     materialize.release_caches()
     df = spark.range(0, 1000).selectExpr(
         "id", "CAST((id * 2654435761) % 1000003 AS BIGINT) AS v"
     )
-    ranked = global_row_number(df, ["v", "id"], rn_col="rn", num_partitions=8)
+    ranked = grouped_row_number(df, [], ["v", "id"], rn_col="rn", num_partitions=8)
     wrapped = registry._with_cache_hygiene(lambda s, d: None)
     wrapped(None, "unused")  # drain fires between A's build and A's collect
     rows = ranked.orderBy("rn").collect()
