@@ -9,17 +9,12 @@ Each query executes to a `noop` sink — full computation of every
 output column, zero driver-side collection — so timings reflect the
 distributed plan, not toPandas serialization.
 
-Measurement-methodology fix (r16, VERDICT r15 #1): tracked caches are
-now DRAINED between the untimed warm run and the timed run (and
-between canary repetitions). Previously `release_caches()` ran only
-in the `finally`, so a `persist_tracked`-bearing query's timed run
-read the warm run's InMemoryRelation instead of recomputing — the
-r15 checkpoint→persist swaps inflated their measured wins through
-exactly that hole. The drain is BLOCKING and sits outside the timed
-window, so the timed run pays full computation from the parquet
-inputs. Same queries, same scale, same noop sink, same JSON line;
-persist-family numbers are expected to read HIGHER than r15 — that
-is the honest level, not a regression (OPTIMIZATION_r16.md).
+Every query is timed by scripts/measure.py::noop_seconds: one untimed
+warm run, then tracked caches drained (blocking, outside the clock)
+before each timed run, so a `persist_tracked`-bearing query pays full
+computation from the parquet inputs instead of reading the warm run's
+InMemoryRelation (the r16 honest-clock fix; r15 per-query numbers for
+persist-bearing queries are cache-inflated, OPTIMIZATION_r16.md).
 """
 
 from __future__ import annotations
@@ -27,16 +22,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from scripts.measure import noop_seconds, script_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Drift canaries (VERDICT r7 #5): ten TPC-H queries whose PLANS have
 # been frozen since r5 — never edited, spanning scan-agg, multi-join,
-# outer-join, semi/anti-join, and top-k shapes. Their median-of-3
+# outer-join, semi/anti-join, and top-k shapes. Their median-of-5
 # timings land in a stable top-level "canaries" field so
 # round-over-round normalization (this box drifts ±15% between
 # rounds) is COMPUTED from identical work, not estimated from
@@ -81,19 +74,12 @@ FAMILY_CANARIES = (
 
 
 def main() -> None:
-    from real_time_data_pipeline_spark.session import get_spark
     from real_time_data_pipeline_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="rtdp-bench", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    if spark.sparkContext.getCheckpointDir() is None:
-        # Bench times the reliable-checkpoint path the cluster story
-        # relies on, not the localCheckpoint fast path.
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="rtdp-bench-ckpt-")
-        )
+    # script_session sets a reliable checkpoint dir: bench times the
+    # checkpoint path the cluster story relies on, not the
+    # localCheckpoint fast path.
+    spark = script_session("rtdp-bench")
 
     # Global warmup: absorb one-time JVM/codegen/scan initialization so
     # it doesn't land on whichever query happens to run first (each
@@ -112,51 +98,23 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — report, keep benching
             print(f"warmup {t} failed: {exc}", file=sys.stderr)
 
-    from real_time_data_pipeline_spark.operators.materialize import release_caches
-
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     canaries: dict[str, float] = {}
     family_canaries: dict[str, float] = {}
     for name, spec in REGISTRY.items():
+        canary = name in CANARIES or name in FAMILY_CANARIES
         try:
-            df = spec.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()  # warm (JIT, listing)
-            # Drain warm-run caches BEFORE the clock starts (r16
-            # methodology fix, header note): the timed run must pay
-            # full computation, not read the warm run's
-            # InMemoryRelation. Blocking, so block removal cannot
-            # bleed into the timed window. Safe here: the warm noop
-            # save materialized every tracked persist.
-            release_caches(blocking=True)
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            if name in CANARIES or name in FAMILY_CANARIES:
-                # Median-of-5 (VERDICT r12 #4; was median-of-3 through
-                # r12): the dedup adjudication showed 3 runs of a 0.2 s
-                # query leave ±20% round-to-round noise on the canary.
-                runs = [timings[name]]
-                for _ in range(4):
-                    # same drain between repetitions (r16): every rep
-                    # recomputes from the parquet inputs
-                    release_caches(blocking=True)
-                    t0 = time.perf_counter()
-                    spec.fn(spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(round(time.perf_counter() - t0, 3))
+            # Canaries take the median of 5 timed runs (VERDICT r12
+            # #4; was median-of-3 through r12): 3 runs of a 0.2 s
+            # query left ±20% round-to-round noise on the canary.
+            runs = noop_seconds(lambda: spec.fn(spark, SF_DIR), 5 if canary else 1)
+            timings[name] = runs[0]
+            if canary:
                 target = canaries if name in CANARIES else family_canaries
-                target[name] = sorted(runs)[2]  # median of 5
+                target[name] = sorted(runs)[2]
         except Exception as exc:  # noqa: BLE001 — report, keep benching
             errors[name] = str(exc).split("\n", 1)[0][:300]
-        finally:
-            # A 170-query session would otherwise accumulate one cached
-            # range shuffle per ranking-backed query (VERDICT r6 #1),
-            # and one tracked persist per persist_tracked-bearing
-            # execution (ADVICE r13 #4) — one tracked-registry drain
-            # frees both, outside the timed window.
-            release_caches()
 
     families: dict[str, float] = {}
     for name, sec in timings.items():
@@ -175,7 +133,7 @@ def main() -> None:
         "families": families,
         "canaries": canaries,
         "canary_total": round(sum(canaries.values()), 3),
-        # Per-family drift normalizers (median-of-3, frozen r11):
+        # Per-family drift normalizers (median-of-5, frozen r11):
         # divide a family's cross-round delta by its canary's ratio
         # before calling it a regression.
         "family_canaries": family_canaries,

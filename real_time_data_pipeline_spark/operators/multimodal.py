@@ -11,12 +11,21 @@ this container): `decode_stub` raises NotImplementedError unless
 `deterministic_fake=True`, in which case it produces a stable
 md5-seeded feature vector — making the Spark-side plumbing (schema,
 batching, partitioning) fully testable.
+
+The module registers itself for pickle-by-value: the `mapInPandas`
+batch functions call `decode_stub` / `resize_stub`, and pickled by
+reference those would make every Python worker import this package,
+which fails wherever the package is not on the worker's path (a
+driver that put the checkout on `sys.path` itself, a cluster without
+the package shipped).
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -48,6 +57,8 @@ FEATURE_SCHEMA = StructType(
 )
 
 FEATURE_DIM = 8
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def attach_payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:

@@ -100,12 +100,13 @@ from real_time_data_pipeline_spark.operators.materialize import (  # noqa: E402
 def release_rank_caches(blocking: bool = False) -> int:
     """Unpersist every tracked cache (the ranking helpers' shared
     range shuffles plus any other `persist_tracked` reuse caches);
-    returns how many were released.
+    returns how many were released. An alias of
+    `materialize.release_caches`, which new code calls directly; it
+    stays because perfbench/registry_corpus.py (and older tests)
+    import it.
 
-    Call after the final action on each ranking-derived result (the
-    bench harness calls it per query; services should call it per
-    request). Never call it while a ranking-derived frame is still
-    awaiting its first action — see the module doc's correctness note.
+    Never call it while a ranking-derived frame is still awaiting its
+    first action — see the module doc's correctness note.
     """
     return _release_caches(blocking=blocking)
 

@@ -14,8 +14,8 @@ shard-shared shingles deepen df ~Nx, so df reaches ~250 at 10x),
 run `directional_containment_pairs` across a cap sweep and record,
 per cap, against the UNCAPPED ground truth:
 
-* runtime (median of --runs, transient caches released between runs
-  — the r13 methodology);
+* runtime (median of --runs timed by scripts/measure.py::noop_seconds,
+  bench.py's loop: tracked caches drained before every timed run);
 * detected-pair recall |capped ∩ uncapped| / |uncapped| and the
   capped-only extras (capping shrinks post-cap denominators, so the
   capped arm can also ADD pairs — both directions reported);
@@ -28,7 +28,7 @@ per cap, against the UNCAPPED ground truth:
 
 Usage:
   python scripts/cap_tradeoff.py [--scales 10,30] [--runs 3] \
-      [--caps 16,50,200] [--out docs/bench/cap_tradeoff_r14.json]
+      [--caps 16,50,200] [--out docs/bench/latest/cap_tradeoff.json]
 
 The uncapped arm is the reference and always runs; at 30x it is
 ~900x the shard-0 shared-pair volume, so --skip-uncapped-at can
@@ -43,29 +43,9 @@ import json
 import os
 import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from scaling_curve import SF1_DIR, build_corpus  # noqa: E402
-
-
-def _timed_runs(fn, runs: int) -> list[float]:
-    from real_time_data_pipeline_spark.operators.materialize import (
-        release_caches,
-    )
-
-    out = []
-    # warm (JIT, listing) outside the timed window, like bench.py
-    fn().write.format("noop").mode("overwrite").save()
-    release_caches()
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        out.append(time.perf_counter() - t0)
-        release_caches()
-    return out
+from measure import LATEST_DIR, SCALE_HEAP, noop_seconds, script_session
+from scaling_curve import SF1_DIR, build_corpus
 
 
 def measure_scale(spark, sf_dir: str, caps: "list[int]", runs: int,
@@ -122,7 +102,7 @@ def measure_scale(spark, sf_dir: str, caps: "list[int]", runs: int,
     pair_sets: "dict[str, object]" = {}
     for cap in [*caps, None] if uncapped_reference else caps:
         key = "uncapped" if cap is None else f"cap_{cap}"
-        times = _timed_runs(lambda: run(cap), runs)
+        times = noop_seconds(lambda: run(cap), runs)
         pairs = persist_tracked(run(cap).select("src_id", "dst_id"))
         edges = (
             pairs.select(
@@ -139,7 +119,7 @@ def measure_scale(spark, sf_dir: str, caps: "list[int]", runs: int,
         arms[key] = {
             "cap": cap,
             "median_s": round(statistics.median(times), 3),
-            "runs_s": [round(t, 3) for t in times],
+            "runs_s": times,
             "n_pairs": pairs.count(),
             "n_dropped_docs": dropped.count(),
         }
@@ -184,20 +164,16 @@ def main() -> None:
         "expensive; the largest capped arm becomes the reference there "
         "(recorded in the JSON, never silent)",
     )
-    ap.add_argument("--out", default="docs/bench/cap_tradeoff_r14.json")
+    ap.add_argument("--out", default=os.path.join(LATEST_DIR, "cap_tradeoff.json"))
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
     caps = [int(c) for c in args.caps.split(",")]
     skip_unc = {int(s) for s in args.skip_uncapped_at.split(",") if s.strip()}
 
-    from real_time_data_pipeline_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="rtdp-cap-tradeoff",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("RTDP_SCALING_MEM", "16g"),
+    spark = script_session(
+        "rtdp-cap-tradeoff",
+        {
+            **SCALE_HEAP,
             # Local-mode artifact: the driver doubles as the broadcast
             # builder, and at 30x an AQE broadcast build of the
             # post-cap per-doc counts tops the 1g default result cap.
@@ -207,7 +183,6 @@ def main() -> None:
             "spark.driver.maxResultSize": "8g",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     results = {}
     # Resume-merge: a rerun for one scale (e.g. a bigger heap for 30x

@@ -156,6 +156,62 @@ def _spawn(cls: str, *args: str) -> subprocess.Popen:
     )
 
 
+def _replay(spark, frame, key_col: str, merge, name: str) -> str:
+    """Replay ``frame`` as a 3-file stream (split on pmod(key_col, 3))
+    through ``merge(batch, state, batch_id)`` in a foreachBatch sink,
+    across separate executor JVMs; returns the state path."""
+    from pyspark.sql import functions as F
+
+    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
+    from real_time_data_pipeline_spark.streaming.sources import file_stream
+
+    work = tempfile.mkdtemp(prefix=f"rtdp-smoke-{name}-")
+    state = f"{work}/state"
+    for i in range(3):
+        frame.where(F.pmod(key_col, F.lit(3)) == i).coalesce(1).write.parquet(
+            f"{work}/replay/b{i}.parquet"
+        )
+    # each write.parquet target is a DIRECTORY — glob down into them,
+    # or the file source sees zero files (no recursiveFileLookup)
+    stream = file_stream(spark, f"{work}/replay/*", frame.schema, max_files_per_trigger=1)
+    q = foreach_batch_sink(stream, lambda b, i: merge(b, state, i), f"{work}/ck", name)
+    q.processAllAvailable()
+    q.stop()
+    return state
+
+
+def _event_replay(spark, sentinel: bool = False):
+    """The events table as 4 time-ordered replay files, plus with
+    ``sentinel`` a far-future marker file last (see _streaming_smoke);
+    returns (work dir, a one-file-per-trigger stream over them)."""
+    import pandas as pd
+
+    from real_time_data_pipeline_spark.sources.tables import load_table
+    from real_time_data_pipeline_spark.streaming.sources import file_stream
+
+    work = tempfile.mkdtemp(prefix="rtdp-smoke-events-")
+    replay = f"{work}/replay"
+    os.makedirs(replay)
+    ev = load_table(spark, SF_DIR, "events").orderBy("ts")
+    pdf = ev.toPandas()
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    chunk = (len(pdf) + 3) // 4
+    for i in range(4):
+        part = pdf.iloc[i * chunk : (i + 1) * chunk]
+        if len(part):
+            part.to_parquet(os.path.join(replay, f"b{i}.parquet"), index=False)
+        time.sleep(0.05)  # distinct mtimes keep file-source order stable
+    if sentinel:
+        sent = pdf.iloc[:1].copy()
+        # keep datetime64[us]: the Timedelta arithmetic promotes to
+        # [ns], and a NANOS parquet column would break the
+        # fixed-schema stream
+        sent["ts"] = (pdf["ts"].max() + pd.Timedelta(days=365)).as_unit("us")
+        sent["event_type"] = "___sentinel"
+        sent.to_parquet(os.path.join(replay, "b9_sentinel.parquet"), index=False)
+    return work, file_stream(spark, replay, ev.schema, max_files_per_trigger=1)
+
+
 STREAM_GOLD_ORACLE = """
     SELECT
       time_bucket(INTERVAL '15 minutes', ts) AS window_start,
@@ -182,39 +238,17 @@ def _streaming_smoke(spark) -> str:
     flushes them), while the sentinel's own window can never close
     and is filtered by its marker event_type.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.pipeline import (
-        default_gold_aggs,
         gold_transform,
         silver_transform,
     )
     from real_time_data_pipeline_spark.streaming.sinks import parquet_append_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-stream-")
-    replay, out, ck = f"{work}/replay", f"{work}/gold", f"{work}/ck"
-    os.makedirs(replay)
-    ev = load_table(spark, SF_DIR, "events").orderBy("ts")
-    pdf = ev.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    chunk = (len(pdf) + 3) // 4
-    for i in range(4):
-        part = pdf.iloc[i * chunk : (i + 1) * chunk]
-        if len(part):
-            part.to_parquet(os.path.join(replay, f"b{i}.parquet"), index=False)
-        time.sleep(0.05)  # distinct mtimes keep file-source order stable
-    sent = pdf.iloc[:1].copy()
-    # keep datetime64[us]: the Timedelta arithmetic promotes to [ns],
-    # and a NANOS parquet column would break the fixed-schema stream
-    sent["ts"] = (pdf["ts"].max() + pd.Timedelta(days=365)).as_unit("us")
-    sent["event_type"] = "___sentinel"
-    sent.to_parquet(os.path.join(replay, "b9_sentinel.parquet"), index=False)
-
-    stream = file_stream(spark, replay, ev.schema, max_files_per_trigger=1)
+    work, stream = _event_replay(spark, sentinel=True)
+    out, ck = f"{work}/gold", f"{work}/ck"
     gold = gold_transform(
         silver_transform(stream, "ts"),
         "ts", "15 minutes", ["event_type"],
@@ -241,32 +275,20 @@ def _retention_ingest_smoke(spark) -> str:
     incremental state must reproduce the full-rescan answer exactly.
     """
     from real_time_data_pipeline_spark.queries import REGISTRY
-    from real_time_data_pipeline_spark.sources.tables import load_table
     from real_time_data_pipeline_spark.streaming.retention_ingest import (
         merge_retention_batch,
         retention_matrix,
     )
     from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-retention-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
-    ev = load_table(spark, SF_DIR, "events").orderBy("ts")
-    pdf = ev.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    chunk = (len(pdf) + 3) // 4
-    for i in range(4):
-        part = pdf.iloc[i * chunk : (i + 1) * chunk]
-        if len(part):
-            part.to_parquet(os.path.join(replay, f"b{i}.parquet"), index=False)
-        time.sleep(0.05)
-    stream = file_stream(spark, replay, ev.schema, max_files_per_trigger=1).select(
-        "user_id", "ts"
-    )
+    work, stream = _event_replay(spark)
+    state = f"{work}/state"
     q = foreach_batch_sink(
-        stream, lambda b, _: merge_retention_batch(b, state), ck, "retention_ingest"
+        stream.select("user_id", "ts"),
+        lambda b, _: merge_retention_batch(b, state),
+        f"{work}/ck",
+        "retention_ingest",
     )
     q.processAllAvailable()
     q.stop()
@@ -292,28 +314,10 @@ def _countmin_ingest_smoke(spark) -> str:
         merge_countmin_batch,
         heavy_hitters_estimate,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
     from tests.oracle import assert_matches
 
-    from pyspark.sql import functions as F
-
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-countmin-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    for i in range(3):
-        docs.where(F.pmod("doc_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    # each write.parquet target is a DIRECTORY — glob down into them,
-    # or the file source sees zero files (no recursiveFileLookup)
-    stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_countmin_batch(b, state, i), ck, "countmin_ingest"
-    )
-    q.processAllAvailable()
-    q.stop()
+    state = _replay(spark, docs, "doc_id", merge_countmin_batch, "countmin_ingest")
     batch = REGISTRY["text_countmin_heavy_hitters"].fn(spark, SF_DIR)
     probe = heavy_hitters_estimate(spark, state, batch.select("word"))
     got = (
@@ -343,25 +347,11 @@ def _hll_ingest_smoke(spark) -> str:
         hll_register_increments,
         read_registers,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-hll-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    for i in range(3):
-        docs.where(F.pmod("doc_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_hll_batch(b, state, i), ck, "hll_ingest"
-    )
-    q.processAllAvailable()
-    q.stop()
+    state = _replay(spark, docs, "doc_id", merge_hll_batch, "hll_ingest")
     got = {tuple(r) for r in read_registers(spark, state).collect()}
     want = {tuple(r) for r in hll_register_increments(docs).collect()}
     assert got == want and len(got) > 0, "register table != batch build"
@@ -393,25 +383,11 @@ def _histogram_ingest_smoke(spark) -> str:
         quantile_estimates_of,
         read_histogram,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-hist-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
-    for i in range(3):
-        ev.where(F.pmod("event_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", ev.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_histogram_batch(b, state, i), ck, "histogram_ingest"
-    )
-    q.processAllAvailable()
-    q.stop()
+    state = _replay(spark, ev, "event_id", merge_histogram_batch, "histogram_ingest")
     got = {tuple(r) for r in read_histogram(spark, state).collect()}
     want = {tuple(r) for r in histogram_increments(ev).collect()}
     assert got == want and len(got) > 0, "histogram cells != batch build"
@@ -463,26 +439,14 @@ def _ivf_ingest_smoke(spark) -> str:
         merge_ivf_batch,
         read_ivf_state,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-ivf-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
-    for i in range(3):
-        emb.where(F.pmod("vec_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", emb.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_ivf_batch(b, state, i, cents), ck, "ivf_ingest"
+    state = _replay(
+        spark, emb, "vec_id", lambda b, s, i: merge_ivf_batch(b, s, i, cents), "ivf_ingest"
     )
-    q.processAllAvailable()
-    q.stop()
 
     def rows(df):
         return {
@@ -493,7 +457,7 @@ def _ivf_ingest_smoke(spark) -> str:
     got = rows(read_ivf_state(spark, state))
     want = rows(ivf_state_build(emb, cents))
     assert got == want and len(got) > 0, "inverted lists != batch build"
-    one_shot = f"{work}/oneshot"
+    one_shot = f"{state}_oneshot"
     merge_ivf_batch(emb, one_shot, 0, cents)
     queries = emb.where(F.col("vec_id") < 5)
     got_p = {
@@ -606,13 +570,9 @@ def _ivf_compaction_loss_smoke(spark, live_workers, respawn) -> str:
     # Wait out the churn: confirmed loss of a pre-kill executor, then
     # a replacement registering on the freed cores (address SETS, not
     # counts — the artifact-loss phase's lesson).
-    deadline = time.time() + 60
-    while time.time() < deadline and not (before - _executor_addrs(spark)):
-        time.sleep(1.0)
+    _await(lambda: before - _executor_addrs(spark), 60)
     lost = bool(before - _executor_addrs(spark))
-    deadline = time.time() + 90
-    while time.time() < deadline and not (_executor_addrs(spark) - before):
-        time.sleep(1.0)
+    _await(lambda: _executor_addrs(spark) - before, 90)
     if "error" in outcome:
         # The kill aborted the staged write — the crash case. The
         # committed state must be untouched (the swap exposes old or
@@ -632,9 +592,7 @@ def _ivf_compaction_loss_smoke(spark, live_workers, respawn) -> str:
     assert committed_max_batch(spark, state) == 2
     assert merge_ivf_batch(chunks[0].limit(0), state, 5, cents) is True
 
-    deadline = time.time() + 90
-    while time.time() < deadline and _count_executors(spark) < 2:
-        time.sleep(1.0)
+    _await(lambda: _count_executors(spark) >= 2, 90)
     return (
         f"compaction under worker kill: {first} (executor loss "
         f"{'confirmed' if lost else 'raced past the write'}; "
@@ -664,23 +622,9 @@ def _corpusstats_ingest_smoke(spark) -> str:
         read_corpus_scalars,
         read_term_stats,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-cstats-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    for i in range(3):
-        docs.where(F.pmod("doc_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", docs.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_corpus_stats_batch(b, state, i), ck, "corpusstats_ingest"
-    )
-    q.processAllAvailable()
-    q.stop()
+    state = _replay(spark, docs, "doc_id", merge_corpus_stats_batch, "corpusstats_ingest")
 
     one = corpus_stats_build(docs)
     want_terms = {
@@ -743,12 +687,7 @@ def _graph_ingest_smoke(spark) -> str:
         merge_trade_flows_batch,
         trade_flows_build,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-graph-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     li = load_table(spark, SF_DIR, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -756,21 +695,13 @@ def _graph_ingest_smoke(spark) -> str:
     cust = load_table(spark, SF_DIR, "customer")
     supp = load_table(spark, SF_DIR, "supplier")
     nation = load_table(spark, SF_DIR, "nation")
-    for i in range(3):
-        li.where(F.pmod("l_orderkey", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(
-        spark, f"{replay}/*", li.schema, max_files_per_trigger=1
-    )
-    q = foreach_batch_sink(
-        stream,
-        lambda b, i: merge_trade_flows_batch(b, orders, cust, supp, nation, state, i),
-        ck,
+    state = _replay(
+        spark,
+        li,
+        "l_orderkey",
+        lambda b, s, i: merge_trade_flows_batch(b, orders, cust, supp, nation, s, i),
         "graph_ingest",
     )
-    q.processAllAvailable()
-    q.stop()
 
     one = trade_flows_build(li, orders, cust, supp, nation)
     want = {(r.src, r.dst, r.w_cents) for r in one.collect()}
@@ -886,27 +817,19 @@ def _ivfpq_ingest_smoke(spark) -> str:
         merge_ivfpq_batch,
         read_ivfpq_state,
     )
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
 
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-ivfpq-")
-    replay, state, ck = f"{work}/replay", f"{work}/state", f"{work}/ck"
-    os.makedirs(replay)
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
     books = pq_codebooks(emb, "vec_id", "embedding").localCheckpoint()
-    for i in range(3):
-        emb.where(F.pmod("vec_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", emb.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_ivfpq_batch(b, state, i, cents, books), ck, "ivfpq_ingest"
+    state = _replay(
+        spark,
+        emb,
+        "vec_id",
+        lambda b, s, i: merge_ivfpq_batch(b, s, i, cents, books),
+        "ivfpq_ingest",
     )
-    q.processAllAvailable()
-    q.stop()
 
     def rows(df):
         return {(r.cent_id, r.nid, tuple(r.codes)) for r in df.collect()}
@@ -914,7 +837,7 @@ def _ivfpq_ingest_smoke(spark) -> str:
     got = rows(read_ivfpq_state(spark, state))
     want = rows(ivfpq_state_build(emb, cents, books))
     assert got == want and len(got) > 0, "code state != batch build"
-    one_shot = f"{work}/oneshot"
+    one_shot = f"{state}_oneshot"
     merge_ivfpq_batch(emb, one_shot, 0, cents, books)
     queries = emb.where(F.col("vec_id") < 5)
     got_p = {
@@ -946,39 +869,34 @@ def _zonemap_ingest_smoke(spark) -> str:
     registry query's DuckDB-checked frame row for row."""
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.sources.tables import load_table
-    from real_time_data_pipeline_spark.streaming.sinks import foreach_batch_sink
-    from real_time_data_pipeline_spark.streaming.sources import file_stream
     from real_time_data_pipeline_spark.streaming.zonemap_ingest import (
         read_zonemap,
         merge_zonemap_batch,
     )
     from tests.oracle import assert_matches
 
-    from pyspark.sql import functions as F
-
-    work = tempfile.mkdtemp(prefix="rtdp-smoke-zm-")
-    replay, stats, users, ck = (
-        f"{work}/replay", f"{work}/stats", f"{work}/users", f"{work}/ck"
-    )
-    os.makedirs(replay)
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    for i in range(3):
-        ev.where(F.pmod("event_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            os.path.join(replay, f"b{i}.parquet")
-        )
-    stream = file_stream(spark, f"{replay}/*", ev.schema, max_files_per_trigger=1)
-    q = foreach_batch_sink(
-        stream, lambda b, i: merge_zonemap_batch(b, stats, users, i), ck, "zonemap_ingest"
+    state = _replay(
+        spark,
+        ev,
+        "event_id",
+        lambda b, s, i: merge_zonemap_batch(b, f"{s}/stats", f"{s}/users", i),
+        "zonemap_ingest",
     )
-    q.processAllAvailable()
-    q.stop()
-    derived = read_zonemap(spark, stats, users)
+    derived = read_zonemap(spark, f"{state}/stats", f"{state}/users")
     spec = REGISTRY["data_partition_zonemap"]
     assert_matches(derived, spec.oracle, SF_DIR)
     n = derived.count()
     return f"manifest from maintained state oracle-match ({n} partitions)"
+
+
+def _await(cond, timeout_s: float) -> None:
+    """Poll ``cond`` once a second until it holds or the time is up."""
+    deadline = time.time() + timeout_s
+    while time.time() < deadline and not cond():
+        time.sleep(1.0)
 
 
 def _count_executors(spark) -> int:
@@ -1032,12 +950,8 @@ def _artifact_loss_smoke(spark, workers: list, respawn) -> str:
         respawn()
         w.terminate()  # SIGTERM: worker shuts its executor down with it
         w.wait(timeout=30)
-        deadline = time.time() + 60
-        while time.time() < deadline and not (before - _executor_addrs(spark)):
-            time.sleep(1.0)
-        deadline = time.time() + 90
-        while time.time() < deadline and not (_executor_addrs(spark) - before):
-            time.sleep(1.0)
+        _await(lambda: before - _executor_addrs(spark), 60)
+        _await(lambda: _executor_addrs(spark) - before, 90)
         try:
             spec.fn(spark, SF_DIR).count()
         except Exception:
@@ -1045,9 +959,7 @@ def _artifact_loss_smoke(spark, workers: list, respawn) -> str:
             break
     clear_shared_artifacts()
     assert_matches(spec.fn(spark, SF_DIR), spec.oracle, SF_DIR)  # rebuild
-    deadline = time.time() + 90
-    while time.time() < deadline and _count_executors(spark) < 2:
-        time.sleep(1.0)
+    _await(lambda: _count_executors(spark) >= 2, 90)
     return (
         "post-loss rebuild oracle-match ("
         + (
@@ -1058,6 +970,38 @@ def _artifact_loss_smoke(spark, workers: list, respawn) -> str:
         )
         + ")"
     )
+
+
+def _query_smoke(spark, name: str) -> str:
+    """One registry query on the cluster, oracle-checked when it has
+    an oracle."""
+    from real_time_data_pipeline_spark.operators.materialize import release_caches
+    from real_time_data_pipeline_spark.queries import REGISTRY
+    from tests.oracle import assert_matches
+
+    spec = REGISTRY[name]
+    try:
+        df = spec.fn(spark, SF_DIR)
+        if spec.oracle is None:
+            assert df.count() >= 0
+            return "rows-only"
+        assert_matches(df, spec.oracle, SF_DIR)
+        return "oracle-match"
+    finally:
+        release_caches()
+
+
+def _report(spark, label: str, fn, timeout_s: float) -> int:
+    """Run one phase under its deadline and print its status line;
+    returns 1 when it failed, else 0."""
+    t0 = time.perf_counter()
+    try:
+        status = _run_phase(spark, label, fn, timeout_s)
+    except Exception as exc:  # noqa: BLE001 — report, then fail
+        print(f"  {label}: FAIL {str(exc).splitlines()[0][:200]}{_taint_note()}", flush=True)
+        return 1
+    print(f"  {label}: {status} ({time.perf_counter() - t0:.1f}s)", flush=True)
+    return 0
 
 
 def main() -> int:
@@ -1072,13 +1016,17 @@ def main() -> int:
             )
         )
         _wait_port(MASTER_PORT)
-        for _ in range(2):
+
+        def _spawn_worker():
             procs.append(
                 _spawn(
                     "org.apache.spark.deploy.worker.Worker", master_url,
                     "-c", "4", "-m", "4g", "--webui-port", "0",
                 )
             )
+
+        for _ in range(2):
+            _spawn_worker()
         from real_time_data_pipeline_spark.session import get_spark
 
         ckpt = tempfile.mkdtemp(prefix="rtdp-smoke-ckpt-")
@@ -1097,86 +1045,28 @@ def main() -> int:
         # phase below — that phase must run on localCheckpoint blocks.
         # prove we really are on separate executor JVMs (registration
         # is async: workers connect, then executors launch and phone home)
-        deadline = time.time() + 90
-        n_exec = 0
-        while time.time() < deadline:
-            n_exec = (
-                len(spark._jsc.sc().statusTracker().getExecutorInfos()) - 1
-            )  # minus driver
-            if n_exec >= 2:
-                break
-            time.sleep(1.0)
+        _await(lambda: _count_executors(spark) >= 2, 90)
+        n_exec = _count_executors(spark)
         print(f"executors (excl. driver): {n_exec}", flush=True)
         if n_exec < 2:
             print("FAIL: expected >=2 remote executors", flush=True)
             return 2
 
-        failures = 0
         # Artifact executor-loss phase FIRST: it needs the session
         # WITHOUT a reliable checkpoint dir (localCheckpoint blocks are
         # what die with an executor). The checkpoint dir is set right
         # after for every remaining phase.
-        t0 = time.perf_counter()
-
-        def _respawn_worker():
-            procs.append(
-                _spawn(
-                    "org.apache.spark.deploy.worker.Worker", master_url,
-                    "-c", "4", "-m", "4g", "--webui-port", "0",
-                )
-            )
-
-        try:
-            status = _run_phase(
-                spark,
-                "artifact_executor_loss",
-                lambda: _artifact_loss_smoke(spark, procs[1:3], _respawn_worker),
-                timeout_s=420,
-            )
-            print(
-                f"  artifact_executor_loss: {status} "
-                f"({time.perf_counter() - t0:.1f}s)",
-                flush=True,
-            )
-        except Exception as exc:  # noqa: BLE001 — report, then fail
-            failures += 1
-            print(
-                f"  artifact_executor_loss: FAIL {str(exc).splitlines()[0][:200]}{_taint_note()}",
-                flush=True,
-            )
+        failures = _report(
+            spark,
+            "artifact_executor_loss",
+            lambda: _artifact_loss_smoke(spark, procs[1:3], _spawn_worker),
+            timeout_s=420,
+        )
         spark.sparkContext.setCheckpointDir(ckpt)  # shared FS on one box
 
-        from real_time_data_pipeline_spark.queries import REGISTRY
-        from real_time_data_pipeline_spark.operators.ranking import (
-            release_rank_caches,
-        )
-        from tests.oracle import assert_matches
-
         names = os.environ.get("SPARK_GRAFT_SMOKE_QUERIES")
-        names = names.split(",") if names else DEFAULT_QUERIES
-        for name in names:
-            spec = REGISTRY[name]
-            t0 = time.perf_counter()
-            try:
-                df = spec.fn(spark, SF_DIR)
-                if spec.oracle is not None:
-                    assert_matches(df, spec.oracle, SF_DIR)
-                    status = "oracle-match"
-                else:
-                    assert df.count() >= 0
-                    status = "rows-only"
-                print(
-                    f"  {name}: {status} ({time.perf_counter() - t0:.1f}s)",
-                    flush=True,
-                )
-            except Exception as exc:  # noqa: BLE001 — report all, then fail
-                failures += 1
-                print(
-                    f"  {name}: FAIL {str(exc).splitlines()[0][:200]}{_taint_note()}",
-                    flush=True,
-                )
-            finally:
-                release_rank_caches()
+        for name in names.split(",") if names else DEFAULT_QUERIES:
+            failures += _report(spark, name, lambda n=name: _query_smoke(spark, n), 240)
         # Streaming-twin phases, each under the same hard deadline
         # (recorded healthy runs finish in 8-15 s; the 240 s budget is
         # pure hang insurance, not a perf bound).
@@ -1194,46 +1084,18 @@ def main() -> int:
             ("hybrid_rrf_ivf", _hybrid_ivf_smoke),
         ]
         for label, phase_fn in phases:
-            t0 = time.perf_counter()
-            try:
-                status = _run_phase(
-                    spark, label, lambda f=phase_fn: f(spark), timeout_s=240
-                )
-                print(
-                    f"  {label}: {status} "
-                    f"({time.perf_counter() - t0:.1f}s)",
-                    flush=True,
-                )
-            except Exception as exc:  # noqa: BLE001 — report, then fail
-                failures += 1
-                print(
-                    f"  {label}: FAIL {str(exc).splitlines()[0][:200]}{_taint_note()}",
-                    flush=True,
-                )
+            failures += _report(spark, label, lambda f=phase_fn: f(spark), 240)
         # Compaction-under-executor-loss LAST (it kills a worker;
         # running it after the twin phases keeps their results clean
         # even if re-registration is slow).
-        t0 = time.perf_counter()
-        try:
-            live = [p for p in procs[1:] if p.poll() is None]
-            status = _run_phase(
-                spark,
-                "ivf_compaction_executor_loss",
-                lambda: _ivf_compaction_loss_smoke(spark, live, _respawn_worker),
-                timeout_s=420,
-            )
-            print(
-                f"  ivf_compaction_executor_loss: {status} "
-                f"({time.perf_counter() - t0:.1f}s)",
-                flush=True,
-            )
-        except Exception as exc:  # noqa: BLE001 — report, then fail
-            failures += 1
-            print(
-                "  ivf_compaction_executor_loss: FAIL "
-                f"{str(exc).splitlines()[0][:200]}{_taint_note()}",
-                flush=True,
-            )
+        failures += _report(
+            spark,
+            "ivf_compaction_executor_loss",
+            lambda: _ivf_compaction_loss_smoke(
+                spark, [p for p in procs[1:] if p.poll() is None], _spawn_worker
+            ),
+            timeout_s=420,
+        )
         spark.stop()
         print(("OK" if failures == 0 else f"FAILURES: {failures}"), flush=True)
         return 1 if failures else 0

@@ -2,21 +2,21 @@
 """Capture physical plans and isolated timings for registry queries.
 
 For each named query (or --all), builds the frame exactly as bench.py
-does, writes `.explain("formatted")` to plans/<round>/<query>_<tag>.txt,
-and optionally times `noop`-sink executions (one untimed warm run, then
-N timed runs — the bench methodology, guide §1.4). Since r16, tracked
-caches are drained before EVERY timed run (bench.py's warm-run cache
-hole, VERDICT r15 #1), so medians measure full recomputation.
+does, writes `.explain("formatted")` to <plan dir>/<query>_<tag>.txt,
+and optionally times `noop`-sink executions with bench.py's loop
+(scripts/measure.py::noop_seconds: one untimed warm run, then N timed
+runs, each after a blocking drain of the tracked caches).
 
 Usage:
   python scripts/plan_dump.py --tag before --queries a b c --runs 3
   python scripts/plan_dump.py --tag before --all            # plans only
 
-Timings print as one JSON line per query on stdout; plans land under
-plans/$SPARK_GRAFT_ROUND (default r15). Uses get_spark() (AQE, sized
-shuffle partitions) — the bench session, not the vanilla driver-sim
-session, because these numbers guide optimization of bench.py's
-measurements.
+Timings print as one JSON line per query on stdout. Plans land under
+the committed plans/$SPARK_GRAFT_ROUND/ when that variable is set,
+else under the gitignored docs/bench/latest/plans/. Uses get_spark()
+(AQE, sized shuffle partitions) — the bench session, not the vanilla
+driver-sim session, because these numbers guide optimization of
+bench.py's measurements.
 """
 
 from __future__ import annotations
@@ -24,14 +24,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from measure import LATEST_DIR, REPO, noop_seconds, script_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "r15")
+ROUND = os.environ.get("SPARK_GRAFT_ROUND")
 
 
 def main() -> None:
@@ -42,20 +39,13 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=0, help="timed noop runs (0 = plan only)")
     args = ap.parse_args()
 
-    from real_time_data_pipeline_spark.session import get_spark
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.operators.materialize import release_caches
 
-    spark = get_spark(app_name="rtdp-plan-dump", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    if spark.sparkContext.getCheckpointDir() is None:
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="rtdp-plan-ckpt-"))
-
+    spark = script_session("rtdp-plan-dump")
     names = list(REGISTRY) if args.all else args.queries
-    plan_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", ROUND
+    plan_dir = (
+        os.path.join(REPO, "plans", ROUND) if ROUND else os.path.join(LATEST_DIR, "plans")
     )
     os.makedirs(plan_dir, exist_ok=True)
 
@@ -75,19 +65,7 @@ def main() -> None:
                 f.write(plan)
             rec: dict = {"query": name, "plan": path}
             if args.runs:
-                df.write.format("noop").mode("overwrite").save()  # warm
-                runs = []
-                for _ in range(args.runs):
-                    # r16 methodology fix (VERDICT r15 #1, same as
-                    # bench.py): drain tracked caches before every
-                    # timed run so it pays full computation instead of
-                    # reading the previous run's InMemoryRelation.
-                    release_caches(blocking=True)
-                    t0 = time.perf_counter()
-                    spec.fn(spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(round(time.perf_counter() - t0, 3))
+                runs = noop_seconds(lambda: spec.fn(spark, SF_DIR), args.runs)
                 rec["runs"] = runs
                 rec["median"] = sorted(runs)[len(runs) // 2]
             print(json.dumps(rec), flush=True)
@@ -95,7 +73,7 @@ def main() -> None:
             print(json.dumps({"query": name, "error": str(exc).split("\n", 1)[0][:300]}), flush=True)
         finally:
             spark.sparkContext.setJobDescription(None)
-            release_caches()
+            release_caches()  # the plan capture's own build registers persists
 
 
 if __name__ == "__main__":

@@ -21,7 +21,9 @@ Usage:
 --full widens to every TARGETS query and all four twins at 40
 batches (the r13-style full sweep); default stays within a few
 minutes of wall-clock. Component JSONs land beside the combined
-docs/bench/round_gate_<tag>.json; exit code 1 when any gate fails.
+docs/bench/round_gate_<tag>.json (without --tag: the gitignored
+docs/bench/latest/round_gate_latest.json); exit code 1 when any gate
+fails.
 """
 
 from __future__ import annotations
@@ -32,8 +34,9 @@ import os
 import subprocess
 import sys
 
+from measure import LATEST_DIR, REPO
+
 HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
 
 # The five most expensive registry queries by the r13 driver bench,
 # plus the tight-gated capped-regime containment arm (ADVICE r13 #2).
@@ -54,12 +57,13 @@ def _run(cmd: "list[str]") -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default="latest")
+    ap.add_argument("--tag")
     ap.add_argument("--full", action="store_true")
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
-    bench_dir = os.path.join(REPO, "docs", "bench")
+    bench_dir = os.path.join(REPO, "docs", "bench") if args.tag else LATEST_DIR
+    args.tag = args.tag or "latest"
     scaling_out = os.path.join(bench_dir, f"round_gate_scaling_{args.tag}.json")
     twin_out = os.path.join(bench_dir, f"round_gate_twin_{args.tag}.json")
     combined_out = os.path.join(bench_dir, f"round_gate_{args.tag}.json")

@@ -51,7 +51,14 @@ VERDICT r12 plan audit):
 
 Usage:
   python scripts/scaling_curve.py [--scales 1,3,10] [--runs 3] \
-      [--out docs/bench/scaling_r13.json]
+      [--out docs/bench/latest/scaling.json]
+
+Each point is the median of --runs timed noop runs from
+scripts/measure.py::noop_seconds (bench.py's loop: one untimed warm
+run absorbs artifact builds and JIT, and tracked caches are drained
+before every timed run, so a cached stage's corpus scan is measured on
+every run; shared ARTIFACTS stay warm — production index-build
+semantics).
 
 Corpus parquet lands under $RTDP_SCALING_DIR (default
 /tmp/rtdp_scaling) keyed by scale; regenerating is cheap and
@@ -66,9 +73,8 @@ import math
 import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from measure import LATEST_DIR, SCALE_HEAP, noop_seconds, script_session
 
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BASE_DIR = os.environ.get("RTDP_SCALING_DIR", "/tmp/rtdp_scaling")
@@ -357,7 +363,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="1,3,10")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--out", default="docs/bench/scaling_r13.json")
+    ap.add_argument("--out", default=os.path.join(LATEST_DIR, "scaling.json"))
     ap.add_argument(
         "--queries",
         default=None,
@@ -369,36 +375,22 @@ def main() -> None:
     scales = [int(s) for s in args.scales.split(",")]
     targets = dict(TARGETS)
     if args.queries:
-        if args.out == ap.get_default("out"):
-            # a subset run must not silently overwrite the committed
-            # full-registry artifact the README cites
-            ap.error("--queries requires an explicit --out")
         chosen = [q.strip() for q in args.queries.split(",") if q.strip()]
         unknown = [q for q in chosen if q not in targets]
         if unknown:
             ap.error(f"not in TARGETS: {unknown}")
         targets = {q: targets[q] for q in chosen}
 
-    from real_time_data_pipeline_spark.session import get_spark
     from real_time_data_pipeline_spark.queries import REGISTRY
     from real_time_data_pipeline_spark.queries.artifacts import (
         clear_shared_artifacts,
     )
-    from real_time_data_pipeline_spark.operators.materialize import (
-        release_caches,
-    )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # local-mode driver heap defaults to 1g — 32 MB per local[32] task
     # slot, far below the repo's documented executor posture (size
     # partitions to fit executor memory). The 10x corpus legitimately
     # needs a real heap; a cluster deployment always sets this.
-    spark = get_spark(
-        app_name="rtdp-scaling",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.driver.memory": os.environ.get("RTDP_SCALING_MEM", "16g")},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = script_session("rtdp-scaling", SCALE_HEAP)
 
     dirs: dict[int, str] = {}
     counts: dict[int, dict[str, int]] = {}
@@ -417,32 +409,9 @@ def main() -> None:
         fn = EXTRA_FNS[name] if name in EXTRA_FNS else REGISTRY[name].fn
         per_scale: dict[str, float] = {}
         for s in scales:
-            sf_dir = dirs[s]
-            # Warm run: artifact builds + JIT land here, outside the
-            # timed runs — the complexity claims are about steady-state
-            # per-query work, and bench.py times the same way.
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            # Transient persist_tracked caches are released BETWEEN
-            # timed runs (review finding): CacheManager dedups
-            # identical plans, so the warm run's cache would otherwise
-            # serve every timed run and the cached stage's corpus scan
-            # would never be measured — a superlinear regression there
-            # would be invisible. Shared ARTIFACTS stay warm by design
-            # (production index-build semantics); per-request transient
-            # caches do not survive requests in production either.
-            # One full drain of the tracked-persist registry between
-            # timed runs. Everything registered is materialized after
-            # the noop write, so the drain cannot de-canonicalize a
-            # pending ranking persist here.
-            release_caches()
-            runs = []
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-                release_caches()
-            per_scale[f"x{s}"] = round(sorted(runs)[len(runs) // 2], 3)
-            print(f"{name} x{s}: {per_scale[f'x{s}']}s (runs: {[round(r,3) for r in runs]})", file=sys.stderr)
+            runs = noop_seconds(lambda: fn(spark, dirs[s]), args.runs)
+            per_scale[f"x{s}"] = sorted(runs)[len(runs) // 2]
+            print(f"{name} x{s}: {per_scale[f'x{s}']}s (runs: {runs})", file=sys.stderr)
         lo, hi = scales[0], scales[-1]
         exponent = round(
             math.log(per_scale[f"x{hi}"] / per_scale[f"x{lo}"]) / math.log(hi / lo),

@@ -20,22 +20,16 @@ guard performs) — gated as mean(last 5) / mean(first 5) <= the stated
 bound. A read-modify-write design would instead grow linearly with
 state and blow the gate within the run.
 
-Twins measured (the two with the strongest per-batch claims, one per
-state shape):
+Twins measured: the ten in `twin_table` (`--twins` picks; the default
+four are ivf, corpus_stats, countmin and zonemap). Each entry names
+its input frame, its id column (the equal batches are id-rank slices)
+and its merge, probe and compaction calls.
 
-* IVF ingest (`streaming/ivf_ingest.merge_ivf_batch`) — row-grain
-  inverted lists, (cent_id, src_batch) dynamic-overwrite partitions.
-  Claimed: per-batch cost ~ batch size (+ O(partition dirs) listing).
-* Corpus-stats ingest (`streaming/corpusstats_ingest.
-  merge_corpus_stats_batch`) — additive term-grain deltas,
-  (bkt, src_batch) partitions. Same claim, additive algebra.
-
-Each twin is also probed mid-run: state-serving reads
-(`ivf_probe_state`, `bm25_probe_state`) are timed at 1/4, 1/2 and
-full state so the read path's growth is REPORTED alongside the write
-path's flatness (probes partition-prune but their probed lists grow
-with the corpus — linear-in-probed-lists is the documented read
-bound, not flatness; no gate, numbers only).
+Each twin is also probed mid-run: its state-serving read is timed at
+1/4, 1/2 and full state so the read path's growth is REPORTED
+alongside the write path's flatness (probes partition-prune but their
+probed lists grow with the corpus — linear-in-probed-lists is the
+documented read bound, not flatness; no gate, numbers only).
 
 A final compaction is timed and the FIRST post-compaction merge is
 re-measured: compaction must not make the next commit more expensive
@@ -43,7 +37,7 @@ re-measured: compaction must not make the next commit more expensive
 
 Usage:
   python scripts/twin_batch_cost.py [--batches 40] \
-      [--out docs/bench/twin_batch_cost_r13.json]
+      [--twins ivf,corpus_stats,...] [--out docs/bench/latest/twin_batch_cost.json]
 
 Gate bound: 2.0. The truly-flat ideal is ~1.0; small-second cells on
 a shared box swing +-30% (see the canary README section), and the
@@ -62,7 +56,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from measure import LATEST_DIR, SCALE_HEAP, script_session
 
 SCALING_DIR = os.environ.get("RTDP_SCALING_DIR", "/tmp/rtdp_scaling")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -179,259 +173,141 @@ def measure_twin(
         shutil.rmtree(warm, ignore_errors=True)
 
 
-def measure_ivf(spark, emb, n_batches: int) -> dict:
-    from real_time_data_pipeline_spark.operators.similarity import (
-        stride_centroids,
-    )
-    from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        compact_ivf_state,
-        ivf_probe_state,
-        merge_ivf_batch,
-    )
-
-    cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
-    probes = emb.orderBy("vec_id").limit(5).localCheckpoint()
-    return measure_twin(
-        "ivf_ingest",
-        emb,
-        "vec_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_ivf_batch(b, s, i, cents),
-        probe_fn=lambda s: ivf_probe_state(
-            spark, s, probes, cents, k=10, nprobe=4
-        ).collect(),
-        compact_fn=lambda s: compact_ivf_state(spark, s),
-    )
-
-
-def measure_corpus_stats(spark, docs, n_batches: int) -> dict:
+def twin_table(spark, src: str) -> dict:
+    """CLI name -> (reported twin, input frame, id column, parts), where
+    ``parts()`` builds the twin's ``(merge(batch, state, batch_id),
+    probe(state), compact(state))`` only when that twin is measured
+    (centroids, probe frames and dimension tables are built there).
+    Twins whose state is rewritten whole by every merge (the fixed-size
+    sketches, the keyed upserts) compact as an identity, which keeps
+    the post-compaction merge comparable across twins."""
+    from real_time_data_pipeline_spark.operators.similarity import stride_centroids
     from real_time_data_pipeline_spark.queries.text import BM25_QUERY_TERMS
-    from real_time_data_pipeline_spark.streaming.corpusstats_ingest import (
-        bm25_probe_state,
-        compact_corpus_stats,
-        merge_corpus_stats_batch,
+    from real_time_data_pipeline_spark.sources.tables import load_table
+    from real_time_data_pipeline_spark.streaming import (
+        bloom_ingest as bloom,
+        corpusstats_ingest as cstats,
+        countmin_ingest as cm,
+        dedup_ingest,
+        graph_ingest as graph,
+        histogram_ingest as hist,
+        hll_ingest as hll,
+        ivf_ingest as ivf,
+        retention_ingest as ret,
+        zonemap_ingest as zm,
     )
 
-    return measure_twin(
-        "corpusstats_ingest",
-        docs,
-        "doc_id",
-        n_batches,
-        merge_fn=merge_corpus_stats_batch,
-        probe_fn=lambda s: bm25_probe_state(
-            spark, s, docs, BM25_QUERY_TERMS
-        ).collect(),
-        compact_fn=lambda s: compact_corpus_stats(spark, s),
-    )
+    emb = load_table(spark, src, "embeddings")
+    docs = load_table(spark, src, "documents")
+    events = load_table(spark, src, "events")
+    no_compact = lambda s: None  # noqa: E731
 
-
-def measure_countmin(spark, docs, n_batches: int) -> dict:
-    """Marker-family representative (VERDICT r13 #5): the Count-Min
-    twin's state is FIXED-SIZE (depth x width cells, whole-frame
-    swap per merge), so per-batch cost should be the flattest of all
-    twins — the merge reads a constant-size cell table plus the
-    batch. Compaction is structurally a no-op (every merge already
-    rewrites the state as one compact frame); the timed compact_fn
-    is an identity to keep the post-compaction-merge point
-    comparable across twins."""
-    from real_time_data_pipeline_spark.streaming.countmin_ingest import (
-        heavy_hitters_estimate,
-        merge_countmin_batch,
-    )
-
-    probe_words = spark.createDataFrame(
-        [("the",), ("and",), ("data",), ("of",), ("to",)], "word string"
-    ).localCheckpoint()
-    return measure_twin(
-        "countmin_ingest",
-        docs,
-        "doc_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_countmin_batch(b, s, i),
-        probe_fn=lambda s: heavy_hitters_estimate(
-            spark, s, probe_words
-        ).collect(),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_zonemap(spark, events, n_batches: int) -> dict:
-    """The composite zone-map twin (VERDICT r13 #5): TWO state
-    tables with different merge algebras committed per batch — the
-    marker-protected partition-stats swap (fixed partition grain)
-    plus the keyed (part_date, user_id) support upsert whose state
-    grows with distinct users. The upsert is the interesting arm:
-    last-writer-wins re-reads the stored key table each merge, so
-    this measurement bounds how that read grows over 40 batches.
-    Both state tables are whole-frame swaps — no fragment
-    accumulation, compaction is an identity."""
-    from real_time_data_pipeline_spark.streaming.zonemap_ingest import (
-        merge_zonemap_batch,
-        read_zonemap,
-    )
-
-    return measure_twin(
-        "zonemap_ingest",
-        events,
-        "event_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_zonemap_batch(
-            b, os.path.join(s, "stats"), os.path.join(s, "users"), i
-        ),
-        probe_fn=lambda s: read_zonemap(
-            spark, os.path.join(s, "stats"), os.path.join(s, "users")
-        ).collect(),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_hll(spark, docs, n_batches: int) -> dict:
-    """Marker-family sketch twin (VERDICT r14 #3): FIXED-size state
-    (2^p register maxima + marker row), whole-frame swap per merge —
-    per-batch cost must be flat because the stored side of the
-    max-merge is bounded by the register count, never the corpus."""
-    from real_time_data_pipeline_spark.streaming.hll_ingest import (
-        hll_estimate,
-        merge_hll_batch,
-    )
-
-    return measure_twin(
-        "hll_ingest",
-        docs,
-        "doc_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_hll_batch(b, s, i),
-        probe_fn=lambda s: hll_estimate(spark, s),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_histogram(spark, events, n_batches: int) -> dict:
-    """Marker-family sketch twin: state bounded by the bucket
-    function's range (≤ ~17k cells for all positive doubles), additive
-    sum-merge, whole-frame swap. Probe = the quantile serve path."""
-    from real_time_data_pipeline_spark.streaming.histogram_ingest import (
-        merge_histogram_batch,
-        quantile_estimates_of,
-        read_histogram,
-    )
-
-    return measure_twin(
-        "histogram_ingest",
-        events,
-        "event_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_histogram_batch(b, s, i),
-        probe_fn=lambda s: quantile_estimates_of(
-            read_histogram(spark, s), [0.5, 0.95, 0.99]
-        ).collect(),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_bloom(spark, docs, n_batches: int) -> dict:
-    """Marker-family sketch twin: the lit-position set union. State is
-    bounded by the filter's bit count (positions saturate, never
-    corpus-grain), so the stored side of the distinct-union stays
-    bounded; the per-batch cost is dominated by the batch's own
-    shingling. Probe = a state read of the committed positions."""
-    from real_time_data_pipeline_spark.streaming.bloom_ingest import (
-        merge_bloom_batch,
-        read_bloom,
-    )
-
-    return measure_twin(
-        "bloom_ingest",
-        docs,
-        "doc_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_bloom_batch(b, s, i),
-        probe_fn=lambda s: read_bloom(spark, s).count(),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_retention(spark, events, n_batches: int) -> dict:
-    """Keyed-upsert twin, the zonemap users arm's algebra on TWO
-    tables: first_seen min-merge pulls only the batch's own users
-    (left_semi — merge frame stays batch-sized) and activity is a
-    keyed idempotent upsert. Both state tables are DIMENSION-grain
-    (users; user×week), so the whole-table swap the unpartitioned
-    upsert performs is bounded by the user population, not the event
-    volume — the claim this measurement prices. Probe = the cohort
-    retention-matrix serve path."""
-    from real_time_data_pipeline_spark.streaming.retention_ingest import (
-        merge_retention_batch,
-        retention_matrix,
-    )
-
-    return measure_twin(
-        "retention_ingest",
-        events.select("event_id", "user_id", "ts"),
-        "event_id",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_retention_batch(
-            b.select("user_id", "ts"), s
-        ),
-        probe_fn=lambda s: retention_matrix(spark, s).collect(),
-        compact_fn=lambda s: None,
-    )
-
-
-def measure_dedup(spark, docs, n_batches: int) -> dict:
-    """The incremental-dedup ingest twin. Its documented claim is
-    DIFFERENT from the sketch/index twins' flatness: per-batch cost is
-    O(touched-bucket STATE), never O(corpus-independent) — probes and
-    keyed upserts read/rewrite the bucket partitions the batch's keys
-    map to, and each bucket grows with the accepted corpus. At this
-    measurement's batch:bucket ratio (corpus/n_batches docs × ~9 band
-    keys over DEFAULT_BUCKETS=64) every batch touches ALL buckets
-    (expected touched = B·(1−e^(−keys/B)) ≈ B), so the honest
-    expectation is a LINEAR series, cost_k ≈ fixed + slope·k — the
-    2.0 flatness gate is the wrong gate and is replaced by the linear
-    annotation below. The production levers the module doc names:
-    n_buckets in the thousands (a real micro-batch touches a small
-    fraction) and micro-batches that are seconds of data, not
-    corpus/40. The row reports the measured series plus a
-    least-squares slope so a super-linear regression (quadratic
-    probe, full-corpus re-read per batch) still has a number to show
-    against."""
-    from real_time_data_pipeline_spark.streaming.dedup_ingest import (
-        ingest_batch,
-    )
-
-    # Validate BEFORE the expensive measurement: the first-half fit
-    # needs a fit window disjoint from the gated last-5 tail (and
-    # n == 1 would divide by zero in sxx).
-    if n_batches < 10:
-        raise SystemExit(
-            f"dedup twin: {n_batches} batches < 10 — the super-linearity "
-            "gate fits on the first half and judges the last 5, which "
-            "needs at least 10 points"
+    def ivf_parts():
+        # row-grain inverted lists in (cent_id, src_batch) partitions:
+        # per-batch cost ~ batch size (+ the partition-dir listing)
+        cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
+        probes = emb.orderBy("vec_id").limit(5).localCheckpoint()
+        return (
+            lambda b, s, i: ivf.merge_ivf_batch(b, s, i, cents),
+            lambda s: ivf.ivf_probe_state(spark, s, probes, cents, k=10, nprobe=4).collect(),
+            lambda s: ivf.compact_ivf_state(spark, s),
         )
 
-    out = measure_twin(
-        "dedup_ingest",
-        docs.select("doc_id", "text"),
-        "doc_id",
-        n_batches,
-        merge_fn=lambda b, s, i: ingest_batch(
-            b, "doc_id", "text", os.path.join(s, "corpus"), os.path.join(s, "store")
-        ),
-        probe_fn=lambda s: spark.read.parquet(os.path.join(s, "corpus")).count(),
-        compact_fn=lambda s: None,
-    )
+    def countmin_parts():
+        # fixed-size depth x width cell table: the flattest twin
+        words = spark.createDataFrame(
+            [("the",), ("and",), ("data",), ("of",), ("to",)], "word string"
+        ).localCheckpoint()
+        return (
+            cm.merge_countmin_batch,
+            lambda s: cm.heavy_hitters_estimate(spark, s, words).collect(),
+            no_compact,
+        )
+
+    def graph_parts():
+        # additive exact-cents edges at (bkt, src_batch) grain; the
+        # post-compaction batch's shifted order keys miss the dimension
+        # tables, so that merge lands an empty delta after the same join
+        dims = [load_table(spark, src, t) for t in ("orders", "customer", "supplier", "nation")]
+        return (
+            lambda b, s, i: graph.merge_trade_flows_batch(b, *dims, s, i),
+            lambda s: graph.read_trade_flows(spark, s).collect(),
+            lambda s: graph.compact_trade_flows(spark, s),
+        )
+
+    return {
+        "ivf": ("ivf_ingest", emb, "vec_id", ivf_parts),
+        # additive term-grain deltas in (bkt, src_batch) partitions
+        "corpus_stats": ("corpusstats_ingest", docs, "doc_id", lambda: (
+            cstats.merge_corpus_stats_batch,
+            lambda s: cstats.bm25_probe_state(spark, s, docs, BM25_QUERY_TERMS).collect(),
+            lambda s: cstats.compact_corpus_stats(spark, s),
+        )),
+        "countmin": ("countmin_ingest", docs, "doc_id", countmin_parts),
+        # two tables per batch: the marker-protected partition-stats
+        # swap and the keyed (part_date, user_id) upsert, whose stored
+        # side grows with distinct users
+        "zonemap": ("zonemap_ingest", events, "event_id", lambda: (
+            lambda b, s, i: zm.merge_zonemap_batch(
+                b, os.path.join(s, "stats"), os.path.join(s, "users"), i
+            ),
+            lambda s: zm.read_zonemap(
+                spark, os.path.join(s, "stats"), os.path.join(s, "users")
+            ).collect(),
+            no_compact,
+        )),
+        # 2^p register maxima: bounded state, never corpus-grain
+        "hll": ("hll_ingest", docs, "doc_id", lambda: (
+            hll.merge_hll_batch, lambda s: hll.hll_estimate(spark, s), no_compact,
+        )),
+        # additive cells bounded by the bucket function's range
+        "histogram": ("histogram_ingest", events, "event_id", lambda: (
+            hist.merge_histogram_batch,
+            lambda s: hist.quantile_estimates_of(
+                hist.read_histogram(spark, s), [0.5, 0.95, 0.99]
+            ).collect(),
+            no_compact,
+        )),
+        # lit-position set union bounded by the filter's bit count
+        "bloom": ("bloom_ingest", docs, "doc_id", lambda: (
+            bloom.merge_bloom_batch, lambda s: bloom.read_bloom(spark, s).count(), no_compact,
+        )),
+        # keyed upserts on user-grain tables: the whole-table swap is
+        # bounded by the user population, not the event volume
+        "retention": ("retention_ingest", events.select("event_id", "user_id", "ts"), "event_id", lambda: (
+            lambda b, s, i: ret.merge_retention_batch(b.select("user_id", "ts"), s),
+            lambda s: ret.retention_matrix(spark, s).collect(),
+            no_compact,
+        )),
+        # state-linear by design (see _linear_fit_gate)
+        "dedup": ("dedup_ingest", docs.select("doc_id", "text"), "doc_id", lambda: (
+            lambda b, s, i: dedup_ingest.ingest_batch(
+                b, "doc_id", "text", os.path.join(s, "corpus"), os.path.join(s, "store")
+            ),
+            lambda s: spark.read.parquet(os.path.join(s, "corpus")).count(),
+            no_compact,
+        )),
+        "graph": ("graph_ingest", load_table(spark, src, "lineitem").select(
+            "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+        ), "l_orderkey", graph_parts),
+    }
+
+
+def _linear_fit_gate(out: dict) -> None:
+    """The dedup twin's gate. Its claim differs from the other twins'
+    flatness: per-batch cost is O(touched-bucket STATE) — probes and
+    keyed upserts rewrite the bucket partitions the batch's keys map
+    to, and each bucket grows with the accepted corpus. At this
+    measurement's batch:bucket ratio every batch touches all 64
+    buckets, so the honest expectation is a LINEAR series and the 2.0
+    flatness gate is replaced: mean(last 5) must stay within 2x of a
+    line fitted to the FIRST HALF only. Fitting the full series was
+    circular (the gated tail inflated its own fit, so a quadratic
+    full-corpus re-read passed at ~1.15x); blind to the tail,
+    t_k = c*k^2 over 40 batches predicts ~646c at the tail midpoint
+    against an actual ~1369c, and fails."""
     ts = out["per_batch_s"]
     n = len(ts)
-    # Fit the line on the FIRST HALF ONLY and extrapolate to the
-    # last-5 window. Fitting on the full series (the r15 original)
-    # was CIRCULAR: the gated tail inflated its own fit, so any
-    # polynomial super-linear regression passed — a quadratic
-    # full-corpus re-read read mean(last5) ~ 1.15x its own fit's
-    # prediction, far inside the 2x allowance (r15 review). With the
-    # fit blind to the tail, t_k = c*k^2 over 40 batches predicts
-    # ~646c at the tail midpoint vs an actual ~1369c mean — over the
-    # 2x allowance, gate fails, which is the point.
     half = ts[: n // 2]
     m = len(half)
     xm, ym = (m - 1) / 2.0, sum(half) / m
@@ -452,51 +328,12 @@ def measure_dedup(spark, docs, n_batches: int) -> dict:
         "mean(last5) <= 2x first-half-linear-fit extrapolation "
         "(state-linear twin; fit blind to the gated tail)"
     )
-    return out
-
-
-def measure_graph_flows(spark, src: str, n_batches: int) -> dict:
-    """Graph-family edge-list twin (r15): additive exact-cents merge
-    into (bkt, src_batch) partitions at EDGE grain — per-batch cost
-    is the batch-sized star join collapsing to ≤|V|² delta rows
-    before the write, so the series must be flat like the other
-    additive twins (the state side of the merge is never read).
-    Probe = the maintained edge-list read the PageRank serve path
-    starts from. The post-compaction merge's id-shifted batch
-    join-misses the dimension tables by construction (orphan order
-    keys) — the timed work is the same batch-sized star join, with an
-    empty delta landing."""
-    from real_time_data_pipeline_spark.sources.tables import load_table
-    from real_time_data_pipeline_spark.streaming.graph_ingest import (
-        compact_trade_flows,
-        merge_trade_flows_batch,
-        read_trade_flows,
-    )
-
-    li = load_table(spark, src, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = load_table(spark, src, "orders")
-    cust = load_table(spark, src, "customer")
-    supp = load_table(spark, src, "supplier")
-    nation = load_table(spark, src, "nation")
-    return measure_twin(
-        "graph_ingest",
-        li,
-        "l_orderkey",
-        n_batches,
-        merge_fn=lambda b, s, i: merge_trade_flows_batch(
-            b, orders, cust, supp, nation, s, i
-        ),
-        probe_fn=lambda s: read_trade_flows(spark, s).collect(),
-        compact_fn=lambda s: compact_trade_flows(spark, s),
-    )
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=40)
-    ap.add_argument("--out", default="docs/bench/twin_batch_cost_r13.json")
+    ap.add_argument("--out", default=os.path.join(LATEST_DIR, "twin_batch_cost.json"))
     ap.add_argument(
         "--twins",
         default="ivf,corpus_stats,countmin,zonemap",
@@ -505,33 +342,15 @@ def main() -> None:
     args = ap.parse_args()
     if args.batches < 10:
         # first5/last5 must not overlap or the gate is vacuously 1.0,
-        # and the quarter-state probe needs n//4 >= 1
+        # the quarter-state probe needs n//4 >= 1, and the dedup fit
+        # window must stay disjoint from the gated last 5
         ap.error("--batches must be >= 10")
 
-    from real_time_data_pipeline_spark.session import get_spark
-    from real_time_data_pipeline_spark.sources.tables import load_table
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Same driver-heap posture as scaling_curve.py: the 1g local-mode
-    # default OOM'd the r15 dedup-twin run at batch 37 of 40 (the
-    # ingest body localCheckpoints per batch; in a session with no
-    # checkpoint dir those blocks pin the driver-side block manager).
-    spark = get_spark(
-        app_name="rtdp-twin-cost",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("RTDP_SCALING_MEM", "16g")
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # A reliable checkpoint dir so reliable_materialize inside twin
-    # bodies (dedup ingest) writes cleanable checkpoint files instead
-    # of pinning executor blocks for the session lifetime — the
-    # production posture every cluster entry point sets anyway.
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="twin_cost_ckpt_")
-        )
+    # The reliable checkpoint dir script_session sets lets
+    # reliable_materialize inside twin bodies (dedup ingest) write
+    # cleanable checkpoint files instead of pinning executor blocks
+    # for the session lifetime.
+    spark = script_session("rtdp-twin-cost", SCALE_HEAP)
 
     # The 10x scaling corpus when fully present (20k vectors / 50k
     # docs -> 40 batches of 500 / 1250), else the sf0.1 tables. Both
@@ -547,29 +366,9 @@ def main() -> None:
         )
         else SF_DIR
     )
-    emb = load_table(spark, src, "embeddings")
-    docs = load_table(spark, src, "documents")
-
+    table = twin_table(spark, src)
     chosen = [t.strip() for t in args.twins.split(",") if t.strip()]
-    measurers = {
-        "ivf": lambda: measure_ivf(spark, emb, args.batches),
-        "corpus_stats": lambda: measure_corpus_stats(spark, docs, args.batches),
-        "countmin": lambda: measure_countmin(spark, docs, args.batches),
-        "zonemap": lambda: measure_zonemap(
-            spark, load_table(spark, src, "events"), args.batches
-        ),
-        "hll": lambda: measure_hll(spark, docs, args.batches),
-        "histogram": lambda: measure_histogram(
-            spark, load_table(spark, src, "events"), args.batches
-        ),
-        "bloom": lambda: measure_bloom(spark, docs, args.batches),
-        "retention": lambda: measure_retention(
-            spark, load_table(spark, src, "events"), args.batches
-        ),
-        "dedup": lambda: measure_dedup(spark, docs, args.batches),
-        "graph": lambda: measure_graph_flows(spark, src, args.batches),
-    }
-    unknown = [t for t in chosen if t not in measurers]
+    unknown = [t for t in chosen if t not in table]
     if unknown:
         ap.error(f"unknown twins: {unknown}")
     # Write INCREMENTALLY after each twin: the r15 crash at the last
@@ -583,17 +382,17 @@ def main() -> None:
     }
     if os.path.dirname(args.out):
         os.makedirs(os.path.dirname(args.out), exist_ok=True)
-    results = []
     for t in chosen:
-        r = measurers[t]()
-        results.append(r)
-        out["twins"][r["twin"]] = r
+        twin, frame, id_col, parts = table[t]
+        r = measure_twin(twin, frame, id_col, args.batches, *parts())
+        if t == "dedup":
+            _linear_fit_gate(r)
+        out["twins"][twin] = r
         with open(args.out, "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
-        print(f"wrote {args.out} ({len(results)}/{len(chosen)} twins)", file=sys.stderr)
+        print(f"wrote {args.out} ({len(out['twins'])}/{len(chosen)} twins)", file=sys.stderr)
     print(json.dumps(out))
-    ok = all(r["flat_within_gate"] for r in results)
-    sys.exit(0 if ok else 1)
+    sys.exit(0 if all(r["flat_within_gate"] for r in out["twins"].values()) else 1)
 
 
 if __name__ == "__main__":

@@ -70,6 +70,35 @@ def test_decode_stub_production_mode_raises():
         decode_stub(b"bytes", deterministic_fake=False)
 
 
+def test_multimodal_queries_run_outside_the_checkout(tmp_path, sf_dir):
+    """Both multimodal queries from a driver that put the checkout on
+    its own ``sys.path`` only, run from another directory with no
+    PYTHONPATH (the round driver's shape): the Python workers start in
+    that directory, so a batch function pickled by reference to this
+    package fails there with ModuleNotFoundError."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").appName("mm-cwd").getOrCreate()
+from real_time_data_pipeline_spark.queries import REGISTRY
+for name in ("multimodal_feature_extract", "multimodal_feature_extract_profile"):
+    assert REGISTRY[name].fn(spark, {sf_dir!r}).count() > 0, name
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+
 def test_multimodal_pipeline_plumbing(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(20)
     media = documents_as_media(docs)
