@@ -72,7 +72,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
     One silver pass: ``bronze`` is normalized, deduplicated and
     filtered to ``date`` once, and that day is committed with
     `replace_partitions`. Gold is then computed from the COMMITTED
-    silver day, read back by path (`_read_partitions`), not from a
+    silver day, read back by path (`_read_stored`), not from a
     second pass over bronze, and committed the same way; its row
     count is observed during that write, so no job reads gold back.
     If no ``date=`` silver partition is committed (no bronze rows of
@@ -91,7 +91,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
         to_silver,
     )
     from real_time_data_pipeline_spark.streaming.sinks import (
-        _read_partitions,
+        _read_stored,
         replace_partitions,
     )
 
@@ -103,9 +103,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
     day = silver.where(F.col("date") == F.lit(date))
     replace_partitions(day, silver_path, "date")
 
-    committed = _read_partitions(
-        bronze.sparkSession, silver_path, "date", [date], day.schema
-    )
+    committed = _read_stored(bronze.sparkSession, silver_path, day.schema, "date", [date])
     if committed is None:
         return 0
     gold = to_gold(committed).withColumn("date", F.to_date(F.col("window_start")))

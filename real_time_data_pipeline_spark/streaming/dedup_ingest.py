@@ -64,7 +64,7 @@ from real_time_data_pipeline_spark.streaming.sinks import (
     BUCKET_COL,
     bucket_of,
     read_buckets,
-    table_exists,
+    state_exists_recovered,
     touched_buckets,
     upsert_parquet,
 )
@@ -173,7 +173,7 @@ def _ingest_batch_impl(
 
     # --- exact layer: bucket-pruned hash probe ------------------------
     survivors = new_entries
-    if table_exists(spark, hashes_path):
+    if state_exists_recovered(spark, hashes_path):
         probe_hashes = new_entries.select(
             "content_hash",
             bucket_of("content_hash", n_buckets=n_buckets).alias(BUCKET_COL),
@@ -186,7 +186,7 @@ def _ingest_batch_impl(
         )
 
     # --- near-dup layer: bucket-pruned band probe + Jaccard verify ----
-    if table_exists(spark, bands_path):
+    if state_exists_recovered(spark, bands_path):
         cand_new = survivors.select(F.col(id_col), _band_keys("sig").alias("bk")).select(
             id_col,
             F.col("bk.band").alias("band"),

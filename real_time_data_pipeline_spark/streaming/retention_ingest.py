@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.streaming.sinks import (
     read_state as _read_state,
-    state_exists_recovered,
     upsert_parquet,
 )
 
@@ -97,11 +96,13 @@ def retention_matrix(spark: SparkSession, state_root: str) -> DataFrame:
     Both reads run the swap-commit crash recovery first: a sink that
     died between the two commit renames leaves the committed table at
     ``__old__``, and a reader skipping the restore would fail on a
-    path that is in fact fully committed."""
-    state_exists_recovered(spark, _first_seen_path(state_root))
-    state_exists_recovered(spark, _activity_path(state_root))
-    first = spark.read.parquet(_first_seen_path(state_root))
-    act = spark.read.parquet(_activity_path(state_root))
+    path that is in fact fully committed. Before any non-empty batch
+    has committed no state table exists (an empty batch creates
+    none), and the matrix is empty."""
+    first = _read_state(spark, _first_seen_path(state_root))
+    act = _read_state(spark, _activity_path(state_root))
+    if first is None or act is None:
+        return spark.createDataFrame([], "cohort_week string, week_offset bigint, n_users bigint")
     return (
         act.join(first, "user_id")
         .select(

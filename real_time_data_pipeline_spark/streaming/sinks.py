@@ -12,16 +12,18 @@ Reference sinks rebuilt (SURVEY §2.2):
 
 Every keyed merge — the gold upsert, the CDC snapshot
 (`cdc_upsert_parquet`) and the dedup-ingest stores — is one kernel,
-`_keyed_upsert`: swap recovery, a read of the stored rows (for a
-partitioned table only the partition directories the batch touches,
-by path), one winner per key, and a commit that never overwrites in
-place. Every write that replaces part or all of a parquet table
-(these merges, twin state, compaction, expiry, the backfill) is a
-staged-rename swap: `replace_parquet` swaps the whole table in by two
-renames; `replace_partitions` swaps each staged partition directory
-the same way, so per-batch cost is O(touched partitions), not
-O(table), and a crash leaves every partition complete, pre- or
-post-commit. Existence checks and renames go through the Hadoop
+`_keyed_upsert`: the micro-batch's plan runs once per call (the batch
+is persisted, and an EMPTY batch is a no-op that reads nothing,
+writes nothing and creates no table), then swap recovery, a read of
+the stored rows by path with the batch's schema (for a partitioned
+table only the partition directories the batch touches), one winner
+per key, and a commit that never overwrites in place. Every write
+that replaces part or all of a parquet table (these merges, twin
+state, compaction, expiry, the backfill) is a staged-rename swap:
+`replace_parquet` swaps the whole table in by two renames;
+`replace_partitions` swaps each staged partition directory the same
+way, so per-batch cost is O(touched partitions), not O(table), and a
+crash leaves every partition complete, pre- or post-commit. Existence checks and renames go through the Hadoop
 FileSystem API, so the sinks work on HDFS/local identically. On
 S3-style object stores rename is copy-based (not atomic) — a 100 TB
 gold layer there should swap the merge body for Delta/Iceberg MERGE
@@ -39,6 +41,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
 from real_time_data_pipeline_spark.operators.dedup import dedup_deterministic
+from real_time_data_pipeline_spark.operators.materialize import cache_scope, persist_tracked
 
 
 def with_trigger(writer, trigger: str | None):
@@ -87,12 +90,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def table_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic parquet-table existence check."""
-    fs, jpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
 BUCKET_COL = "bkt"  # default partition column of hash-bucketed state
 
 
@@ -114,11 +111,14 @@ def touched_buckets(df: DataFrame, col: str = BUCKET_COL) -> list:
 
 
 def read_buckets(spark: SparkSession, path: str, buckets: list) -> DataFrame:
-    """Partition-pruned read of a bucketed table: only the listed
-    `BUCKET_COL` partitions are scanned (static partition pruning on
-    the literal IN-list — verify with `.explain`'s PartitionFilters). A
-    None in ``buckets`` selects the NULL partition, as ``eqNullSafe``
-    would; an empty list scans nothing."""
+    """Partition-pruned read of a bucketed table, after the
+    `_swap_paths` recovery (a bucket parked mid-swap would otherwise
+    read as empty): only the listed `BUCKET_COL` partitions are
+    scanned (static partition pruning on the literal IN-list — verify
+    with `.explain`'s PartitionFilters). A None in ``buckets`` selects
+    the NULL partition, as ``eqNullSafe`` would; an empty list scans
+    nothing."""
+    _swap_paths(spark, path)
     live = [b for b in buckets if b is not None]
     cond = F.col(BUCKET_COL).isin(live) if live else F.lit(False)
     if len(live) < len(buckets):
@@ -144,14 +144,23 @@ def _keyed_upsert(
     batch_wins: bool,
 ) -> None:
     """The one keyed-merge commit behind `upsert_parquet` and
-    `cdc_upsert_parquet`: recover, read, elect, swap.
+    `cdc_upsert_parquet`: persist, recover, read, elect, swap.
 
-    - The read (`read_state`, or with ``partition_col`` only the
-      partitions the batch touches, `_read_partitions`) recovers an
-      interrupted swap first: reading first would merge against
-      half-swapped state. The partition value must be a function of
-      the key (a bucket of it, a shard, a window date): a key that
-      moved partition would keep its old row in an untouched one.
+    - The batch's plan runs ONCE: the batch is persisted for the call
+      (`cache_scope`, released on return), and `isEmpty` is that run.
+      An empty batch returns there — no read, no election, no write,
+      no table created — which is the no-data micro-batch a watermarked
+      update-mode query delivers after every batch that moves the
+      watermark. The touched-partition collect and the write read the
+      cache.
+    - The read (`_read_stored`: the whole table, or with
+      ``partition_col`` only the partitions the batch touches, by path
+      with the batch's schema, so no schema-inference job runs)
+      recovers an interrupted swap first: reading first would merge
+      against half-swapped state. The partition value must be a
+      function of the key (a bucket of it, a shard, a window date): a
+      key that moved partition would keep its old row in an untouched
+      one.
     - ``batch_wins`` ranks every batch row above every stored row
       before ``order`` — last writer wins, right for re-emitted running
       aggregates. Without it ``order`` alone ranks, so an already
@@ -163,46 +172,61 @@ def _keyed_upsert(
       because the election is idempotent.
     """
     spark = batch_df.sparkSession
-    if partition_col is None:
-        old = read_state(spark, path)
-    else:
-        values = batch_df.select(F.col(partition_col).cast("string").alias(partition_col))
-        old = _read_partitions(
-            spark, path, partition_col, touched_buckets(values, partition_col), batch_df.schema
-        )
-    if batch_wins:
-        batch_df = batch_df.withColumn("__v", F.lit(1))
-        old = old.withColumn("__v", F.lit(0)) if old is not None else None
-        order = [F.desc("__v"), *order]
-    merged = old.unionByName(batch_df) if old is not None else batch_df
-    result = _elect_winners(merged, keys, order).drop("__v")
-    if partition_col is None:
-        replace_parquet(result, path)
-    else:
-        replace_partitions(result, path, partition_col)
+    with cache_scope():
+        batch_df = persist_tracked(batch_df)
+        if batch_df.isEmpty():
+            return
+        values = None
+        if partition_col is not None:
+            values = touched_buckets(
+                batch_df.select(F.col(partition_col).cast("string").alias(partition_col)),
+                partition_col,
+            )
+        old = _read_stored(spark, path, batch_df.schema, partition_col, values)
+        if batch_wins:
+            batch_df = batch_df.withColumn("__v", F.lit(1))
+            old = old.withColumn("__v", F.lit(0)) if old is not None else None
+            order = [F.desc("__v"), *order]
+        merged = old.unionByName(batch_df) if old is not None else batch_df
+        result = _elect_winners(merged, keys, order).drop("__v")
+        if partition_col is None:
+            replace_parquet(result, path)
+        else:
+            replace_partitions(result, path, partition_col)
 
 
-def _read_partitions(
-    spark: SparkSession, path: str, partition_col: str, values: list, schema: StructType
+def _read_stored(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    partition_col: str | None = None,
+    values: list | None = None,
 ) -> DataFrame | None:
-    """The stored rows of the ``partition_col`` partitions named by
-    ``values`` (None if none is stored), after the `_swap_paths`
-    recovery. Existing directories are read by path, with ``basePath``
-    and ``schema``, so Spark neither lists other partitions nor infers
+    """The stored rows of a swap-committed table (None if none is
+    stored), after the `_swap_paths` recovery, read by path with
+    ``schema``: Spark runs no schema-inference job and infers no
     partition types (a string ``dt=01`` would read back as 1).
-    ``values`` are the partition values as Spark's writer renders them
-    (the value cast to string; None for NULL): names are built as that
-    writer builds them, with `getPartitionPathString` (escaping; NULL
-    as the default partition name)."""
+
+    Without ``partition_col`` the whole table is read. With it, only
+    the partitions named by ``values`` — the partition values as
+    Spark's writer renders them (the value cast to string; None for
+    NULL) — are read, each existing directory by path with
+    ``basePath``, so Spark lists no other partition. Directory names
+    are built as that writer builds them, with
+    `getPartitionPathString` (escaping; NULL as the default partition
+    name)."""
     fs, jpath, *_, exists = _swap_paths(spark, path)
     if not exists:
         return None
+    reader = spark.read.schema(schema)
+    if partition_col is None:
+        return reader.parquet(path)
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     names = [utils.getPartitionPathString(partition_col, v) for v in values]
     dirs = [f"{path.rstrip('/')}/{n}" for n in names if fs.exists(jpath.suffix("/" + n))]
     if not dirs:
         return None
-    return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
+    return reader.option("basePath", path).parquet(*dirs)
 
 
 def upsert_parquet(
@@ -218,6 +242,11 @@ def upsert_parquet(
     event-time column) makes "last writer" deterministic when one
     batch carries several rows per key; a full-row hash breaks any
     remaining tie, so a retried batch always elects the same winner.
+
+    One execution of ``batch_df``'s plan per call: the batch is
+    persisted for the call, and an empty batch (the no-data
+    micro-batch of a watermarked update-mode query) is a no-op — it
+    reads nothing, writes nothing and creates no table.
 
     Unpartitioned (dimension-sized gold tables) the whole table is
     merged and swapped in; with ``partition_col`` only the partitions
@@ -375,8 +404,9 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 #   partitions it owns; the reset guard reads partition directory
 #   names; compaction commits through `replace_parquet`.
 # - keyed-upsert state (retention, zone-map user pairs: flat; the four
-#   dedup-ingest stores: bucket-partitioned): `read_state` +
-#   `upsert_parquet`, idempotent per key, no marker. It is the same
+#   dedup-ingest stores: bucket-partitioned): `upsert_parquet`, read
+#   back with `read_state` (None until a non-empty batch commits),
+#   idempotent per key, no marker. It is the same
 #   `_keyed_upsert` kernel as the CDC snapshot; a partitioned table
 #   commits through `replace_partitions`.
 #
@@ -499,32 +529,31 @@ def state_exists_recovered(spark: SparkSession, state_path: str) -> bool:
     return _swap_paths(spark, state_path)[5]
 
 
+def _src_batch_dirs(spark: SparkSession, state_path: str, batch="*") -> list:
+    """FileStatus of every ``<key>=*/src_batch=<batch>`` directory of a
+    partitioned state: one driver-side Hadoop FS glob, no Spark job."""
+    fs, jglob = _hadoop_fs(spark, f"{state_path.rstrip('/')}/*/src_batch={batch}")
+    return list(fs.globStatus(jglob) or [])
+
+
 def committed_max_batch(spark: SparkSession, state_path: str):
     """Max src_batch present in a (key, src_batch)-partitioned state
-    (None for no state) — read from the PARTITION DIRECTORY NAMES via
-    a driver-side Hadoop FS listing, never a Spark job over the data:
-    per-batch guard cost is O(partition dirs) (kept small by
-    compaction), not O(table). Directories whose src_batch segment
-    does not parse are ignored (foreign files can't break the guard
-    toward silence — worst case the max is unaffected; the data rows
-    themselves are untouched)."""
+    (None for no state) — read from the PARTITION DIRECTORY NAMES
+    (`_src_batch_dirs`), never a Spark job over the data: per-batch
+    guard cost is O(partition dirs) (kept small by compaction), not
+    O(table). Directories whose src_batch segment does not parse are
+    ignored (foreign files can't break the guard toward silence —
+    worst case the max is unaffected; the data rows themselves are
+    untouched)."""
     if not state_exists_recovered(spark, state_path):
         return None
-    fs, _ = _hadoop_fs(spark, state_path)
-    jvm = spark._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(
-        state_path.rstrip("/") + "/*/src_batch=*"
-    )
-    statuses = fs.globStatus(glob)
     best = None
-    if statuses is not None:
-        for st in statuses:
-            name = st.getPath().getName()  # "src_batch=<N>"
-            try:
-                val = int(name.split("=", 1)[1])
-            except (IndexError, ValueError):
-                continue
-            best = val if best is None else max(best, val)
+    for st in _src_batch_dirs(spark, state_path):
+        try:
+            val = int(st.getPath().getName().split("=", 1)[1])  # "src_batch=<N>"
+        except ValueError:
+            continue
+        best = val if best is None else max(best, val)
     return best
 
 
@@ -532,19 +561,11 @@ def live_batch_partitions_exist(
     spark: SparkSession, state_path: str, batch_id: int, key_col: str
 ) -> bool:
     """True iff any NON-SENTINEL (key >= 0) partition directory exists
-    for ``src_batch=batch_id`` — a driver-side FS glob, same cost
-    class as `committed_max_batch`."""
-    fs, _ = _hadoop_fs(spark, state_path)
-    jvm = spark._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(
-        state_path.rstrip("/") + f"/*/src_batch={batch_id}"
-    )
-    statuses = fs.globStatus(glob)
-    if statuses is None:
-        return False
+    for ``src_batch=batch_id`` — the same driver-side glob as
+    `committed_max_batch`."""
     return any(
         st.getPath().getParent().getName() != f"{key_col}={MARKER_KEY}"
-        for st in statuses
+        for st in _src_batch_dirs(spark, state_path, batch_id)
     )
 
 
@@ -826,7 +847,11 @@ def current_snapshot(
 ) -> DataFrame:
     """Live view of a CDC snapshot table: everything that is not a
     retained delete tombstone. NULL in the tombstone column reads as
-    live (upstreams that never delete need no flag maintenance)."""
+    live (upstreams that never delete need no flag maintenance).
+    Swap-recovered; raises FileNotFoundError naming the path when no
+    snapshot exists (an empty batch creates none)."""
+    if not state_exists_recovered(spark, path):
+        raise FileNotFoundError(f"no CDC snapshot at {path}")
     df = spark.read.parquet(path)
     if tombstone_col is not None:
         df = df.where(~F.coalesce(F.col(tombstone_col), F.lit(False))).drop(

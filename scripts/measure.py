@@ -36,15 +36,16 @@ SCALE_HEAP = {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "1
 
 
 def script_session(app_name: str, extra_conf: "dict[str, str] | None" = None):
-    """The harness session: get_spark() at local[$SPARK_GRAFT_CPUS]
-    (32 when unset), ERROR logging, and a temporary RELIABLE
-    checkpoint dir when none is configured, so reliable_materialize
-    times the checkpoint path a cluster runs instead of the
-    localCheckpoint fallback."""
+    """The harness session: get_spark() at $SPARK_MASTER when set,
+    else at local[$SPARK_GRAFT_CPUS] (32 when unset), ERROR logging,
+    and a temporary RELIABLE checkpoint dir when none is configured,
+    so reliable_materialize times the checkpoint path a cluster runs
+    instead of the localCheckpoint fallback."""
     from real_time_data_pipeline_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or "32"
-    spark = get_spark(app_name=app_name, master=f"local[{cpus}]", extra_conf=extra_conf)
+    master = os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
+    spark = get_spark(app_name=app_name, master=master, extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     if spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix=f"{app_name}-ckpt-"))

@@ -128,6 +128,31 @@ def test_ingest_retry_after_partial_state_merge(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(store + "/hashes").collect()} == {1, 2}
 
 
+def test_ingest_probe_restores_a_bucket_parked_mid_swap(spark, tmp_path):
+    """A docs-store commit that died with a bucket parked under
+    ``docs__old__``: the next batch's near-dup probe restores the
+    bucket before reading it, so a near-duplicate of a doc stored
+    there is still rejected."""
+    import os
+    import shutil
+
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import DEFAULT_BUCKETS
+    from real_time_data_pipeline_spark.streaming.sinks import bucket_of
+
+    corpus = str(tmp_path / "corpus")
+    store = str(tmp_path / "store")
+    b1 = _docs(spark, [(1, BASE), (2, "unrelated second document text with its own words only here")])
+    assert ingest_batch(b1, "doc_id", "text", corpus, store) == 2
+    docs = store + "/docs"
+    bkt = spark.range(1).select(bucket_of(F.lit(1).cast("long"), n_buckets=DEFAULT_BUCKETS)).first()[0]
+    os.makedirs(docs + "__old__")
+    shutil.move(f"{docs}/bkt={bkt}", f"{docs}__old__/bkt={bkt}")
+
+    near = _docs(spark, [(3, BASE.replace("today", "again"))])
+    assert ingest_batch(near, "doc_id", "text", corpus, store) == 0
+    assert not os.path.exists(docs + "__old__")
+
+
 @pytest.mark.parametrize("provider", ["default", "rocksdb"])
 def test_ingest_streaming_sink(spark, tmp_path, provider):
     """The foreachBatch wiring: a file-replay stream of doc drops

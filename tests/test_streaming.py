@@ -559,6 +559,59 @@ def test_foreach_batch_upsert_stream_end_to_end(spark, tmp_path, replay_dir):
     assert got == want
 
 
+def test_no_data_batch_of_a_watermarked_gold_query_leaves_gold_unchanged(spark, tmp_path):
+    """A watermarked update-mode window aggregation runs a no-data
+    micro-batch after each batch that moves the watermark; it reaches
+    the gold upsert with zero rows and must commit nothing: the gold
+    files before and after that call are the same files."""
+    import pandas as pd
+
+    src = tmp_path / "src"
+    src.mkdir()
+    drops = [
+        [("2024-05-06 12:01:00", "a", 1.0), ("2024-05-06 12:07:00", "b", 2.0)],
+        [("2024-05-06 13:02:00", "a", 4.0)],
+    ]
+    for i, rows in enumerate(drops):
+        pdf = pd.DataFrame(rows, columns=["ts", "k", "v"])
+        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
+        pdf.to_parquet(src / f"drop_{i}.parquet", index=False)
+    stream = file_stream(spark, str(src), "ts timestamp, k string, v double")
+    gold_rows = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "15 minutes").start.alias("window_start"), "k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("total"))
+    )
+    gold = str(tmp_path / "gold")
+    listings = {}
+
+    def files():
+        if not os.path.exists(gold):
+            return None
+        return sorted(os.path.relpath(os.path.join(d, n), gold)
+                      for d, _, names in os.walk(gold) for n in names)
+
+    def merge(batch_df, batch_id):
+        before = files()
+        upsert_parquet(batch_df, gold, keys=["window_start", "k"])
+        listings[batch_id] = (before, files())
+
+    q = foreach_batch_sink(
+        gold_rows, merge, str(tmp_path / "ck"), "gold_no_data", output_mode="update"
+    )
+    q.processAllAvailable()
+    no_data = [p["batchId"] for p in q.recentProgress if p["numInputRows"] == 0]
+    q.stop()
+
+    assert no_data, "the watermark never advanced"
+    for b in no_data:
+        before, after = listings[b]
+        assert before is not None and after == before
+    assert not os.path.exists(gold + "__tmp__") and not os.path.exists(gold + "__old__")
+    got = {(r.k, r.n, r.total) for r in spark.read.parquet(gold).collect()}
+    assert got == {("a", 1, 1.0), ("b", 1, 2.0), ("a", 1, 4.0)}
+
+
 def test_streaming_funnel_matches_batch_query(spark, replay_dir):
     """The stateful streaming funnel (applyInPandasWithState, bounded
     two-long state per user) converges to exactly the batch
@@ -1333,6 +1386,29 @@ def test_retention_ingest_min_merge_is_order_independent(spark, tmp_path):
     merge_retention_batch(batch([(1, "2024-01-02 09:00:00")]), state_root)
     m3 = {tuple(r) for r in retention_matrix(spark, state_root).collect()}
     assert m3 == m2
+
+
+def test_retention_matrix_of_a_stream_that_saw_only_empty_batches(spark, tmp_path):
+    """Empty batches create no state table, so a stream that has only
+    seen empty batches reads an empty matrix with the batch query's
+    columns instead of failing on a missing path."""
+    from real_time_data_pipeline_spark.queries import REGISTRY
+    from real_time_data_pipeline_spark.streaming.retention_ingest import (
+        merge_retention_batch,
+        retention_matrix,
+    )
+
+    state_root = str(tmp_path / "state")
+    empty = spark.createDataFrame([], "user_id long, ts timestamp")
+    for _ in range(2):
+        merge_retention_batch(empty, state_root)
+    assert not os.path.exists(state_root)
+    got = retention_matrix(spark, state_root)
+    want = REGISTRY["event_retention_cohorts"].fn(spark, "/root/testdata/sf0.001")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert got.count() == 0
 
 
 def test_retention_ingest_recovers_from_crash_between_upserts(spark, tmp_path):

@@ -438,6 +438,64 @@ def test_partitioned_upsert_after_an_empty_first_batch(spark, tmp_path):
     }
 
 
+def _files(root):
+    """(relative path, size, mtime) of every file under ``root``, the
+    table's swap siblings included."""
+    out = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out.append((os.path.relpath(os.path.join(d, n), root), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
+def test_flat_upsert_after_an_empty_first_batch(spark, tmp_path):
+    """The flat twin of the partitioned test above: a zero-row first
+    batch creates no table, so the next batch is the first commit."""
+    path = str(tmp_path / "table")
+    schema = "k long, v double"
+    upsert_parquet(spark.createDataFrame([], schema), path, keys=["k"])
+    assert not os.path.exists(path)
+    upsert_parquet(spark.createDataFrame([(1, 1.0), (2, 2.0)], schema), path, keys=["k"])
+    assert _rows(spark.read.parquet(path).select("k", "v")) == {(1, 1.0), (2, 2.0)}
+
+
+def test_flat_upsert_of_an_empty_batch_leaves_the_table_untouched(spark, tmp_path):
+    """An empty batch over a stored flat table commits nothing: the
+    same part files stay, and no staging or backup directory is left
+    beside the table."""
+    path = str(tmp_path / "table")
+    schema = "k long, v double"
+    upsert_parquet(spark.createDataFrame([(1, 1.0), (2, 2.0)], schema), path, keys=["k"])
+    before = _files(str(tmp_path))
+    upsert_parquet(spark.createDataFrame([], schema), path, keys=["k"])
+    assert _files(str(tmp_path)) == before
+    assert sorted(os.listdir(tmp_path)) == ["table"]
+
+
+@pytest.mark.parametrize("partition_col", ["p", None])
+def test_upsert_executes_the_batch_plan_once(spark, tmp_path, partition_col):
+    """Each upsert runs the batch's plan once: a Python UDF in the
+    batch runs once per batch row, on the first commit and on a merge
+    into stored rows, partitioned or flat."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def part_of(k):
+        calls.add(1)
+        return k % 3
+
+    part = F.udf(part_of, "long")
+    path = str(tmp_path / "table")
+    for lo, hi in [(0, 20), (10, 40)]:
+        before = calls.value
+        batch = spark.range(lo, hi).withColumn("p", part("id"))
+        upsert_parquet(batch, path, keys=["id"], partition_col=partition_col)
+        assert calls.value - before == hi - lo
+    assert spark.read.parquet(path).count() == 40
+
+
 def test_backfill_restores_a_day_parked_mid_swap(spark, tmp_path):
     """A backfill re-run that died mid-swap — the day's gold partition
     parked under ``gold__old__``, its staging dir left behind: the
