@@ -80,10 +80,11 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
     the result is 0. ``date`` must be spelled YYYY-MM-DD, as the
     partition directory is; any other spelling raises ValueError.
 
-    One writer per partition (`replace_partitions`): no other backfill
-    or live gold upsert may commit ``date`` meanwhile. That rule is
-    also what makes the read-back safe: the partition read is the one
-    this call just committed. Each day is replaced atomically, the
+    One writer per table (`replace_partitions` stages every commit in
+    one shared ``__tmp__`` directory beside the table): no other
+    backfill or live gold upsert may commit to these tables meanwhile.
+    That rule is also what makes the read-back safe: the partition
+    read is the one this call just committed. Each day is replaced atomically, the
     table is not."""
     from real_time_data_pipeline_spark.pipelines.station_status import (
         normalize_raw,
@@ -101,14 +102,14 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
         "date", F.to_date(F.col("event_ts"))
     )
     day = silver.where(F.col("date") == F.lit(date))
-    replace_partitions(day, silver_path, "date")
+    replace_partitions(day, silver_path, ["date"])
 
     committed = _read_stored(bronze.sparkSession, silver_path, day.schema, "date", [date])
     if committed is None:
         return 0
     gold = to_gold(committed).withColumn("date", F.to_date(F.col("window_start")))
     written = Observation()
-    replace_partitions(gold.observe(written, F.count(F.lit(1)).alias("n")), gold_path, "date")
+    replace_partitions(gold.observe(written, F.count(F.lit(1)).alias("n")), gold_path, ["date"])
     return written.get["n"]
 
 

@@ -98,11 +98,11 @@ def ingest_state_root(spark, sf_dir: str, prefix: str) -> str:
     cross-session collision) and dead-app eviction above deletes it
     wholesale; the local-mode tempdir is one small directory per
     process, freed by the OS temp policy. A stale dir from a cleared
-    memo (executor-loss recovery) would trip the checkpoint-reset
-    guard when batch 0 replays, so the target is cleared before
-    return. Lives here, beside `_shared_artifact` and the delete
-    helper, so the similarity and graph families share one placement
-    policy without cross-family private imports (r15 review)."""
+    memo (executor-loss recovery) would keep partitions the rebuild
+    does not replace, so the target is cleared before return. Lives
+    here, beside `_shared_artifact` and the delete helper, so the
+    similarity and graph families share one placement policy without
+    cross-family private imports (r15 review)."""
     import hashlib
     import re as _re
     import tempfile

@@ -3556,36 +3556,26 @@ def _ingest_recall_state_shared(spark: SparkSession, sf_dir: str) -> str:
         ivf_assignment_increments,
     )
     from real_time_data_pipeline_spark.streaming.sinks import (
-        commit_partitioned_batches_overlapped,
+        replace_batch_partitions,
     )
 
     def build() -> DataFrame:
-        # One assignment pass for the whole replay (r16, VERDICT r15
-        # #4): `merge_ivf_batch`'s increments are a ROW-LOCAL
+        # One assignment pass and one staged write for the whole
+        # replay: `merge_ivf_batch`'s increments are a ROW-LOCAL
         # deterministic function of each vector (the chunked-replay
         # parity the twin's tests pin), so assigning the corpus once
-        # and slicing per batch commits byte-identical rows to the old
-        # merge-per-batch loop while paying the centroid cross join
-        # one time instead of INGEST_RECALL_BATCHES times. Every
-        # batch still goes through the guarded idempotent commit (the
-        # foreachBatch body's commit half) — writes overlapped per
-        # guide §2.6 (`commit_partitioned_batches_overlapped`: the
-        # replay is known-final, partitions disjoint); the streaming
-        # sink itself (`merge_ivf_batch`) is unchanged and covered by
-        # its own per-batch tests.
+        # and labelling each row with its batch (``src_batch``) leaves
+        # the same src_batch=<b>/cent_id=<k> state as committing the
+        # batches one by one. The replay is known-final and the
+        # directory is empty, so the per-batch guard has nothing to
+        # check; the write is the one `commit_partitioned_batch` runs.
         emb = load_table(spark, sf_dir, "embeddings")
         centroids = stride_centroids(emb, "vec_id", "embedding", stride=29)
-        all_inc = reliable_materialize(
-            ivf_assignment_increments(emb, centroids)
-        )
         state = ingest_state_root(spark, sf_dir, "rtdp_ingest_recall")
-        commit_partitioned_batches_overlapped(
-            [
-                all_inc.where(
-                    F.pmod(F.col("nid"), F.lit(INGEST_RECALL_BATCHES)) == b
-                )
-                for b in range(INGEST_RECALL_BATCHES)
-            ],
+        replace_batch_partitions(
+            ivf_assignment_increments(emb, centroids).withColumn(
+                "src_batch", F.pmod(F.col("nid"), F.lit(INGEST_RECALL_BATCHES))
+            ),
             state,
         )
         return spark.createDataFrame([(state,)], "state_path string")
@@ -3602,12 +3592,12 @@ def q_ann_recall_after_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unlike `embed_ann_recall` (one-shot batch index), this runs the
     REAL maintenance machinery end to end: the corpus arrives in 4
-    deterministic batches (vec_id mod 4), each committed through the
-    same guarded idempotent commit the foreachBatch body
-    (`merge_ivf_batch`) uses, into partitioned parquet state — the
-    replay's assignment pass is batched across the 4 commits (r16;
-    row-identical by the chunked-replay determinism the twin's tests
-    pin) — and top-5 is served FROM that state by `ivf_probe_state`
+    deterministic batches (vec_id mod 4), assigned in one pass and
+    committed as their src_batch=<b>/cent_id=<k> partitions through
+    the staged write the foreachBatch body (`merge_ivf_batch`) commits
+    each batch with — row-identical to four per-batch commits by the
+    chunked-replay determinism the twin's tests pin — and top-5 is
+    served FROM that state by `ivf_probe_state`
     (partition-pruned probes, dequantized exact-cosine rerank). The oracle replays
     assignment + scalar quantization + probing in SQL — so the
     determinism claim the exactly-once design rests on ("the one-shot
@@ -3617,14 +3607,14 @@ def q_ann_recall_after_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each merge assigns ONE batch against broadcast
     centroids (batch-sized work — the flatness `twin_batch_cost`
     measures); the probe reads only nprobe lists per query via
-    partition pruning. The 4-commit state build is an INDEX BUILD and
+    partition pruning. The 4-batch state build is an INDEX BUILD and
     is priced as one — built once per session via the shared-artifact
     memo (seconds visible in `shared_artifact_build_breakdown()`), so
     the per-invocation cost is the serve path: probe + recall join
     against the memoized brute ground truth. Sharing cannot change
     values: the merge sequence is deterministic (frozen centroids,
     exact-cosine argmax, per-vector quantization) and the state is
-    immutable once batch 3 commits."""
+    immutable once written."""
     from real_time_data_pipeline_spark.operators.similarity import (
         stride_centroids,
     )
@@ -3795,29 +3785,23 @@ def _ivfpq_ingest_recall_state_shared(spark: SparkSession, sf_dir: str) -> str:
         ivfpq_increments,
     )
     from real_time_data_pipeline_spark.streaming.sinks import (
-        commit_partitioned_batches_overlapped,
+        replace_batch_partitions,
     )
 
     def build() -> DataFrame:
-        # One assign+encode pass, sliced per guarded commit with the
-        # writes overlapped — same replay-batching rationale as
+        # One assign+encode pass and one staged write, each row
+        # labelled with its batch — same replay rationale as
         # `_ingest_recall_state_shared` (row-local deterministic
-        # increments ⇒ byte-identical rows; the streaming sink
+        # increments ⇒ the per-batch commits' rows; the streaming sink
         # `merge_ivfpq_batch` is unchanged).
         emb = load_table(spark, sf_dir, "embeddings")
         centroids = stride_centroids(emb, "vec_id", "embedding", stride=29)
         books = _pq_codebooks_shared(spark, sf_dir, emb)
-        all_inc = reliable_materialize(
-            ivfpq_increments(emb, centroids, books)
-        )
         state = ingest_state_root(spark, sf_dir, "rtdp_ingest_recall_pq")
-        commit_partitioned_batches_overlapped(
-            [
-                all_inc.where(
-                    F.pmod(F.col("nid"), F.lit(INGEST_RECALL_BATCHES)) == b
-                )
-                for b in range(INGEST_RECALL_BATCHES)
-            ],
+        replace_batch_partitions(
+            ivfpq_increments(emb, centroids, books).withColumn(
+                "src_batch", F.pmod(F.col("nid"), F.lit(INGEST_RECALL_BATCHES))
+            ),
             state,
         )
         return spark.createDataFrame([(state,)], "state_path string")
@@ -3835,11 +3819,11 @@ def q_pq_ann_recall_after_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `embed_ann_recall_after_ingest` over `streaming/ivfpq_ingest.py`
     (VERDICT r14 #5).
 
-    The corpus arrives in 4 deterministic batches (vec_id mod 4), each
-    committed through the guarded idempotent commit the foreachBatch
-    body (`merge_ivfpq_batch`) uses, into (cent_id, src_batch)-
-    partitioned state (the replay's assign+encode pass is batched
-    across the 4 commits, r16 — row-identical by the chunked-replay
+    The corpus arrives in 4 deterministic batches (vec_id mod 4),
+    assigned and encoded in one pass and committed as their
+    src_batch=<b>/cent_id=<k> partitions through the staged write the
+    foreachBatch body (`merge_ivfpq_batch`) commits each batch with
+    (row-identical to four per-batch commits by the chunked-replay
     determinism); top-5 is served by `ivfpq_probe_state` — nprobe coarse
     lists per query, partition-pruned scan, ADC scoring as the integer
     sum of per-subspace table lookups. The oracle replays codebook

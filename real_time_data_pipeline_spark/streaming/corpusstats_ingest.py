@@ -24,8 +24,9 @@ twins document for re-shipped vectors.)
 Exactly-once is STRUCTURAL, reusing the index twins' mechanism
 (`sinks.commit_partitioned_batch`, key_col="bkt"): a batch's
 increment rows are a pure deterministic function of the batch, the
-state is partitioned by (bkt, src_batch), and a foreachBatch retry
-dynamic-overwrites its own partitions with identical rows — additive
+state is laid out src_batch-first (``src_batch=<b>/bkt=<k>/``), and
+a foreachBatch retry swaps its own batch directory in again with
+identical rows — additive
 state is NOT naturally idempotent under re-merge, so the per-batch
 DELTA layout (sum at read time) is what makes the retry safe without
 a read-modify-write of existing state. The shared checkpoint-reset
@@ -160,8 +161,9 @@ def merge_corpus_stats_batch(
     n_buckets: int = DEFAULT_TERM_BUCKETS,
 ) -> bool:
     """Commit one micro-batch's statistics delta as its
-    (bkt, src_batch=batch_id) partitions via the shared structural-
-    idempotency commit: a retry REPLACES its own partitions with
+    src_batch=batch_id directory (one bkt partition per touched
+    bucket) via the shared structural-idempotency commit: a retry
+    REPLACES its own batch with
     byte-identical rows; a checkpoint reset fails loudly.
 
     The retry window that is FATAL for additive state — a same-id

@@ -25,9 +25,9 @@ documents.
 Exactly-once is STRUCTURAL, reusing the shared partitioned-state
 commit (`sinks.commit_partitioned_batch`, key_col="bkt"): a batch's
 edge delta is a pure deterministic function of the batch (exact
-integer cents, frozen dimension joins), the state is partitioned by
-(bkt, src_batch), and a foreachBatch retry dynamic-overwrites its own
-partitions with identical rows; the post-compaction redelivery window
+integer cents, frozen dimension joins), the state is laid out
+src_batch-first (``src_batch=<b>/bkt=<k>/``), and a foreachBatch
+retry swaps its own batch directory in again with identical rows; the post-compaction redelivery window
 that would silently double additive state raises loudly inside the
 shared commit.
 
@@ -163,9 +163,9 @@ def merge_trade_flows_batch(
     batch_id: int,
     n_buckets: int = DEFAULT_EDGE_BUCKETS,
 ) -> bool:
-    """Commit one micro-batch's edge delta as its
-    (bkt, src_batch=batch_id) partitions via the shared structural-
-    idempotency commit: a retry REPLACES its own partitions with
+    """Commit one micro-batch's edge delta as its src_batch=batch_id
+    directory (one bkt partition per touched bucket) via the shared
+    structural-idempotency commit: a retry REPLACES its own batch with
     byte-identical rows; a checkpoint reset, or a redelivery after
     compaction folded the batch away, fails loudly (the
     additive-state guard lives inside `commit_partitioned_batch`)."""

@@ -13,12 +13,12 @@ Exactly-once WITHOUT a marker — the eighth twin demonstrates the
 STRUCTURAL idempotency mechanism, complementing the marker family:
 assignment against frozen centroids is a pure deterministic function
 of the vector (exact cosine, ties max-cos-then-min-cent_id), so a
-redelivered batch recomputes byte-identical rows. The state is
-partitioned by (cent_id, src_batch) and each batch commits via
-Spark's DYNAMIC partition overwrite, which replaces exactly the
-(cent_id, src_batch=this batch) partitions the batch touches: a
-foreachBatch retry — partial previous write or not — overwrites its
-own partitions with the same rows and nothing else. No
+redelivered batch recomputes byte-identical rows. The state is laid
+out src_batch-first (``src_batch=<b>/cent_id=<k>/``) and each batch
+commits its ``src_batch=<b>`` directory through one staged-rename
+swap (`sinks.replace_partitions`): a foreachBatch retry replaces its
+own batch with the same rows and nothing else, and a crash leaves the
+batch fully pre- or post-commit. No
 read-modify-write of existing state ever happens, so per-batch cost
 scales with the BATCH, not the table (the marker twins' whole-state
 swap is right for sketch-sized state; an inverted index is
@@ -27,14 +27,14 @@ max batch id the reset guard needs comes from a DRIVER-SIDE
 partition-directory listing (`sinks.committed_max_batch`), never a data
 scan — O(partition dirs), kept small by compaction.
 
-The one failure the overwrite cannot self-heal is a checkpoint RESET
+The one failure the swap cannot self-heal is a checkpoint RESET
 against existing state: a fresh checkpoint replays batch ids from 0,
-and dynamic overwrite would silently REPLACE old batches' partitions
-with new data under recycled ids. The shared guard
+and the swap would silently REPLACE old batches' partitions with new
+data under recycled ids. The shared guard
 (`sinks.committed_marker_check` against max committed src_batch)
 raises there, same contract as every other twin; on `==` (a genuine
 retry of the newest batch) the merge proceeds — replace, not skip —
-because the retry's partitions may be partial, UNLESS the batch's
+because the retry must converge to its own recomputed rows, UNLESS the batch's
 live partitions were already folded away by compaction, where the
 shared commit raises instead of re-adding folded rows as duplicates
 (ADVICE r11 #1; `sinks.commit_partitioned_batch`). Any state-read
@@ -87,13 +87,12 @@ from real_time_data_pipeline_spark.operators.similarity import (
     quantize_embedding,
 )
 # The state scaffolding — swap-recovering existence check, committed-
-# max-batch directory scan, the guarded dynamic-overwrite commit, and
+# max-batch directory scan, the guarded per-batch swap commit, and
 # the sentinel-preserving compaction — is the SHARED partitioned-twin
 # helper set in sinks.py (extracted r12, VERDICT r11 #5); this module
 # keeps only the IVF-specific pieces (assignment, probes, readers).
 from real_time_data_pipeline_spark.streaming.sinks import (
     commit_partitioned_batch,
-    compact_partitioned_state,
     read_partitioned_state,
 )
 
@@ -143,11 +142,12 @@ def merge_ivf_batch(
     vec_col: str = "embedding",
 ) -> bool:
     """Assign one micro-batch against the frozen centroids and commit
-    it as the (cent_id, src_batch=batch_id) partitions via dynamic
-    overwrite. Returns True when rows were written (retries included:
-    a retry REPLACES its own partitions rather than skipping, since
-    the previous attempt may have committed only some of them);
-    raises on a checkpoint reset (batch_id below the committed max)."""
+    it as the src_batch=batch_id directory (one cent_id partition per
+    touched list) through the staged swap. Returns True when the
+    commit ran (retries included: a retry REPLACES its own batch
+    rather than skipping; an empty batch commits nothing and creates
+    no state); raises on a checkpoint reset (batch_id below the
+    committed max)."""
     inc = ivf_assignment_increments(batch_df, centroids, id_col, vec_col)
     return commit_partitioned_batch(inc, state_path, batch_id)
 
@@ -166,13 +166,6 @@ def read_ivf_state(spark: SparkSession, state_path: str) -> DataFrame:
             "q",
         )
     )
-
-
-def compact_ivf_state(spark: SparkSession, state_path: str) -> None:
-    """Back-compat alias for the eighth twin's original name (the
-    generic row-preserving compaction lives in
-    `sinks.compact_partitioned_state`)."""
-    compact_partitioned_state(spark, state_path)
 
 
 def probe_lists(

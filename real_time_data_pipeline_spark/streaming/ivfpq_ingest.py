@@ -10,9 +10,9 @@ the PQ encoding (per-subspace nearest frozen codeword by QUANTIZED
 squared L2 — `operators/similarity.py::pq_codebooks`' integer-exact
 distance, so no float-order sensitivity) are pure per-vector
 functions of the batch, so a foreachBatch retry recomputes
-byte-identical rows and the (cent_id, src_batch)-partitioned dynamic
-overwrite replaces exactly its own partitions. No marker, no state
-rewrite; the shared checkpoint-reset guard raises on replayed ids.
+byte-identical rows and the staged swap of its
+``src_batch=<b>/cent_id=<k>`` directory replaces exactly its own
+batch. No marker, no state rewrite; the shared checkpoint-reset guard raises on replayed ids.
 
 State row: (cent_id, nid, codes array<int> ordered by subspace) —
 ``m_sub`` small ints per vector instead of D doubles. At 100 TB of
@@ -144,7 +144,7 @@ def merge_ivfpq_batch(
 ) -> bool:
     """Encode one micro-batch against the frozen centroids+codebooks
     and commit via the shared partitioned idempotent commit (retry
-    replaces its own partitions; reset raises)."""
+    replaces its own batch; reset raises)."""
     inc = ivfpq_increments(
         batch_df, centroids, codebooks, id_col, vec_col, m_sub, sub_dim, quant
     )

@@ -192,7 +192,7 @@ def _keyed_upsert(
         if partition_col is None:
             replace_parquet(result, path)
         else:
-            replace_partitions(result, path, partition_col)
+            replace_partitions(result, path, [partition_col])
 
 
 def _read_stored(
@@ -303,22 +303,24 @@ def replace_parquet(df: DataFrame, path: str, partition_by=None) -> None:
     fs.delete(jold, True)
 
 
-def replace_partitions(df: DataFrame, path: str, partition_col: str) -> None:
-    """Replace every ``partition_col`` partition ``df`` holds with
-    ``df``'s rows for it (its complete next state); leave the others.
+def replace_partitions(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
+    """Replace every top-level ``partition_by[0]`` partition ``df``
+    holds with ``df``'s rows for it (its complete next state, laid out
+    below it by the rest of ``partition_by``); leave the others.
 
     Recovery first (`_swap_paths`). ``df`` is
     staged beside the table (a first commit is one rename), then each
-    staged partition directory swaps in: current → ``__old__``, staged
-    → current, drop the backup. Dynamic partition overwrite deletes a
-    partition before its replacement exists; here a crash leaves every
-    partition fully pre- or post-commit. An empty ``df`` stages no
-    partition directory (read off the listing, no extra job), so it
-    changes nothing and never creates a table.
+    staged top-level partition directory swaps in: current →
+    ``__old__``, staged → current, drop the backup. Dynamic partition
+    overwrite deletes a partition before its replacement exists; here
+    a crash leaves every partition fully pre- or post-commit. An empty
+    ``df`` stages no partition directory (read off the listing, no
+    extra job), so it changes nothing and never creates a table.
 
-    Concurrency: ONE writer per partition — a live partitioned gold
-    upsert and a backfill must never commit the same ``date`` at once.
-    Each partition is replaced atomically, the table is not: a reader
+    Concurrency: ONE writer per table — the staging directory
+    ``__tmp__`` is shared, and a live partitioned gold upsert and a
+    backfill must never commit at once. Each partition is replaced
+    atomically, the table is not: a reader
     listing mid-loop, or after a crash until the next commit recovers,
     sees a MIX of pre- and post-commit partitions (ADVICE r8). For
     cross-partition snapshot reads, read until quiescent or keep the
@@ -326,8 +328,8 @@ def replace_partitions(df: DataFrame, path: str, partition_col: str) -> None:
     """
     fs, jpath, jtmp, jold, tmp_path, exists = _swap_paths(df.sparkSession, path)
     fs.delete(jtmp, True)
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp_path)
-    staged = _staged_partitions(fs, jtmp, partition_col)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp_path)
+    staged = _staged_partitions(fs, jtmp, partition_by[0])
     if not staged:
         fs.delete(jtmp, True)
         return
@@ -396,13 +398,14 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 #   table holding every key plus a meta row that carries the last
 #   merged batch id; each batch re-emits the whole state through
 #   `replace_parquet`.
-# - (key, src_batch)-partitioned twins (IVF lists, IVF-PQ codes, trade
+# - (src_batch, key)-partitioned twins (IVF lists, IVF-PQ codes, trade
 #   flows, corpus statistics): `commit_partitioned_batch` +
-#   `read_partitioned_state` + `compact_partitioned_state`. Each batch
-#   writes only its own new partitions — the one dynamic-overwrite
-#   write left in the engine, safe because a retry rewrites only the
-#   partitions it owns; the reset guard reads partition directory
-#   names; compaction commits through `replace_parquet`.
+#   `read_partitioned_state` + `compact_partitioned_state`. The state
+#   is laid out ``src_batch=<b>/<key>=<k>/``, so each batch is one
+#   top-level directory, committed by one `replace_partitions` swap:
+#   a retry replaces exactly its own batch; the reset guard reads the
+#   top-level directory names; compaction commits through
+#   `replace_parquet`.
 # - keyed-upsert state (retention, zone-map user pairs: flat; the four
 #   dedup-ingest stores: bucket-partitioned): `upsert_parquet`, read
 #   back with `read_state` (None until a non-empty batch commits),
@@ -428,8 +431,8 @@ def foreach_batch_sink(
     ``merge(batch_df, batch_id)`` per micro-batch — the one streaming
     entry point of every twin, the CDC apply and the gold upsert.
 
-    Exactly-once is the merge's job (an in-table marker, a structural
-    partition overwrite or a keyed idempotent upsert): foreachBatch
+    Exactly-once is the merge's job (an in-table marker, a per-batch
+    partition swap or a keyed idempotent upsert): foreachBatch
     re-delivers a batch under the same id after a failure. Twins and
     CDC consume append-mode input; the gold upsert passes
     ``output_mode="update"`` to receive re-emitted running aggregates.
@@ -529,43 +532,45 @@ def state_exists_recovered(spark: SparkSession, state_path: str) -> bool:
     return _swap_paths(spark, state_path)[5]
 
 
-def _src_batch_dirs(spark: SparkSession, state_path: str, batch="*") -> list:
-    """FileStatus of every ``<key>=*/src_batch=<batch>`` directory of a
-    partitioned state: one driver-side Hadoop FS glob, no Spark job."""
-    fs, jglob = _hadoop_fs(spark, f"{state_path.rstrip('/')}/*/src_batch={batch}")
-    return list(fs.globStatus(jglob) or [])
-
-
 def committed_max_batch(spark: SparkSession, state_path: str):
-    """Max src_batch present in a (key, src_batch)-partitioned state
-    (None for no state) — read from the PARTITION DIRECTORY NAMES
-    (`_src_batch_dirs`), never a Spark job over the data: per-batch
-    guard cost is O(partition dirs) (kept small by compaction), not
-    O(table). Directories whose src_batch segment does not parse are
-    ignored (foreign files can't break the guard toward silence —
-    worst case the max is unaffected; the data rows themselves are
-    untouched)."""
-    if not state_exists_recovered(spark, state_path):
+    """Max src_batch present in a (src_batch, key)-partitioned state
+    (None for no state) — read from the top-level ``src_batch=<N>``
+    DIRECTORY NAMES (one driver-side Hadoop listing), never a Spark
+    job over the data: per-batch guard cost is O(batch dirs) (kept
+    small by compaction), not O(table). Directories whose src_batch
+    value does not parse are ignored (foreign files can't break the
+    guard toward silence — worst case the max is unaffected; the data
+    rows themselves are untouched).
+
+    A state written key-first (``<key>=<k>/src_batch=<b>/``, the
+    layout before src_batch led) raises ValueError naming the path: a
+    ``src_batch=`` directory committed beside ``<key>=`` ones makes
+    Spark reject the whole table as conflicting directory structures.
+    The commit guard and compaction both call this before any write."""
+    fs, jpath, *_, exists = _swap_paths(spark, state_path)
+    if not exists:
         return None
-    best = None
-    for st in _src_batch_dirs(spark, state_path):
-        try:
-            val = int(st.getPath().getName().split("=", 1)[1])  # "src_batch=<N>"
-        except ValueError:
-            continue
-        best = val if best is None else max(best, val)
-    return best
+    names = [st.getPath().getName() for st in fs.listStatus(jpath) if st.isDirectory()]
+    batches = [n.split("=", 1)[1] for n in names if n.startswith("src_batch=")]
+    if not batches and any("=" in n for n in names):
+        raise ValueError(
+            f"twin state at {state_path} is in the key-first layout "
+            f"(<key>=/src_batch=/), which src_batch-first commits cannot "
+            f"extend: rebuild the state (replay the stream into an empty "
+            f"path)."
+        )
+    return max((int(v) for v in batches if v.removeprefix("-").isdecimal()), default=None)
 
 
 def live_batch_partitions_exist(
     spark: SparkSession, state_path: str, batch_id: int, key_col: str
 ) -> bool:
-    """True iff any NON-SENTINEL (key >= 0) partition directory exists
-    for ``src_batch=batch_id`` — the same driver-side glob as
-    `committed_max_batch`."""
-    return any(
-        st.getPath().getParent().getName() != f"{key_col}={MARKER_KEY}"
-        for st in _src_batch_dirs(spark, state_path, batch_id)
+    """True iff ``src_batch=batch_id`` holds any NON-SENTINEL
+    (key >= 0) partition directory — one driver-side listing."""
+    fs, jdir = _hadoop_fs(spark, f"{state_path.rstrip('/')}/src_batch={batch_id}")
+    return bool(fs.exists(jdir)) and any(
+        st.isDirectory() and st.getPath().getName() != f"{key_col}={MARKER_KEY}"
+        for st in fs.listStatus(jdir)
     )
 
 
@@ -587,8 +592,8 @@ def _guard_partitioned_commit(
     reset (`committed_marker_check` against the committed max
     src_batch), and on a same-id retry whose live partitions were
     already compacted away. A genuine retry of the newest batch FALLS
-    THROUGH — the caller rewrites its partitions, since the previous
-    attempt may have committed only some of them.
+    THROUGH — the caller swaps its batch directory in again (the
+    previous attempt's rows, if any, are replaced whole).
 
     Why the compaction case raises (ADVICE r11 #1): if compaction ran
     against its contract (stream not fully committed — e.g. the state
@@ -617,91 +622,47 @@ def _guard_partitioned_commit(
         )
 
 
-def _write_partitioned(
-    inc: DataFrame, state_path: str, batch_id: int, key_col: str
-) -> None:
-    """Write ``inc`` as its (key_col, src_batch=batch_id) partitions
-    via dynamic partition overwrite."""
-    (
-        inc.withColumn("src_batch", F.lit(batch_id).cast("bigint"))
-        # Cluster by the partition key before the write (guide §6,
-        # r15): without it every shuffle task holding rows for a
-        # (key, batch) value emits its own file — up to
-        # shuffle.partitions tiny files per state partition, paid on
-        # every commit AND every read (listing + per-file open). One
-        # narrow shuffle of the micro-batch-sized delta buys one file
-        # per live partition; rows and values are unchanged, so the
-        # structural-idempotency contract (a retry rewrites identical
-        # partitions) is untouched.
-        .repartition(F.col(key_col), F.col("src_batch"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(key_col, "src_batch")
-        .parquet(state_path)
-    )
-
-
 def commit_partitioned_batch(
     inc: DataFrame, state_path: str, batch_id: int, key_col: str = "cent_id"
 ) -> bool:
     """The structural-idempotency commit shared by the partitioned
-    twins: `_guard_partitioned_commit`, then write ``inc`` — which
-    must be a pure deterministic function of the batch — as its
-    (key_col, src_batch=batch_id) partitions via dynamic overwrite, so
-    a retry replaces exactly its own partitions. Returns True when the
-    commit ran.
+    twins: `_guard_partitioned_commit`, then ``inc`` — which must be a
+    pure deterministic function of the batch — is committed as the
+    ``src_batch=batch_id`` directory by `replace_batch_partitions`: one
+    staged swap, so a retry replaces exactly its own batch and a crash
+    leaves the batch fully pre- or post-commit. Returns True when the
+    commit ran (an empty ``inc`` commits nothing and creates no state).
 
-    ``key_col`` is the state's partition key: ``cent_id`` for the
-    vector-index twins, ``bkt`` (hash bucket) for the corpus-stats and
-    trade-flow twins — any non-negative integer key works; negative
-    values are reserved for the compaction sentinel."""
+    ``key_col`` is the state's second partition level: ``cent_id`` for
+    the vector-index twins, ``bkt`` (hash bucket) for the corpus-stats
+    and trade-flow twins — any non-negative integer key works; negative
+    values are reserved for the compaction sentinel. ONE writer per
+    twin table: every commit stages in the table's one ``__tmp__``."""
     _guard_partitioned_commit(inc.sparkSession, state_path, batch_id, key_col)
-    _write_partitioned(inc, state_path, batch_id, key_col)
+    replace_batch_partitions(inc.withColumn("src_batch", F.lit(batch_id)), state_path, key_col)
     return True
 
 
-def commit_partitioned_batches_overlapped(
-    slices: "list[DataFrame]",
-    state_path: str,
-    key_col: str = "cent_id",
-    max_workers: int = 2,
-) -> None:
-    """Replay a KNOWN-FINAL batch sequence through the guarded commit
-    with the writes overlapped (guide §2.6: independent jobs from a
-    small thread pool back-fill each other's task tails).
-
-    ``slices[b]`` commits as batch id ``b`` through the same guard and
-    write as `commit_partitioned_batch`. Each guard runs INLINE in
-    submission order — when batch b's guard runs, only writes 0..b−1
-    have been submitted, so the observed stored_max is at most b−1 and
-    the reset check can never false-fire. Only the WRITE jobs overlap.
-    A live stream must keep the strictly sequential
-    `commit_partitioned_batch` — micro-batches there are not
-    known-final.
-
-    Committer/filesystem assumption: concurrent dynamic-overwrite jobs
-    into one table are safe because the batches touch DISJOINT
-    (key, src_batch=b) partitions, and Spark's default commit protocol
-    stages each job in its own ``.spark-staging-<jobId>`` directory
-    before renaming only that job's partitions into place. Both hold
-    on HDFS and local filesystems. On object stores where rename is a
-    copy, or with a committer that shares one staging area per table,
-    pass ``max_workers=1``: the replay is then strictly sequential,
-    identical to calling `commit_partitioned_batch` per slice.
-
-    Used by the ingest-state ARTIFACT builds (VERDICT r15 #4): the
-    replay's wall-clock was dominated by serial per-commit write jobs.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = slices[0].sparkSession
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = []
-        for b, inc in enumerate(slices):
-            _guard_partitioned_commit(spark, state_path, b, key_col)
-            futures.append(pool.submit(_write_partitioned, inc, state_path, b, key_col))
-        for f in futures:
-            f.result()  # propagate the first failure
+def replace_batch_partitions(inc: DataFrame, state_path: str, key_col: str = "cent_id") -> None:
+    """Swap ``inc``'s ``src_batch=<b>`` directories (its ``src_batch``
+    column, laid out ``src_batch=<b>/<key_col>=<k>/``) into the state
+    through one `replace_partitions`, WITHOUT the retry/reset guard.
+    Behind `commit_partitioned_batch`; a KNOWN-FINAL replay into an
+    empty directory (the ingest-state artifact builds) calls it once
+    with every batch's rows."""
+    replace_partitions(
+        # Cluster by the partition key before the write (guide §6,
+        # r15): without it every shuffle task holding rows for a
+        # (batch, key) value emits its own file — up to
+        # shuffle.partitions tiny files per state partition, paid on
+        # every commit AND every read (listing + per-file open). One
+        # narrow shuffle of the micro-batch-sized delta buys one file
+        # per leaf; rows and values are unchanged, so a retry still
+        # rewrites identical partitions.
+        inc.repartition(F.col("src_batch"), F.col(key_col)),
+        state_path,
+        ["src_batch", key_col],
+    )
 
 
 def compact_partitioned_state(
@@ -710,7 +671,7 @@ def compact_partitioned_state(
     key_col: str = "cent_id",
     fold=None,
 ) -> None:
-    """Maintenance-window compaction for ANY (key_col, src_batch)-
+    """Maintenance-window compaction for ANY (src_batch, key_col)-
     partitioned index state (stream PAUSED with its final batch
     committed): fold every per-batch file set into src_batch = -1
     partitions, plus ONE sentinel row under
@@ -745,7 +706,7 @@ def compact_partitioned_state(
     compacted = live.withColumn(
         "src_batch", F.lit(COMPACTED_BATCH).cast("bigint")
     ).unionByName(marker)
-    replace_parquet(compacted, state_path, [key_col, "src_batch"])
+    replace_parquet(compacted, state_path, ["src_batch", key_col])
 
 
 def _swap_paths(spark: SparkSession, path: str):

@@ -424,7 +424,7 @@ def _ivf_ingest_smoke(spark) -> str:
     """Incremental IVF index maintenance on the real cluster (r11):
     the embeddings table is replayed as a 3-file stream through the
     foreachBatch assignment against frozen stride centroids across
-    separate executor JVMs; the maintained (cent_id, src_batch)-
+    separate executor JVMs; the maintained (src_batch, cent_id)-
     partitioned inverted-list state must be row-identical to the
     one-shot batch build (assignment is a pure per-vector function),
     and ANN probes served from the maintained state must equal probes

@@ -2,8 +2,8 @@
 """Per-batch cost measurement for the partitioned-index streaming
 twins: the repo's standing claim is that a twin's merge cost scales
 with the BATCH, not the accumulated TABLE (structural idempotency via
-dynamic partition overwrite of only the batch's own partitions; the
-reset guard reads a driver-side partition-dir listing, never state
+one staged swap of only the batch's own ``src_batch=<b>`` directory;
+the reset guard reads a driver-side partition-dir listing, never state
 data). The r13 scaling harness (`scaling_curve.py`) converted the
 batch queries' complexity claims into measurements; this does the
 same for the streaming side.
@@ -196,6 +196,7 @@ def twin_table(spark, src: str) -> dict:
         retention_ingest as ret,
         zonemap_ingest as zm,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import compact_partitioned_state
 
     emb = load_table(spark, src, "embeddings")
     docs = load_table(spark, src, "documents")
@@ -203,14 +204,14 @@ def twin_table(spark, src: str) -> dict:
     no_compact = lambda s: None  # noqa: E731
 
     def ivf_parts():
-        # row-grain inverted lists in (cent_id, src_batch) partitions:
+        # row-grain inverted lists in (src_batch, cent_id) partitions:
         # per-batch cost ~ batch size (+ the partition-dir listing)
         cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
         probes = emb.orderBy("vec_id").limit(5).localCheckpoint()
         return (
             lambda b, s, i: ivf.merge_ivf_batch(b, s, i, cents),
             lambda s: ivf.ivf_probe_state(spark, s, probes, cents, k=10, nprobe=4).collect(),
-            lambda s: ivf.compact_ivf_state(spark, s),
+            lambda s: compact_partitioned_state(spark, s),
         )
 
     def countmin_parts():
@@ -225,7 +226,7 @@ def twin_table(spark, src: str) -> dict:
         )
 
     def graph_parts():
-        # additive exact-cents edges at (bkt, src_batch) grain; the
+        # additive exact-cents edges at (src_batch, bkt) grain; the
         # post-compaction batch's shifted order keys miss the dimension
         # tables, so that merge lands an empty delta after the same join
         dims = [load_table(spark, src, t) for t in ("orders", "customer", "supplier", "nation")]
@@ -237,7 +238,7 @@ def twin_table(spark, src: str) -> dict:
 
     return {
         "ivf": ("ivf_ingest", emb, "vec_id", ivf_parts),
-        # additive term-grain deltas in (bkt, src_batch) partitions
+        # additive term-grain deltas in (src_batch, bkt) partitions
         "corpus_stats": ("corpusstats_ingest", docs, "doc_id", lambda: (
             cstats.merge_corpus_stats_batch,
             lambda s: cstats.bm25_probe_state(spark, s, docs, BM25_QUERY_TERMS).collect(),

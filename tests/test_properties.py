@@ -887,9 +887,8 @@ def test_ivf_merge_invariant_under_split_order_and_retry(
     batch build row-for-row for ANY split of the vectors into
     micro-batches, ANY arrival order, AND a same-id foreachBatch
     retry of the final batch — assignment against frozen centroids is
-    a pure per-vector function, and each batch's dynamic partition
-    overwrite replaces exactly its own (cent_id, src_batch)
-    partitions. (A re-ship under a NEW batch id is at-least-once
+    a pure per-vector function, and each batch's staged swap
+    replaces exactly its own src_batch=<b> directory. (A re-ship under a NEW batch id is at-least-once
     source behavior, handled by upstream dedup + the probe-side
     collapse, and is deliberately NOT part of this invariant.)"""
     from real_time_data_pipeline_spark.operators.similarity import (
@@ -1025,7 +1024,7 @@ def test_corpus_stats_merge_invariant_under_split_order_and_retry(
     arrival order, and a same-id retry of the final batch: each
     unique document contributes its counts to exactly one batch and
     addition is associative/commutative, while the retry replaces its
-    own (bkt, src_batch) delta partitions. Empty and sub-batch-empty
+    own src_batch=<b> delta directory. Empty and sub-batch-empty
     corpora (all-blank texts) are part of the strategy on purpose —
     the scalar row must stay correct when a batch contributes zero
     documents."""

@@ -156,10 +156,10 @@ def test_partitioned_write_and_retention(spark, tmp_path):
         [("2024-05-01", 1.0), ("2024-05-02", 2.0), ("2024-05-09", 3.0)],
         "date string, v double",
     )
-    replace_partitions(df, path, "date")
+    replace_partitions(df, path, ["date"])
     # partition replace: rewriting one date leaves the others intact
     df2 = spark.createDataFrame([("2024-05-02", 20.0)], "date string, v double")
-    replace_partitions(df2, path, "date")
+    replace_partitions(df2, path, ["date"])
     # partition values are type-inferred on read → stringify
     got = {str(r.date): r.v for r in spark.read.parquet(path).collect()}
     assert got == {"2024-05-01": 1.0, "2024-05-02": 20.0, "2024-05-09": 3.0}

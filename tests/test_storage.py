@@ -17,7 +17,7 @@ from real_time_data_pipeline_spark.streaming.sinks import replace_partitions
 def test_date_partition_pruning(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     path = str(tmp_path / "events_by_date")
-    replace_partitions(ev, path, "date")
+    replace_partitions(ev, path, ["date"])
 
     back = spark.read.parquet(path).where(F.col("date") == "2024-01-02")
     plan = formatted_plan(back)

@@ -2420,11 +2420,11 @@ def test_ivf_ingest_parity_retry_reset_probe_and_compaction(spark, tmp_path):
         stride_centroids,
     )
     from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        compact_ivf_state,
         ivf_probe_state,
         ivf_state_build,
         merge_ivf_batch,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import compact_partitioned_state
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
@@ -2467,7 +2467,7 @@ def test_ivf_ingest_parity_retry_reset_probe_and_compaction(spark, tmp_path):
     # compaction: rows + probes identical, next live batch still
     # lands, and the sentinel row PRESERVES the reset guard (max
     # src_batch stays 2, so a recycled id still fails loudly)
-    compact_ivf_state(spark, state)
+    compact_partitioned_state(spark, state)
     assert _ivf_state_rows(spark, state) == want
     assert {
         tuple(r)
@@ -2681,14 +2681,12 @@ def test_ivfpq_state_compaction_shared_helper(spark, tmp_path):
         pq_codebooks,
         stride_centroids,
     )
-    from real_time_data_pipeline_spark.streaming.ivf_ingest import (
-        compact_partitioned_state,
-    )
     from real_time_data_pipeline_spark.streaming.ivfpq_ingest import (
         ivfpq_probe_state,
         merge_ivfpq_batch,
         read_ivfpq_state,
     )
+    from real_time_data_pipeline_spark.streaming.sinks import compact_partitioned_state
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
@@ -2729,13 +2727,12 @@ def test_ivfpq_state_compaction_shared_helper(spark, tmp_path):
 
 
 def test_ivf_partial_write_healed_by_retry(spark, tmp_path):
-    """The eighth/ninth twins' crash-window argument, executed: a
-    crash mid-commit can leave a SUBSET of the batch's (cent_id,
-    src_batch) partitions (or rows) on disk. foreachBatch then
-    re-delivers the same batch_id, and the dynamic overwrite rewrites
-    every partition the recomputed (deterministic) increment touches
-    — the state after the retry is exactly the full-batch state, with
-    the corrupt partial gone."""
+    """The eighth/ninth twins' retry argument, executed: whatever
+    SUBSET of the batch's rows sits under its src_batch=<b> directory
+    (a partial write), foreachBatch re-delivers the same batch_id and
+    the batch's staged swap replaces that whole directory with the
+    recomputed (deterministic) increment — the state after the retry
+    is exactly the full-batch state, with the corrupt partial gone."""
     from real_time_data_pipeline_spark.operators.similarity import (
         stride_centroids,
     )
@@ -2764,12 +2761,7 @@ def test_ivf_partial_write_healed_by_retry(spark, tmp_path):
         .where(F.pmod("nid", F.lit(2)) == 1)
         .withColumn("src_batch", F.lit(1).cast("bigint"))
     )
-    (
-        partial.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cent_id", "src_batch")
-        .parquet(state)
-    )
+    partial.write.mode("append").partitionBy("src_batch", "cent_id").parquet(state)
     assert _ivf_state_rows(spark, state) != {
         (r.cent_id, r.nid, r.lo, r.scale, tuple(r.q))
         for r in ivf_state_build(emb, cents).collect()

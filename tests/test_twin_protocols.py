@@ -1,16 +1,20 @@
 """The shared twin commit protocols in streaming/sinks.py, tested across
 every merge algebra: crash windows of the staged-rename swap, absent
 state, state written in the layout before `merge_marked_state`
-existed, the overlapped partitioned commit, and the per-partition swap
-of the partitioned keyed upsert.
+existed, the partitioned twins' per-batch swap (crash windows, empty
+first batch, key-first state, the one-write known-final replay), and
+the per-partition swap of the partitioned keyed upsert.
 """
 
 import datetime as dt
+import functools
 import os
 import re
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.streaming import (
     bloom_ingest,
@@ -27,7 +31,8 @@ from real_time_data_pipeline_spark.streaming.sinks import (
     _hadoop_fs,
     bucket_of,
     commit_partitioned_batch,
-    commit_partitioned_batches_overlapped,
+    committed_max_batch,
+    replace_batch_partitions,
     upsert_parquet,
 )
 
@@ -214,32 +219,104 @@ def test_partitioned_readers_name_the_absent_path(spark, tmp_path):
             read(spark, missing)
 
 
-def test_overlapped_partitioned_commit_guards_and_matches_sequential(spark, tmp_path):
-    """`commit_partitioned_batches_overlapped` runs the same guard and
-    write as `commit_partitioned_batch`: its state equals sequential
-    commits (with and without overlap), a replay from batch 0 over
-    newer state raises the reset error, and a retry of a batch whose
-    partitions were compacted away raises instead of double-counting."""
-    slices = [corpusstats_ingest.corpus_stats_increments(d) for d in _frames(spark, "docs")]
+def _cs_slices(spark):
+    return [corpusstats_ingest.corpus_stats_increments(d) for d in _frames(spark, "docs")]
 
+
+def _batch_dirs(path):
+    return sorted(d for d in os.listdir(path) if d.startswith("src_batch="))
+
+
+def test_known_final_replay_matches_sequential_commits(spark, tmp_path):
+    """The ingest-state artifact builds' replay — every batch's rows,
+    labelled by ``src_batch``, committed by one
+    `replace_batch_partitions` — leaves the state that committing the
+    batches one by one through `commit_partitioned_batch` leaves:
+    the same rows, the same src_batch directories, the same max."""
+    slices = _cs_slices(spark)
     seq = str(tmp_path / "seq")
     for i, inc in enumerate(slices):
         commit_partitioned_batch(inc, seq, i, key_col="bkt")
-    want = _rows(spark.read.parquet(seq))
-    for workers in (2, 1):
-        path = str(tmp_path / f"overlapped_{workers}")
-        commit_partitioned_batches_overlapped(slices, path, key_col="bkt", max_workers=workers)
-        assert _rows(spark.read.parquet(path)) == want
 
-    with pytest.raises(ValueError, match="checkpoint/state mismatch"):
-        commit_partitioned_batches_overlapped(slices, seq, key_col="bkt")
-    assert _rows(spark.read.parquet(seq)) == want  # raised before any write
+    one = str(tmp_path / "one_write")
+    labelled = [inc.withColumn("src_batch", F.lit(i)) for i, inc in enumerate(slices)]
+    replace_batch_partitions(functools.reduce(DataFrame.unionByName, labelled), one, "bkt")
+    assert _rows(spark.read.parquet(one)) == _rows(spark.read.parquet(seq))
+    assert _batch_dirs(one) == _batch_dirs(seq) == [f"src_batch={i}" for i in range(3)]
+    assert committed_max_batch(spark, one) == 2
 
-    one = str(tmp_path / "compacted")
-    commit_partitioned_batches_overlapped(slices[:1], one, key_col="bkt")
-    corpusstats_ingest.compact_corpus_stats(spark, one)
-    with pytest.raises(ValueError, match="compacted away"):
-        commit_partitioned_batches_overlapped(slices[:1], one, key_col="bkt")
+
+@pytest.mark.parametrize("window", ["tmp_staged", "parked_at_old"])
+def test_partitioned_batch_swap_crash_recovers_on_retry(spark, tmp_path, window):
+    """A batch commit of a partitioned twin that died mid-swap: with
+    the batch staged in ``__tmp__`` and nothing renamed yet, or (on a
+    retry of the newest batch) with its ``src_batch=<b>`` directory
+    parked under ``__old__``. A retry of the same id, then the next
+    batch, leaves exactly the state of a run without a crash, and no
+    swap sibling remains."""
+    b = _frames(spark, "docs")
+    root = str(tmp_path / "ref")
+    for i in range(3):
+        corpusstats_ingest.merge_corpus_stats_batch(b[i], os.path.join(root, "state"), i)
+    want = _cs_read(spark, root)
+
+    root = str(tmp_path / window)
+    path = os.path.join(root, "state")
+    for i in range(2):
+        corpusstats_ingest.merge_corpus_stats_batch(b[i], path, i)
+    os.makedirs(path + "__tmp__")
+    shutil.copytree(os.path.join(path, "src_batch=1"), os.path.join(path + "__tmp__", "src_batch=1"))
+    if window == "parked_at_old":
+        os.makedirs(path + "__old__")
+        shutil.move(os.path.join(path, "src_batch=1"), path + "__old__")
+    else:
+        shutil.rmtree(os.path.join(path, "src_batch=1"))  # the first attempt never landed
+
+    assert corpusstats_ingest.merge_corpus_stats_batch(b[1], path, 1) is True  # retry
+    corpusstats_ingest.merge_corpus_stats_batch(b[2], path, 2)
+    assert _cs_read(spark, root) == want
+    assert _batch_dirs(path) == [f"src_batch={i}" for i in range(3)]
+    assert not os.path.exists(path + "__old__")
+    assert not os.path.exists(path + "__tmp__")
+
+
+def test_partitioned_twin_after_an_empty_first_batch(spark, sf_dir, tmp_path):
+    """A zero-row first batch commits nothing and leaves no state, so
+    the reader names the path instead of failing to infer a schema,
+    and the next batch is the first commit."""
+    from real_time_data_pipeline_spark.operators.similarity import stride_centroids
+    from real_time_data_pipeline_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = stride_centroids(emb, "vec_id", "embedding").localCheckpoint()
+    path = str(tmp_path / "state")
+    assert ivf_ingest.merge_ivf_batch(emb.limit(0), path, 0, cents) is True
+    assert not os.path.exists(path)
+    with pytest.raises(FileNotFoundError, match=re.escape(path)):
+        ivf_ingest.read_ivf_state(spark, path)
+
+    assert ivf_ingest.merge_ivf_batch(emb, path, 1, cents) is True
+    got = ivf_ingest.read_ivf_state(spark, path)
+    want = ivf_ingest.ivf_state_build(emb, cents).select(*got.columns)
+    assert got.count() == emb.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert _batch_dirs(path) == ["src_batch=1"]
+
+
+def test_partitioned_commit_rejects_state_in_the_key_first_layout(spark, tmp_path):
+    """State written key-first (``bkt=<k>/src_batch=<b>/``, the layout
+    before src_batch led) gets no src_batch= directory beside it —
+    Spark would then reject the whole table: the commit and the
+    compaction raise naming the path and leave every file as it was."""
+    path = str(tmp_path / "state")
+    inc = _cs_slices(spark)[0]
+    inc.withColumn("src_batch", F.lit(0)).write.partitionBy("bkt", "src_batch").parquet(path)
+    before = _files(str(tmp_path))
+    with pytest.raises(ValueError, match=re.escape(path) + ".*rebuild"):
+        commit_partitioned_batch(inc, path, 1, key_col="bkt")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        corpusstats_ingest.compact_corpus_stats(spark, path)
+    assert _files(str(tmp_path)) == before
 
 
 # The marker twins' state layout as written before the shared kernel:
