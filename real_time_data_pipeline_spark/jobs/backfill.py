@@ -72,7 +72,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
     One silver pass: ``bronze`` is normalized, deduplicated and
     filtered to ``date`` once, and that day is committed with
     `replace_partitions`. Gold is then computed from the COMMITTED
-    silver day, read back by path (`_read_stored`), not from a
+    silver day, read back by path (`read_committed`), not from a
     second pass over bronze, and committed the same way; its row
     count is observed during that write, so no job reads gold back.
     If no ``date=`` silver partition is committed (no bronze rows of
@@ -92,7 +92,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
         to_silver,
     )
     from real_time_data_pipeline_spark.streaming.sinks import (
-        _read_stored,
+        read_committed,
         replace_partitions,
     )
 
@@ -104,7 +104,7 @@ def backfill_day(bronze: DataFrame, date: str, silver_path: str, gold_path: str)
     day = silver.where(F.col("date") == F.lit(date))
     replace_partitions(day, silver_path, ["date"])
 
-    committed = _read_stored(bronze.sparkSession, silver_path, day.schema, "date", [date])
+    committed = read_committed(bronze.sparkSession, silver_path, day.schema, "date", [date])
     if committed is None:
         return 0
     gold = to_gold(committed).withColumn("date", F.to_date(F.col("window_start")))
@@ -127,10 +127,11 @@ def run(
     """Execute the backfill; returns the number of gold rows written.
     The JDBC mirror ships the committed gold day, read by path."""
     from real_time_data_pipeline_spark.sources.sinks import jdbc_writer
+    from real_time_data_pipeline_spark.streaming.sinks import read_committed
 
     n = backfill_day(spark.read.parquet(bronze_path), date, silver_path, gold_path)
     if jdbc_url is not None and n:
-        gold = spark.read.parquet(f"{gold_path.rstrip('/')}/date={date}")
+        gold = read_committed(spark, gold_path, None, "date", [date]).drop("date")
         jdbc_writer(gold, jdbc_url, jdbc_table, jdbc_user or "", jdbc_password or "").save()
     return n
 

@@ -65,7 +65,6 @@ def compact_parquet(
     spark,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: "list[str] | None" = None,
 ) -> int:
     """Compact a small-file parquet table (the streaming-sink
     pathology: every micro-batch appends a file, and a month of
@@ -97,27 +96,26 @@ def compact_parquet(
     from pyspark.sql import functions as F
 
     from real_time_data_pipeline_spark.streaming.sinks import (
-        _detect_partition_cols,
+        _committed_layout,
         _hadoop_fs,
-        read_layout_preserving,
+        read_committed,
         replace_parquet,
-        state_exists_recovered,
     )
 
-    if not state_exists_recovered(spark, path):
-        return 0
+    # Layout-preserving read: partition columns typed string, so the
+    # rewrite keeps type-ambiguous directory names (dt=01, never dt=1).
+    schema, partition_cols = _committed_layout(spark, path)
     fs, jpath = _hadoop_fs(spark, path)
-    if any(
-        st.getPath().getName() == "_spark_metadata" for st in fs.listStatus(jpath)
-    ):
+    if fs.exists(jpath.suffix("/_spark_metadata")):
         raise ValueError(
             f"{path} is managed by a streaming FileStreamSink "
             "(_spark_metadata present); compacting it would orphan the "
             "sink's transaction log and hide compacted files from "
             "log-trusting readers"
         )
-    if partition_cols is None:
-        partition_cols = _detect_partition_cols(fs, jpath)
+    df = read_committed(spark, path, schema)
+    if df is None:
+        return 0
 
     def walk(p, per_file):
         total = 0
@@ -129,14 +127,6 @@ def compact_parquet(
         return total
 
     total_bytes = walk(jpath, lambda st: st.getLen())
-    # Layout-preserving read: with type inference on, a rewrite would
-    # rename type-ambiguous partition dirs (dt=01 → dt=1) — see
-    # `read_layout_preserving`.
-    df = (
-        read_layout_preserving(spark, path)
-        if partition_cols
-        else spark.read.parquet(path)
-    )
     if df.isEmpty():
         # All files empty: bytes_per_row would be 0 and a partitionBy
         # write of zero rows emits no data files at all — the swap

@@ -31,7 +31,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Terminal task states.
 SUCCESS = "success"
@@ -182,12 +181,15 @@ def hourly_station_dag(
     from real_time_data_pipeline_spark.jobs.backfill import backfill_day
     from real_time_data_pipeline_spark.pipelines.station_status import gold_checks
     from real_time_data_pipeline_spark.sources.sinks import drop_partitions_older_than
+    from real_time_data_pipeline_spark.streaming.sinks import read_committed
 
     def backfill() -> int:
         return backfill_day(raw, ds, silver_path, gold_path)
 
     def soda_scan() -> list:
-        gold = spark.read.parquet(gold_path).where(F.col("date") == F.lit(ds))
+        gold = read_committed(spark, gold_path, None, "date", [ds])
+        if gold is None:
+            raise AssertionError(f"gold DQ checks failed: no committed gold day {ds}")
         rows = gold_checks(gold).collect()
         failures = [r.check_name for r in rows if not r.passed]
         if failures:

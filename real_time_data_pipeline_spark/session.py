@@ -135,6 +135,15 @@ def get_spark(
         conf.setdefault(
             "spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent"
         )
+        # List partition directories on the driver. Above the threshold
+        # (default 32 paths) Spark lists with a Spark job per level —
+        # one per src_batch= directory of a (src_batch, key) twin
+        # holding more than 32 keys — but a local master's tasks read
+        # the same disk the driver does. Measured on a 4-core box
+        # (local[4], 10 batches x 69 keys of tiny rows, a warm count):
+        # 13 jobs and 3.5-3.6 s at the default, 3 jobs and 0.7-0.8 s
+        # with this threshold, which no engine table reaches.
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = "1000000"
     conf.update(width_conf(master, cpus, shuffle_partitions))
     if extra_conf:
         conf.update(extra_conf)

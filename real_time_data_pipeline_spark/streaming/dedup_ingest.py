@@ -55,6 +55,7 @@ from real_time_data_pipeline_spark.operators.dedup import dedup_deterministic
 from real_time_data_pipeline_spark.operators.similarity import (
     MINHASH_BAND_ROWS,
     MINHASH_NUM,
+    _band_keys,
     jaccard_pairs,
     minhash_signatures,
 )
@@ -63,8 +64,7 @@ from real_time_data_pipeline_spark.operators.text import word_shingles
 from real_time_data_pipeline_spark.streaming.sinks import (
     BUCKET_COL,
     bucket_of,
-    read_buckets,
-    state_exists_recovered,
+    read_committed,
     touched_buckets,
     upsert_parquet,
 )
@@ -76,24 +76,11 @@ from real_time_data_pipeline_spark.streaming.sinks import (
 DEFAULT_BUCKETS = 64
 
 
-def _band_keys(sig_col: str, band_rows: int = MINHASH_BAND_ROWS, num_hashes: int = MINHASH_NUM):
-    """(band, band_key) pairs exploded from a signature array column."""
-    n_bands = num_hashes // band_rows
-    return F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col(sig_col), b * band_rows + 1, band_rows),
-                        lambda v: v.cast("string"),
-                    ),
-                    ",",
-                ).alias("key"),
-            ),
-        )
-    )
+def _bucketed_bands(docs: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
+    """(id, band, band_key, bkt) rows of ``docs``' ``sig`` column: the
+    operator's banding plus the band store's bucket."""
+    bands = _band_keys(docs, id_col, MINHASH_BAND_ROWS, MINHASH_NUM)
+    return bands.withColumn(BUCKET_COL, bucket_of("band", "band_key", n_buckets=n_buckets))
 
 
 def ingest_batch(
@@ -173,12 +160,13 @@ def _ingest_batch_impl(
 
     # --- exact layer: bucket-pruned hash probe ------------------------
     survivors = new_entries
-    if state_exists_recovered(spark, hashes_path):
-        probe_hashes = new_entries.select(
-            "content_hash",
-            bucket_of("content_hash", n_buckets=n_buckets).alias(BUCKET_COL),
-        )
-        stored_hashes = read_buckets(spark, hashes_path, touched_buckets(probe_hashes))
+    probe_hashes = new_entries.select(
+        bucket_of("content_hash", n_buckets=n_buckets).alias(BUCKET_COL)
+    )
+    stored_hashes = read_committed(
+        spark, hashes_path, None, BUCKET_COL, touched_buckets(probe_hashes)
+    )
+    if stored_hashes is not None:
         # Same id ⇒ fully committed re-delivery; different id ⇒ dup of
         # an accepted doc. Either way the doc is not new — drop it.
         survivors = survivors.join(
@@ -186,17 +174,11 @@ def _ingest_batch_impl(
         )
 
     # --- near-dup layer: bucket-pruned band probe + Jaccard verify ----
-    if state_exists_recovered(spark, bands_path):
-        cand_new = survivors.select(F.col(id_col), _band_keys("sig").alias("bk")).select(
-            id_col,
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("band_key"),
-            bucket_of(F.col("bk.band"), F.col("bk.key"), n_buckets=n_buckets).alias(
-                BUCKET_COL
-            ),
-        )
-        cand_new = reliable_materialize(cand_new)
-        stored_bands = read_buckets(spark, bands_path, touched_buckets(cand_new))
+    cand_new = reliable_materialize(_bucketed_bands(survivors, id_col, n_buckets))
+    stored_bands = read_committed(
+        spark, bands_path, None, BUCKET_COL, touched_buckets(cand_new)
+    )
+    if stored_bands is not None:
         # The micro-batch side is small -> broadcast it; the store side
         # is already partition-pruned to the colliding buckets.
         collisions = (
@@ -208,22 +190,23 @@ def _ingest_batch_impl(
         )
         collisions = reliable_materialize(collisions)
         old_ids = collisions.select(
-            F.col("__old_id"),
-            bucket_of("__old_id", n_buckets=n_buckets).alias(BUCKET_COL),
+            bucket_of("__old_id", n_buckets=n_buckets).alias(BUCKET_COL)
         )
-        old_shingles = (
-            read_buckets(spark, docs_path, touched_buckets(old_ids))
-            .select(F.col(id_col).alias("__old_id"), F.col("shingles").alias("__old_shs"))
-            .join(F.broadcast(collisions.select("__old_id").distinct()), "__old_id")
+        stored_docs = read_committed(
+            spark, docs_path, None, BUCKET_COL, touched_buckets(old_ids)
         )
-        probe = (
-            collisions.join(old_shingles, "__old_id")
-            .join(F.broadcast(new_entries.select(id_col, "shingles")), id_col)
-        )
-        inter = F.size(F.array_intersect(F.col("shingles"), F.col("__old_shs")))
-        union = F.size("shingles") + F.size("__old_shs") - inter
-        near = probe.where((inter / union) >= threshold).select(id_col).distinct()
-        survivors = survivors.join(near, id_col, "left_anti")
+        if stored_docs is not None:
+            old_shingles = stored_docs.select(
+                F.col(id_col).alias("__old_id"), F.col("shingles").alias("__old_shs")
+            ).join(F.broadcast(collisions.select("__old_id").distinct()), "__old_id")
+            probe = (
+                collisions.join(old_shingles, "__old_id")
+                .join(F.broadcast(new_entries.select(id_col, "shingles")), id_col)
+            )
+            inter = F.size(F.array_intersect(F.col("shingles"), F.col("__old_shs")))
+            union = F.size("shingles") + F.size("__old_shs") - inter
+            near = probe.where((inter / union) >= threshold).select(id_col).distinct()
+            survivors = survivors.join(near, id_col, "left_anti")
 
     survivors = reliable_materialize(survivors)
     n_new = survivors.count()
@@ -235,16 +218,11 @@ def _ingest_batch_impl(
             .withColumn(BUCKET_COL, bucket_of(id_col, n_buckets=n_buckets))
         )
         upsert_parquet(accepted, corpus_path, keys=[id_col], partition_col=BUCKET_COL)
-        band_rows = survivors.select(F.col(id_col), _band_keys("sig").alias("bk")).select(
-            id_col,
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("band_key"),
-            bucket_of(F.col("bk.band"), F.col("bk.key"), n_buckets=n_buckets).alias(
-                BUCKET_COL
-            ),
-        )
         upsert_parquet(
-            band_rows, bands_path, keys=[id_col, "band"], partition_col=BUCKET_COL
+            _bucketed_bands(survivors, id_col, n_buckets),
+            bands_path,
+            keys=[id_col, "band"],
+            partition_col=BUCKET_COL,
         )
         doc_rows = survivors.withColumn(
             BUCKET_COL, bucket_of(id_col, n_buckets=n_buckets)

@@ -20,10 +20,10 @@ next read, which a pre-computed offset column could never do.
 
 Scale shape: both state tables are user-keyed and user×active-weeks
 sized (dimension-sized, not event-sized); each micro-batch merge is
-one keyed upsert per table via the engine's crash-safe
-`upsert_parquet` (temp-dir + rename swap, deterministic winners
-under retry). The matrix itself is a tiny rollup of the state — the
-events fact table is never rescanned.
+one keyed upsert per table through the engine's crash-safe kernel
+(`_keyed_upsert`: one read of the stored table, a staged-rename
+swap, deterministic winners under retry). The matrix itself is a
+tiny rollup of the state — the events fact table is never rescanned.
 
 Parity contract (tests/test_streaming.py): replaying the events
 table through `merge_retention_batch` and reading `retention_matrix`
@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.streaming.sinks import (
-    read_state as _read_state,
+    _keyed_upsert,
+    read_committed,
     upsert_parquet,
 )
 
@@ -55,31 +56,19 @@ def _activity_path(state_root: str) -> str:
 def merge_retention_batch(batch_df: DataFrame, state_root: str) -> None:
     """Merge one micro-batch of (user_id, ts) events into the state.
 
-    first_seen: per-user batch minimum, then least() against the
-    stored week inside the keyed upsert's deterministic winner
-    election (order_col = cohort_week ASCENDING via min-merge below).
+    first_seen: the per-user batch minimum, merged by the keyed
+    upsert with the EARLIEST week winning, stored or batch
+    (``batch_wins=False``, ascending ``cohort_week``): one read of
+    the table, and the per-key min is order-independent.
     activity: distinct (user, week) rows, keyed upsert (idempotent).
     """
-    spark = batch_df.sparkSession
-    fs_path = _first_seen_path(state_root)
     batch_first = batch_df.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
-    stored = _read_state(spark, fs_path)
-    if stored is not None:
-        # min-merge: the stored week participates as just another
-        # candidate row; the per-key min is order-independent. Only
-        # the batch's own users are pulled from the store — the merge
-        # frame stays batch-sized.
-        stored_hit = stored.join(
-            batch_first.select("user_id"), "user_id", "left_semi"
-        )
-        batch_first = (
-            batch_first.unionByName(stored_hit)
-            .groupBy("user_id")
-            .agg(F.min("cohort_week").alias("cohort_week"))
-        )
-    upsert_parquet(batch_first, fs_path, keys=["user_id"])
+    _keyed_upsert(
+        batch_first, _first_seen_path(state_root), ["user_id"], [F.asc("cohort_week")],
+        None, batch_wins=False,
+    )
 
     activity = batch_df.select(
         "user_id", F.date_trunc("week", F.col("ts")).alias("week_start")
@@ -99,8 +88,8 @@ def retention_matrix(spark: SparkSession, state_root: str) -> DataFrame:
     path that is in fact fully committed. Before any non-empty batch
     has committed no state table exists (an empty batch creates
     none), and the matrix is empty."""
-    first = _read_state(spark, _first_seen_path(state_root))
-    act = _read_state(spark, _activity_path(state_root))
+    first = read_committed(spark, _first_seen_path(state_root))
+    act = read_committed(spark, _activity_path(state_root))
     if first is None or act is None:
         return spark.createDataFrame([], "cohort_week string, week_offset bigint, n_users bigint")
     return (

@@ -14,21 +14,24 @@ Every keyed merge — the gold upsert, the CDC snapshot
 (`cdc_upsert_parquet`) and the dedup-ingest stores — is one kernel,
 `_keyed_upsert`: the micro-batch's plan runs once per call (the batch
 is persisted, and an EMPTY batch is a no-op that reads nothing,
-writes nothing and creates no table), then swap recovery, a read of
-the stored rows by path with the batch's schema (for a partitioned
-table only the partition directories the batch touches), one winner
-per key, and a commit that never overwrites in place. Every write
-that replaces part or all of a parquet table (these merges, twin
-state, compaction, expiry, the backfill) is a staged-rename swap:
-`replace_parquet` swaps the whole table in by two renames;
-`replace_partitions` swaps each staged partition directory the same
-way, so per-batch cost is O(touched partitions), not O(table), and a
-crash leaves every partition complete, pre- or post-commit. Existence checks and renames go through the Hadoop
-FileSystem API, so the sinks work on HDFS/local identically. On
-S3-style object stores rename is copy-based (not atomic) — a 100 TB
-gold layer there should swap the merge body for Delta/Iceberg MERGE
-INTO (`merge_upsert_delta`); the `foreachBatch` contract and keying
-logic are identical.
+writes nothing and creates no table), then a read of the stored rows
+by path with the batch's schema (for a partitioned table only the
+partition directories the batch touches), one winner per key, and a
+commit that never overwrites in place. That read is `read_committed`,
+the one reader of every swap-committed table in the engine: it runs
+the swap recovery first and returns None when no table (or none of
+the asked-for partitions) exists. Every write that replaces part or
+all of a parquet table (these merges, twin state, compaction,
+expiry, the backfill) is a staged-rename swap: `replace_parquet`
+swaps the whole table in by two renames; `replace_partitions` swaps
+each staged partition directory the same way, so per-batch cost is
+O(touched partitions), not O(table), and a crash leaves every
+partition complete, pre- or post-commit. Existence checks and
+renames go through the Hadoop FileSystem API, so the sinks work on
+HDFS/local identically. On S3-style object stores rename is
+copy-based (not atomic) — a 100 TB gold layer there should swap the
+merge body for Delta/Iceberg MERGE INTO (`merge_upsert_delta`); the
+`foreachBatch` contract and keying logic are identical.
 """
 
 from __future__ import annotations
@@ -110,22 +113,6 @@ def touched_buckets(df: DataFrame, col: str = BUCKET_COL) -> list:
     return [r[0] for r in df.select(col).distinct().collect()]
 
 
-def read_buckets(spark: SparkSession, path: str, buckets: list) -> DataFrame:
-    """Partition-pruned read of a bucketed table, after the
-    `_swap_paths` recovery (a bucket parked mid-swap would otherwise
-    read as empty): only the listed `BUCKET_COL` partitions are
-    scanned (static partition pruning on the literal IN-list — verify
-    with `.explain`'s PartitionFilters). A None in ``buckets`` selects
-    the NULL partition, as ``eqNullSafe`` would; an empty list scans
-    nothing."""
-    _swap_paths(spark, path)
-    live = [b for b in buckets if b is not None]
-    cond = F.col(BUCKET_COL).isin(live) if live else F.lit(False)
-    if len(live) < len(buckets):
-        cond = cond | F.col(BUCKET_COL).isNull()
-    return spark.read.parquet(path).where(cond)
-
-
 def _elect_winners(df: DataFrame, keys: Sequence[str], order: "list[Column]") -> DataFrame:
     """One row per key, first by ``order``, then by a full-row hash of
     the data columns (the kernel's ``__v`` rank column excluded), so a
@@ -153,7 +140,7 @@ def _keyed_upsert(
       update-mode query delivers after every batch that moves the
       watermark. The touched-partition collect and the write read the
       cache.
-    - The read (`_read_stored`: the whole table, or with
+    - The read (`read_committed`: the whole table, or with
       ``partition_col`` only the partitions the batch touches, by path
       with the batch's schema, so no schema-inference job runs)
       recovers an interrupted swap first: reading first would merge
@@ -182,7 +169,7 @@ def _keyed_upsert(
                 batch_df.select(F.col(partition_col).cast("string").alias(partition_col)),
                 partition_col,
             )
-        old = _read_stored(spark, path, batch_df.schema, partition_col, values)
+        old = read_committed(spark, path, batch_df.schema, partition_col, values)
         if batch_wins:
             batch_df = batch_df.withColumn("__v", F.lit(1))
             old = old.withColumn("__v", F.lit(0)) if old is not None else None
@@ -195,34 +182,44 @@ def _keyed_upsert(
             replace_partitions(result, path, [partition_col])
 
 
-def _read_stored(
+def read_committed(
     spark: SparkSession,
     path: str,
-    schema: StructType,
+    schema: StructType | None = None,
     partition_col: str | None = None,
     values: list | None = None,
 ) -> DataFrame | None:
-    """The stored rows of a swap-committed table (None if none is
-    stored), after the `_swap_paths` recovery, read by path with
-    ``schema``: Spark runs no schema-inference job and infers no
-    partition types (a string ``dt=01`` would read back as 1).
+    """The committed rows of a swap-committed table: the one reader of
+    every such table. It runs the `_swap_paths` recovery first (a
+    reader that skipped it would see a table, or a partition of it,
+    parked mid-swap as absent) and returns None when no table exists.
+
+    With ``schema`` the table is read by path with it, so Spark runs
+    no schema-inference job and infers no partition types (a string
+    ``dt=01`` would read back as 1); without it Spark infers both.
 
     Without ``partition_col`` the whole table is read. With it, only
-    the partitions named by ``values`` — the partition values as
-    Spark's writer renders them (the value cast to string; None for
-    NULL) — are read, each existing directory by path with
-    ``basePath``, so Spark lists no other partition. Directory names
-    are built as that writer builds them, with
-    `getPartitionPathString` (escaping; NULL as the default partition
-    name)."""
+    the top-level partitions named by ``values`` are read, each
+    existing directory by path with ``basePath``, so Spark lists no
+    other partition; None is returned when none of them exists. A
+    value is the partition value as Spark's writer renders it (the
+    value cast to string, as `_keyed_upsert` collects them; an int
+    may be passed as is; None for NULL), and directory names are
+    built as that writer builds them, with `getPartitionPathString`
+    (escaping; NULL as the default partition name). Real read
+    failures propagate: treating one as "no table" would let a merge
+    overwrite stored state with the batch's version."""
     fs, jpath, *_, exists = _swap_paths(spark, path)
     if not exists:
         return None
-    reader = spark.read.schema(schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if partition_col is None:
         return reader.parquet(path)
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    names = [utils.getPartitionPathString(partition_col, v) for v in values]
+    names = [
+        utils.getPartitionPathString(partition_col, None if v is None else str(v))
+        for v in values
+    ]
     dirs = [f"{path.rstrip('/')}/{n}" for n in names if fs.exists(jpath.suffix("/" + n))]
     if not dirs:
         return None
@@ -408,11 +405,15 @@ def committed_marker_check(marker, batch_id: int) -> bool:
 #   `replace_parquet`.
 # - keyed-upsert state (retention, zone-map user pairs: flat; the four
 #   dedup-ingest stores: bucket-partitioned): `upsert_parquet`, read
-#   back with `read_state` (None until a non-empty batch commits),
-#   idempotent per key, no marker. It is the same
+#   back with `read_committed` (None until a non-empty batch commits;
+#   the dedup probes pass the touched buckets, so only their
+#   directories are read), idempotent per key, no marker. It is the same
 #   `_keyed_upsert` kernel as the CDC snapshot; a partitioned table
 #   commits through `replace_partitions`.
 #
+# Every read of a committed table, in every protocol, is
+# `read_committed` (swap recovery, then a by-path read; None when no
+# table exists); the readers above add only their own filter.
 # `foreach_batch_sink` drives any of them from a stream.
 # ---------------------------------------------------------------------------
 
@@ -473,7 +474,7 @@ def merge_marked_state(
     staged-rename swap. Marker and cells therefore commit together.
     """
     marker_col = next(iter(combine))
-    stored = read_state(spark, state_path)
+    stored = read_committed(spark, state_path)
     if stored is not None:
         marker = (
             stored.where(F.col(keys[0]) == sentinel).agg(F.max(marker_col)).first()[0]
@@ -503,33 +504,10 @@ def read_marked_state(
     """A marker twin's committed cells (meta row excluded), after the
     swap recovery; raises FileNotFoundError naming the path when no
     state exists."""
-    stored = read_state(spark, state_path)
+    stored = read_committed(spark, state_path)
     if stored is None:
         raise FileNotFoundError(f"no twin state at {state_path}")
     return stored.where(F.col(key) != sentinel)
-
-
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    """Crash-recovering read of a swap-committed state table.
-
-    Runs the `_swap_paths` restore first (a commit that died between
-    the two swap renames leaves the committed table at ``__old__`` —
-    every reader of a swap-committed table must recover it, per the
-    sinks contract), then returns None ONLY when the table truly does
-    not exist. Real read failures PROPAGATE: swallowing one and
-    treating it as "first batch" would let a last-writer-wins upsert
-    silently overwrite stored state with this batch's version.
-    """
-    if not state_exists_recovered(spark, path):
-        return None
-    return spark.read.parquet(path)
-
-
-def state_exists_recovered(spark: SparkSession, state_path: str) -> bool:
-    """Existence check that FIRST runs the swap-commit crash recovery.
-    Every partitioned-state entry point — merge, read, probe, compact
-    — goes through here, per the swap-commit contract."""
-    return _swap_paths(spark, state_path)[5]
 
 
 def committed_max_batch(spark: SparkSession, state_path: str):
@@ -580,9 +558,10 @@ def read_partitioned_state(
     """A partitioned twin's committed rows, after the swap recovery,
     without the compaction sentinel (``key_col < 0``); raises
     FileNotFoundError naming the path when no state exists."""
-    if not state_exists_recovered(spark, state_path):
+    stored = read_committed(spark, state_path)
+    if stored is None:
         raise FileNotFoundError(f"no twin state at {state_path}")
-    return spark.read.parquet(state_path).where(F.col(key_col) >= 0)
+    return stored.where(F.col(key_col) >= 0)
 
 
 def _guard_partitioned_commit(
@@ -690,7 +669,8 @@ def compact_partitioned_state(
     old_max = committed_max_batch(spark, state_path)
     if old_max is None:
         raise FileNotFoundError(f"no index state at {state_path}")
-    data = spark.read.parquet(state_path).drop("src_batch")
+    # committed_max_batch ran the recovery and found the state
+    data = read_committed(spark, state_path).drop("src_batch")
     live = data.where(F.col(key_col) >= 0)
     if fold is not None:
         live = fold(live)
@@ -714,9 +694,10 @@ def _swap_paths(spark: SparkSession, path: str):
     any commit a crash interrupted (`_recover_swap`). EVERY entry point
     that reads or rewrites a swap-committed table must call this first
     (a reader that skips it would see the table, or a partition of it,
-    as absent, and a rewrite would then drop it for good); outside the
-    two commits, `state_exists_recovered` and `read_state` are that
-    call.
+    as absent, and a rewrite would then drop it for good). Every read
+    of a committed table goes through `read_committed`, which calls it;
+    the two commits, `committed_max_batch` and the layout walk
+    (`_committed_layout`) call it themselves.
 
     Returns (fs, jpath, jtmp, jold, tmp_path, exists).
     """
@@ -811,9 +792,9 @@ def current_snapshot(
     live (upstreams that never delete need no flag maintenance).
     Swap-recovered; raises FileNotFoundError naming the path when no
     snapshot exists (an empty batch creates none)."""
-    if not state_exists_recovered(spark, path):
+    df = read_committed(spark, path)
+    if df is None:
         raise FileNotFoundError(f"no CDC snapshot at {path}")
-    df = spark.read.parquet(path)
     if tombstone_col is not None:
         df = df.where(~F.coalesce(F.col(tombstone_col), F.lit(False))).drop(
             tombstone_col
@@ -827,7 +808,6 @@ def expire_tombstones(
     tombstone_col: str,
     order_col: str,
     horizon,
-    partition_cols: Sequence[str] | None = None,
 ) -> None:
     """Drop tombstones older than ``horizon`` (exclusive) from a CDC
     snapshot table — safe once no in-flight change can predate the
@@ -835,18 +815,14 @@ def expire_tombstones(
     rewritten through `replace_parquet`, not partition by partition,
     because a bucket whose rows ALL expire must end up deleted, not
     left stale; a snapshot whose rows all expire ends up absent (the
-    next merge recreates it). The table's partition layout is
-    AUTO-DETECTED from its directory structure — the rewrite must
+    next merge recreates it). The table's partition layout is read off
+    its directory structure (`_committed_layout`) — the rewrite must
     reproduce it, or the next bucketed merge would leave a mixed-depth
-    directory that parquet partition discovery rejects. Pass
-    ``partition_cols`` only to override the detection."""
-    if not state_exists_recovered(spark, path):
+    directory that parquet partition discovery rejects."""
+    schema, partition_cols = _committed_layout(spark, path)
+    df = read_committed(spark, path, schema)
+    if df is None:
         return
-    if partition_cols is None:
-        partition_cols = _detect_partition_cols(*_hadoop_fs(spark, path))
-    # Layout-preserving read: the rewrite must reproduce partition
-    # directory names exactly (see `read_layout_preserving`).
-    df = read_layout_preserving(spark, path) if partition_cols else spark.read.parquet(path)
     keep = ~(
         F.coalesce(F.col(tombstone_col), F.lit(False))
         & (F.col(order_col) < F.lit(horizon))
@@ -856,93 +832,42 @@ def expire_tombstones(
     replace_parquet(df.where(keep), path, partition_cols or None)
 
 
-def read_layout_preserving(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that keeps partition columns as the EXACT
-    directory text, for rewrites that must reproduce the table's
-    directory layout.
+def _committed_layout(spark: SparkSession, path: str) -> "tuple[StructType | None, list[str]]":
+    """(schema, partition columns) of a swap-committed table, for
+    rewrites that must reproduce its directory layout; ``(None, [])``
+    when no table exists. Runs the `_swap_paths` recovery first.
 
-    Default partition inference parses ``dt=01`` as integer 1 and
-    ``flag=true`` as a boolean; a rewrite then emits ``dt=1`` —
-    silently renaming partition directories and retyping their values
-    (ADVICE r6). This read instead passes a USER-SPECIFIED schema —
-    the data columns from one leaf file's footer plus every partition
-    column typed string — so Spark skips value inference entirely and
-    the partition columns hold the raw directory text (``"01"``),
-    letting ``partitionBy`` reproduce the original names
-    byte-for-byte. Partition values are never stored inside the data
-    files, so data-column types are untouched.
-
-    The schema is scoped to THIS DataFrameReader call — no session
-    conf is toggled, so concurrently analyzed reads in the same
-    SparkSession are unaffected (ADVICE r8; the previous
-    implementation flipped partitionColumnTypeInference at session
-    scope and relied on caller serialization).
-
-    Partition column names and their directory order come from one
-    leaf data file's relative path (hive-style ``col=value``
-    segments — the only layout the engine's writers produce).
-    """
-    fs, jroot = _hadoop_fs(spark, path)
-    # Qualify the root BEFORE the prefix strip below: listStatus
-    # returns fully-qualified (scheme-prefixed) child paths, so an
-    # unqualified/relative caller path would misalign the character
-    # slice and could parse ancestor directories containing '=' as
-    # phantom partition columns (ADVICE r8).
-    jroot = fs.makeQualified(jroot)
-
-    def _find_leaf(jdir):
-        # lexicographically stable walk; partition dirs before files
-        for st in fs.listStatus(jdir):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if name.startswith("_") or name.endswith("__old__"):
-                    continue
-                leaf = _find_leaf(st.getPath())
-                if leaf is not None:
-                    return leaf
-            elif not name.startswith(("_", ".")):
-                return st.getPath()
-        return None
-
-    jleaf = _find_leaf(jroot)
-    if jleaf is None:
-        # empty/absent table: nothing to preserve, plain read
-        return spark.read.parquet(path)
-    rel = str(jleaf)[len(str(jroot)) :].strip("/")
-    dir_segs = rel.split("/")[:-1]
-    if not all("=" in seg for seg in dir_segs):
-        # Non-hive directory segment under the root: this is not a
-        # layout the engine's writers produce — fall back to a plain
-        # read rather than silently dropping the segment (which would
-        # misalign the inferred partition schema).
-        return spark.read.parquet(path)
-    part_cols = [seg.split("=", 1)[0] for seg in dir_segs]
-    if not part_cols:
-        return spark.read.parquet(path)
-    data_schema = spark.read.parquet(str(jleaf)).schema
-    full = StructType(
-        list(data_schema.fields)
-        + [StructField(c, StringType(), True) for c in part_cols]
-    )
-    return spark.read.schema(full).parquet(path)
-
-
-def _detect_partition_cols(fs, jpath) -> "list[str]":
-    """Partition columns of an on-disk parquet table, read off its
-    ``col=value`` directory levels (depth-first along the first
-    subdirectory chain — hive layouts are uniform across siblings)."""
+    One walk down the first ``col=value`` directory of each level to
+    the first data file: the partition columns are the ``col`` names
+    in directory order, and the schema is that file's footer columns
+    plus every partition column typed STRING. Read with that schema
+    (`read_committed`), the partition columns hold the exact directory
+    text, so ``partitionBy`` reproduces the names byte-for-byte;
+    default inference would parse ``dt=01`` as 1 and ``flag=true`` as
+    a boolean, and the rewrite would rename the directories (ADVICE
+    r6). The schema is scoped to that one reader call, no session conf
+    is toggled (ADVICE r8). Column names come from each directory's
+    own name, never from a path string sliced against the root, so an
+    ancestor directory whose name holds ``=`` is never read as a
+    partition (ADVICE r8). The schema is None when the walk finds no
+    data file, and the reader then infers it."""
+    fs, jdir, *_, exists = _swap_paths(spark, path)
     cols: list[str] = []
-    current = jpath
-    while True:
-        subdirs = [
-            st.getPath()
-            for st in fs.listStatus(current)
-            if st.isDirectory() and "=" in st.getPath().getName()
+    while exists:
+        entries = fs.listStatus(jdir)
+        for st in entries:
+            if st.isFile() and not st.getPath().getName().startswith(("_", ".")):
+                data = spark.read.parquet(str(st.getPath())).schema
+                strings = [StructField(c, StringType(), True) for c in cols]
+                return StructType([*data.fields, *strings]), cols
+        parts = [
+            st.getPath() for st in entries if st.isDirectory() and "=" in st.getPath().getName()
         ]
-        if not subdirs:
-            return cols
-        cols.append(subdirs[0].getName().split("=", 1)[0])
-        current = subdirs[0]
+        if not parts:
+            break
+        cols.append(parts[0].getName().split("=", 1)[0])
+        jdir = parts[0]
+    return None, cols
 
 
 def delta_available(spark: SparkSession) -> bool:

@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from real_time_data_pipeline_spark.streaming.sinks import (
     merge_marked_state,
     read_marked_state,
-    read_state,
+    read_committed,
     upsert_parquet,
 )
 
@@ -165,7 +165,7 @@ def read_zonemap(
     state (partition-grain aggregate of a per-key table; never a
     fact-table rescan)."""
     stats = read_zonemap_stats(spark, stats_path)
-    users = read_state(spark, users_path)
+    users = read_committed(spark, users_path)
     counts = (
         users.groupBy("part_date").agg(
             F.count(F.lit(1)).alias("n_users")

@@ -150,8 +150,7 @@ def test_cdc_bucketed_layout_and_semantics(spark, tmp_path):
     assert 1 not in got                  # tombstoned
     assert set(got) == {2, 3, 4, 5, 6}
     # retention preserves the partitioned layout and drops the tombstone
-    expire_tombstones(spark, path, "is_delete", "ts", _ts(30),
-                      partition_cols=["bkt"])
+    expire_tombstones(spark, path, "is_delete", "ts", _ts(30))
     assert any(d.startswith("bkt=") for d in os.listdir(path))
     stored = spark.read.parquet(path)
     assert stored.where("is_delete").count() == 0

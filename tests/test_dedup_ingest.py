@@ -64,7 +64,7 @@ def test_ingest_probe_is_bucket_pruned(spark, tmp_path):
     — partition filters in the plan, bounded input files — never the
     whole store."""
     from real_time_data_pipeline_spark.streaming.dedup_ingest import ingest_batch
-    from real_time_data_pipeline_spark.streaming.sinks import read_buckets
+    from real_time_data_pipeline_spark.streaming.sinks import read_committed
 
     corpus = str(tmp_path / "corpus")
     store = str(tmp_path / "store")
@@ -82,10 +82,13 @@ def test_ingest_probe_is_bucket_pruned(spark, tmp_path):
         leaf = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
         return int(leaf.metrics().apply("numPartitions").value())
 
-    one = read_buckets(spark, store + "/hashes", [full.select("bkt").first()[0]])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "bkt" in plan.split("PartitionFilters", 1)[1][:200]
+    bucket = full.select("bkt").first()[0]
+    one = read_committed(spark, store + "/hashes", None, "bkt", [bucket])
+    # the scan's root paths are the touched bucket directories: Spark
+    # never lists the others
+    leaf = one._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+    roots = leaf.relation().location().rootPaths()
+    assert [roots.apply(i).getName() for i in range(roots.size())] == [f"bkt={bucket}"]
     # the pruned probe physically reads ONE bucket; a full scan reads all
     assert scan_partitions(one) == 1
     assert scan_partitions(spark.read.parquet(store + "/hashes")) == n_parts
@@ -151,6 +154,37 @@ def test_ingest_probe_restores_a_bucket_parked_mid_swap(spark, tmp_path):
     near = _docs(spark, [(3, BASE.replace("today", "again"))])
     assert ingest_batch(near, "doc_id", "text", corpus, store) == 0
     assert not os.path.exists(docs + "__old__")
+
+
+def test_ingest_batch_whose_buckets_are_all_absent_is_accepted(spark, tmp_path):
+    """A batch none of whose hash or band buckets exists in the stored
+    state: each probe's `read_committed` returns None (none of the
+    touched directories exists), the layer is skipped, and the
+    batch's document is accepted."""
+    from real_time_data_pipeline_spark.operators.similarity import minhash_signatures
+    from real_time_data_pipeline_spark.streaming.dedup_ingest import _bucketed_bands
+    from real_time_data_pipeline_spark.streaming.sinks import (
+        bucket_of,
+        read_committed,
+        touched_buckets,
+    )
+
+    n_buckets = 1024
+    corpus = str(tmp_path / "corpus")
+    store = str(tmp_path / "store")
+    assert ingest_batch(_docs(spark, [(1, BASE)]), "doc_id", "text", corpus, store,
+                        n_buckets=n_buckets) == 1
+    batch = _docs(spark, [(2, "an entirely separate note about sailing boats in winter")])
+    hashes = touched_buckets(
+        batch.select(bucket_of(F.md5("text"), n_buckets=n_buckets).alias("bkt"))
+    )
+    sigs = minhash_signatures(batch, "doc_id", "text", n=3)
+    bands = touched_buckets(_bucketed_bands(sigs, "doc_id", n_buckets))
+    assert read_committed(spark, store + "/hashes", None, "bkt", hashes) is None
+    assert read_committed(spark, store + "/bands", None, "bkt", bands) is None
+
+    assert ingest_batch(batch, "doc_id", "text", corpus, store, n_buckets=n_buckets) == 1
+    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2}
 
 
 @pytest.mark.parametrize("provider", ["default", "rocksdb"])

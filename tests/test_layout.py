@@ -168,9 +168,7 @@ def test_compact_parquet_preserves_type_ambiguous_partition_values(spark, tmp_pa
     # exact stored values visible through an inference-free read
     # (a default read re-parses "01" as 1 — reader-side behavior,
     # orthogonal to the layout which must stay byte-identical)
-    from real_time_data_pipeline_spark.streaming.sinks import read_layout_preserving
-
-    exact = read_layout_preserving(spark, path)
+    exact = spark.read.schema("k int, v double, dt string").parquet(path)
     assert {r.dt for r in exact.select("dt").distinct().collect()} == {"01", "2"}
     # conf restored for the rest of the session
     assert (
@@ -194,7 +192,7 @@ def test_compact_parquet_zero_row_partitioned_table_stays_readable(spark, tmp_pa
     assert spark.read.parquet(path).count() == 0  # readable before
     # pre-fix: bytes_per_row=0 → zero-row partitionBy rewrite → swap
     # installs a directory with no data files, which read.parquet rejects
-    compact_parquet(spark, path, partition_cols=["dt"])
+    compact_parquet(spark, path)
     assert spark.read.parquet(path).count() == 0  # still readable after
 
 
@@ -223,20 +221,26 @@ def test_expire_tombstones_preserves_type_ambiguous_partition_values(spark, tmp_
     assert got.count() == 2
 
 
-def test_read_layout_preserving_ancestor_dir_with_equals(spark, tmp_path):
+def test_layout_preserving_rewrite_ancestor_dir_with_equals(spark, tmp_path):
     """ADVICE r8: an '=' in an ANCESTOR directory of the table root
     (e.g. /data/ds=2024/tbl) must never be parsed as a phantom
-    partition column — the root is qualified before the prefix strip,
-    so only segments BELOW the root count."""
-    from real_time_data_pipeline_spark.streaming.sinks import read_layout_preserving
+    partition column by a layout-preserving rewrite — only directories
+    BELOW the root count."""
+    import os
+
+    from real_time_data_pipeline_spark.operators.layout import compact_parquet
 
     root = tmp_path / "ds=2024" / "tbl"
     df = spark.createDataFrame(
         [("01", i, float(i)) for i in range(5)], "dt string, k int, v double"
     )
     df.write.partitionBy("dt").parquet(str(root))
-    got = read_layout_preserving(spark, str(root))
-    # exactly the real partition column, holding the raw text
+    compact_parquet(spark, str(root), target_file_bytes=1 << 30)
+    # exactly the real partition column, holding the raw text: a
+    # phantom ``ds`` would have been written as a directory level
+    assert sorted(d for d in os.listdir(root) if "=" in d) == ["dt=01"]
+    assert not [d for d in os.listdir(root / "dt=01") if "=" in d]
+    got = spark.read.schema("k int, v double, dt string").parquet(str(root))
     assert [f.name for f in got.schema.fields if f.name == "ds"] == []
     assert {r.dt for r in got.select("dt").distinct().collect()} == {"01"}
     assert got.count() == 5

@@ -1436,7 +1436,10 @@ def test_retention_ingest_recovers_from_crash_between_upserts(spark, tmp_path):
 
     def crashing_upsert(df, path, keys, *a, **k):
         calls["n"] += 1
-        if calls["n"] == 2:  # die before the activity merge commits
+        # first_seen merges through the keyed-upsert kernel directly, so
+        # the activity merge is the first `upsert_parquet` call: die
+        # before it commits
+        if calls["n"] == 1:
             raise RuntimeError("simulated executor loss")
         return real_upsert(df, path, keys, *a, **k)
 
@@ -1448,6 +1451,9 @@ def test_retention_ingest_recovers_from_crash_between_upserts(spark, tmp_path):
             ri.merge_retention_batch(batch(rows), crash_root)
     finally:
         ri.upsert_parquet = real_upsert
+    # the crash window: first_seen committed, activity did not
+    assert os.path.exists(os.path.join(crash_root, "first_seen"))
+    assert not os.path.exists(os.path.join(crash_root, "activity"))
     # retry of the SAME batch (what foreachBatch does)
     ri.merge_retention_batch(batch(rows), crash_root)
     got = {tuple(r) for r in ri.retention_matrix(spark, crash_root).collect()}
@@ -1835,11 +1841,9 @@ def test_bloom_ingest_parity_retry_and_probe(spark, tmp_path):
     # marker key must be replaced, never accumulated (the keyed
     # upsert retains old keys absent from the new frame, so a
     # per-batch marker key would leak one dead row per micro-batch)
-    from real_time_data_pipeline_spark.streaming.retention_ingest import (
-        _read_state,
-    )
+    from real_time_data_pipeline_spark.streaming.sinks import read_committed
 
-    assert _read_state(spark, state).where(F.col("pos") < 0).count() == 1
+    assert read_committed(spark, state).where(F.col("pos") < 0).count() == 1
 
     # different chunk ORDER converges to the same bit set
     state2 = str(tmp_path / "bloom_state2")
@@ -1996,11 +2000,9 @@ def test_hll_ingest_parity_retry_overlap_and_estimate(spark, tmp_path):
 
     # EXACTLY one marker row ever exists (fixed key, replaced not
     # accumulated — the Bloom-twin lesson)
-    from real_time_data_pipeline_spark.streaming.retention_ingest import (
-        _read_state,
-    )
+    from real_time_data_pipeline_spark.streaming.sinks import read_committed
 
-    assert _read_state(spark, state).where(F.col("reg") < 0).count() == 1
+    assert read_committed(spark, state).where(F.col("reg") < 0).count() == 1
 
     # estimate parity + accuracy: state estimate == batch estimate,
     # and within 5% (~3 sigma at m=4096) of the exact distinct count

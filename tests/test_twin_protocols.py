@@ -303,6 +303,36 @@ def test_partitioned_twin_after_an_empty_first_batch(spark, sf_dir, tmp_path):
     assert _batch_dirs(path) == ["src_batch=1"]
 
 
+def test_partitioned_read_lists_on_the_driver(spark, tmp_path):
+    """A (src_batch, key) state read on a local master runs the same
+    number of jobs at 3 batches as at 6, though every ``src_batch=``
+    directory holds more keys than Spark's parallel-listing threshold
+    (32): each directory is listed on the driver, not by a listing
+    job of its own."""
+    import uuid
+
+    from real_time_data_pipeline_spark.streaming.sinks import read_partitioned_state
+
+    sc = spark.sparkContext
+
+    def jobs_of_count(n_batches):
+        path = str(tmp_path / f"b{n_batches}")
+        spark.range(n_batches * 40).select(
+            (F.col("id") / 40).cast("long").alias("src_batch"),
+            (F.col("id") % 40).alias("cent_id"),
+            F.col("id").alias("v"),
+        ).write.partitionBy("src_batch", "cent_id").parquet(path)
+        group = f"listing-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "partitioned state read")
+        try:
+            assert read_partitioned_state(spark, path).count() == n_batches * 40
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_of_count(6) == jobs_of_count(3)
+
+
 def test_partitioned_commit_rejects_state_in_the_key_first_layout(spark, tmp_path):
     """State written key-first (``bkt=<k>/src_batch=<b>/``, the layout
     before src_batch led) gets no src_batch= directory beside it —
